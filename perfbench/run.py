@@ -2,7 +2,7 @@
 """Build the engine plus the benchmark from source, run one workload, and
 print one JSON result line.
 
-    python3 perfbench/run.py --workload ann_search --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload ann_search --seed 1 --seconds 8 --trace 0
 
 Run from the repository root. The build (plain scalac from the Spark
 distribution's jars, no sbt) goes to .bench_build/perfbench/classes and is
@@ -158,6 +158,10 @@ def main():
            f"-Dspark.local.dir={work}/spark-local",
            f"-Dspark.sql.warehouse.dir={work}/warehouse",
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
+           # a run generates 100-160 distinct classes; with the default
+           # 100-entry code cache, how many are evicted and recompiled on
+           # every pass (0 to 45) varies from JVM to JVM
+           "-Dspark.sql.codegen.cache.maxEntries=1000",
            "-cp", cp, "perfbench.Main",
            a.workload, str(a.seed), str(a.seconds), str(a.trace), os.path.join(work, "data"), report]
     env = dict(os.environ)

@@ -25,7 +25,7 @@ final class Curation extends Workload {
     import spark.implicits._
 
     val corpus = Corpus(ctx.seed)
-    // set-up, three times: generate the corpus and write it
+    // set-up, `SetupRepeats` times: generate the corpus and write it
     val setups = (1 to SetupRepeats).map { i =>
       val dir = new File(ctx.work, s"corpus$i").getAbsolutePath
       val t0 = System.nanoTime()
@@ -37,35 +37,38 @@ final class Curation extends Workload {
     val dir = setups.last._1
     val userBytes = corpus.docs.map { case (_, t) => 8L + t.getBytes("UTF-8").length }.sum
     val storedBytes = Stats.diskBytes(new File(dir))
-    // the checked pass: full output plus the clusters, untimed; it also
-    // warms every stage. Its output must keep every original and drop every
-    // exact copy and low-quality doc. A near copy survives only if MinHash
-    // LSH (approximate by design) missed all of its planted pairs; that
-    // shows in `quality`, the cluster F1, not as a failure.
-    val (kept, clusterF1, candidates) = {
-      val docs = spark.read.parquet(dir)
-      val q = quality(docs)
-      val ex = Dedup.dropExactDups(q, "id", "text")
-      val clusters = Dedup.duplicateClusters(minhash(ex)).select("id", "cluster").as[(Long, Long)].collect()
-      val got = Dedup.keepBestPerCluster(ex, "id", "q", spark.createDataset(clusters.toSeq).toDF("id", "cluster"))
-        .select("id").as[Long].collect().toSet
-      val missing = corpus.survivors -- got
-      val wrong = got -- corpus.survivors -- corpus.nearCopies
-      if (missing.nonEmpty || wrong.nonEmpty)
-        ctx.fail(s"checked pass kept ${got.size} docs: ${missing.size} originals missing, " +
-          s"${wrong.size} exact copies or low-quality docs kept")
-      val cands = if (ctx.trace) Dedup.minhashCandidates(ex, "id", "text", NumHashes, Bands, ShingleN).count() else 0L
-      (got, pairF1(clusters.groupBy(_._2).values.map(_.map(_._1).toSeq).toSeq, corpus.clusters), cands)
-    }
+    // the checked pass: the first warm-up pass, untimed, which also
+    // collects the clusters and the output ids. Its output must keep every
+    // original and drop every exact copy and low-quality doc. A near copy
+    // survives only if MinHash LSH (approximate by design) missed all of its
+    // planted pairs; that shows in `quality`, the cluster F1, not as a
+    // failure.
+    var kept = Set.empty[Long]
+    var clusterF1 = 0.0
+    var candidates = 0L
+    val t0 = System.nanoTime()
+    pass(ctx, dir, warm = true, inspect = (ex, clusters, out) => {
+      val members = clusters.select("id", "cluster").as[(Long, Long)].collect()
+      kept = out.select("id").as[Long].collect().toSet
+      clusterF1 = pairF1(members.groupBy(_._2).values.map(_.map(_._1).toSeq).toSeq, corpus.clusters)
+      if (ctx.trace) candidates = Dedup.minhashCandidates(ex, "id", "text", NumHashes, Bands, ShingleN).count()
+    })
+    val checkedMs = (System.nanoTime() - t0) / 1e6
+    val missing = corpus.survivors -- kept
+    val wrong = kept -- corpus.survivors -- corpus.nearCopies
+    if (missing.nonEmpty || wrong.nonEmpty)
+      ctx.fail(s"checked pass kept ${kept.size} docs: ${missing.size} originals missing, " +
+        s"${wrong.size} exact copies or low-quality docs kept")
     // every timed pass must write exactly what the checked pass kept
     val wantCount = kept.size.toLong
     val wantHash = kept.foldLeft(0L)((h, id) => h ^ XXH64.hashLong(id, 42L))
-    // an untimed pass shaped as the timed ones: pass times keep falling
-    // over the first few passes of a JVM
-    (1 to WarmPasses).foreach(_ => pass(ctx, dir, warm = true))
+    // more untimed passes: pass times keep falling over the first few
+    // passes of a JVM
+    val warmMs = (2 to WarmPasses).map(_ => Stats.timeMs(pass(ctx, dir, warm = true))._2)
 
     val passMs = mutable.ArrayBuffer.empty[Double]
     var attempted, failed = 0L
+    val jvmLog = mutable.ArrayBuffer(Main.jvmTimes)
     val windowStart = System.nanoTime()
     val deadline = windowStart + ctx.seconds * 1000000000L
     while (passMs.size + failed < MinPasses || System.nanoTime() < deadline) {
@@ -74,6 +77,7 @@ final class Curation extends Workload {
       try {
         val (n, h) = pass(ctx, dir, warm = false)
         val ms = (System.nanoTime() - t0) / 1e6
+        jvmLog += Main.jvmTimes
         if (n == wantCount && h == wantHash) passMs += ms
         else {
           failed += 1
@@ -120,44 +124,47 @@ final class Curation extends Workload {
       "kept" -> wantCount, "candidates" -> candidates, "jobs_per_pass" -> jobsPerPass)
     Outcome(attempted, failed, e2e, layer.toMap, det, Map(
       "passes" -> passMs.size, "docs" -> corpus.docs.size, "setup_s" -> setups.map(_._2),
-      "pass_ms" -> passMs.toSeq, "window_s" -> (System.nanoTime() - windowStart) / 1e9))
+      "checked_pass_ms" -> checkedMs, "warm_pass_ms" -> warmMs, "pass_ms" -> passMs.toSeq, "window_s" -> (System.nanoTime() - windowStart) / 1e9,
+      "jvm_by_pass" -> jvmLog.toSeq))
   }
 
   private var passNo = 0L
 
   /** One curation pass over the corpus at `dir`; returns the output's row
-    * count and id fingerprint. Traced passes run and materialize each stage
-    * on its own, so each stage gets its own span.
+    * count and id fingerprint. Each stage is persisted and materialized on
+    * its own, as a pipeline reusing its intermediate frames would: the fused
+    * plan recomputes the filtered corpus for the MinHash, cluster and
+    * keep-best joins. Traced and untraced passes run the same plan, so each
+    * stage gets its own span and the two runs differ only by the spans.
+    * `inspect` sees the exact-dedup output, the clusters and the output
+    * while they are still persisted.
     */
-  private def pass(ctx: Ctx, dir: String, warm: Boolean): (Long, Long) = {
+  private def pass(ctx: Ctx, dir: String, warm: Boolean,
+      inspect: (DataFrame, DataFrame, DataFrame) => Unit = (_, _, _) => ()): (Long, Long) = {
     val spark = ctx.spark
     val tr = ctx.tracer
     passNo += 1
     val req = if (warm) -passNo else passNo
     val obs = Observation(s"curation-$passNo")
-    def sink(df: DataFrame): Unit =
-      df.observe(obs, count(lit(1)).as("n"), bit_xor(xxhash64(col("id"))).as("h"))
-        .write.format("noop").mode("overwrite").save()
     tr.span("pass", req) {
-      val docs = spark.read.parquet(dir)
-      if (!tr.on) {
-        val ex = Dedup.dropExactDups(quality(docs), "id", "text")
-        sink(Dedup.keepBestPerCluster(ex, "id", "q", Dedup.duplicateClusters(minhash(ex))))
-      } else {
-        val held = mutable.ArrayBuffer.empty[DataFrame]
-        def stage(name: String)(df: => DataFrame): DataFrame = tr.span(name, req) {
-          val d = df.persist()
-          d.write.format("noop").mode("overwrite").save()
-          held += d
-          d
-        }
-        val q = stage("text.quality")(quality(docs))
-        val ex = stage("dedup.exact")(Dedup.dropExactDups(q, "id", "text"))
-        val pairs = stage("dedup.minhash")(minhash(ex))
-        val clusters = stage("dedup.cluster")(Dedup.duplicateClusters(pairs))
-        tr.span("dedup.keep_best", req)(sink(Dedup.keepBestPerCluster(ex, "id", "q", clusters)))
-        held.foreach(_.unpersist())
+      val held = mutable.ArrayBuffer.empty[DataFrame]
+      def stage(name: String)(df: => DataFrame): DataFrame = tr.span(name, req) {
+        val d = df.persist()
+        d.write.format("noop").mode("overwrite").save()
+        held += d
+        d
       }
+      val q = stage("text.quality")(quality(spark.read.parquet(dir)))
+      val ex = stage("dedup.exact")(Dedup.dropExactDups(q, "id", "text"))
+      val pairs = stage("dedup.minhash")(minhash(ex))
+      val clusters = stage("dedup.cluster")(Dedup.duplicateClusters(pairs))
+      val out = Dedup.keepBestPerCluster(ex, "id", "q", clusters)
+      tr.span("dedup.keep_best", req) {
+        out.observe(obs, count(lit(1)).as("n"), bit_xor(xxhash64(col("id"))).as("h"))
+          .write.format("noop").mode("overwrite").save()
+      }
+      inspect(ex, clusters, out)
+      held.foreach(_.unpersist())
     }
     val m = obs.get
     (m("n").asInstanceOf[Long], m("h").asInstanceOf[Long])
@@ -169,7 +176,8 @@ object Curation {
   val DocTokens = 60
   val SetupRepeats = 3
   val MinPasses = 3
-  val WarmPasses = 1
+  // untimed passes, the checked pass included
+  val WarmPasses = 3
   val MinQuality = 0.5
   val Threshold = 0.6
   val NumHashes = 32

@@ -60,6 +60,18 @@ object Main {
     "churn" -> (() => new Churn),
     "curation" -> (() => new Curation))
 
+  /** Time the JVM spent in garbage collection and JIT compilation so far,
+    * and the number of classes Spark's code generator compiled.
+    */
+  def jvmTimes: Map[String, Any] = {
+    import java.lang.management.ManagementFactory
+    import scala.jdk.CollectionConverters._
+    Map(
+      "jvm_gc_ms" -> ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum,
+      "jvm_jit_ms" -> ManagementFactory.getCompilationMXBean.getTotalCompilationTime,
+      "codegen_compiles" -> org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length == 6, "usage: perfbench.Main <workload> <seed> <seconds> <trace> <work> <report>")
     val Array(name, seedS, secondsS, traceS, workS, reportS) = args
@@ -109,7 +121,7 @@ object Main {
         "per_layer" -> layer,
         "deterministic" -> out.deterministic,
         "details" -> (out.details ++ Map("spans" -> tracer.spans.size, "calibration_s" -> calibrationS, "spark_start_s" -> sparkS,
-          "before_workload_s" -> (workloadStart - t0) / 1e9)))
+          "before_workload_s" -> (workloadStart - t0) / 1e9) ++ jvmTimes))
       val w = new PrintWriter(new File(reportS))
       try w.write(report + "\n") finally w.close()
     } finally spark.stop()
