@@ -19,6 +19,17 @@ object Bench {
   /** Lower median — for n=3 the true median; robust to one noisy run. */
   private def median(xs: Seq[Double]): Double = xs.sorted.apply((xs.size - 1) / 2)
 
+  /** A numeric environment variable, None when unset; a value `parse`
+    * rejects fails with a message naming the variable.
+    */
+  private def envNumber[T](name: String)(parse: String => T): Option[T] =
+    sys.env.get(name).map { v =>
+      try parse(v.trim) catch {
+        case _: NumberFormatException =>
+          throw new IllegalArgumentException(s"$name must be an integer, got '$v'")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -64,7 +75,7 @@ object Bench {
     // N runs for any query whose FIRST run exceeds the threshold; queries
     // are idempotent under repetition (lifecycle gates mint a fresh temp
     // dir per invocation), so re-running in one JVM is safe.
-    val maxRuns = sys.env.getOrElse("GRAFT_BENCH_REPEATS", "3").toInt.max(1)
+    val maxRuns = envNumber("GRAFT_BENCH_REPEATS")(_.toInt).getOrElse(3).max(1)
     // 0.2 (was 1.0): the r8 back-to-back pair showed the remaining
     // cross-run median disagreement lives almost entirely in the
     // 0.2–1 s single-run band (scheduler jitter); tripling those ~25
@@ -109,8 +120,8 @@ object Bench {
     // separating suite-order effects from code. The driver sets no env,
     // so its runs keep the sorted order (and identical timing semantics).
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    val maybeShuffled = sys.env.get("GRAFT_BENCH_SHUFFLE") match {
-      case Some(seed) => new scala.util.Random(seed.toLong).shuffle(ordered)
+    val maybeShuffled = envNumber("GRAFT_BENCH_SHUFFLE")(_.toLong) match {
+      case Some(seed) => new scala.util.Random(seed).shuffle(ordered)
       case None => ordered
     }
     val results = maybeShuffled

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Scratch plan-capture main (not part of the driver contract): runs the
   * named gates and writes, per gate, EVERY SQL execution's formatted
   * physical plan plus the returned frame's `explain("formatted")` to
@@ -45,7 +47,14 @@ object PlanDump {
         val sc = spark.sparkContext
         val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
         bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case _: Throwable => Thread.sleep(500) }
+      } catch {
+        // reflection wraps the target's exceptions: an interrupt must stay
+        // visible to the caller, not be swallowed into the fallback sleep
+        case e: Exception if e.isInstanceOf[InterruptedException] ||
+            e.getCause.isInstanceOf[InterruptedException] =>
+          Thread.currentThread().interrupt()
+        case NonFatal(_) => Thread.sleep(500)
+      }
       val plans = buf.synchronized(buf.toString)
       val fin = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)

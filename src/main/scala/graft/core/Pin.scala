@@ -13,18 +13,8 @@ import org.apache.spark.sql.DataFrame
   * `SeqPack.assign` / `ngramJaccardPairs`).
   */
 object Pin {
-  /** r15 measurement scaffold: `GRAFT_PIN_OFF="TextIndex.build,..."`
-    * returns the frame UNPINNED at the named sites — paired-bench A/B
-    * only (the driver sets no env, so its runs always pin). Read once:
-    * a mid-session env change cannot make two references diverge.
-    */
-  private val off: Set[String] = sys.env.get("GRAFT_PIN_OFF")
-    .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    .getOrElse(Set.empty)
-
   def apply(df: DataFrame, reliable: Boolean, who: String): DataFrame =
-    if (off(who)) df
-    else if (reliable) {
+    if (reliable) {
       require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
         s"$who(reliable=true) needs sparkContext.setCheckpointDir")
       df.checkpoint(eager = true)

@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, Expression, InterpretedOrdering, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, Expression, InterpretedOrdering, SpecificInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -43,6 +43,92 @@ final class TopKBuffer(val k: Int, ord: Ordering[InternalRow]) {
   }
 }
 
+private[graft] object TopKBuffer {
+  /** Rows as one byte array: count, then each row's length and bytes. */
+  def pack(rows: Array[UnsafeRow]): Array[Byte] = {
+    var total = 4
+    rows.foreach(r => total += 4 + r.getSizeInBytes)
+    val bb = ByteBuffer.allocate(total)
+    bb.putInt(rows.length)
+    rows.foreach { r => bb.putInt(r.getSizeInBytes); bb.put(r.getBytes) }
+    bb.array()
+  }
+
+  /** Inverse of [[pack]]: rows of `numFields` fields, each owning its bytes. */
+  def unpack(bytes: Array[Byte], numFields: Int): Iterator[UnsafeRow] = {
+    val bb = ByteBuffer.wrap(bytes)
+    Iterator.fill(bb.getInt) {
+      val arr = new Array[Byte](bb.getInt)
+      bb.get(arr)
+      val row = new UnsafeRow(numFields)
+      row.pointTo(arr, arr.length)
+      row
+    }
+  }
+}
+
+/** One bounded heap per query group over (sort key, id, score, group) rows:
+  * the `topk_rows` heap of [[graft.operators.TopK.perGroup]] run outside an
+  * aggregate. It uses the same [[TopKBuffer]] and the same ordering (sort
+  * key, then id, via [[SpecializedRowOrdering]]), so ties and -0.0/NaN
+  * scores order exactly as the aggregate orders them. The sort key is the
+  * score, negated for descending metrics, as in `TopK.perGroup`.
+  *
+  * Scan tasks keep one instance each and ship [[packed]] rows; the driver
+  * merges them with [[addPacked]].
+  */
+private[graft] final class QueryHeaps(
+    groups: Int, k: Int, idType: DataType, ascending: Boolean) {
+  import QueryHeaps._
+  private val ord = ordering(idType)
+  private val heaps = Array.fill(groups)(new TopKBuffer(k, ord))
+  private val probe = new SpecificInternalRow(Seq(DoubleType, idType, DoubleType, IntegerType))
+  private val proj = UnsafeProjection.create(schema(idType))
+
+  /** Offers a hit to group `g`'s heap. `id` is the Catalyst value and may
+    * point into a reused input row: it is copied only if the hit is kept.
+    */
+  def offer(g: Int, score: Double, id: Any): Unit = {
+    val sk = if (ascending) score else -score
+    val h = heaps(g)
+    // a strictly worse sort key can never enter a full heap
+    if (h.heap.size < k || SpecializedRowOrdering.cmpD(sk, h.heap.peek().getDouble(0)) <= 0) {
+      probe.setDouble(0, sk)
+      probe.update(1, id)
+      probe.setDouble(2, score)
+      probe.setInt(3, g)
+      h.addProbe(proj(probe))
+    }
+  }
+
+  /** Every kept row, as one byte array (see [[TopKBuffer.pack]]). */
+  def packed: Array[Byte] =
+    TopKBuffer.pack(heaps.flatMap(_.heap.toArray(new Array[InternalRow](0)))
+      .map(_.asInstanceOf[UnsafeRow]))
+
+  /** Merges rows another instance [[packed]]. */
+  def addPacked(bytes: Array[Byte]): Unit =
+    TopKBuffer.unpack(bytes, NumFields).foreach(r => heaps(r.getInt(3)).addOwned(r))
+
+  /** Group `g`'s kept rows, best first. */
+  def sorted(g: Int): Array[InternalRow] = heaps(g).sorted(ord)
+}
+
+private[graft] object QueryHeaps {
+  val NumFields = 4
+
+  def schema(idType: DataType): StructType = StructType(Seq(
+    StructField("sk", DoubleType, nullable = false), StructField("id", idType),
+    StructField("score", DoubleType, nullable = false),
+    StructField("group", IntegerType, nullable = false)))
+
+  /** (sort key, id) order, as `topk_rows` orders `struct(sk, id, ...)` with
+    * two sort fields.
+    */
+  def ordering(idType: DataType): Ordering[InternalRow] =
+    SpecializedRowOrdering.orInterpreted(schema(idType).fields.take(2))
+}
+
 /** Field-specialized lexicographic row ordering: resolves each sort
   * field's accessor/comparator ONCE instead of InterpretedOrdering's
   * per-comparison type dispatch. Semantics are identical (ascending,
@@ -53,7 +139,7 @@ final class TopKBuffer(val k: Int, ord: Ordering[InternalRow]) {
   */
 private[graft] object SpecializedRowOrdering {
   // Spark SQL double/float total order: -0.0 == 0.0, NaN == NaN, NaN largest
-  private def cmpD(x: Double, y: Double): Int =
+  def cmpD(x: Double, y: Double): Int =
     if (x < y) -1
     else if (x > y) 1
     else {
@@ -102,6 +188,11 @@ private[graft] object SpecializedRowOrdering {
       }
     }
   }
+
+  /** [[forFields]], or InterpretedOrdering where it has no specialization. */
+  def orInterpreted(fields: Array[StructField]): Ordering[InternalRow] =
+    Option(forFields(fields))
+      .getOrElse(InterpretedOrdering.forSchema(fields.map(_.dataType).toIndexedSeq))
 }
 
 /** The reference's per-query result heap (faiss `CMin/CMax` heaps,
@@ -136,13 +227,8 @@ case class TopKRows(
   override def nullable: Boolean = false
 
   private lazy val structType = child.dataType.asInstanceOf[StructType]
-  private lazy val ordering: Ordering[InternalRow] = {
-    val n = if (numSortFields > 0) numSortFields else structType.length
-    val fields = structType.fields.take(n)
-    val fast = SpecializedRowOrdering.forFields(fields)
-    if (fast != null) fast
-    else InterpretedOrdering.forSchema(fields.map(_.dataType).toIndexedSeq)
-  }
+  private lazy val ordering: Ordering[InternalRow] = SpecializedRowOrdering.orInterpreted(
+    structType.fields.take(if (numSortFields > 0) numSortFields else structType.length))
   @transient private lazy val proj = UnsafeProjection.create(structType)
   // One projection from the INPUT row to the struct's UnsafeRow: for the
   // CreateNamedStruct shape every caller uses, this replaces interpreted
@@ -182,31 +268,12 @@ case class TopKRows(
   override def eval(buf: TopKBuffer): Any =
     new GenericArrayData(buf.sorted(ordering).asInstanceOf[Array[Any]])
 
-  override def serialize(buf: TopKBuffer): Array[Byte] = {
-    val rows = buf.sorted(ordering)
-    var total = 4
-    val bytes = rows.map { r => r.asInstanceOf[UnsafeRow].getBytes }
-    bytes.foreach(b => total += 4 + b.length)
-    val bb = ByteBuffer.allocate(total)
-    bb.putInt(rows.length)
-    bytes.foreach { b => bb.putInt(b.length); bb.put(b) }
-    bb.array()
-  }
+  override def serialize(buf: TopKBuffer): Array[Byte] =
+    TopKBuffer.pack(buf.sorted(ordering).map(_.asInstanceOf[UnsafeRow]))
 
   override def deserialize(bytes: Array[Byte]): TopKBuffer = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
     val buf = new TopKBuffer(k, ordering)
-    var i = 0
-    while (i < n) {
-      val len = bb.getInt
-      val arr = new Array[Byte](len)
-      bb.get(arr)
-      val row = new UnsafeRow(structType.length)
-      row.pointTo(arr, len)
-      buf.addOwned(row)
-      i += 1
-    }
+    TopKBuffer.unpack(bytes, structType.length).foreach(buf.addOwned)
     buf
   }
 

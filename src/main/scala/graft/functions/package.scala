@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.{Bridge => ExpressionUtils}
 
@@ -48,15 +49,24 @@ package object functions {
   def mg_sketch(itemCol: Column, k: Int): Column =
     col(MgSketch(expr(itemCol), k).toAggregateExpression())
 
-  /** Register the kernels in the session's function registry for SQL use. */
+  private val sqlKernels: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "l2_sq" -> (es => L2SqDistance(es.head, es(1))),
+    "inner_product_vec" -> (es => InnerProduct(es.head, es(1))),
+    "cosine_sim" -> (es => CosineSimilarity(es.head, es(1))),
+    "hamming" -> (es => HammingDistance(es.head, es(1))),
+    "pq_adc" -> (es => PqAdcDistance(es.head, es(1))),
+    "int8_encode" -> (es => Int8EncodeExpr(es.head)),
+    "int8_decode" -> (es => Int8DecodeExpr(es.head)))
+
+  /** Register the kernels in the session's function registry for SQL use.
+    * Idempotent: a name the session already knows is left as it is, so
+    * repeated calls neither replace functions nor log a warning each.
+    */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("l2_sq", es => L2SqDistance(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("inner_product_vec", es => InnerProduct(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim", es => CosineSimilarity(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("hamming", es => HammingDistance(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("pq_adc", es => PqAdcDistance(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("int8_encode", es => Int8EncodeExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("int8_decode", es => Int8DecodeExpr(es.head), "scala_udf")
+    sqlKernels.foreach { case (name, build) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 }

@@ -1,9 +1,15 @@
 package graft.index
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
+import org.apache.spark.util.LongAccumulator
 
 import graft.core.Metric
+import graft.functions.{QueryHeaps, SpecializedRowOrdering}
 import graft.operators.{Knn, TopK}
 
 /** IVFPQ (reference V2, index/impl/gamma_index_ivfpq.cc): coarse quantize,
@@ -66,24 +72,26 @@ class IvfPqIndex(
   // stride) stays valid — padded slots are never referenced
   private val ksub = codebooks.map(_.length).max
 
-  override def search(
+  /** Driver-side probe plan shared by both request paths: the probed
+    * lists (allowed-set semi-join applied, sorted by centroid within each
+    * partition) and the ADC scan kernel over them.
+    */
+  private def probe(
       queries: Seq[(Long, Array[Float])],
       k: Int,
       nprobe: Option[Int],
       allowedIds: Option[DataFrame],
-      minScore: Option[Double],
-      maxScore: Option[Double]): DataFrame = {
-    import spark.implicits._
-    val asc = Metric.ascending(params.metric)
+      heapSize: Int,
+      range: (Option[Double], Option[Double])): (DataFrame, AdcScan, Array[Long]) = {
     val np = math.min(nprobe.getOrElse(params.nprobe), centers.length)
     val sizes = if (Ivf.adaptiveEnabled(spark)) listSizes else None
     val target = Ivf.probeTarget(k, params.recallNum, np, params.nprobe)
     // probes + ADC happen in the (possibly OPQ-rotated) code space; the
-    // exact re-rank below stays in the original space, so rotation never
+    // exact re-rank stays in the original space, so rotation never
     // touches final scores
-    val qProbes = queries.map { case (qid, qv0) =>
+    val qProbes = queries.zipWithIndex.map { case ((_, qv0), pos) =>
       val qv = rotation.map(Opq.rotate(_, qv0)).getOrElse(qv0)
-      (qid, qv,
+      (pos, qv,
         Ivf.extendByTarget(
           Ivf.rankedCentroids(centers, qv, params.metric), sizes, np, target).toArray)
     }
@@ -105,73 +113,148 @@ class IvfPqIndex(
     // sort by centroid bounds the LUT cache to ONE centroid's queries
     // (persisted lists arrive centroid-partitioned already, so the sort is
     // ~free there).
-    val byCentroid: Map[Int, Array[(Long, Array[Float])]] = qProbes
-      .flatMap { case (qid, qv, ps) => ps.map(c => (c, (qid, qv))) }
+    val byCentroid: Map[Int, Array[(Int, Array[Float])]] = qProbes
+      .flatMap { case (pos, qv, ps) => ps.map(c => (c, (pos, qv))) }
       .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).toArray }
-    val bcQ = spark.sparkContext.broadcast(byCentroid)
-    val bcQuant = spark.sparkContext.broadcast((centers, codebooks))
-    val mL = m; val ksubL = ksub
-    val ip = params.metric == Metric.InnerProduct
+    // one heap per distinct qid, as the per-qid top-k the heaps stand for
+    val qids = queries.map(_._1).distinct.sorted.toArray
+    val group = qids.zipWithIndex.toMap
     val in = filtered.select(col("centroid_id"), col(idCol), col("pq_codes"))
       .sortWithinPartitions(col("centroid_id"))
+    val scanAcc = spark.sparkContext.longAccumulator("graft.ivfpq.scannedRows")
+    lastScanAcc = Some(scanAcc)
+    val scan = new AdcScan(
+      spark.sparkContext.broadcast(byCentroid), spark.sparkContext.broadcast((centers, codebooks)),
+      queries.map(q => group(q._1)).toArray, qids.length, heapSize, in.schema(idCol).dataType,
+      Metric.ascending(params.metric), params.metric == Metric.InnerProduct, m, ksub, range,
+      scanAcc)
+    (in, scan, qids)
+  }
+
+  /** Lazy form (the `AnnRewrite` and gate callers): each scan task keeps
+    * only its per-query heap, then the heaps merge through `TopK.perGroup`
+    * (one shuffle) and the candidates re-rank through a join with the raw
+    * vectors. [[searchLocal]] answers the same request in two jobs.
+    */
+  override def search(
+      queries: Seq[(Long, Array[Float])],
+      k: Int,
+      nprobe: Option[Int],
+      allowedIds: Option[DataFrame],
+      minScore: Option[Double],
+      maxScore: Option[Double]): DataFrame = {
+    import spark.implicits._
+    val asc = Metric.ascending(params.metric)
+    // stage 1 keeps recall_num candidates by ADC (metric order — ADC scores
+    // are approximate, so the range predicate waits for the exact stage);
+    // without the exact stage the ADC value IS the returned score and the
+    // range predicate applies to it directly
+    val nCand = if (params.hasRank) math.max(params.recallNum, k) else k
+    val adcRange = if (params.hasRank) (None, None) else (minScore, maxScore)
+    val (in, scan, qids) = probe(queries, k, nprobe, allowedIds, nCand, adcRange)
     val outSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("qid",
         org.apache.spark.sql.types.LongType, nullable = false),
       in.schema(idCol).copy(name = "id"),
       org.apache.spark.sql.types.StructField("score",
         org.apache.spark.sql.types.DoubleType, nullable = false)))
-    val scanAcc = spark.sparkContext.longAccumulator("graft.ivfpq.scannedRows")
-    lastScanAcc = Some(scanAcc)
     val adc = in.mapPartitions { rows =>
-      val (cs, cbs) = bcQuant.value
-      var curCid = Integer.MIN_VALUE
-      val luts = scala.collection.mutable.HashMap.empty[Long, Array[Double]]
-      rows.flatMap { r =>
-        scanAcc.add(1L) // code rows read (once per row, not per query)
-        val cid = r.getInt(0)
-        if (cid != curCid) { luts.clear(); curCid = cid }
-        val qs = bcQ.value.getOrElse(cid, null)
-        if (qs == null) Iterator.empty
-        else {
-          val codeArr = r.getSeq[Int](2)
-          val id = r.get(1)
-          qs.iterator.map { case (qid, qv) =>
-            val lut = luts.getOrElseUpdate(qid,
-              IvfPqIndex.lutFor(qv, cs(cid), cbs, ksubL, ip))
-            var j = 0; var s = 0.0
-            while (j < mL) { s += lut(j * ksubL + codeArr(j)); j += 1 }
-            org.apache.spark.sql.Row(qid, id, s)
-          }
-        }
+      val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(scan.idType)
+      val task = scan.task()
+      rows.foreach { r =>
+        task.add(r.getInt(0), toCatalyst(r.get(1)),
+          org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+            .fromPrimitiveArray(r.getSeq[Int](2).toArray))
       }
+      LocalHits.fromHeaps(task.heaps, qids, scan.idType).toRows
     }(org.apache.spark.sql.Encoders.row(outSchema))
-
-    if (!params.hasRank) {
-      // the ADC value IS the returned score — the range predicate applies
-      // to it directly, and the heap order follows the metric
-      val ranged = AnnIndex.scoreRange(adc, "score", minScore, maxScore)
-      return TopK.perGroup(ranged, "qid", "score", asc, k, Seq("id"))
-    }
-    // stage 1: recall_num candidates by ADC (metric order — ADC scores are
-    // approximate, so the range predicate waits for the exact stage);
-    // stage 2: exact re-rank with the range filter before the final heap
-    val nCand = math.max(params.recallNum, k)
     val cands = TopK.perGroup(adc, "qid", "score", asc, nCand, Seq("id"))
-      .select(col("qid"), col("id"))
+    if (!params.hasRank) return cands
+    // stage 2: exact re-rank with the range filter before the final heap
     val qdf = queries.map { case (i, v) => (i, v.toSeq) }.toDF("qid", "qvec")
     // stream the raw table, broadcast the candidate set when it is small
     // (nq x recall_num rows — the reference default is 100/query); an
     // exhaustive-recall caller falls back to a shuffle join
-    val candsSide =
-      if (queries.size.toLong * nCand <= 4000000L) broadcast(cands) else cands
+    val candsSide = cands.select(col("qid"), col("id"))
     val exact = rawDocs.select(col(idCol).as("id"), col(vecCol))
-      .join(candsSide, Seq("id"))
+      .join(if (withinBroadcastBound(queries.size, nCand)) broadcast(candsSide) else candsSide, Seq("id"))
       .join(broadcast(qdf), Seq("qid"))
       .select(col("qid"), col("id"),
         Knn.score(params.metric, col(vecCol), col("qvec")).as("score"))
     val ranged = AnnIndex.scoreRange(exact, "score", minScore, maxScore)
     TopK.perGroup(ranged, "qid", "score", asc, k, Seq("id"))
   }
+
+  /** The request path in two Spark jobs and no shuffle, the shape of
+    * Spark's `TakeOrderedAndProject` (the reference's per-thread heaps
+    * merged once, gamma_index_ivfpq.cc:570-593, then the `recall_num`
+    * re-rank, :642-697):
+    *  1. scan the probed lists; each task keeps a heap of
+    *     max(recall_num, k) candidates per query, merged on the driver;
+    *  2. scan the raw vectors once against a broadcast candidate -> query
+    *     map, score exactly, apply the score range; each task keeps k per
+    *     query, merged on the driver.
+    * Without `hasRank`, job 1 applies the range and keeps k, and there is
+    * no job 2. Results equal [[search]] row for row (same heaps, same
+    * double arithmetic as `l2_sq` / `inner_product`).
+    *
+    * None when the candidates would exceed the broadcast bound or the key
+    * type has no by-value equality; the caller then runs [[search]].
+    */
+  private[graft] def searchLocal(
+      queries: Seq[(Long, Array[Float])],
+      k: Int,
+      nprobe: Option[Int],
+      allowedIds: Option[DataFrame],
+      minScore: Option[Double],
+      maxScore: Option[Double]): Option[LocalHits] = {
+    import org.apache.spark.sql.types._
+    val nCand = if (params.hasRank) math.max(params.recallNum, k) else k
+    val keyType = codes.schema(idCol).dataType
+    if (!withinBroadcastBound(queries.size, nCand) ||
+        !Seq(LongType, IntegerType, StringType).contains(keyType)) return None
+    val adcRange = if (params.hasRank) (None, None) else (minScore, maxScore)
+    val (in, scan, qids) = probe(queries, k, nprobe, allowedIds, nCand, adcRange)
+    val stage1 = IvfPqIndex.mergeTasks(scan.heaps(),
+      in.queryExecution.toRdd.mapPartitions { rows =>
+        val task = scan.task()
+        rows.foreach(r => task.add(r.getInt(0), r.get(1, scan.idType), r.getArray(2)))
+        Iterator(task.heaps.packed)
+      })
+    if (!params.hasRank) return Some(LocalHits.fromHeaps(stage1, qids, keyType))
+
+    // candidate -> the query positions that score it: every position
+    // sharing the candidate's qid, like the re-rank join on qid
+    val positions = queries.indices.groupBy(scan.groupOf(_))
+    val cand = new java.util.HashMap[Any, Array[Int]]()
+    qids.indices.foreach { g =>
+      stage1.sorted(g).foreach { r =>
+        val id = r.get(1, keyType)
+        val prev = cand.get(id)
+        cand.put(id, if (prev == null) positions(g).toArray else prev ++ positions(g))
+      }
+    }
+    val raw = rawDocs.select(col(idCol), col(vecCol))
+    val vecIsFloat = raw.schema(vecCol).dataType match {
+      case ArrayType(FloatType, _) => true
+      case _                       => false
+    }
+    val exact = new ExactRerank(spark.sparkContext.broadcast(cand),
+      spark.sparkContext.broadcast(queries.map(_._2).toArray), scan.groupOf, qids.length, k,
+      keyType, Metric.ascending(params.metric), params.metric == Metric.InnerProduct, vecIsFloat,
+      (minScore, maxScore))
+    val stage2 = IvfPqIndex.mergeTasks(exact.heaps(),
+      raw.queryExecution.toRdd.mapPartitions { rows =>
+        val heaps = exact.heaps()
+        rows.foreach(r => exact.add(heaps, r))
+        Iterator(heaps.packed)
+      })
+    Some(LocalHits.fromHeaps(stage2, qids, keyType))
+  }
+
+  private def withinBroadcastBound(nq: Int, nCand: Int): Boolean =
+    nq.toLong * nCand <= IvfPqIndex.MaxBroadcastCandidates
 
   /** Encode a delta batch with the ALREADY-TRAINED quantizers — the
     * reference's incremental re-encode of new/updated vectors through the
@@ -217,6 +300,26 @@ class IvfPqIndex(
 }
 
 object IvfPqIndex {
+
+  /** nq x max(recall_num, k) candidate rows up to which the request path
+    * collects candidates on the driver (and the lazy form broadcasts them);
+    * above it the lazy form's shuffle join runs.
+    */
+  val MaxBroadcastCandidates = 4000000L
+
+  /** Spark SQL's `score >= minScore AND score <= maxScore` (-0.0 equals
+    * 0.0, NaN is the largest value).
+    */
+  private[index] def inRange(s: Double, range: (Option[Double], Option[Double])): Boolean =
+    range._1.forall(lo => SpecializedRowOrdering.cmpD(s, lo) >= 0) &&
+      range._2.forall(hi => SpecializedRowOrdering.cmpD(s, hi) <= 0)
+
+  /** One job: every task's packed heaps, merged into `into`. */
+  private def mergeTasks(
+      into: QueryHeaps, tasks: org.apache.spark.rdd.RDD[Array[Byte]]): QueryHeaps = {
+    tasks.collect().foreach(into.addPacked)
+    into
+  }
 
   /** Restore a saved index. `rawDocs` re-supplies the exact re-rank source
     * (the reference reloads raw vectors alongside dumped codes,
@@ -441,4 +544,104 @@ object IvfPqIndex {
     }(Encoders.row(schema))
   }
 
+}
+
+/** ADC scan kernel of one request. Each task scores its code rows against
+  * every query probing their centroid through LUTs built where the codes
+  * live, cached for one centroid at a time (rows arrive sorted by
+  * centroid), and keeps `heapSize` candidates per query group.
+  */
+private[index] final class AdcScan(
+    byCentroid: Broadcast[Map[Int, Array[(Int, Array[Float])]]], // centroid -> (query position, code-space vector)
+    quant: Broadcast[(Array[Array[Double]], Array[Array[Array[Double]]])],
+    val groupOf: Array[Int], // query position -> heap group
+    groups: Int,
+    heapSize: Int,
+    val idType: DataType,
+    ascending: Boolean,
+    ip: Boolean,
+    m: Int,
+    ksub: Int,
+    range: (Option[Double], Option[Double]),
+    scanned: LongAccumulator) extends Serializable {
+
+  def heaps(): QueryHeaps = new QueryHeaps(groups, heapSize, idType, ascending)
+
+  def task(): Task = new Task
+
+  final class Task {
+    val heaps: QueryHeaps = AdcScan.this.heaps()
+    private val probes = byCentroid.value
+    private val (cs, cbs) = quant.value
+    private val luts = scala.collection.mutable.HashMap.empty[Int, Array[Double]]
+    private var curCid = Integer.MIN_VALUE
+
+    /** One code row: `id` is its key's Catalyst value, `codes` its PQ codes. */
+    def add(cid: Int, id: Any, codes: ArrayData): Unit = {
+      scanned.add(1L) // code rows read (once per row, not per query)
+      if (cid != curCid) { luts.clear(); curCid = cid }
+      val qs = probes.getOrElse(cid, null)
+      if (qs != null) {
+        var i = 0
+        while (i < qs.length) {
+          val (pos, qv) = qs(i)
+          val lut = luts.getOrElseUpdate(pos, IvfPqIndex.lutFor(qv, cs(cid), cbs, ksub, ip))
+          var j = 0; var s = 0.0
+          while (j < m) { s += lut(j * ksub + codes.getInt(j)); j += 1 }
+          if (IvfPqIndex.inRange(s, range)) heaps.offer(groupOf(pos), s, id)
+          i += 1
+        }
+      }
+    }
+  }
+}
+
+/** Exact re-rank kernel of the two-job request path: scores each raw
+  * (id, vector) row that is a candidate against the queries that shortlisted
+  * it, with the double arithmetic of `l2_sq` / `inner_product` (doc element
+  * first, each element widened to double, summed in index order), and keeps
+  * the `k` best in-range scores per query group.
+  */
+private[index] final class ExactRerank(
+    cand: Broadcast[java.util.HashMap[Any, Array[Int]]], // candidate key -> query positions
+    queries: Broadcast[Array[Array[Float]]],
+    groupOf: Array[Int],
+    groups: Int,
+    k: Int,
+    idType: DataType,
+    ascending: Boolean,
+    ip: Boolean,
+    vecIsFloat: Boolean,
+    range: (Option[Double], Option[Double])) extends Serializable {
+
+  def heaps(): QueryHeaps = new QueryHeaps(groups, k, idType, ascending)
+
+  /** One (id, vector) row. */
+  def add(heaps: QueryHeaps, r: InternalRow): Unit =
+    if (!r.isNullAt(0) && !r.isNullAt(1)) {
+      val id = r.get(0, idType)
+      val ps = cand.value.get(id)
+      if (ps != null) {
+        val v = r.getArray(1)
+        val qs = queries.value
+        var i = 0
+        while (i < ps.length) {
+          val p = ps(i)
+          val s = score(v, qs(p))
+          if (IvfPqIndex.inRange(s, range)) heaps.offer(groupOf(p), s, id)
+          i += 1
+        }
+      }
+    }
+
+  private def score(v: ArrayData, q: Array[Float]): Double = {
+    val n = math.min(v.numElements(), q.length)
+    var s = 0.0; var i = 0
+    if (ip) while (i < n) { s += elem(v, i) * q(i).toDouble; i += 1 }
+    else while (i < n) { val d = elem(v, i) - q(i).toDouble; s += d * d; i += 1 }
+    s
+  }
+
+  @inline private def elem(v: ArrayData, i: Int): Double =
+    if (vecIsFloat) v.getFloat(i).toDouble else v.getDouble(i)
 }

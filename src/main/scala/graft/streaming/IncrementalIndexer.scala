@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.core.Metric
-import graft.index.{AnnIndex, BinaryIvfIndex, HnswIndex, IndexParams, Ivf, IvfFlatIndex, IvfPqIndex}
+import graft.index.{AnnIndex, BinaryIvfIndex, HnswIndex, IndexParams, Ivf, IvfFlatIndex, IvfPqIndex, LocalHits}
 import graft.operators.{Knn, TopK}
 import graft.table.GammaTable
 
@@ -670,9 +670,26 @@ class IncrementalIndexer(
       maxScore: Option[Double] = None,
       allowedCount: Long = -1L,
       recallNum: Option[Int] = None,
-      hasRank: Option[Boolean] = None): DataFrame = {
+      hasRank: Option[Boolean] = None): DataFrame =
+    searchHits(queries, k, nprobe, allowedIds, minScore, maxScore, allowedCount,
+      recallNum, hasRank).fold(identity, _.toDF(spark))
+
+  /** [[search]], with the IVFPQ tier's hits held on the driver (Right) when
+    * the two-job request path served them ([[IvfPqIndex.searchLocal]]),
+    * so the caller's per-request cuts need no further Spark job; any other
+    * tier returns its lazy frame (Left).
+    */
+  private[graft] def searchHits(
+      queries: Seq[(Long, Array[Float])],
+      k: Int,
+      nprobe: Option[Int] = None,
+      allowedIds: Option[DataFrame] = None,
+      minScore: Option[Double] = None,
+      maxScore: Option[Double] = None,
+      allowedCount: Long = -1L,
+      recallNum: Option[Int] = None,
+      hasRank: Option[Boolean] = None): Either[DataFrame, LocalHits] = {
     import spark.implicits._
-    graft.functions.registerAll(spark)
     // fold in the PREVIOUS search's measured scan (its accumulator filled
     // when the caller ran an action on the returned frame): EWMA of
     // measured/predicted scanned rows corrects the uniform-volume model
@@ -766,23 +783,28 @@ class IncrementalIndexer(
       case None =>
         // V9: brute force while UNINDEXED
         logTier("unindexed-brute")
-        Knn.flatSearch(restrict(table.docs), key, vecCol, qDf, "qid", "qvec", k, params.metric,
-          minScore = minScore, maxScore = maxScore)
+        Left(Knn.flatSearch(restrict(table.docs), key, vecCol, qDf, "qid", "qvec", k, params.metric,
+          minScore = minScore, maxScore = maxScore))
       case Some(_) if aCount >= 0L && aCount <= exactThreshold =>
         // exact-over-filtered fallback: few enough survivors that probing
         // cannot guarantee k of them — and scoring all of them exactly is
         // cheaper than a probe anyway
         logTier("exact-fallback")
-        Knn.flatSearch(restrict(table.docs), key, vecCol, qDf, "qid", "qvec", k, params.metric,
-          minScore = minScore, maxScore = maxScore)
+        Left(Knn.flatSearch(restrict(table.docs), key, vecCol, qDf, "qid", "qvec", k, params.metric,
+          minScore = minScore, maxScore = maxScore))
       case Some(idx) =>
         // ids whose index entry is stale (updated after build) or dead —
         // such rows only live in buckets rewritten since the horizon, so
         // the scan is O(churned buckets), not O(table). (Keys whose
-        // entries were already purged re-excluded harmlessly.)
-        val invalid = table.docsChangedSince(invalidHorizon)
-          .filter(col(VersionCol) > builtVersion || col(DeletedCol))
-          .select(col(key))
+        // entries were already purged re-excluded harmlessly.) The
+        // manifest tells when no bucket changed: then there is nothing to
+        // exclude and no unindexed tail, and neither plan is built.
+        def changedSince(v: Long) = table.meta.bucketVersions.values.exists(_ > v)
+        val invalid =
+          if (!changedSince(invalidHorizon)) None
+          else Some(table.docsChangedSince(invalidHorizon)
+            .filter(col(VersionCol) > builtVersion || col(DeletedCol))
+            .select(col(key)))
         // per-list stats only matter when the probe is PARTIAL — a full
         // probe reads every list regardless, so skip the (cached) stats
         // count job for it (full-probe lifecycle/oracle searches stay
@@ -816,7 +838,7 @@ class IncrementalIndexer(
             recallNum = recallNum.getOrElse(statsIdx.params.recallNum),
             hasRank = hasRank.getOrElse(statsIdx.params.hasRank)))
         lastProbeBase = tunedIdx.params.nprobe
-        val cleanIdx = tunedIdx.excluding(invalid)
+        val cleanIdx = invalid.fold(tunedIdx)(tunedIdx.excluding)
         // inverse-selectivity widening: with an allowed fraction of s, a
         // probed list holds ~s of its usual share of allowed docs, so the
         // probe budget grows by ~1/s to keep ~k allowed candidates in
@@ -847,7 +869,11 @@ class IncrementalIndexer(
           if (hnswHuge)
             (None, math.min(k.toLong * factor * 2L, math.max(k.toLong, 1L << 16)).toInt)
           else (allowedHinted, k)
-        val fromIndex0 = cleanIdx.search(queries, fetchK, effNprobe, pushIds, minScore, maxScore)
+        // the two-job IVFPQ request path; None above its candidate bound
+        val local = cleanIdx match {
+          case pq: IvfPqIndex => pq.searchLocal(queries, fetchK, effNprobe, pushIds, minScore, maxScore)
+          case _              => None
+        }
         cleanIdx match {
           case pq: IvfPqIndex if pushIds.isEmpty && queries.size == 1 =>
             // single-query probes only: the accumulator measures the UNION
@@ -865,18 +891,29 @@ class IncrementalIndexer(
             }
           case _ =>
         }
-        val fromIndex =
-          if (hnswHuge) {
-            val ids = allowedIds.get
-            fromIndex0.join(
-              ids.select(col(ids.columns.head).cast("long").as("id")), Seq("id"), "left_semi")
-          } else fromIndex0
-        val tail = restrict(table.docsChangedSince(builtVersion)
-          .filter(!col(DeletedCol) && col(VersionCol) > builtVersion))
-        val fromTail = Knn.flatSearch(tail, key, vecCol, qDf, "qid", "qvec", k, params.metric,
-          minScore = minScore, maxScore = maxScore)
-        TopK.perGroup(fromIndex.unionByName(fromTail), "qid", "score",
-          Metric.ascending(params.metric), k, Seq("id"))
+        val fromTail =
+          if (!changedSince(builtVersion)) None
+          else Some(Knn.flatSearch(
+            restrict(table.docsChangedSince(builtVersion)
+              .filter(!col(DeletedCol) && col(VersionCol) > builtVersion)),
+            key, vecCol, qDf, "qid", "qvec", k, params.metric,
+            minScore = minScore, maxScore = maxScore))
+        val asc = Metric.ascending(params.metric)
+        local match {
+          case Some(hits) =>
+            // the merge with the tail (one more job) runs on the driver too
+            Right(fromTail.fold(hits)(t => (hits ++ LocalHits.collect(t)).topK(k, asc)))
+          case None =>
+            val fromIndex0 = cleanIdx.search(queries, fetchK, effNprobe, pushIds, minScore, maxScore)
+            val fromIndex =
+              if (hnswHuge) {
+                val ids = allowedIds.get
+                fromIndex0.join(
+                  ids.select(col(ids.columns.head).cast("long").as("id")), Seq("id"), "left_semi")
+              } else fromIndex0
+            Left(TopK.perGroup(fromTail.fold(fromIndex)(fromIndex.unionByName(_)), "qid", "score",
+              asc, k, Seq("id")))
+        }
     }
   }
 

@@ -105,6 +105,9 @@ class GammaTable private (
 
   import GammaTable._
 
+  // the kernels search plans and SQL callers name (idempotent per session)
+  graft.functions.registerAll(spark)
+
   def meta: TableMeta = meta0
 
   private def bucketPath(b: Long, v: Long) = s"$root/data/b$b/v$v"
@@ -189,15 +192,36 @@ class GammaTable private (
       }
     }
 
+  /** (manifest, allDocs, docs) of the last read: the frames hold a parquet
+    * relation whose file listing is paid once, so they are reused for as
+    * long as the manifest instance is. Every commit, refresh or load
+    * replaces that instance, and version directories are immutable.
+    */
+  @volatile private var framesCache: (TableMeta, DataFrame, DataFrame) = null
+
+  private def frames: (TableMeta, DataFrame, DataFrame) = {
+    val m = meta0
+    val c = framesCache
+    if (c != null && (c._1 eq m)) c
+    else {
+      val all = decodeStored(rawAllDocs)
+      val f = (m, all, all.filter(!col(DeletedCol)))
+      // built from meta0 as it was read above; a commit racing this read
+      // leaves a stale entry that the identity check never serves
+      if (meta0 eq m) framesCache = f
+      f
+    }
+  }
+
   /** All documents, including logically-deleted ones (vector fields on
     * the FLOAT surface regardless of store type).
     */
-  def allDocs: DataFrame = decodeStored(rawAllDocs)
+  def allDocs: DataFrame = frames._2
 
   /** Live documents (every reference read path filters the delete bitmap,
     * common/gamma_common_data.h:99-108).
     */
-  def docs: DataFrame = allDocs.filter(!col(DeletedCol))
+  def docs: DataFrame = frames._3
 
   /** Rows of buckets whose CURRENT version is newer than `v` — the only
     * buckets that can hold rows written or tombstoned after commit `v`,
@@ -881,7 +905,6 @@ class GammaTable private (
     * projection of requested fields. Returns (qid, key, score, fields...).
     */
   def search(req: SearchRequest): DataFrame = {
-    graft.functions.registerAll(spark)
     import spark.implicits._
     val key = meta0.keyField
     // a Union term filter on the primary key names exact keys, and keys
@@ -943,7 +966,9 @@ class GammaTable private (
     val reqNum = req.vecQueries.head.batch.size
     require(req.vecQueries.forall(_.batch.size == reqNum),
       "all vector fields in one request must carry the same req_num")
-    val perField = req.vecQueries.zipWithIndex.map { case (vq, i) =>
+    // per field: (qid, id, score) hits, lazy or (IVFPQ request path) on
+    // the driver
+    val perField = req.vecQueries.map { vq =>
       // V10 routing: an explicit retrievalType must resolve (and serve the
       // request's metric) — the reference rejects an unknown type rather
       // than silently answering with a different model
@@ -962,7 +987,7 @@ class GammaTable private (
       }
       // route through an attached ANN index unless brute-force is forced
       // (V9 override) or the index serves a different metric
-      val hits = routed match {
+      val hits: Either[DataFrame, graft.index.LocalHits] = routed match {
         case Some(ix) if !req.bruteForce && ix.params.metric == metric =>
           // the score range is pushed INTO the index scan (filter before
           // the top-k heap, like flatSearch and the reference's
@@ -982,10 +1007,11 @@ class GammaTable private (
           // model)
           val probeOverride =
             if (ix.retrievalType.equalsIgnoreCase("HNSW")) vq.efSearch else vq.nprobe
-          val h0 = ix.search(vq.batch, kCand, probeOverride, allowed, pushLo, pushHi,
+          val h0 = ix.searchHits(vq.batch, kCand, probeOverride, allowed, pushLo, pushHi,
             if (allowed.isDefined) allowedCnt else -1L,
             recallNum = vq.recallNum, hasRank = vq.hasRank)
-          if (wantSqrt) h0.withColumn("score", sqrt(col("score"))) else h0
+          if (!wantSqrt) h0
+          else h0.left.map(_.withColumn("score", sqrt(col("score")))).map(_.mapScores(math.sqrt))
         case _ =>
           // Hamming requests target a BinaryType field: queries ride the
           // float surface as byte values (BinaryIvfIndex adapter) and must
@@ -996,37 +1022,48 @@ class GammaTable private (
                 (qid, graft.index.BinaryIvfIndex.floatsToBytes(v))
               }.toDF("qid", "qvec")
             else vq.batch.map { case (qid, v) => (qid, v.toSeq) }.toDF("qid", "qvec")
-          Knn.flatSearch(
+          Left(Knn.flatSearch(
             base.filter(pred), key, vq.field, q, "qid", "qvec",
             k = kCand,
             metric = metric, l2Sqrt = req.l2Sqrt && req.vecQueries.size == 1,
-            minScore = vq.minScore, maxScore = vq.maxScore)
+            minScore = vq.minScore, maxScore = vq.maxScore))
       }
-      val boosted = vq.boost match {
-        case Some(b) => hits.withColumn("score", col("score") * b)
+      vq.boost match {
+        case Some(b) => hits.left.map(_.withColumn("score", col("score") * b)).map(_.mapScores(_ * b))
         case None    => hits
       }
-      boosted.select(col("qid"), col("id").as(key), col("score").as(s"score_$i"))
     }
 
-    // multi-field docid intersection is per batch position (qid, key)
-    val joined = perField.reduce((a, b) => a.join(b, Seq("qid", key)))
-    val fused = joined.withColumn(
-      "score", perField.indices.map(i => col(s"score_$i")).reduce(_ + _))
-    val ranked =
-      if (req.multiVectorRank || req.vecQueries.size == 1)
-        TopK.perGroup(fused, "qid", "score", Metric.ascending(metric), req.topn, Seq(key))
-      else {
-        // rank fusion off: the reference still returns the DOCID-ordered
-        // merge of the per-field lists (vector_manager.cc:562-576 skips
-        // only the score re-sort) — join the dense docid back and cut on
-        // it (string keys would sort "10" < "2" and pick a different set);
-        // the fused hit set is small and broadcasts, the table streams
-        val withDocid = base.select(col(key), col(DocidCol))
-          .join(broadcast(fused), Seq(key))
-        TopK.perGroup(withDocid, "qid", DocidCol, ascending = true, req.topn, Nil)
-          .drop(DocidCol)
-      }
+    val ranked = perField match {
+      case Seq(Right(local)) =>
+        // one field served on the driver: the request's top-k cut runs on
+        // its rows, and the result is a local relation (collects with no
+        // job); same columns as the fused frame below
+        local.topK(req.topn, Metric.ascending(metric)).toDF(spark, key)
+          .select(col("qid"), col(key), col("score").as("score_0"), col("score"))
+      case _ =>
+        val fieldHits = perField.zipWithIndex.map { case (h, i) =>
+          h.fold(identity, _.toDF(spark))
+            .select(col("qid"), col("id").as(key), col("score").as(s"score_$i"))
+        }
+        // multi-field docid intersection is per batch position (qid, key)
+        val joined = fieldHits.reduce((a, b) => a.join(b, Seq("qid", key)))
+        val fused = joined.withColumn(
+          "score", fieldHits.indices.map(i => col(s"score_$i")).reduce(_ + _))
+        if (req.multiVectorRank || req.vecQueries.size == 1)
+          TopK.perGroup(fused, "qid", "score", Metric.ascending(metric), req.topn, Seq(key))
+        else {
+          // rank fusion off: the reference still returns the DOCID-ordered
+          // merge of the per-field lists (vector_manager.cc:562-576 skips
+          // only the score re-sort) — join the dense docid back and cut on
+          // it (string keys would sort "10" < "2" and pick a different set);
+          // the fused hit set is small and broadcasts, the table streams
+          val withDocid = base.select(col(key), col(DocidCol))
+            .join(broadcast(fused), Seq(key))
+          TopK.perGroup(withDocid, "qid", DocidCol, ascending = true, req.topn, Nil)
+            .drop(DocidCol)
+        }
+    }
     project(ranked, req, base)
   }
 

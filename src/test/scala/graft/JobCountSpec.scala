@@ -1,9 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Metric, SearchRequest, VecQuery}
@@ -26,11 +26,16 @@ class JobCountSpec extends GraftSuite {
     * polling until the count is stable).
     */
   private val lastJobSites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  // shuffle bytes written by the tasks of the last `jobsDuring` window
+  private val lastShuffleBytes = new AtomicLong(0L)
 
   private def jobsDuring[T](f: => T): (T, Int) = {
     val n = new AtomicInteger(0)
     lastJobSites.clear()
+    lastShuffleBytes.set(0L)
     val l = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m => lastShuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val desc = Option(js.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
@@ -96,6 +101,28 @@ class JobCountSpec extends GraftSuite {
       vecQueries = Seq(VecQuery("vec",
         docTable().select("vec").as[Array[Float]].head()))))
     assert(hits.count() === 5)
+  }
+
+  test("persisted IVFPQ point and batch requests run two jobs and no shuffle") {
+    // job 1: probed-list scan with per-task candidate heaps merged on the
+    // driver; job 2: exact re-rank scan of the raw vectors, same shape
+    val root = tmp()
+    GammaTable.create(spark, root, "jpq", "_id", docTable(),
+      Seq(VectorFieldDef("vec", 64, "L2", "IVFPQ")), nBuckets = 4)
+      .buildIndex("vec", IndexParams(ncentroids = 4, nprobe = 2, nsubvector = 8),
+        persist = true, retrievalType = "IVFPQ")
+    val t = GammaTable.load(spark, root)
+    val vecs = docTable().select("vec").as[Array[Float]].take(64).toSeq
+    Seq(VecQuery("vec", vecs.head), VecQuery("vec", vectors = vecs)).foreach { vq =>
+      def run() = t.search(SearchRequest(topn = 10, vecQueries = Seq(vq)))
+        .select("qid", "_id", "score").collect()
+      run() // the per-list stats job runs once per lists version
+      val (rows, n) = jobsDuring(run())
+      assert(rows.length === 10 * vq.batch.size)
+      assert(n === 2, s"${vq.batch.size}-vector request ran $n jobs: " +
+        lastJobSites.toArray.mkString("; "))
+      assert(lastShuffleBytes.get === 0L)
+    }
   }
 
   test("commit path job counts stay bounded (AQE off for the fixed-shape write)") {

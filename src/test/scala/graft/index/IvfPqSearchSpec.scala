@@ -1,0 +1,171 @@
+package graft.index
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.GraftSuite
+import graft.core.{Metric, RangeFilter, SearchRequest, VecQuery}
+import graft.functions.pq_adc
+import graft.operators.{Knn, TopK}
+import graft.table.{GammaTable, VectorFieldDef}
+
+/** The IVFPQ request path (two Spark jobs: per-task heaps merged on the
+  * driver, see `IvfPqIndex.searchLocal`) must return exactly the rows of
+  * the plans it replaces: same ids, bit-equal scores, same order per query.
+  */
+class IvfPqSearchSpec extends GraftSuite {
+  import spark.implicits._
+
+  private val Ncent = 4
+
+  private def tmp(): String = Files.createTempDirectory("graft_pq_search").toString
+
+  // 500 embeddings plus exact copies of 20 of them under new ids: a copy
+  // ties its original on every score, so the id tie-break orders them
+  private lazy val docsLong: DataFrame = {
+    val emb = spark.read.parquet(s"$sf0/embeddings.parquet")
+      .select($"vec_id".as("id"), $"embedding".as("vec"))
+    emb.unionByName(emb.filter($"id" < 20).select(($"id" + 1000).as("id"), $"vec"))
+      .withColumn("tag", $"id" % 3)
+      .localCheckpoint(true)
+  }
+
+  private def docs(stringKeys: Boolean): DataFrame =
+    if (stringKeys) docsLong.withColumn("id", $"id".cast("string")) else docsLong
+
+  // a req_num batch holding stored vectors (whose copies tie) and a repeat
+  private lazy val batch: Seq[Array[Float]] = {
+    val vs = docsLong.filter($"id" < 6).orderBy("id").select("vec").as[Array[Float]].collect().toSeq
+    vs :+ vs.head
+  }
+
+  private val tables = scala.collection.mutable.Map.empty[(Metric.Value, Boolean), GammaTable]
+
+  /** Persisted IVFPQ table whose full probe with recall_num >= rows
+    * re-ranks every doc exactly.
+    */
+  private def table(metric: Metric.Value, stringKeys: Boolean): GammaTable =
+    tables.getOrElseUpdate((metric, stringKeys), {
+      val t = GammaTable.create(spark, tmp(), "pq", "id", docs(stringKeys),
+        Seq(VectorFieldDef("vec", 64, metric.toString, "IVFPQ")), nBuckets = 4)
+      t.buildIndex("vec", IndexParams(metric = metric, ncentroids = Ncent, nprobe = 2,
+        nsubvector = 8, recallNum = 1000), persist = true, retrievalType = "IVFPQ")
+      t
+    })
+
+  /** Per qid, its (id, raw score bits) rows in result order. */
+  private def ranked(df: DataFrame): Map[Long, Seq[(Any, Long)]] =
+    df.select("qid", "id", "score").collect().toSeq.groupBy(_.getLong(0)).map { case (q, rs) =>
+      q -> rs.map(r => (r.get(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
+    }
+
+  private def queryFrame(vq: VecQuery): DataFrame =
+    vq.batch.map { case (i, v) => (i, v.toSeq) }.toDF("qid", "qvec")
+
+  private def withConf[T](k: String, v: String)(f: => T): T = {
+    spark.conf.set(k, v)
+    try f finally spark.conf.unset(k)
+  }
+
+  for (metric <- Seq(Metric.L2, Metric.InnerProduct); stringKeys <- Seq(false, true)) {
+    val keys = if (stringKeys) "string" else "long"
+    test(s"full probe equals Knn.flatSearch exactly ($metric, $keys keys)") {
+      val t = table(metric, stringKeys)
+      def check(vq: VecQuery, filter: Option[RangeFilter] = None): Unit = {
+        val got = t.search(SearchRequest(topn = 10, vecQueries = Seq(vq.copy(nprobe = Some(Ncent))),
+          rangeFilters = filter.toSeq, metric = metric))
+        val src = filter.fold(t.docs)(f => t.docs.filter($"tag".between(f.lower.get, f.upper.get)))
+        val want = Knn.flatSearch(src, "id", "vec", queryFrame(vq), "qid", "qvec", 10, metric,
+          minScore = vq.minScore, maxScore = vq.maxScore)
+        assert(ranked(got) === ranked(want), s"$vq filter=$filter")
+      }
+      val all = VecQuery("vec", vectors = batch)
+      check(all)
+      // a score window cutting into query 0's top-10
+      val scores = ranked(Knn.flatSearch(t.docs, "id", "vec", queryFrame(all), "qid", "qvec", 10,
+        metric))(0L).map(r => java.lang.Double.longBitsToDouble(r._2)).sorted
+      check(all.copy(minScore = Some(scores(2)), maxScore = Some(scores(7))))
+      // an allowed set, broadcast into the probe (exact fallback off so the
+      // request reaches the IVFPQ tier)
+      withConf("spark.graft.filter.exactFallbackRows", "0") {
+        check(all, Some(RangeFilter("tag", Some(0.0), Some(1.0))))
+      }
+    }
+  }
+
+  for (metric <- Seq(Metric.L2, Metric.InnerProduct)) {
+    test(s"without re-rank the request path equals pq_adc + TopK.perGroup ($metric)") {
+      val t = table(metric, stringKeys = false)
+      val pq = t.attachedIndex("vec").get.currentIndex.get.asInstanceOf[IvfPqIndex]
+      val vq = VecQuery("vec", vectors = batch, nprobe = Some(Ncent), hasRank = Some(false))
+      val ksub = pq.codebooks.map(_.length).max
+      val luts = for ((qid, v) <- vq.batch; c <- pq.centers.indices) yield
+        (qid, c, IvfPqIndex.lutFor(v, pq.centers(c), pq.codebooks, ksub,
+          metric == Metric.InnerProduct).toSeq)
+      val adc = pq.codes.join(luts.toDF("qid", "centroid_id", "lut"), Seq("centroid_id"))
+        .select($"qid", $"id", pq_adc($"pq_codes", $"lut").as("score"))
+      val asc = Metric.ascending(metric)
+      val top = TopK.perGroup(adc, "qid", "score", asc, 10, Seq("id"))
+      val got = t.search(SearchRequest(topn = 10, vecQueries = Seq(vq), metric = metric))
+      assert(ranked(got) === ranked(top))
+
+      // the score range applies to the ADC value before the heap
+      val s0 = ranked(top)(0L).map(r => java.lang.Double.longBitsToDouble(r._2)).sorted
+      val (lo, hi) = (s0(1), s0(6))
+      val gotRange = t.search(SearchRequest(topn = 10,
+        vecQueries = Seq(vq.copy(minScore = Some(lo), maxScore = Some(hi))), metric = metric))
+      val wantRange = TopK.perGroup(adc.filter($"score" >= lo && $"score" <= hi),
+        "qid", "score", asc, 10, Seq("id"))
+      assert(ranked(gotRange) === ranked(wantRange))
+    }
+  }
+
+  test("at partial probe the two-job path equals the retained shuffle plan") {
+    for (metric <- Seq(Metric.L2, Metric.InnerProduct)) {
+      val built = IvfPqIndex.build(spark, docsLong, "id", "vec",
+        IndexParams(metric = metric, ncentroids = 8, nprobe = 2, nsubvector = 8, recallNum = 30))
+      val qs = batch.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      val allowed = broadcast(docsLong.filter($"tag" =!= 2).select("id"))
+      for (hasRank <- Seq(true, false); ids <- Seq(None, Some(allowed))) {
+        val pq = built.withParams(built.params.copy(hasRank = hasRank)).asInstanceOf[IvfPqIndex]
+        // a lower score bound at query 0's fourth returned score
+        val fourth = ranked(pq.search(qs, 10, None, ids, None, None))(0L)
+          .map(r => java.lang.Double.longBitsToDouble(r._2)).sorted.apply(3)
+        for (range <- Seq((None, None), (Some(fourth), None))) {
+          val local = pq.searchLocal(qs, 10, None, ids, range._1, range._2)
+            .getOrElse(fail("request above the candidate bound"))
+          val localScanned = pq.lastScannedRows
+          val lazyForm = pq.search(qs, 10, None, ids, range._1, range._2)
+          val want = ranked(lazyForm)
+          assert(ranked(local.toDF(spark)) === want, s"$metric hasRank=$hasRank ids=$ids range=$range")
+          assert(want.values.map(_.size).sum > 0)
+          // job 1 filled the scanned-rows accumulator once: the lazy plan,
+          // run once above, scans the same rows
+          assert(localScanned > 0 && localScanned === pq.lastScannedRows)
+        }
+      }
+    }
+  }
+
+  test("churned buckets: stale entries excluded and the unindexed tail merged on the driver") {
+    val t = GammaTable.create(spark, tmp(), "pqc", "id", docsLong,
+      Seq(VectorFieldDef("vec", 64, "L2", "IVFPQ")), nBuckets = 4)
+    t.buildIndex("vec", IndexParams(ncentroids = Ncent, nsubvector = 8, recallNum = 1000),
+      persist = true, retrievalType = "IVFPQ")
+    // move ten docs onto the first query vector (index entries now stale,
+    // the new rows unindexed) and add five fresh copies of it
+    val q = batch.head
+    val moved = docsLong.filter($"id".between(100, 109))
+      .withColumn("vec", typedLit(q.toSeq))
+    val fresh = (0 until 5).map(i => (5000L + i, q.toSeq, 0L)).toDF("id", "vec", "tag")
+    t.addOrUpdate(moved.unionByName(fresh))
+    val vq = VecQuery("vec", vectors = batch, nprobe = Some(Ncent))
+    val got = t.search(SearchRequest(topn = 20, vecQueries = Seq(vq)))
+    val want = Knn.flatSearch(t.docs, "id", "vec", queryFrame(vq), "qid", "qvec", 20, Metric.L2)
+    assert(ranked(got) === ranked(want))
+    val planted: Set[Any] = ((100L to 109L) ++ (5000L to 5004L)).toSet
+    assert(ranked(got)(0L).count(r => planted(r._1)) === 15)
+  }
+}
