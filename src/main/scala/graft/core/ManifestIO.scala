@@ -48,15 +48,18 @@ object ManifestIO {
     readCount.incrementAndGet()
     val p = new Path(file)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
+    // a file replaced by delete + rename can vanish between the exists
+    // check and the open: that reads as absent, like a missing file
+    val opened =
+      try { if (fs.exists(p)) Some(fs.open(p)) else None }
+      catch { case _: java.io.FileNotFoundException => None }
+    opened.map { in =>
       try {
         val out = new java.io.ByteArrayOutputStream()
         val buf = new Array[Byte](8192)
         var n = in.read(buf)
         while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8))
+        new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
       } finally in.close()
     }
   }

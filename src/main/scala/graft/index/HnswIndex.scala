@@ -4,9 +4,11 @@ import java.util.{PriorityQueue => JPriorityQueue}
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 
 import graft.core.Metric
 import graft.operators.TopK
@@ -261,33 +263,70 @@ class HnswIndex(
       nprobe: Option[Int],
       allowedIds: Option[DataFrame],
       minScore: Option[Double],
+      maxScore: Option[Double]): DataFrame =
+    walk(queries, k, nprobe, allowedIds.map(keyArray(_, "allowedIds")), minScore, maxScore)
+
+  /** [[search]] restricted to a request's allowed set: its keys, when the
+    * keys job already brought them to the driver (cast to long as
+    * [[search]] casts an allowed frame), or else its frame, collected here.
+    */
+  private[graft] def searchAllowed(
+      queries: Seq[(Long, Array[Float])],
+      k: Int,
+      nprobe: Option[Int],
+      allowed: AllowedKeys,
+      minScore: Option[Double],
+      maxScore: Option[Double]): DataFrame = {
+    val set = allowed.keys match {
+      case Some(keys) =>
+        val toLong = Cast(BoundReference(0, allowed.keyType, nullable = true), LongType)
+        val row = new GenericInternalRow(1)
+        sortedKeys(keys.iterator.map { key => row.update(0, key); toLong.eval(row) },
+          keys.length, "allowedIds", allowed.frame.columns.head)
+      case None => keyArray(allowed.frame, "allowedIds")
+    }
+    walk(queries, k, nprobe, Some(set), minScore, maxScore)
+  }
+
+  // allowed set rides a broadcast — the same driver-side build a
+  // broadcast hash join pays, but as a SORTED PRIMITIVE long array
+  // (8 B/key + binary search), the dense analog of the reference's
+  // delete bitmap (util/bitmap_manager.h) instead of a ~50x-larger boxed
+  // Set. HNSW ids are longs (build casts); a key that does not cast is a
+  // table this index cannot serve — fail fast with a diagnosable message
+  // instead of an NPE deep in a task.
+  private def keyArray(df: DataFrame, what: String): Broadcast[Array[Long]] = {
+    val c = df.columns.head
+    val vals = df.select(col(c).cast("long")).collect()
+    sortedKeys(vals.iterator.map(r => if (r.isNullAt(0)) null else r.getLong(0)),
+      vals.length, what, c)
+  }
+
+  private def sortedKeys(
+      vals: Iterator[Any], n: Int, what: String, c: String): Broadcast[Array[Long]] = {
+    val out = new Array[Long](n)
+    var i = 0
+    vals.foreach { v =>
+      if (v == null)
+        throw new IllegalArgumentException(
+          s"HNSW serves long-castable keys only: $what column '$c' has a value " +
+            "that does not cast to long")
+      out(i) = v.asInstanceOf[Long]; i += 1
+    }
+    java.util.Arrays.sort(out)
+    spark.sparkContext.broadcast(out)
+  }
+
+  private def walk(
+      queries: Seq[(Long, Array[Float])],
+      k: Int,
+      nprobe: Option[Int],
+      allowedSet: Option[Broadcast[Array[Long]]],
+      minScore: Option[Double],
       maxScore: Option[Double]): DataFrame = {
     import spark.implicits._
     val ef = nprobe.getOrElse(params.efSearch)
     val qs = spark.sparkContext.broadcast(queries.toArray)
-    // allowed set rides a broadcast — the same driver-side build a
-    // broadcast hash join pays, but as a SORTED PRIMITIVE long array
-    // (8 B/key + binary search), the dense analog of the reference's
-    // delete bitmap (util/bitmap_manager.h) instead of a ~50x-larger boxed
-    // Set. HNSW ids are longs (build casts); a key that does not cast is a
-    // table this index cannot serve — fail fast with a diagnosable message
-    // instead of an NPE deep in a task.
-    def keyArray(df: DataFrame, what: String) = {
-      val c = df.columns.head
-      val vals = df.select(col(c).cast("long")).collect()
-      val out = new Array[Long](vals.length)
-      var i = 0
-      while (i < vals.length) {
-        if (vals(i).isNullAt(0))
-          throw new IllegalArgumentException(
-            s"HNSW serves long-castable keys only: $what column '$c' has a value " +
-              "that does not cast to long")
-        out(i) = vals(i).getLong(0); i += 1
-      }
-      java.util.Arrays.sort(out)
-      spark.sparkContext.broadcast(out)
-    }
-    val allowedSet = allowedIds.map(keyArray(_, "allowedIds"))
     // `excluded` is the standing delete-bitmap analog (updated/deleted keys
     // whose graph entries are stale) — graphs are immutable segments, so
     // exclusion happens at result admission like the reference's IsValid

@@ -199,6 +199,11 @@ class IvfPqIndex(
     * no job 2. Results equal [[search]] row for row (same heaps, same
     * double arithmetic as `l2_sq` / `inner_product`).
     *
+    * An allowed set whose keys are on the driver is broadcast (as the
+    * packed rows of a [[KeySet]]) and tested on each code row inside job 1,
+    * so no job reads its frame; without keys, its frame is semi-joined into
+    * the probed lists as in [[search]].
+    *
     * None when the candidates would exceed the broadcast bound or the key
     * type has no by-value equality; the caller then runs [[search]].
     */
@@ -206,20 +211,25 @@ class IvfPqIndex(
       queries: Seq[(Long, Array[Float])],
       k: Int,
       nprobe: Option[Int],
-      allowedIds: Option[DataFrame],
+      allowed: Option[AllowedKeys],
       minScore: Option[Double],
       maxScore: Option[Double]): Option[LocalHits] = {
-    import org.apache.spark.sql.types._
     val nCand = if (params.hasRank) math.max(params.recallNum, k) else k
     val keyType = codes.schema(idCol).dataType
-    if (!withinBroadcastBound(queries.size, nCand) ||
-        !Seq(LongType, IntegerType, StringType).contains(keyType)) return None
+    if (!withinBroadcastBound(queries.size, nCand) || !AllowedKeys.KeyTypes(keyType)) return None
     val adcRange = if (params.hasRank) (None, None) else (minScore, maxScore)
-    val (in, scan, qids) = probe(queries, k, nprobe, allowedIds, nCand, adcRange)
+    val keySet = allowed.filter(_.keyType == keyType).flatMap(_.keySet)
+      .map(spark.sparkContext.broadcast(_))
+    val (in, scan, qids) = probe(queries, k, nprobe,
+      if (keySet.isDefined) None else allowed.map(_.frame), nCand, adcRange)
     val stage1 = IvfPqIndex.mergeTasks(scan.heaps(),
       in.queryExecution.toRdd.mapPartitions { rows =>
         val task = scan.task()
-        rows.foreach(r => task.add(r.getInt(0), r.get(1, scan.idType), r.getArray(2)))
+        val keys = keySet.map(_.value).orNull
+        rows.foreach { r =>
+          val id = r.get(1, scan.idType)
+          if (keys == null || keys.contains(id)) task.add(r.getInt(0), id, r.getArray(2))
+        }
         Iterator(task.heaps.packed)
       })
     if (!params.hasRank) return Some(LocalHits.fromHeaps(stage1, qids, keyType))
@@ -235,22 +245,8 @@ class IvfPqIndex(
         cand.put(id, if (prev == null) positions(g).toArray else prev ++ positions(g))
       }
     }
-    val raw = rawDocs.select(col(idCol), col(vecCol))
-    val vecIsFloat = raw.schema(vecCol).dataType match {
-      case ArrayType(FloatType, _) => true
-      case _                       => false
-    }
-    val exact = new ExactRerank(spark.sparkContext.broadcast(cand),
-      spark.sparkContext.broadcast(queries.map(_._2).toArray), scan.groupOf, qids.length, k,
-      keyType, Metric.ascending(params.metric), params.metric == Metric.InnerProduct, vecIsFloat,
-      (minScore, maxScore))
-    val stage2 = IvfPqIndex.mergeTasks(exact.heaps(),
-      raw.queryExecution.toRdd.mapPartitions { rows =>
-        val heaps = exact.heaps()
-        rows.foreach(r => exact.add(heaps, r))
-        Iterator(heaps.packed)
-      })
-    Some(LocalHits.fromHeaps(stage2, qids, keyType))
+    Some(ExactRerank.hits(rawDocs.select(col(idCol), col(vecCol)), id => cand.get(id), queries, k,
+      params.metric, (minScore, maxScore)))
   }
 
   private def withinBroadcastBound(nq: Int, nCand: Int): Boolean =
@@ -315,7 +311,7 @@ object IvfPqIndex {
       range._2.forall(hi => SpecializedRowOrdering.cmpD(s, hi) <= 0)
 
   /** One job: every task's packed heaps, merged into `into`. */
-  private def mergeTasks(
+  private[index] def mergeTasks(
       into: QueryHeaps, tasks: org.apache.spark.rdd.RDD[Array[Byte]]): QueryHeaps = {
     tasks.collect().foreach(into.addPacked)
     into
@@ -596,14 +592,15 @@ private[index] final class AdcScan(
   }
 }
 
-/** Exact re-rank kernel of the two-job request path: scores each raw
-  * (id, vector) row that is a candidate against the queries that shortlisted
-  * it, with the double arithmetic of `l2_sq` / `inner_product` (doc element
-  * first, each element widened to double, summed in index order), and keeps
-  * the `k` best in-range scores per query group.
+/** Exact scoring kernel of the driver request paths: scores each raw
+  * (id, vector) row whose key is a candidate against the queries the
+  * candidate maps to, with the double arithmetic of `l2_sq` /
+  * `inner_product` (doc element first, each element widened to double,
+  * summed in index order), and keeps the `k` best in-range scores per
+  * query group.
   */
 private[index] final class ExactRerank(
-    cand: Broadcast[java.util.HashMap[Any, Array[Int]]], // candidate key -> query positions
+    cand: Broadcast[Any => Array[Int]], // candidate key -> query positions, null for other keys
     queries: Broadcast[Array[Array[Float]]],
     groupOf: Array[Int],
     groups: Int,
@@ -620,7 +617,7 @@ private[index] final class ExactRerank(
   def add(heaps: QueryHeaps, r: InternalRow): Unit =
     if (!r.isNullAt(0) && !r.isNullAt(1)) {
       val id = r.get(0, idType)
-      val ps = cand.value.get(id)
+      val ps = cand.value(id)
       if (ps != null) {
         val v = r.getArray(1)
         val qs = queries.value
@@ -644,4 +641,78 @@ private[index] final class ExactRerank(
 
   @inline private def elem(v: ArrayData, i: Int): Double =
     if (vecIsFloat) v.getFloat(i).toDouble else v.getDouble(i)
+}
+
+private[graft] object ExactRerank {
+  import org.apache.spark.sql.types._
+
+  /** One job: scores the (id, vector) rows of `raw` whose id `cand` maps
+    * to query positions (null: not a candidate), keeps k per qid in each
+    * task, and merges the task heaps on the driver. Rows come back per qid
+    * as `TopK.perGroup(_, "qid", "score", ascending, k, Seq("id"))` orders
+    * them.
+    */
+  private[index] def hits(
+      raw: DataFrame,
+      cand: Any => Array[Int],
+      queries: Seq[(Long, Array[Float])],
+      k: Int,
+      metric: Metric.Value,
+      range: (Option[Double], Option[Double])): LocalHits = {
+    val sc = raw.sparkSession.sparkContext
+    val idType = raw.schema.head.dataType
+    val qids = queries.map(_._1).distinct.sorted.toArray
+    val group = qids.zipWithIndex.toMap
+    val vecIsFloat = raw.schema(1).dataType match {
+      case ArrayType(FloatType, _) => true
+      case _                       => false
+    }
+    val exact = new ExactRerank(sc.broadcast(cand), sc.broadcast(queries.map(_._2).toArray),
+      queries.map(q => group(q._1)).toArray, qids.length, k, idType, Metric.ascending(metric),
+      metric == Metric.InnerProduct, vecIsFloat, range)
+    val merged = IvfPqIndex.mergeTasks(exact.heaps(),
+      raw.queryExecution.toRdd.mapPartitions { rows =>
+        val heaps = exact.heaps()
+        rows.foreach(r => exact.add(heaps, r))
+        Iterator(heaps.packed)
+      })
+    LocalHits.fromHeaps(merged, qids, idType)
+  }
+
+  /** The exact fallback over a small allowed set, in one Spark job and no
+    * shuffle: every allowed key maps to every query position, and `docs`
+    * (the live table) is scanned once. Equals `Knn.flatSearch` over the
+    * semi-joined rows followed by `TopK.perGroup` (same heaps, same
+    * arithmetic, score range applied before the heap).
+    *
+    * None unless the allowed keys are on the driver and match the table's
+    * key type (Long, Int or String), the metric is L2 or InnerProduct, the
+    * vectors are float or double arrays, and nq x k is within
+    * [[IvfPqIndex.MaxBroadcastCandidates]]; the caller then runs the lazy
+    * plan.
+    */
+  private[graft] def allowedOnly(
+      docs: DataFrame,
+      idCol: String,
+      vecCol: String,
+      queries: Seq[(Long, Array[Float])],
+      k: Int,
+      metric: Metric.Value,
+      allowed: AllowedKeys,
+      range: (Option[Double], Option[Double])): Option[LocalHits] = {
+    val raw = docs.select(col(idCol), col(vecCol))
+    val vecOk = raw.schema(1).dataType match {
+      case ArrayType(FloatType | DoubleType, _) => true
+      case _                                    => false
+    }
+    val keyType = raw.schema.head.dataType
+    val applies = (metric == Metric.L2 || metric == Metric.InnerProduct) && vecOk &&
+      AllowedKeys.KeyTypes(keyType) && allowed.keyType == keyType &&
+      queries.size.toLong * k <= IvfPqIndex.MaxBroadcastCandidates
+    if (!applies) None
+    else allowed.keySet.map { keys =>
+      val all = queries.indices.toArray
+      hits(raw, id => if (keys.contains(id)) all else null, queries, k, metric, range)
+    }
+  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.core.Metric
-import graft.index.{AnnIndex, BinaryIvfIndex, HnswIndex, IndexParams, Ivf, IvfFlatIndex, IvfPqIndex, LocalHits}
+import graft.index.{AllowedKeys, AnnIndex, BinaryIvfIndex, ExactRerank, HnswIndex, IndexParams, Ivf, IvfFlatIndex, IvfPqIndex, LocalHits}
 import graft.operators.{Knn, TopK}
 import graft.table.GammaTable
 
@@ -660,6 +660,27 @@ class IncrementalIndexer(
     *  - **huge** (weakly selective): same pushdown but NO broadcast hint —
     *    the semi-join shuffles (or AQE re-plans it), instead of forcing a
     *    near-table-size set through the driver.
+    *
+    * Spark jobs per request on a persisted IVFPQ index with no bucket
+    * changed since the build (L2 or InnerProduct, Long/Int/String keys,
+    * candidates within [[IvfPqIndex.MaxBroadcastCandidates]]), when the
+    * caller ([[graft.table.GammaTable.search]]) hands over the allowed keys
+    * its keys job collected; the cached per-list stats cost one more job
+    * once per lists version:
+    *  - unfiltered: 2, the probed-list scan with per-task candidate heaps
+    *    and the exact re-rank scan, each merged on the driver (1 without
+    *    `has_rank`);
+    *  - moderate: the keys job plus the same 2 — the keys ride a
+    *    `SparkContext.broadcast` and each code row is tested against them
+    *    inside the scan, so no job reads the allowed frame again;
+    *  - few survivors: the keys job plus 1, one scan of the live table
+    *    scoring the allowed rows, with k per query per task merged on the
+    *    driver; no shuffle.
+    * Without collected keys (a call through this method, or a set above
+    * `broadcastMaxKeys`) the IVFPQ scan semi-joins the allowed frame
+    * instead, and the exact fallback runs the lazy `Knn.flatSearch` plan;
+    * the other models keep their lazy plans either way (HNSW tests
+    * collected keys in its walk).
     */
   def search(
       queries: Seq[(Long, Array[Float])],
@@ -671,11 +692,13 @@ class IncrementalIndexer(
       allowedCount: Long = -1L,
       recallNum: Option[Int] = None,
       hasRank: Option[Boolean] = None): DataFrame =
-    searchHits(queries, k, nprobe, allowedIds, minScore, maxScore, allowedCount,
-      recallNum, hasRank).fold(identity, _.toDF(spark))
+    searchHits(queries, k, nprobe,
+      allowedIds.map(ids => AllowedKeys(ids, if (allowedCount >= 0L) allowedCount else ids.count(), None)),
+      minScore, maxScore, recallNum, hasRank).fold(identity, _.toDF(spark))
 
-  /** [[search]], with the IVFPQ tier's hits held on the driver (Right) when
-    * the two-job request path served them ([[IvfPqIndex.searchLocal]]),
+  /** [[search]], with the hits held on the driver (Right) when a driver
+    * path served them — the IVFPQ tier's ([[IvfPqIndex.searchLocal]]) or
+    * the exact fallback over collected keys ([[ExactRerank.allowedOnly]]) —
     * so the caller's per-request cuts need no further Spark job; any other
     * tier returns its lazy frame (Left).
     */
@@ -683,10 +706,9 @@ class IncrementalIndexer(
       queries: Seq[(Long, Array[Float])],
       k: Int,
       nprobe: Option[Int] = None,
-      allowedIds: Option[DataFrame] = None,
+      allowed: Option[AllowedKeys] = None,
       minScore: Option[Double] = None,
       maxScore: Option[Double] = None,
-      allowedCount: Long = -1L,
       recallNum: Option[Int] = None,
       hasRank: Option[Boolean] = None): Either[DataFrame, LocalHits] = {
     import spark.implicits._
@@ -720,10 +742,7 @@ class IncrementalIndexer(
         queries.map { case (i, v) => (i, BinaryIvfIndex.floatsToBytes(v)) }
           .toDF("qid", "qvec")
       else queries.map { case (i, v) => (i, v.toSeq) }.toDF("qid", "qvec")
-    val aCount = allowedIds match {
-      case Some(ids) => if (allowedCount >= 0L) allowedCount else ids.count()
-      case None      => -1L
-    }
+    val aCount = allowed.fold(-1L)(_.count)
     // an EXPLICIT conf is an absolute override (0 disables the exact
     // fallback — e.g. to force the index path under test); the default is
     // COST-BASED on the index's own stats: a probe reads ~total ·
@@ -761,16 +780,14 @@ class IncrementalIndexer(
         }.getOrElse(0L)
         math.max(math.max(16L * k, 65536L), probeCost)
       }
-    val broadcastMax = spark.conf.getOption("spark.graft.filter.broadcastMaxKeys")
-      .map(_.toLong).getOrElse(1000000L)
-    val allowedHinted = allowedIds.map { ids =>
-      if (aCount <= broadcastMax)
-        org.apache.spark.sql.functions.broadcast(ids.toDF(key))
-      else ids.toDF(key)
+    val broadcastMax = AllowedKeys.broadcastMax(spark)
+    val allowedHinted = allowed.map { a =>
+      val ids = a.frame.toDF(key)
+      a.copy(frame = if (aCount <= broadcastMax) org.apache.spark.sql.functions.broadcast(ids) else ids)
     }
     def restrict(df: DataFrame): DataFrame = allowedHinted match {
-      case Some(ids) => df.join(ids, Seq(key), "left_semi")
-      case None      => df
+      case Some(a) => df.join(a.frame, Seq(key), "left_semi")
+      case None    => df
     }
     // tier-decision observability: scale sweeps read these lines to record
     // WHICH filtered-ANN policy tier fired at the measured corpus size
@@ -788,10 +805,14 @@ class IncrementalIndexer(
       case Some(_) if aCount >= 0L && aCount <= exactThreshold =>
         // exact-over-filtered fallback: few enough survivors that probing
         // cannot guarantee k of them — and scoring all of them exactly is
-        // cheaper than a probe anyway
+        // cheaper than a probe anyway. With the keys on the driver, one
+        // scan of the live table scores the allowed rows and the task
+        // heaps merge on the driver; otherwise the lazy plan.
         logTier("exact-fallback")
-        Left(Knn.flatSearch(restrict(table.docs), key, vecCol, qDf, "qid", "qvec", k, params.metric,
-          minScore = minScore, maxScore = maxScore))
+        ExactRerank.allowedOnly(table.docs, key, vecCol, queries, k, params.metric, allowed.get,
+          (minScore, maxScore)).toRight(
+          Knn.flatSearch(restrict(table.docs), key, vecCol, qDf, "qid", "qvec", k, params.metric,
+            minScore = minScore, maxScore = maxScore))
       case Some(idx) =>
         // ids whose index entry is stale (updated after build) or dead —
         // such rows only live in buckets rewritten since the horizon, so
@@ -869,7 +890,8 @@ class IncrementalIndexer(
           if (hnswHuge)
             (None, math.min(k.toLong * factor * 2L, math.max(k.toLong, 1L << 16)).toInt)
           else (allowedHinted, k)
-        // the two-job IVFPQ request path; None above its candidate bound
+        // the two-job IVFPQ request path (collected keys tested inside
+        // job 1); None above its candidate bound
         val local = cleanIdx match {
           case pq: IvfPqIndex => pq.searchLocal(queries, fetchK, effNprobe, pushIds, minScore, maxScore)
           case _              => None
@@ -904,10 +926,16 @@ class IncrementalIndexer(
             // the merge with the tail (one more job) runs on the driver too
             Right(fromTail.fold(hits)(t => (hits ++ LocalHits.collect(t)).topK(k, asc)))
           case None =>
-            val fromIndex0 = cleanIdx.search(queries, fetchK, effNprobe, pushIds, minScore, maxScore)
+            val fromIndex0 = (cleanIdx, pushIds) match {
+              // the graph walk tests the keys the caller's keys job collected
+              case (h: HnswIndex, Some(a)) =>
+                h.searchAllowed(queries, fetchK, effNprobe, a, minScore, maxScore)
+              case _ =>
+                cleanIdx.search(queries, fetchK, effNprobe, pushIds.map(_.frame), minScore, maxScore)
+            }
             val fromIndex =
               if (hnswHuge) {
-                val ids = allowedIds.get
+                val ids = allowed.get.frame
                 fromIndex0.join(
                   ids.select(col(ids.columns.head).cast("long").as("id")), Seq("id"), "left_semi")
               } else fromIndex0

@@ -938,36 +938,37 @@ class GammaTable private (
     val metric = req.metric
     val hasFilters = req.termFilters.nonEmpty || req.rangeFilters.nonEmpty
     // ONE narrow filtered scan, materialized ONCE the first time an index
-    // route touches it — the policy count, every index semi-join, and the
-    // HNSW key collect all reuse the same blocks instead of re-running
-    // the filtered scan 2-3x per request. Lazy: the brute/filter-only
-    // paths never pay the job. persist (lineage kept), NOT localCheckpoint
-    // (lineage cut): the bounded release queue below can then unpersist
-    // older requests' frames at any time — a late caller just recomputes —
-    // where freeing a checkpointed frame would lose its only copy. The
-    // count() doubles as the materializing action (one job, and the count
-    // itself comes back on its driver round-trip).
-    lazy val allowedPair: Option[(DataFrame, Long)] =
+    // route touches it, by the keys job: a single pass over the persisted
+    // key scan in which each task returns its row count and, while that
+    // count is within `spark.graft.filter.broadcastMaxKeys`, its keys. The
+    // summed count drives the indexer's filtered-ANN policy (exact
+    // fallback vs broadcast pushdown + widened probes vs shuffle
+    // semi-join); the keys, kept when the total is within the bound too,
+    // are what the driver paths test inside their scans (IVFPQ probe,
+    // exact fallback, HNSW walk), so no later job re-reads the set. The
+    // lazy plans (other models, the huge tier) semi-join the same
+    // persisted blocks. Lazy: the brute/filter-only paths never pay the
+    // job. persist (lineage kept), NOT localCheckpoint (lineage cut): the
+    // bounded release queue below can then unpersist older requests'
+    // frames at any time — a late caller just recomputes — where freeing
+    // a checkpointed frame would lose its only copy.
+    lazy val allowed: Option[graft.index.AllowedKeys] =
       if (!hasFilters) None
       else {
         val df = base.filter(pred).select(key)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val cnt = df.count()
+        val keys = graft.index.AllowedKeys.collect(df, graft.index.AllowedKeys.broadcastMax(spark))
         retireAllowed(df)
-        Some((df, cnt))
+        Some(keys)
       }
-    lazy val allowed: Option[DataFrame] = allowedPair.map(_._1)
-    // drives the indexer's filtered-ANN policy (exact fallback vs
-    // broadcast pushdown + widened probes vs shuffle semi-join)
-    lazy val allowedCnt: Long = allowedPair.map(_._2).getOrElse(-1L)
     val kCand = math.max(req.topn * CandidateFactor, req.topn)
     // req_num batching (request.fbs:28): every field must carry the same
     // number of query vectors; qid identifies the batch position
     val reqNum = req.vecQueries.head.batch.size
     require(req.vecQueries.forall(_.batch.size == reqNum),
       "all vector fields in one request must carry the same req_num")
-    // per field: (qid, id, score) hits, lazy or (IVFPQ request path) on
-    // the driver
+    // per field: (qid, id, score) hits, lazy or (IVFPQ request path,
+    // exact fallback over collected keys) on the driver
     val perField = req.vecQueries.map { vq =>
       // V10 routing: an explicit retrievalType must resolve (and serve the
       // request's metric) — the reference rejects an unknown type rather
@@ -1008,7 +1009,6 @@ class GammaTable private (
           val probeOverride =
             if (ix.retrievalType.equalsIgnoreCase("HNSW")) vq.efSearch else vq.nprobe
           val h0 = ix.searchHits(vq.batch, kCand, probeOverride, allowed, pushLo, pushHi,
-            if (allowed.isDefined) allowedCnt else -1L,
             recallNum = vq.recallNum, hasRank = vq.hasRank)
           if (!wantSqrt) h0
           else h0.left.map(_.withColumn("score", sqrt(col("score")))).map(_.mapScores(math.sqrt))
@@ -1527,8 +1527,12 @@ object GammaTable {
   }
 
   /** Versions with a retained manifest, ascending (the snapshot surface). */
-  private[graft] def snapshotVersions(spark: SparkSession, root: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$root/meta")
+  private[graft] def snapshotVersions(spark: SparkSession, root: String): Seq[Long] =
+    manifestVersions(spark, s"$root/meta")
+
+  /** Versions of the `v<N>.json` manifests in `metaDir`, ascending. */
+  private def manifestVersions(spark: SparkSession, metaDir: String): Seq[Long] = {
+    val dir = new org.apache.hadoop.fs.Path(metaDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return Nil
     fs.listStatus(dir).toSeq.flatMap { st =>
@@ -1542,15 +1546,19 @@ object GammaTable {
   /** The committed version on disk, without a full manifest parse (the
     * commit guard reads this on EVERY write): our own writer emits
     * `"version":N` in a fixed position, so a regex is exact. None = no
-    * manifest yet (first write of a fresh root).
+    * manifest yet (first write of a fresh root). While a commit swaps
+    * meta.json, the newest `v<N>.json` is the committed version (see
+    * [[readMeta]]).
     */
   private[graft] def persistedVersion(spark: SparkSession, root: String): Option[Long] =
-    graft.core.ManifestIO.readString(spark, s"$root/meta/meta.json").map { json =>
-      "\"version\":(\\d+)".r.findFirstMatchIn(json) match {
-        case Some(m) => m.group(1).toLong
-        case None => throw new java.io.IOException(
-          s"malformed manifest at $root/meta/meta.json (no version field)")
-      }
+    graft.core.ManifestIO.readString(spark, s"$root/meta/meta.json") match {
+      case Some(json) =>
+        "\"version\":(\\d+)".r.findFirstMatchIn(json) match {
+          case Some(m) => Some(m.group(1).toLong)
+          case None => throw new java.io.IOException(
+            s"malformed manifest at $root/meta/meta.json (no version field)")
+        }
+      case None => snapshotVersions(spark, root).lastOption
     }
 
   /** Commit history, newest first — the DESCRIBE-HISTORY analog: one row
@@ -1581,11 +1589,19 @@ object GammaTable {
     // rename strands meta.json.tmp next to a valid meta.json, and a
     // dir-wide read would load both (two rows, arbitrary head). Legacy
     // dirs without a meta.json fall back to the dir read.
-    val m0 = graft.core.ManifestIO.readString(spark, s"$path/meta.json") match {
-      // driver-side read + local-relation from_json: ZERO Spark jobs on
-      // the load path (was one head() job per manifest read)
-      case Some(json) =>
-        graft.core.ManifestIO.parseDF(spark, json, enc.schema).as[TableMeta].head()
+    // driver-side read + local-relation from_json: ZERO Spark jobs on the
+    // load path (was one head() job per manifest read)
+    def parse(json: String) =
+      graft.core.ManifestIO.parseDF(spark, json, enc.schema).as[TableMeta].head()
+    def read(file: String) = graft.core.ManifestIO.readString(spark, s"$path/$file")
+    val m0 = read("meta.json").orElse {
+      // a commit swaps meta.json by delete + rename (writeJsonAtomic) and
+      // writes its v<N>.json only after it: while meta.json is missing, the
+      // newest v<N>.json is the last committed manifest (a dir read would
+      // take an arbitrary older one, or the in-flight meta.json.tmp)
+      manifestVersions(spark, path).lastOption.flatMap(v => read(s"v$v.json"))
+    } match {
+      case Some(json) => parse(json)
       case None => // legacy dirs without a meta.json fall back to the dir read
         spark.read.schema(enc.schema).json(path).as[TableMeta].head()
     }

@@ -227,6 +227,31 @@ class GammaChangeFeedSpec extends GraftSuite {
     } finally q.stop()
   }
 
+  test("a reader inside a commit's manifest swap sees the last committed version") {
+    // a commit replaces meta.json by delete + rename and writes v<N>.json
+    // after it; the change stream polls from its own thread while commits
+    // land, so a poll can fall between the delete and the rename
+    val root = tmp()
+    val t = GammaTable.create(spark, root, "cdcm", "_id",
+      Seq(("a", 1)).toDF("_id", "v"), nBuckets = 2)   // v1
+    t.addOrUpdate(Seq(("b", 2)).toDF("_id", "v"))     // v2
+    t.addOrUpdate(Seq(("c", 3)).toDF("_id", "v"))     // v3
+    t.addOrUpdate(Seq(("d", 4)).toDF("_id", "v"))     // v4
+    // put v4 back inside its swap: meta.json still at its .tmp name, and
+    // v4.json not yet written
+    val meta = new org.apache.hadoop.fs.Path(s"$root/meta")
+    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(meta, "v4.json"), false)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(meta, "meta.json"),
+      new org.apache.hadoop.fs.Path(meta, "meta.json.tmp")))
+    assert(GammaTable.persistedVersion(spark, root) === Some(3L))
+    val mid = GammaTable.load(spark, root)
+    assert(mid.meta.version === 3L)
+    assert(mid.docs.select("_id").as[String].collect().toSet === Set("a", "b", "c"))
+    assert(events(spark.read.format("gamma").option("changesFrom", "1").load(root)) ===
+      Map("b" -> ((2, "upsert", 2L)), "c" -> ((3, "upsert", 3L))))
+  }
+
   test("startingVersion skips the backfill") {
     val root = tmp()
     val t = GammaTable.create(spark, root, "cdct", "_id",

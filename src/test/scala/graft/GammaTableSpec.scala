@@ -303,6 +303,26 @@ class GammaTableSpec extends GraftSuite {
     }
   }
 
+  test("selective filter on HNSW walks with the keys the keys job collected") {
+    val t = GammaTable.create(spark, tmp(), "hsel", "_id", docTable(),
+      Seq(VectorFieldDef("vec", 64)), nBuckets = 4)
+    // ef >= partition size -> per-graph search is effectively exact
+    t.buildIndex("vec", graft.index.IndexParams(nlinks = 16, efConstruction = 100,
+      efSearch = 256), retrievalType = "HNSW")
+    val qvec = spark.read.parquet(s"$sf0/embeddings.parquet")
+      .filter($"vec_id" === 0).select("embedding").as[Array[Float]].head()
+    val req = SearchRequest(topn = 5, vecQueries = Seq(VecQuery("vec", qvec)),
+      rangeFilters = Seq(RangeFilter("p_size", Some(1), Some(20))))
+    spark.conf.set("spark.graft.filter.exactFallbackRows", "0") // index path
+    try {
+      val got = t.search(req).select($"_id", $"score").as[(String, Double)].collect().toSet
+      val exact = t.search(req.copy(bruteForce = true))
+        .select($"_id", $"score").as[(String, Double)].collect().toSet
+      assert(got === exact)
+      assert(got.size === 5)
+    } finally spark.conf.unset("spark.graft.filter.exactFallbackRows")
+  }
+
   test("compaction purges index entries before dropping tombstones") {
     // ADVICE r3: physically purging tombstones before the attached index
     // dropped/excluded those keys let deleted docs resurface — the purged

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Metric, SearchRequest, VecQuery}
+import graft.core.{Metric, RangeFilter, SearchRequest, VecQuery}
 import graft.index.IndexParams
 import graft.table.{GammaTable, VectorFieldDef}
 
@@ -122,6 +122,37 @@ class JobCountSpec extends GraftSuite {
       assert(n === 2, s"${vq.batch.size}-vector request ran $n jobs: " +
         lastJobSites.toArray.mkString("; "))
       assert(lastShuffleBytes.get === 0L)
+    }
+  }
+
+  test("persisted IVFPQ filtered requests: one keys job plus the scan jobs, no shuffle") {
+    // the keys job counts the filtered key scan and brings the keys to the
+    // driver; the widened-probe tier then tests them inside the probed-list
+    // scan (+ the re-rank scan), and the exact fallback scores the allowed
+    // rows in one scan of the live table
+    val root = tmp()
+    GammaTable.create(spark, root, "jpqf", "_id", docTable(),
+      Seq(VectorFieldDef("vec", 64, "L2", "IVFPQ")), nBuckets = 4)
+      .buildIndex("vec", IndexParams(ncentroids = 4, nprobe = 2, nsubvector = 8),
+        persist = true, retrievalType = "IVFPQ")
+    val t = GammaTable.load(spark, root)
+    val vecs = docTable().select("vec").as[Array[Float]].take(64).toSeq
+    val filter = Seq(RangeFilter("p_size", Some(1), Some(40)))
+    // (exact-fallback rows conf, job bound): 0 disables the fallback
+    for ((fallbackRows, bound) <- Seq(Some("0") -> 3, None -> 2);
+         vq <- Seq(VecQuery("vec", vecs.head), VecQuery("vec", vectors = vecs))) {
+      fallbackRows.foreach(spark.conf.set("spark.graft.filter.exactFallbackRows", _))
+      try {
+        def run() = t.search(SearchRequest(topn = 10, vecQueries = Seq(vq), rangeFilters = filter))
+          .select("qid", "_id", "score").collect()
+        run() // the per-list stats job runs once per lists version
+        val (rows, n) = jobsDuring(run())
+        val what = s"${vq.batch.size}-vector request (exactFallbackRows=$fallbackRows)"
+        assert(rows.length === 10 * vq.batch.size, what)
+        if (fallbackRows.isEmpty) assert(n === bound, s"$what ran $n jobs: " + lastJobSites.toArray.mkString("; "))
+        else assert(n <= bound, s"$what ran $n jobs: " + lastJobSites.toArray.mkString("; "))
+        assert(lastShuffleBytes.get === 0L, what)
+      } finally spark.conf.unset("spark.graft.filter.exactFallbackRows")
     }
   }
 

@@ -127,24 +127,50 @@ class IvfPqSearchSpec extends GraftSuite {
       val built = IvfPqIndex.build(spark, docsLong, "id", "vec",
         IndexParams(metric = metric, ncentroids = 8, nprobe = 2, nsubvector = 8, recallNum = 30))
       val qs = batch.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-      val allowed = broadcast(docsLong.filter($"tag" =!= 2).select("id"))
-      for (hasRank <- Seq(true, false); ids <- Seq(None, Some(allowed))) {
+      val frame = docsLong.filter($"tag" =!= 2).select("id")
+      val allowed = broadcast(frame)
+      // the allowed set semi-joined into the probe, or its keys tested on
+      // each code row inside the scan (the filtered request path)
+      val allowedCases = Seq(
+        None -> None,
+        Some(allowed) -> Some(AllowedKeys(allowed, frame.count(), None)),
+        Some(allowed) -> Some(AllowedKeys.collect(frame, Long.MaxValue)))
+      for (hasRank <- Seq(true, false); (ids, keys) <- allowedCases) {
         val pq = built.withParams(built.params.copy(hasRank = hasRank)).asInstanceOf[IvfPqIndex]
         // a lower score bound at query 0's fourth returned score
         val fourth = ranked(pq.search(qs, 10, None, ids, None, None))(0L)
           .map(r => java.lang.Double.longBitsToDouble(r._2)).sorted.apply(3)
         for (range <- Seq((None, None), (Some(fourth), None))) {
-          val local = pq.searchLocal(qs, 10, None, ids, range._1, range._2)
+          val local = pq.searchLocal(qs, 10, None, keys, range._1, range._2)
             .getOrElse(fail("request above the candidate bound"))
           val localScanned = pq.lastScannedRows
           val lazyForm = pq.search(qs, 10, None, ids, range._1, range._2)
           val want = ranked(lazyForm)
-          assert(ranked(local.toDF(spark)) === want, s"$metric hasRank=$hasRank ids=$ids range=$range")
+          assert(ranked(local.toDF(spark)) === want,
+            s"$metric hasRank=$hasRank keys=${keys.map(_.packed.isDefined)} range=$range")
           assert(want.values.map(_.size).sum > 0)
           // job 1 filled the scanned-rows accumulator once: the lazy plan,
           // run once above, scans the same rows
           assert(localScanned > 0 && localScanned === pq.lastScannedRows)
         }
+      }
+    }
+  }
+
+  test("widened-probe tier: collected keys tested in the scan equal the semi-joined frame") {
+    for (metric <- Seq(Metric.L2, Metric.InnerProduct); stringKeys <- Seq(false, true)) {
+      val t = table(metric, stringKeys)
+      val ix = t.attachedIndex("vec").get
+      val frame = t.docs.filter($"tag" =!= 2).select("id")
+      val qs = batch.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      // nprobe 1, widened by the inverse selectivity to 2 of 4 lists
+      withConf("spark.graft.filter.exactFallbackRows", "0") {
+        def hits(a: AllowedKeys) = ix.searchHits(qs, 10, Some(1), Some(a))
+          .getOrElse(fail("the lazy plan answered")).toDF(spark)
+        val viaKeys = hits(AllowedKeys.collect(frame, Long.MaxValue))
+        val viaFrame = hits(AllowedKeys(broadcast(frame), frame.count(), None))
+        assert(ranked(viaKeys) === ranked(viaFrame), s"$metric stringKeys=$stringKeys")
+        assert(ranked(viaKeys).values.map(_.size).sum === 10 * qs.size)
       }
     }
   }
