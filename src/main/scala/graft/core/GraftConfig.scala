@@ -41,7 +41,10 @@ object GraftConfig {
         "from per-list stats)."),
     Knob("spark.graft.filter.broadcastMaxKeys", "1000000",
       "Filtered-ANN middle tier: an allowed-key set at most this large is " +
-        "broadcast into the index scan; larger sets join shuffle-side."),
+        "broadcast into the index scan; larger sets join shuffle-side. For " +
+        "IVFPQ and HNSW the request's key-counting job also brings a set " +
+        "this small to the driver (each task at most its share of the " +
+        "bound), and the scan tests those keys instead of joining."),
     Knob("spark.graft.hnsw.adaptiveEf", "true",
       "Widen HNSW ef per segment from observed candidate quality; " +
         "disable to pin ef to the request value."),

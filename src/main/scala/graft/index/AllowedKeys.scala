@@ -9,11 +9,11 @@ import org.apache.spark.sql.types._
 import graft.functions.TopKBuffer
 
 /** A request's scalar-filter survivors, counted by one Spark job: the key
-  * frame the lazy plans semi-join, its row count, and, while that count is
-  * at most `spark.graft.filter.broadcastMaxKeys`, the keys themselves, as
-  * the packed one-field rows the job's tasks returned (see
-  * [[TopKBuffer.pack]]). The driver request paths test those keys inside
-  * their scans (the reference's `IsValid` check,
+  * frame the lazy plans semi-join, its row count, and, for a set within
+  * `spark.graft.filter.broadcastMaxKeys` whose model can use them, the keys
+  * themselves, as the packed one-field rows the job's tasks returned (see
+  * [[collect]], [[TopKBuffer.pack]]). The driver request paths test those
+  * keys inside their scans (the reference's `IsValid` check,
   * index/retrieval_model.h:77-103), so no later job reads the frame again.
   * Null keys, which no semi-join matches, are counted but not kept.
   */
@@ -51,32 +51,41 @@ private[graft] object AllowedKeys {
     */
   val KeyTypes: Set[DataType] = Set(LongType, IntegerType, StringType)
 
-  /** `spark.graft.filter.broadcastMaxKeys`: the largest allowed set that is
-    * shipped to every scan task rather than joined shuffle-side.
+  /** `spark.graft.filter.broadcastMaxKeys`: the largest allowed set whose
+    * keys the keys job brings to the driver (see [[collect]]) and that is
+    * broadcast into the index scan rather than joined shuffle-side.
     */
   def broadcastMax(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.filter.broadcastMaxKeys").map(_.toLong).getOrElse(1000000L)
 
   /** One job over `frame` (a single key column; persist it first if other
-    * plans will read it): each task counts its rows and, while its count is
-    * at most `maxKeys`, packs its keys; the driver sums the counts and keeps
-    * the keys only if the total is at most `maxKeys` too.
+    * plans will read it) that counts its rows and, for a set of at most
+    * `maxKeys` rows, brings the keys to the driver. Each task packs its
+    * keys only while its own count is within its share of the bound,
+    * `maxKeys / partitions`, so the job returns at most `maxKeys` keys
+    * however large the set is; a task over its share returns its count
+    * alone, and the request then semi-joins the frame. A negative
+    * `maxKeys` only counts (for a model that cannot use the keys).
     */
   def collect(frame: DataFrame, maxKeys: Long): AllowedKeys = {
     val field = frame.schema.head
-    val bound = if (KeyTypes(field.dataType)) maxKeys else -1L
-    val parts = frame.queryExecution.toRdd.mapPartitions { rows =>
+    val rdd = frame.queryExecution.toRdd
+    val share =
+      if (KeyTypes(field.dataType) && maxKeys >= 0L) maxKeys / math.max(rdd.getNumPartitions, 1)
+      else -1L
+    val parts = rdd.mapPartitions { rows =>
       val proj = UnsafeProjection.create(StructType(Seq(field)))
       val kept = ArrayBuffer.empty[UnsafeRow]
       var n = 0L
       rows.foreach { r =>
         n += 1
-        if (n <= bound) { if (!r.isNullAt(0)) kept += proj(r).copy() }
+        if (n <= share) { if (!r.isNullAt(0)) kept += proj(r).copy() }
         else if (kept.nonEmpty) kept.clear()
       }
-      Iterator((n, TopKBuffer.pack(kept.toArray)))
+      Iterator((n, if (n <= share) TopKBuffer.pack(kept.toArray) else null))
     }.collect()
     val count = parts.map(_._1).sum
-    AllowedKeys(frame, count, if (count > bound) None else Some(parts.map(_._2)))
+    val whole = share >= 0L && parts.forall(_._1 <= share)
+    AllowedKeys(frame, count, if (whole) Some(parts.map(_._2)) else None)
   }
 }

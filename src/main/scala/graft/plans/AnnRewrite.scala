@@ -302,8 +302,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           math.max(math.max(16L * k, 65536L), probeCost)
         case s => s.toLong
       }
-    val broadcastMax = conf.getConfString("spark.graft.filter.broadcastMaxKeys",
-      "1000000").toLong
+    val broadcastMax = graft.index.AllowedKeys.broadcastMax(spark)
     if (stats.exists(_._3 <= exactThreshold)) return None
     val hnswHuge = ri.index.retrievalType == "HNSW" && stats.exists(_._3 > broadcastMax)
     val (probe, fetchK) = stats match {

@@ -646,8 +646,8 @@ class IncrementalIndexer(
     * `IsValid` into the scan and over-fetches via `recall_num`,
     * gamma_index_ivfpq.h:584,633; and falls back to brute force when the
     * filter leaves too few docs, gamma_engine.cc:327-340). An allowed set
-    * is classified by size (`allowedCount`; counted here when the caller
-    * did not already know it):
+    * is classified by size (`allowedCount`; counted here, by the keys job,
+    * when the caller did not already know it):
     *  - **few survivors** (≤ max(16·k, `spark.graft.filter.exactFallbackRows`)):
     *    partial-nprobe probing could return fewer than k (or worse)
     *    results even though matches exist — serve EXACTLY over the
@@ -676,11 +676,13 @@ class IncrementalIndexer(
     *  - few survivors: the keys job plus 1, one scan of the live table
     *    scoring the allowed rows, with k per query per task merged on the
     *    driver; no shuffle.
-    * Without collected keys (a call through this method, or a set above
-    * `broadcastMaxKeys`) the IVFPQ scan semi-joins the allowed frame
-    * instead, and the exact fallback runs the lazy `Knn.flatSearch` plan;
-    * the other models keep their lazy plans either way (HNSW tests
-    * collected keys in its walk).
+    * The keys job (here, or the caller's) collects keys only for a model
+    * that tests them ([[allowedKeyBound]]: IVFPQ as above, HNSW in its
+    * walk); for IVFFLAT and BINARYIVF it only counts, and their scans and
+    * exact fallback semi-join the allowed frame. Without collected keys
+    * (those models, or a set above `broadcastMaxKeys`) the IVFPQ scan
+    * semi-joins the frame too, and the exact fallback runs the lazy
+    * `Knn.flatSearch` plan.
     */
   def search(
       queries: Seq[(Long, Array[Float])],
@@ -693,8 +695,23 @@ class IncrementalIndexer(
       recallNum: Option[Int] = None,
       hasRank: Option[Boolean] = None): DataFrame =
     searchHits(queries, k, nprobe,
-      allowedIds.map(ids => AllowedKeys(ids, if (allowedCount >= 0L) allowedCount else ids.count(), None)),
+      allowedIds.map(ids =>
+        if (allowedCount >= 0L) AllowedKeys(ids, allowedCount, None)
+        else AllowedKeys.collect(ids, allowedKeyBound)),
       minScore, maxScore, recallNum, hasRank).fold(identity, _.toDF(spark))
+
+  /** The key bound for the keys job of a filtered request to this index
+    * ([[AllowedKeys.collect]]): `broadcastMaxKeys` for the models whose
+    * request paths test collected keys (IVFPQ, L2 or InnerProduct; HNSW),
+    * -1 (count only) for the others, which semi-join the allowed frame.
+    */
+  private[graft] def allowedKeyBound: Long =
+    retrievalType.toUpperCase(java.util.Locale.ROOT) match {
+      case "IVFPQ" if params.metric == Metric.L2 || params.metric == Metric.InnerProduct =>
+        AllowedKeys.broadcastMax(spark)
+      case "HNSW" => AllowedKeys.broadcastMax(spark)
+      case _      => -1L
+    }
 
   /** [[search]], with the hits held on the driver (Right) when a driver
     * path served them — the IVFPQ tier's ([[IvfPqIndex.searchLocal]]) or

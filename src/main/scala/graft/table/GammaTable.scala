@@ -937,13 +937,36 @@ class GammaTable private (
 
     val metric = req.metric
     val hasFilters = req.termFilters.nonEmpty || req.rangeFilters.nonEmpty
+    // V10 routing, per field: an explicit retrievalType must resolve (and
+    // serve the request's metric) — the reference rejects an unknown type
+    // rather than silently answering with a different model
+    // (vector_manager.cc:453-459); with no type named, the field's
+    // declared/sole index answers
+    val routes = req.vecQueries.map { vq =>
+      vq -> (vq.retrievalType match {
+        case Some(rt) =>
+          val ix = indexers.getOrElse((vq.field, rt.toUpperCase(java.util.Locale.ROOT)),
+            throw new IllegalArgumentException(
+              s"no $rt index attached to field ${vq.field}; attached: " +
+                indexers.keys.filter(_._1 == vq.field).map(_._2).mkString(",")))
+          require(ix.params.metric == metric || req.bruteForce,
+            s"$rt index on ${vq.field} serves ${ix.params.metric}, request wants $metric")
+          Some(ix)
+        case None => attachedIndex(vq.field)
+      })
+    }
+    // a field is answered through its attached ANN index unless brute
+    // force is forced (V9 override) or the index serves another metric
+    def serves(ix: graft.streaming.IncrementalIndexer): Boolean =
+      !req.bruteForce && ix.params.metric == metric
+    val indexed = routes.flatMap(_._2.filter(serves))
     // ONE narrow filtered scan, materialized ONCE the first time an index
     // route touches it, by the keys job: a single pass over the persisted
-    // key scan in which each task returns its row count and, while that
-    // count is within `spark.graft.filter.broadcastMaxKeys`, its keys. The
-    // summed count drives the indexer's filtered-ANN policy (exact
-    // fallback vs broadcast pushdown + widened probes vs shuffle
-    // semi-join); the keys, kept when the total is within the bound too,
+    // key scan in which each task returns its row count and, for a set
+    // within `spark.graft.filter.broadcastMaxKeys` searched by a model
+    // that tests keys in its scan (IVFPQ, HNSW), its keys. The summed
+    // count drives the indexer's filtered-ANN policy (exact fallback vs
+    // broadcast pushdown + widened probes vs shuffle semi-join); the keys
     // are what the driver paths test inside their scans (IVFPQ probe,
     // exact fallback, HNSW walk), so no later job re-reads the set. The
     // lazy plans (other models, the huge tier) semi-join the same
@@ -957,7 +980,8 @@ class GammaTable private (
       else {
         val df = base.filter(pred).select(key)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val keys = graft.index.AllowedKeys.collect(df, graft.index.AllowedKeys.broadcastMax(spark))
+        val keys = graft.index.AllowedKeys.collect(df,
+          indexed.map(_.allowedKeyBound).foldLeft(-1L)(math.max))
         retireAllowed(df)
         Some(keys)
       }
@@ -969,27 +993,9 @@ class GammaTable private (
       "all vector fields in one request must carry the same req_num")
     // per field: (qid, id, score) hits, lazy or (IVFPQ request path,
     // exact fallback over collected keys) on the driver
-    val perField = req.vecQueries.map { vq =>
-      // V10 routing: an explicit retrievalType must resolve (and serve the
-      // request's metric) — the reference rejects an unknown type rather
-      // than silently answering with a different model
-      // (vector_manager.cc:453-459); with no type named, the field's
-      // declared/sole index answers
-      val routed = vq.retrievalType match {
-        case Some(rt) =>
-          val ix = indexers.getOrElse((vq.field, rt.toUpperCase(java.util.Locale.ROOT)),
-            throw new IllegalArgumentException(
-              s"no $rt index attached to field ${vq.field}; attached: " +
-                indexers.keys.filter(_._1 == vq.field).map(_._2).mkString(",")))
-          require(ix.params.metric == metric || req.bruteForce,
-            s"$rt index on ${vq.field} serves ${ix.params.metric}, request wants $metric")
-          Some(ix)
-        case None => attachedIndex(vq.field)
-      }
-      // route through an attached ANN index unless brute-force is forced
-      // (V9 override) or the index serves a different metric
+    val perField = routes.map { case (vq, routed) =>
       val hits: Either[DataFrame, graft.index.LocalHits] = routed match {
-        case Some(ix) if !req.bruteForce && ix.params.metric == metric =>
+        case Some(ix) if serves(ix) =>
           // the score range is pushed INTO the index scan (filter before
           // the top-k heap, like flatSearch and the reference's
           // IsSimilarScoreValid) so out-of-range hits don't eat the

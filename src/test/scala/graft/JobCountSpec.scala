@@ -156,6 +156,32 @@ class JobCountSpec extends GraftSuite {
     }
   }
 
+  test("persisted IVFFLAT filtered requests: the keys job only counts") {
+    // IVFFLAT semi-joins the allowed frame, so its keys job brings no keys
+    // to the driver: one job (a count() was a shuffle stage plus a result
+    // stage), then the semi-join plan, 5 jobs on either tier (was 6-7)
+    val root = tmp()
+    GammaTable.create(spark, root, "jflf", "_id", docTable(),
+      Seq(VectorFieldDef("vec", 64, "L2", "IVFFLAT")), nBuckets = 4)
+      .buildIndex("vec", IndexParams(ncentroids = 4, nprobe = 2), persist = true)
+    val t = GammaTable.load(spark, root)
+    val vecs = docTable().select("vec").as[Array[Float]].take(64).toSeq
+    val filter = Seq(RangeFilter("p_size", Some(1), Some(40)))
+    for (fallbackRows <- Seq(Some("0"), None);
+         vq <- Seq(VecQuery("vec", vecs.head), VecQuery("vec", vectors = vecs))) {
+      fallbackRows.foreach(spark.conf.set("spark.graft.filter.exactFallbackRows", _))
+      try {
+        def run() = t.search(SearchRequest(topn = 10, vecQueries = Seq(vq), rangeFilters = filter))
+          .select("qid", "_id", "score").collect()
+        run() // the per-list stats job runs once per lists version
+        val (rows, n) = jobsDuring(run())
+        val what = s"${vq.batch.size}-vector request (exactFallbackRows=$fallbackRows)"
+        assert(rows.length === 10 * vq.batch.size, what)
+        assert(n <= 5, s"$what ran $n jobs: " + lastJobSites.toArray.mkString("; "))
+      } finally spark.conf.unset("spark.graft.filter.exactFallbackRows")
+    }
+  }
+
   test("commit path job counts stay bounded (AQE off for the fixed-shape write)") {
     // Regression guard for the r8 commit-cost work: the write action runs
     // WITHOUT adaptive execution (fixed-shape plan), so each commit is
