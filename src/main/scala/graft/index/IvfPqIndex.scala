@@ -2,7 +2,6 @@ package graft.index
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
@@ -23,8 +22,11 @@ import graft.operators.{Knn, TopK}
   *
   * Scale design: codes are ~dim·4/nsubvector× smaller than raw vectors, so
   * the probed-list scan reads a fraction of the raw data; the LUT
-  * (nprobe x m x ksub doubles per query) is computed driver-side and
-  * broadcast; re-rank joins only nq x recall_num rows back to raw vectors.
+  * (nprobe x m x ksub doubles per query) is built scan-side from the
+  * quantizers, broadcast once for every copy of the index; the re-rank
+  * fetches only the nq x recall_num candidates' vectors by key from the
+  * resident [[VectorStore]] over `rawDocs` (the table's own store when the
+  * index serves a table) instead of reading the table.
   */
 class IvfPqIndex(
     val spark: SparkSession,
@@ -38,9 +40,33 @@ class IvfPqIndex(
     val rotation: Option[Array[Array[Double]]] = None,
     // per-list code counts (index position = centroid_id), a build-time
     // upper bound feeding adaptive probe widening; None = fixed nprobe
-    val listSizes: Option[Array[Long]] = None) extends AnnIndex {
+    val listSizes: Option[Array[Long]] = None,
+    // shared with the index this one copies: the quantizer broadcast and
+    // the re-rank store (None: made here, over `rawDocs`)
+    quantizers: Option[Broadcast[(Array[Array[Double]], Array[Array[Array[Double]]])]] = None,
+    store: Option[VectorStore] = None) extends AnnIndex {
 
   override def retrievalType: String = "IVFPQ"
+
+  /** (centers, codebooks) as the scan tasks read them: broadcast once,
+    * then handed to every copy (the request path copies the index per
+    * search).
+    */
+  private[graft] lazy val quantBroadcast = quantizers.getOrElse(
+    spark.sparkContext.broadcast((centers, codebooks)))
+
+  /** The exact re-rank source: `rawDocs`' (key, vector) rows, looked up by
+    * candidate key; not cached unless the owning table handed its store in.
+    */
+  private[graft] lazy val vectors: VectorStore = store.getOrElse(
+    new VectorStore(rawDocs.select(col(idCol), col(vecCol)), cache = false))
+
+  private def copy(
+      codes: DataFrame = codes,
+      params: IndexParams = params,
+      listSizes: Option[Array[Long]] = listSizes): IvfPqIndex =
+    new IvfPqIndex(spark, codes, rawDocs, idCol, vecCol, centers, codebooks, params, rotation,
+      listSizes, Some(quantBroadcast), Some(vectors))
 
   /** Rows actually read by the LAST search's ADC scan — filled by a
     * LongAccumulator once the caller runs an action on the returned frame
@@ -53,9 +79,7 @@ class IvfPqIndex(
   def lastScannedRows: Long = lastScanAcc.map(_.value.longValue).getOrElse(-1L)
 
   /** Same index, fresher per-list stats. */
-  def withListSizes(s: Option[Array[Long]]): IvfPqIndex =
-    new IvfPqIndex(spark, codes, rawDocs, idCol, vecCol, centers, codebooks,
-      params, rotation, s)
+  def withListSizes(s: Option[Array[Long]]): IvfPqIndex = copy(listSizes = s)
 
   // The ADC LUT is exact for L2 and InnerProduct; the reference's kernels
   // implement exactly those two (index/retrieval_model.h:20 declares Cosine
@@ -124,7 +148,7 @@ class IvfPqIndex(
     val scanAcc = spark.sparkContext.longAccumulator("graft.ivfpq.scannedRows")
     lastScanAcc = Some(scanAcc)
     val scan = new AdcScan(
-      spark.sparkContext.broadcast(byCentroid), spark.sparkContext.broadcast((centers, codebooks)),
+      spark.sparkContext.broadcast(byCentroid), quantBroadcast,
       queries.map(q => group(q._1)).toArray, qids.length, heapSize, in.schema(idCol).dataType,
       Metric.ascending(params.metric), params.metric == Metric.InnerProduct, m, ksub, range,
       scanAcc)
@@ -192,12 +216,14 @@ class IvfPqIndex(
     * re-rank, :642-697):
     *  1. scan the probed lists; each task keeps a heap of
     *     max(recall_num, k) candidates per query, merged on the driver;
-    *  2. scan the raw vectors once against a broadcast candidate -> query
-    *     map, score exactly, apply the score range; each task keeps k per
-    *     query, merged on the driver.
+    *  2. look the candidates up in the resident [[VectorStore]] (one task
+    *     per block, the candidate map broadcast once), score them exactly,
+    *     apply the score range; each task keeps k per query, merged on the
+    *     driver.
     * Without `hasRank`, job 1 applies the range and keeps k, and there is
     * no job 2. Results equal [[search]] row for row (same heaps, same
-    * double arithmetic as `l2_sq` / `inner_product`).
+    * double arithmetic as `l2_sq` / `inner_product`). The per-request
+    * broadcasts are destroyed once the driver merge has returned.
     *
     * An allowed set whose keys are on the driver is broadcast (as the
     * packed rows of a [[KeySet]]) and tested on each code row inside job 1,
@@ -216,22 +242,25 @@ class IvfPqIndex(
       maxScore: Option[Double]): Option[LocalHits] = {
     val nCand = if (params.hasRank) math.max(params.recallNum, k) else k
     val keyType = codes.schema(idCol).dataType
-    if (!withinBroadcastBound(queries.size, nCand) || !AllowedKeys.KeyTypes(keyType)) return None
+    if (!withinBroadcastBound(queries.size, nCand) || !AllowedKeys.KeyTypes(keyType) ||
+        (params.hasRank && !(vectors.serves && vectors.keyType == keyType))) return None
     val adcRange = if (params.hasRank) (None, None) else (minScore, maxScore)
     val keySet = allowed.filter(_.keyType == keyType).flatMap(_.keySet)
       .map(spark.sparkContext.broadcast(_))
     val (in, scan, qids) = probe(queries, k, nprobe,
       if (keySet.isDefined) None else allowed.map(_.frame), nCand, adcRange)
-    val stage1 = IvfPqIndex.mergeTasks(scan.heaps(),
-      in.queryExecution.toRdd.mapPartitions { rows =>
-        val task = scan.task()
-        val keys = keySet.map(_.value).orNull
-        rows.foreach { r =>
-          val id = r.get(1, scan.idType)
-          if (keys == null || keys.contains(id)) task.add(r.getInt(0), id, r.getArray(2))
-        }
-        Iterator(task.heaps.packed)
-      })
+    val stage1 =
+      try IvfPqIndex.mergeTasks(scan.heaps(),
+        in.queryExecution.toRdd.mapPartitions { rows =>
+          val task = scan.task()
+          val keys = keySet.map(_.value).orNull
+          rows.foreach { r =>
+            val id = r.get(1, scan.idType)
+            if (keys == null || keys.contains(id)) task.add(r.getInt(0), id, r.getArray(2))
+          }
+          Iterator(task.heaps.packed)
+        })
+      finally { keySet.foreach(_.destroy()); scan.destroyRequest() }
     if (!params.hasRank) return Some(LocalHits.fromHeaps(stage1, qids, keyType))
 
     // candidate -> the query positions that score it: every position
@@ -245,8 +274,9 @@ class IvfPqIndex(
         cand.put(id, if (prev == null) positions(g).toArray else prev ++ positions(g))
       }
     }
-    Some(ExactRerank.hits(rawDocs.select(col(idCol), col(vecCol)), id => cand.get(id), queries, k,
-      params.metric, (minScore, maxScore)))
+    import scala.jdk.CollectionConverters._
+    Some(ExactRerank.hits(vectors, cand.asScala.toSeq, queries, k, params.metric,
+      (minScore, maxScore)))
   }
 
   private def withinBroadcastBound(nq: Int, nCand: Int): Boolean =
@@ -264,13 +294,9 @@ class IvfPqIndex(
       params.metric)
 
   override def excluding(ids: DataFrame): AnnIndex =
-    new IvfPqIndex(spark,
-      codes.join(ids.toDF(idCol), Seq(idCol), "left_anti"),
-      rawDocs, idCol, vecCol, centers, codebooks, params, rotation, listSizes)
+    copy(codes = codes.join(ids.toDF(idCol), Seq(idCol), "left_anti"))
 
-  override def withParams(p: IndexParams): AnnIndex =
-    new IvfPqIndex(spark, codes, rawDocs, idCol, vecCol, centers, codebooks,
-      p, rotation, listSizes)
+  override def withParams(p: IndexParams): AnnIndex = copy(params = p)
 
   def save(path: String): Unit = {
     codes.write.mode("overwrite").partitionBy("centroid_id").parquet(s"$path/codes")
@@ -565,6 +591,9 @@ private[index] final class AdcScan(
 
   def task(): Task = new Task
 
+  /** Frees the request's own broadcast (the quantizers are the index's). */
+  def destroyRequest(): Unit = byCentroid.destroy()
+
   final class Task {
     val heaps: QueryHeaps = AdcScan.this.heaps()
     private val probes = byCentroid.value
@@ -592,15 +621,12 @@ private[index] final class AdcScan(
   }
 }
 
-/** Exact scoring kernel of the driver request paths: scores each raw
-  * (id, vector) row whose key is a candidate against the queries the
-  * candidate maps to, with the double arithmetic of `l2_sq` /
-  * `inner_product` (doc element first, each element widened to double,
-  * summed in index order), and keeps the `k` best in-range scores per
-  * query group.
+/** Exact scoring kernel of the driver request paths: scores a stored row
+  * of a [[VectorStore.Block]] against the query positions its key maps to
+  * (see [[VectorStore.Block.score]] for the arithmetic) and keeps the `k`
+  * best in-range scores per query group.
   */
 private[index] final class ExactRerank(
-    cand: Broadcast[Any => Array[Int]], // candidate key -> query positions, null for other keys
     queries: Broadcast[Array[Array[Float]]],
     groupOf: Array[Int],
     groups: Int,
@@ -608,111 +634,81 @@ private[index] final class ExactRerank(
     idType: DataType,
     ascending: Boolean,
     ip: Boolean,
-    vecIsFloat: Boolean,
     range: (Option[Double], Option[Double])) extends Serializable {
 
   def heaps(): QueryHeaps = new QueryHeaps(groups, k, idType, ascending)
 
-  /** One (id, vector) row. */
-  def add(heaps: QueryHeaps, r: InternalRow): Unit =
-    if (!r.isNullAt(0) && !r.isNullAt(1)) {
-      val id = r.get(0, idType)
-      val ps = cand.value(id)
-      if (ps != null) {
-        val v = r.getArray(1)
-        val qs = queries.value
-        var i = 0
-        while (i < ps.length) {
-          val p = ps(i)
-          val s = score(v, qs(p))
-          if (IvfPqIndex.inRange(s, range)) heaps.offer(groupOf(p), s, id)
-          i += 1
-        }
+  /** Every stored row of key `id`, against query positions `ps`. */
+  def add(heaps: QueryHeaps, block: VectorStore.Block, id: Any, ps: Array[Int]): Unit = {
+    val qs = queries.value
+    block.rowsOf(id).foreach { row =>
+      var i = 0
+      while (i < ps.length) {
+        val p = ps(i)
+        val s = block.score(row, qs(p), ip)
+        if (IvfPqIndex.inRange(s, range)) heaps.offer(groupOf(p), s, id)
+        i += 1
       }
     }
-
-  private def score(v: ArrayData, q: Array[Float]): Double = {
-    val n = math.min(v.numElements(), q.length)
-    var s = 0.0; var i = 0
-    if (ip) while (i < n) { s += elem(v, i) * q(i).toDouble; i += 1 }
-    else while (i < n) { val d = elem(v, i) - q(i).toDouble; s += d * d; i += 1 }
-    s
   }
-
-  @inline private def elem(v: ArrayData, i: Int): Double =
-    if (vecIsFloat) v.getFloat(i).toDouble else v.getDouble(i)
 }
 
 private[graft] object ExactRerank {
-  import org.apache.spark.sql.types._
 
-  /** One job: scores the (id, vector) rows of `raw` whose id `cand` maps
-    * to query positions (null: not a candidate), keeps k per qid in each
-    * task, and merges the task heaps on the driver. Rows come back per qid
-    * as `TopK.perGroup(_, "qid", "score", ascending, k, Seq("id"))` orders
-    * them.
+  /** One job over the store's blocks: scores each candidate key's stored
+    * rows against the query positions it maps to, keeps k per qid in each
+    * task, and merges the task heaps on the driver.
+    * Rows come back per qid as `TopK.perGroup(_, "qid", "score", ascending,
+    * k, Seq("id"))` orders them.
     */
   private[index] def hits(
-      raw: DataFrame,
-      cand: Any => Array[Int],
+      store: VectorStore,
+      cand: Iterable[(Any, Array[Int])],
       queries: Seq[(Long, Array[Float])],
       k: Int,
       metric: Metric.Value,
       range: (Option[Double], Option[Double])): LocalHits = {
-    val sc = raw.sparkSession.sparkContext
-    val idType = raw.schema.head.dataType
     val qids = queries.map(_._1).distinct.sorted.toArray
     val group = qids.zipWithIndex.toMap
-    val vecIsFloat = raw.schema(1).dataType match {
-      case ArrayType(FloatType, _) => true
-      case _                       => false
-    }
-    val exact = new ExactRerank(sc.broadcast(cand), sc.broadcast(queries.map(_._2).toArray),
-      queries.map(q => group(q._1)).toArray, qids.length, k, idType, Metric.ascending(metric),
-      metric == Metric.InnerProduct, vecIsFloat, range)
-    val merged = IvfPqIndex.mergeTasks(exact.heaps(),
-      raw.queryExecution.toRdd.mapPartitions { rows =>
+    val qvecs = store.sparkContext.broadcast(queries.map(_._2).toArray)
+    val exact = new ExactRerank(qvecs, queries.map(q => group(q._1)).toArray, qids.length, k,
+      store.keyType, Metric.ascending(metric), metric == Metric.InnerProduct, range)
+    val merged = exact.heaps()
+    try store.lookup(cand) { (block, keys) =>
         val heaps = exact.heaps()
-        rows.foreach(r => exact.add(heaps, r))
-        Iterator(heaps.packed)
-      })
-    LocalHits.fromHeaps(merged, qids, idType)
+        keys.foreach { case (id, ps) => exact.add(heaps, block, id, ps) }
+        heaps.packed
+      }.foreach(merged.addPacked)
+    finally qvecs.destroy()
+    LocalHits.fromHeaps(merged, qids, store.keyType)
   }
 
   /** The exact fallback over a small allowed set, in one Spark job and no
-    * shuffle: every allowed key maps to every query position, and `docs`
-    * (the live table) is scanned once. Equals `Knn.flatSearch` over the
+    * shuffle: every allowed key maps to every query position and is looked
+    * up in `store` (the live table's). Equals `Knn.flatSearch` over the
     * semi-joined rows followed by `TopK.perGroup` (same heaps, same
     * arithmetic, score range applied before the heap).
     *
-    * None unless the allowed keys are on the driver and match the table's
+    * None unless the allowed keys are on the driver and match the store's
     * key type (Long, Int or String), the metric is L2 or InnerProduct, the
     * vectors are float or double arrays, and nq x k is within
     * [[IvfPqIndex.MaxBroadcastCandidates]]; the caller then runs the lazy
     * plan.
     */
   private[graft] def allowedOnly(
-      docs: DataFrame,
-      idCol: String,
-      vecCol: String,
+      store: VectorStore,
       queries: Seq[(Long, Array[Float])],
       k: Int,
       metric: Metric.Value,
       allowed: AllowedKeys,
       range: (Option[Double], Option[Double])): Option[LocalHits] = {
-    val raw = docs.select(col(idCol), col(vecCol))
-    val vecOk = raw.schema(1).dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _                                    => false
-    }
-    val keyType = raw.schema.head.dataType
-    val applies = (metric == Metric.L2 || metric == Metric.InnerProduct) && vecOk &&
-      AllowedKeys.KeyTypes(keyType) && allowed.keyType == keyType &&
+    val applies = (metric == Metric.L2 || metric == Metric.InnerProduct) && store.serves &&
+      allowed.keyType == store.keyType &&
       queries.size.toLong * k <= IvfPqIndex.MaxBroadcastCandidates
     if (!applies) None
-    else allowed.keySet.map { keys =>
+    else allowed.keys.map { keys =>
       val all = queries.indices.toArray
-      hits(raw, id => if (keys.contains(id)) all else null, queries, k, metric, range)
+      hits(store, keys.distinct.map(_ -> all), queries, k, metric, range)
     }
   }
 }

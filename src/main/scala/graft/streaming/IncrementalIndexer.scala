@@ -118,14 +118,16 @@ class IncrementalIndexer(
 
   /** Same quantizers, different code lists — used by the stale-filter,
     * refresh, compaction, and load paths. The IVFPQ re-rank source is the
-    * CURRENT doc table, so re-ranked scores always reflect live vectors.
+    * CURRENT doc table and its resident vector store, so re-ranked scores
+    * always reflect live vectors; the quantizer broadcast carries over.
     */
   private def rebuilt(proto: AnnIndex, data: DataFrame): AnnIndex = proto match {
     case f: IvfFlatIndex =>
       new IvfFlatIndex(spark, data, key, vecCol, f.centers, params)
     case p: IvfPqIndex =>
       new IvfPqIndex(spark, data, table.docs.select(col(key), col(vecCol)),
-        key, vecCol, p.centers, p.codebooks, p.params, p.rotation)
+        key, vecCol, p.centers, p.codebooks, p.params, p.rotation,
+        quantizers = Some(p.quantBroadcast), store = Some(table.vectorStore(vecCol)))
     case h: HnswIndex =>
       new HnswIndex(spark, data, key, vecCol, params, h.excluded)
     case b: BinaryIvfIndex =>
@@ -668,14 +670,18 @@ class IncrementalIndexer(
     * its keys job collected; the cached per-list stats cost one more job
     * once per lists version:
     *  - unfiltered: 2, the probed-list scan with per-task candidate heaps
-    *    and the exact re-rank scan, each merged on the driver (1 without
-    *    `has_rank`);
+    *    and the exact re-rank, which looks the candidates up in the
+    *    table's resident vector store (no Parquet row is read), each
+    *    merged on the driver (1 without `has_rank`);
     *  - moderate: the keys job plus the same 2 — the keys ride a
     *    `SparkContext.broadcast` and each code row is tested against them
     *    inside the scan, so no job reads the allowed frame again;
-    *  - few survivors: the keys job plus 1, one scan of the live table
-    *    scoring the allowed rows, with k per query per task merged on the
-    *    driver; no shuffle.
+    *  - few survivors: the keys job plus 1, which looks the allowed keys up
+    *    in the same store and scores them, with k per query per task merged
+    *    on the driver; no shuffle.
+    * The first request that needs the store after a commit, or on a
+    * freshly loaded table, builds it inside its own lookup job: no extra
+    * job, no shuffle (see [[graft.table.GammaTable.vectorStore]]).
     * The keys job (here, or the caller's) collects keys only for a model
     * that tests them ([[allowedKeyBound]]: IVFPQ as above, HNSW in its
     * walk); for IVFFLAT and BINARYIVF it only counts, and their scans and
@@ -823,10 +829,10 @@ class IncrementalIndexer(
         // exact-over-filtered fallback: few enough survivors that probing
         // cannot guarantee k of them — and scoring all of them exactly is
         // cheaper than a probe anyway. With the keys on the driver, one
-        // scan of the live table scores the allowed rows and the task
-        // heaps merge on the driver; otherwise the lazy plan.
+        // job looks the allowed rows up in the table's vector store and
+        // the task heaps merge on the driver; otherwise the lazy plan.
         logTier("exact-fallback")
-        ExactRerank.allowedOnly(table.docs, key, vecCol, queries, k, params.metric, allowed.get,
+        ExactRerank.allowedOnly(table.vectorStore(vecCol), queries, k, params.metric, allowed.get,
           (minScore, maxScore)).toRight(
           Knn.flatSearch(restrict(table.docs), key, vecCol, qDf, "qid", "qvec", k, params.metric,
             minScore = minScore, maxScore = maxScore))
@@ -1149,7 +1155,8 @@ object IncrementalIndexer {
         new IvfPqIndex(spark, ix.persistedData(),
           table.docs.select(org.apache.spark.sql.functions.col(key),
             org.apache.spark.sql.functions.col(vecCol)),
-          key, vecCol, centers, codebooks, params, rotation)
+          key, vecCol, centers, codebooks, params, rotation,
+          store = Some(table.vectorStore(vecCol)))
       case "HNSW" =>
         // restore the standing exclusion set: entries of keys purged from
         // the table live on in the immutable graph segments, and after the

@@ -77,6 +77,18 @@ case class TableMeta(
   * 100 TB table costs O(delta buckets), and key lookups prune to one
   * bucket's files. `nBuckets` should give ~1 GB buckets at scale; local
   * tests use a small count.
+  *
+  * Resident vectors: each vector field an ANN request re-ranks or
+  * exact-scores gets one [[graft.index.VectorStore]] per manifest (see
+  * [[vectorStore]]): the live (key, vector) rows on the decoded float
+  * surface (INT8-stored fields decoded once), cached in Spark's block
+  * manager and looked up by key, so a request reads its candidates'
+  * blocks instead of the table's files. The first request after a commit
+  * (or on a freshly loaded handle) builds it inside its own lookup job,
+  * with no shuffle; the commit unpersists the previous manifest's blocks. Memory: per live
+  * row, the vector (4 B a component for float, 8 B for double) plus its
+  * key (about 24 B for a long key, more for a string) and a 4 B offset,
+  * spilling to executor disk under memory pressure (`MEMORY_AND_DISK`).
   */
 class GammaTable private (
     val spark: SparkSession,
@@ -211,6 +223,36 @@ class GammaTable private (
       if (meta0 eq m) framesCache = f
       f
     }
+  }
+
+  /** (manifest, field -> store) of [[vectorStore]], guarded by `storesLock`. */
+  private var stores: (TableMeta, Map[String, graft.index.VectorStore]) = null
+  private val storesLock = new Object
+
+  /** The resident vector store of `field` over the current manifest's live
+    * docs; built by its first lookup. A store made for an older manifest
+    * is released (its blocks unpersisted) when the manifest changes: by
+    * [[writeMeta]] on every commit, or here.
+    */
+  private[graft] def vectorStore(field: String): graft.index.VectorStore = {
+    val m = meta0
+    val (store, stale) = storesLock.synchronized {
+      val stale = if (stores != null && (stores._1 ne m)) takeStores() else Nil
+      if (stores == null) stores = (m, Map.empty)
+      val s = stores._2.getOrElse(field,
+        new graft.index.VectorStore(docs.select(col(m.keyField), col(field))))
+      stores = (m, stores._2 + (field -> s))
+      (s, stale)
+    }
+    stale.foreach(_.release())
+    store
+  }
+
+  /** Detaches every store; the caller releases them outside the lock. */
+  private def takeStores(): Iterable[graft.index.VectorStore] = storesLock.synchronized {
+    val held = if (stores == null) Nil else stores._2.values
+    stores = null
+    held
   }
 
   /** All documents, including logically-deleted ones (vector fields on
@@ -1272,7 +1314,9 @@ class GammaTable private (
     val json = GammaTable.metaJson(meta0)
     GammaTable.writeJsonAtomic(spark, s"$root/meta", "meta.json", json)
     GammaTable.writeJsonAtomic(spark, s"$root/meta", s"v${meta0.version}.json", json)
+    val stale = takeStores()
     releaseLease()
+    stale.foreach(_.release())
   }
 
   private def touchMarker(p: String): Unit = {

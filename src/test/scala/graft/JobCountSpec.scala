@@ -28,19 +28,43 @@ class JobCountSpec extends GraftSuite {
   private val lastJobSites = new java.util.concurrent.ConcurrentLinkedQueue[String]
   // shuffle bytes written by the tasks of the last `jobsDuring` window
   private val lastShuffleBytes = new AtomicLong(0L)
+  // the last window's jobs: (site, stage ids), and per stage its (tasks,
+  // shuffle bytes written, input records read)
+  private val lastJobStages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[Int])]
+  private val stageTotals = new java.util.concurrent.ConcurrentHashMap[Int, Array[Long]]
+
+  private final case class JobStat(site: String, tasks: Long, shuffleBytes: Long, recordsRead: Long)
+
+  /** Per job of the last `jobsDuring` window, in start order. */
+  private def lastJobs: Seq[JobStat] = {
+    import scala.jdk.CollectionConverters._
+    lastJobStages.asScala.toSeq.map { case (site, stages) =>
+      val t = stages.flatMap(s => Option(stageTotals.get(s)))
+      JobStat(site, t.map(_(0)).sum, t.map(_(1)).sum, t.map(_(2)).sum)
+    }
+  }
 
   private def jobsDuring[T](f: => T): (T, Int) = {
     val n = new AtomicInteger(0)
     lastJobSites.clear()
     lastShuffleBytes.set(0L)
+    lastJobStages.clear()
+    stageTotals.clear()
     val l = new SparkListener {
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach(m => lastShuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+        Option(te.taskMetrics).foreach { m =>
+          lastShuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          val t = stageTotals.computeIfAbsent(te.stageId, _ => new Array[Long](3))
+          t.synchronized {
+            t(0) += 1; t(1) += m.shuffleWriteMetrics.bytesWritten; t(2) += m.inputMetrics.recordsRead
+          }
+        }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val desc = Option(js.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        lastJobSites.add(
-          desc + " @ " + js.stageInfos.map(_.name).distinct.mkString(" | "))
+        val site = desc + " @ " + js.stageInfos.map(_.name).distinct.mkString(" | ")
+        lastJobSites.add(site)
+        lastJobStages.add((site, js.stageIds))
         n.incrementAndGet()
       }
     }
@@ -105,7 +129,8 @@ class JobCountSpec extends GraftSuite {
 
   test("persisted IVFPQ point and batch requests run two jobs and no shuffle") {
     // job 1: probed-list scan with per-task candidate heaps merged on the
-    // driver; job 2: exact re-rank scan of the raw vectors, same shape
+    // driver; job 2: exact re-rank of the candidates looked up in the
+    // table's resident vector store, same shape
     val root = tmp()
     GammaTable.create(spark, root, "jpq", "_id", docTable(),
       Seq(VectorFieldDef("vec", 64, "L2", "IVFPQ")), nBuckets = 4)
@@ -122,6 +147,39 @@ class JobCountSpec extends GraftSuite {
       assert(n === 2, s"${vq.batch.size}-vector request ran $n jobs: " +
         lastJobSites.toArray.mkString("; "))
       assert(lastShuffleBytes.get === 0L)
+      // the re-rank reads one cached store block per task and no Parquet
+      // row (a cached block counts as one input record)
+      val rerank = lastJobs.filter(_.site.contains("VectorStore"))
+      assert(rerank.size === 1, lastJobs)
+      assert(rerank.head.tasks > 0 && rerank.head.recordsRead === rerank.head.tasks, lastJobs)
+    }
+  }
+
+  test("the first IVFPQ search after a commit builds the vector store inside its re-rank job") {
+    val root = tmp()
+    val t = GammaTable.create(spark, root, "jvs", "_id", docTable(),
+      Seq(VectorFieldDef("vec", 64, "L2", "IVFPQ")), nBuckets = 4)
+    t.buildIndex("vec", IndexParams(ncentroids = 4, nprobe = 2, nsubvector = 8),
+      persist = true, retrievalType = "IVFPQ")
+    val vecs = docTable().select("vec").as[Array[Float]].take(64).toSeq
+    for (vq <- Seq(VecQuery("vec", vecs.head), VecQuery("vec", vectors = vecs))) {
+      def run() = t.search(SearchRequest(topn = 10, vecQueries = Seq(vq)))
+        .select("qid", "_id", "score").collect()
+      run() // the per-list stats job runs once per lists version
+      t.addOrUpdate(t.docs.filter(col("_id") === "1").select("_id", "p_size", "vec"))
+      val (_, first) = jobsDuring(run())
+      val firstJobs = lastJobs
+      val (_, steady) = jobsDuring(run())
+      val steadyJobs = lastJobs
+      val what = s"${vq.batch.size}-vector request: $firstJobs vs $steadyJobs"
+      assert(first === steady, what)
+      assert(firstJobs.map(_.shuffleBytes).sum === steadyJobs.map(_.shuffleBytes).sum, what)
+      // the first re-rank reads the live docs' rows and caches them, with
+      // no shuffle; the next reads one cached block per task
+      val Seq(build) = firstJobs.filter(_.site.contains("VectorStore"))
+      val Seq(rerank) = steadyJobs.filter(_.site.contains("VectorStore"))
+      assert(build.shuffleBytes === 0L && build.recordsRead > build.tasks, what)
+      assert(rerank.recordsRead === rerank.tasks, what)
     }
   }
 
