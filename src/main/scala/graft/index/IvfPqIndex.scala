@@ -9,7 +9,6 @@ import org.apache.spark.util.LongAccumulator
 
 import graft.core.Metric
 import graft.functions.{QueryHeaps, SpecializedRowOrdering}
-import graft.operators.{Knn, TopK}
 
 /** IVFPQ (reference V2, index/impl/gamma_index_ivfpq.cc): coarse quantize,
   * product-quantize the residuals, scan probed lists with the ADC LUT, then
@@ -27,6 +26,10 @@ import graft.operators.{Knn, TopK}
   * fetches only the nq x recall_num candidates' vectors by key from the
   * resident [[VectorStore]] over `rawDocs` (the table's own store when the
   * index serves a table) instead of reading the table.
+  *
+  * One search ([[searchHits]]) serves the table API, the SQL rewrite and
+  * direct callers. Ids are Long, Int or String (the reference's
+  * `id_type_`, table/table.cc:123-126) and vectors float or double arrays.
   */
 class IvfPqIndex(
     val spark: SparkSession,
@@ -68,9 +71,8 @@ class IvfPqIndex(
     new IvfPqIndex(spark, codes, rawDocs, idCol, vecCol, centers, codebooks, params, rotation,
       listSizes, Some(quantBroadcast), Some(vectors))
 
-  /** Rows actually read by the LAST search's ADC scan — filled by a
-    * LongAccumulator once the caller runs an action on the returned frame
-    * (-1 before any search). Feedback surface for the indexer's probe-cost
+  /** Rows actually read by the LAST search's ADC scan, over all its
+    * chunks (-1 before any search). Feedback surface for the indexer's probe-cost
     * bound: the uniform-volume row prediction is calibrated against this
     * (IncrementalIndexer.rowCalibration).
     */
@@ -89,6 +91,12 @@ class IvfPqIndex(
     s"IVFPQ supports L2 and InnerProduct (got ${params.metric}); " +
       "normalize vectors and use InnerProduct for cosine")
 
+  private val keyType = codes.schema(idCol).dataType
+  IvfPqIndex.requireTypes(keyType, rawDocs.schema(vecCol).dataType)
+  require(rawDocs.schema(idCol).dataType == keyType,
+    s"IVFPQ re-rank source ids are ${rawDocs.schema(idCol).dataType.simpleString}, " +
+      s"code ids ${keyType.simpleString}")
+
   private val m = codebooks.length
   // k-means may return fewer than 2^nbits distinct centers per subspace;
   // the LUT layout pads every subspace to the max so the scan kernel's
@@ -96,17 +104,66 @@ class IvfPqIndex(
   // stride) stays valid — padded slots are never referenced
   private val ksub = codebooks.map(_.length).max
 
-  /** Driver-side probe plan shared by both request paths: the probed
-    * lists (allowed-set semi-join applied, sorted by centroid within each
-    * partition) and the ADC scan kernel over them.
-    */
-  private def probe(
+  /** [[searchHits]], run now, its hits as a local relation. */
+  override def search(
       queries: Seq[(Long, Array[Float])],
       k: Int,
       nprobe: Option[Int],
       allowedIds: Option[DataFrame],
+      minScore: Option[Double],
+      maxScore: Option[Double]): DataFrame =
+    searchHits(queries, k, nprobe, allowedIds.map(AllowedKeys(_, -1L, None)), minScore, maxScore)
+      .toDF(spark)
+
+  /** The IVFPQ search in two Spark jobs and no shuffle, the shape of
+    * Spark's `TakeOrderedAndProject` (the reference's per-thread heaps
+    * merged once, gamma_index_ivfpq.cc:570-593, then the `recall_num`
+    * re-rank, :642-697):
+    *  1. scan the probed lists; each task keeps a heap of
+    *     max(recall_num, k) candidates per query, merged on the driver;
+    *  2. look the candidates up in the resident [[VectorStore]] (the
+    *     candidate map broadcast once), score them exactly with the
+    *     `l2_sq` / `inner_product` double arithmetic, apply the score
+    *     range; each task keeps k per query, merged on the driver.
+    * Without `hasRank`, job 1 applies the range to the ADC value and keeps
+    * k, and there is no job 2. A batch over
+    * [[IvfPqIndex.MaxBroadcastCandidates]] candidates runs the jobs once
+    * per [[IvfPqIndex.qidChunks]] chunk. Allowed keys on the driver are
+    * broadcast and tested on each code row in job 1; without keys, the
+    * allowed frame is semi-joined into the probed lists.
+    */
+  private[graft] def searchHits(
+      queries: Seq[(Long, Array[Float])],
+      k: Int,
+      nprobe: Option[Int],
+      allowed: Option[AllowedKeys],
+      minScore: Option[Double],
+      maxScore: Option[Double]): LocalHits = {
+    val nCand = if (params.hasRank) math.max(params.recallNum, k) else k
+    val keySet = allowed.filter(_.keyType == keyType).flatMap(_.keySet)
+      .map(spark.sparkContext.broadcast(_))
+    val frame = if (keySet.isDefined) None else allowed.map(_.frame)
+    val scanAcc = spark.sparkContext.longAccumulator("graft.ivfpq.scannedRows")
+    lastScanAcc = Some(scanAcc)
+    try IvfPqIndex.qidChunks(queries, nCand, IvfPqIndex.MaxBroadcastCandidates)
+      .map(searchChunk(_, k, nprobe, keySet, frame, nCand, (minScore, maxScore), scanAcc))
+      .reduce(_ ++ _)
+    finally keySet.foreach(_.destroy())
+  }
+
+  /** One chunk's jobs: the probe plan (probed lists, allowed-set
+    * semi-join, codes sorted by centroid within each partition), job 1
+    * and, with `hasRank`, job 2.
+    */
+  private def searchChunk(
+      queries: Seq[(Long, Array[Float])],
+      k: Int,
+      nprobe: Option[Int],
+      keySet: Option[Broadcast[KeySet]],
+      allowedIds: Option[DataFrame],
       heapSize: Int,
-      range: (Option[Double], Option[Double])): (DataFrame, AdcScan, Array[Long]) = {
+      range: (Option[Double], Option[Double]),
+      scanAcc: LongAccumulator): LocalHits = {
     val np = math.min(nprobe.getOrElse(params.nprobe), centers.length)
     val sizes = if (Ivf.adaptiveEnabled(spark)) listSizes else None
     val target = Ivf.probeTarget(k, params.recallNum, np, params.nprobe)
@@ -145,126 +202,28 @@ class IvfPqIndex(
     val group = qids.zipWithIndex.toMap
     val in = filtered.select(col("centroid_id"), col(idCol), col("pq_codes"))
       .sortWithinPartitions(col("centroid_id"))
-    val scanAcc = spark.sparkContext.longAccumulator("graft.ivfpq.scannedRows")
-    lastScanAcc = Some(scanAcc)
     val scan = new AdcScan(
       spark.sparkContext.broadcast(byCentroid), quantBroadcast,
-      queries.map(q => group(q._1)).toArray, qids.length, heapSize, in.schema(idCol).dataType,
-      Metric.ascending(params.metric), params.metric == Metric.InnerProduct, m, ksub, range,
-      scanAcc)
-    (in, scan, qids)
-  }
-
-  /** Lazy form (the `AnnRewrite` and gate callers): each scan task keeps
-    * only its per-query heap, then the heaps merge through `TopK.perGroup`
-    * (one shuffle) and the candidates re-rank through a join with the raw
-    * vectors. [[searchLocal]] answers the same request in two jobs.
-    */
-  override def search(
-      queries: Seq[(Long, Array[Float])],
-      k: Int,
-      nprobe: Option[Int],
-      allowedIds: Option[DataFrame],
-      minScore: Option[Double],
-      maxScore: Option[Double]): DataFrame = {
-    import spark.implicits._
-    val asc = Metric.ascending(params.metric)
-    // stage 1 keeps recall_num candidates by ADC (metric order — ADC scores
-    // are approximate, so the range predicate waits for the exact stage);
-    // without the exact stage the ADC value IS the returned score and the
-    // range predicate applies to it directly
-    val nCand = if (params.hasRank) math.max(params.recallNum, k) else k
-    val adcRange = if (params.hasRank) (None, None) else (minScore, maxScore)
-    val (in, scan, qids) = probe(queries, k, nprobe, allowedIds, nCand, adcRange)
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("qid",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      in.schema(idCol).copy(name = "id"),
-      org.apache.spark.sql.types.StructField("score",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-    val adc = in.mapPartitions { rows =>
-      val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(scan.idType)
-      val task = scan.task()
-      rows.foreach { r =>
-        task.add(r.getInt(0), toCatalyst(r.get(1)),
-          org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-            .fromPrimitiveArray(r.getSeq[Int](2).toArray))
-      }
-      LocalHits.fromHeaps(task.heaps, qids, scan.idType).toRows
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-    val cands = TopK.perGroup(adc, "qid", "score", asc, nCand, Seq("id"))
-    if (!params.hasRank) return cands
-    // stage 2: exact re-rank with the range filter before the final heap
-    val qdf = queries.map { case (i, v) => (i, v.toSeq) }.toDF("qid", "qvec")
-    // stream the raw table, broadcast the candidate set when it is small
-    // (nq x recall_num rows — the reference default is 100/query); an
-    // exhaustive-recall caller falls back to a shuffle join
-    val candsSide = cands.select(col("qid"), col("id"))
-    val exact = rawDocs.select(col(idCol).as("id"), col(vecCol))
-      .join(if (withinBroadcastBound(queries.size, nCand)) broadcast(candsSide) else candsSide, Seq("id"))
-      .join(broadcast(qdf), Seq("qid"))
-      .select(col("qid"), col("id"),
-        Knn.score(params.metric, col(vecCol), col("qvec")).as("score"))
-    val ranged = AnnIndex.scoreRange(exact, "score", minScore, maxScore)
-    TopK.perGroup(ranged, "qid", "score", asc, k, Seq("id"))
-  }
-
-  /** The request path in two Spark jobs and no shuffle, the shape of
-    * Spark's `TakeOrderedAndProject` (the reference's per-thread heaps
-    * merged once, gamma_index_ivfpq.cc:570-593, then the `recall_num`
-    * re-rank, :642-697):
-    *  1. scan the probed lists; each task keeps a heap of
-    *     max(recall_num, k) candidates per query, merged on the driver;
-    *  2. look the candidates up in the resident [[VectorStore]] (one task
-    *     per block, the candidate map broadcast once), score them exactly,
-    *     apply the score range; each task keeps k per query, merged on the
-    *     driver.
-    * Without `hasRank`, job 1 applies the range and keeps k, and there is
-    * no job 2. Results equal [[search]] row for row (same heaps, same
-    * double arithmetic as `l2_sq` / `inner_product`). The per-request
-    * broadcasts are destroyed once the driver merge has returned.
-    *
-    * An allowed set whose keys are on the driver is broadcast (as the
-    * packed rows of a [[KeySet]]) and tested on each code row inside job 1,
-    * so no job reads its frame; without keys, its frame is semi-joined into
-    * the probed lists as in [[search]].
-    *
-    * None when the candidates would exceed the broadcast bound or the key
-    * type has no by-value equality; the caller then runs [[search]].
-    */
-  private[graft] def searchLocal(
-      queries: Seq[(Long, Array[Float])],
-      k: Int,
-      nprobe: Option[Int],
-      allowed: Option[AllowedKeys],
-      minScore: Option[Double],
-      maxScore: Option[Double]): Option[LocalHits] = {
-    val nCand = if (params.hasRank) math.max(params.recallNum, k) else k
-    val keyType = codes.schema(idCol).dataType
-    if (!withinBroadcastBound(queries.size, nCand) || !AllowedKeys.KeyTypes(keyType) ||
-        (params.hasRank && !(vectors.serves && vectors.keyType == keyType))) return None
-    val adcRange = if (params.hasRank) (None, None) else (minScore, maxScore)
-    val keySet = allowed.filter(_.keyType == keyType).flatMap(_.keySet)
-      .map(spark.sparkContext.broadcast(_))
-    val (in, scan, qids) = probe(queries, k, nprobe,
-      if (keySet.isDefined) None else allowed.map(_.frame), nCand, adcRange)
-    val stage1 =
-      try IvfPqIndex.mergeTasks(scan.heaps(),
-        in.queryExecution.toRdd.mapPartitions { rows =>
-          val task = scan.task()
-          val keys = keySet.map(_.value).orNull
-          rows.foreach { r =>
-            val id = r.get(1, scan.idType)
-            if (keys == null || keys.contains(id)) task.add(r.getInt(0), id, r.getArray(2))
-          }
-          Iterator(task.heaps.packed)
-        })
-      finally { keySet.foreach(_.destroy()); scan.destroyRequest() }
-    if (!params.hasRank) return Some(LocalHits.fromHeaps(stage1, qids, keyType))
+      queries.map(q => group(q._1)).toArray, qids.length, heapSize, keyType,
+      Metric.ascending(params.metric), params.metric == Metric.InnerProduct, m, ksub,
+      // the ADC value is the returned score only without the re-rank
+      if (params.hasRank) (None, None) else range, scanAcc)
+    val stage1 = scan.heaps()
+    val idType = keyType // the task closure must not capture the index
+    try in.queryExecution.toRdd.mapPartitions { rows =>
+        val task = scan.task()
+        val keys = keySet.map(_.value).orNull
+        rows.foreach { r =>
+          val id = r.get(1, idType)
+          if (keys == null || keys.contains(id)) task.add(r.getInt(0), id, r.getArray(2))
+        }
+        Iterator(task.heaps.packed)
+      }.collect().foreach(stage1.addPacked)
+    finally scan.destroyRequest()
+    if (!params.hasRank) return LocalHits.fromHeaps(stage1, qids, keyType)
 
     // candidate -> the query positions that score it: every position
-    // sharing the candidate's qid, like the re-rank join on qid
+    // sharing the candidate's qid
     val positions = queries.indices.groupBy(scan.groupOf(_))
     val cand = new java.util.HashMap[Any, Array[Int]]()
     qids.indices.foreach { g =>
@@ -275,12 +234,8 @@ class IvfPqIndex(
       }
     }
     import scala.jdk.CollectionConverters._
-    Some(ExactRerank.hits(vectors, cand.asScala.toSeq, queries, k, params.metric,
-      (minScore, maxScore)))
+    ExactRerank.hits(vectors, cand.asScala.toSeq, queries, k, params.metric, range)
   }
-
-  private def withinBroadcastBound(nq: Int, nCand: Int): Boolean =
-    nq.toLong * nCand <= IvfPqIndex.MaxBroadcastCandidates
 
   /** Encode a delta batch with the ALREADY-TRAINED quantizers — the
     * reference's incremental re-encode of new/updated vectors through the
@@ -323,11 +278,34 @@ class IvfPqIndex(
 
 object IvfPqIndex {
 
-  /** nq x max(recall_num, k) candidate rows up to which the request path
-    * collects candidates on the driver (and the lazy form broadcasts them);
-    * above it the lazy form's shuffle join runs.
+  /** The most candidate rows (queries x per-query candidates) one search
+    * chunk brings to the driver ([[qidChunks]]).
     */
   val MaxBroadcastCandidates = 4000000L
+
+  /** `queries` in chunks of consecutive whole qids (ascending, a qid's
+    * positions together and in batch order) whose positions x `perQuery`
+    * stay within `bound` (a qid over it alone is one chunk); a batch within
+    * it is one chunk, `queries` itself. A qid's hits depend on its own
+    * positions only, so the chunks' hits, concatenated, are the batch's.
+    */
+  private[index] def qidChunks(queries: Seq[(Long, Array[Float])], perQuery: Int, bound: Long)
+      : Seq[Seq[(Long, Array[Float])]] =
+    if (queries.size.toLong * perQuery <= bound) Seq(queries)
+    else queries.groupBy(_._1).toSeq.sortBy(_._1).map(_._2)
+      .foldLeft(Vector.empty[Seq[(Long, Array[Float])]]) { (chunks, qs) =>
+        if (chunks.nonEmpty && (chunks.last.size + qs.size).toLong * perQuery <= bound)
+          chunks.init :+ (chunks.last ++ qs)
+        else chunks :+ qs
+      }
+
+  /** Ids Long, Int or String and vectors float or double arrays: the types
+    * the driver merge holds by value and the [[VectorStore]] serves.
+    */
+  private def requireTypes(idType: DataType, vecType: DataType): Unit =
+    require(AllowedKeys.KeyTypes(idType) && VectorStore.isVectorType(vecType),
+      s"IVFPQ needs Long, Int or String ids over float or double vectors " +
+        s"(got ${idType.simpleString} ids over ${vecType.simpleString})")
 
   /** Spark SQL's `score >= minScore AND score <= maxScore` (-0.0 equals
     * 0.0, NaN is the largest value).
@@ -335,13 +313,6 @@ object IvfPqIndex {
   private[index] def inRange(s: Double, range: (Option[Double], Option[Double])): Boolean =
     range._1.forall(lo => SpecializedRowOrdering.cmpD(s, lo) >= 0) &&
       range._2.forall(hi => SpecializedRowOrdering.cmpD(s, hi) <= 0)
-
-  /** One job: every task's packed heaps, merged into `into`. */
-  private[index] def mergeTasks(
-      into: QueryHeaps, tasks: org.apache.spark.rdd.RDD[Array[Byte]]): QueryHeaps = {
-    tasks.collect().foreach(into.addPacked)
-    into
-  }
 
   /** Restore a saved index. `rawDocs` re-supplies the exact re-rank source
     * (the reference reloads raw vectors alongside dumped codes,
@@ -393,6 +364,7 @@ object IvfPqIndex {
       idCol: String,
       vecCol: String,
       params: IndexParams): IvfPqIndex = {
+    requireTypes(docs.schema(idCol).dataType, docs.schema(vecCol).dataType)
     // auto centroid sizing needs the FULL count; with explicit ncentroids
     // a BOUNDED count (first 2^nbits+1 rows) answers the remaining use —
     // the tiny-table ksub guard — without scanning the table. ONE count
@@ -579,7 +551,7 @@ private[index] final class AdcScan(
     val groupOf: Array[Int], // query position -> heap group
     groups: Int,
     heapSize: Int,
-    val idType: DataType,
+    idType: DataType,
     ascending: Boolean,
     ip: Boolean,
     m: Int,
@@ -657,9 +629,8 @@ private[graft] object ExactRerank {
 
   /** One job over the store's blocks: scores each candidate key's stored
     * rows against the query positions it maps to, keeps k per qid in each
-    * task, and merges the task heaps on the driver.
-    * Rows come back per qid as `TopK.perGroup(_, "qid", "score", ascending,
-    * k, Seq("id"))` orders them.
+    * task, and merges the task heaps on the driver. Rows come back per
+    * qid in the (score, id) order of the `topk_rows` heap.
     */
   private[index] def hits(
       store: VectorStore,
@@ -683,16 +654,16 @@ private[graft] object ExactRerank {
     LocalHits.fromHeaps(merged, qids, store.keyType)
   }
 
-  /** The exact fallback over a small allowed set, in one Spark job and no
-    * shuffle: every allowed key maps to every query position and is looked
-    * up in `store` (the live table's). Equals `Knn.flatSearch` over the
-    * semi-joined rows followed by `TopK.perGroup` (same heaps, same
-    * arithmetic, score range applied before the heap).
+  /** The exact fallback over a small allowed set, in one Spark job per
+    * chunk ([[IvfPqIndex.qidChunks]] of nq x k rows) and no shuffle: every
+    * allowed key maps to every query position and is looked up in `store`
+    * (the live table's). Equals `Knn.flatSearch` over the semi-joined rows
+    * cut to k per qid (same heaps, same arithmetic, score range applied
+    * before the heap).
     *
     * None unless the allowed keys are on the driver and match the store's
-    * key type (Long, Int or String), the metric is L2 or InnerProduct, the
-    * vectors are float or double arrays, and nq x k is within
-    * [[IvfPqIndex.MaxBroadcastCandidates]]; the caller then runs the lazy
+    * key type (Long, Int or String), the metric is L2 or InnerProduct and
+    * the vectors are float or double arrays; the caller then runs the lazy
     * plan.
     */
   private[graft] def allowedOnly(
@@ -703,12 +674,14 @@ private[graft] object ExactRerank {
       allowed: AllowedKeys,
       range: (Option[Double], Option[Double])): Option[LocalHits] = {
     val applies = (metric == Metric.L2 || metric == Metric.InnerProduct) && store.serves &&
-      allowed.keyType == store.keyType &&
-      queries.size.toLong * k <= IvfPqIndex.MaxBroadcastCandidates
+      allowed.keyType == store.keyType
     if (!applies) None
     else allowed.keys.map { keys =>
-      val all = queries.indices.toArray
-      hits(store, keys.distinct.map(_ -> all), queries, k, metric, range)
+      val distinct = keys.distinct
+      IvfPqIndex.qidChunks(queries, k, IvfPqIndex.MaxBroadcastCandidates).map { qs =>
+        val all = qs.indices.toArray
+        hits(store, distinct.map(_ -> all), qs, k, metric, range)
+      }.reduce(_ ++ _)
     }
   }
 }

@@ -32,19 +32,14 @@ private[graft] final case class LocalHits(idType: DataType, rows: IndexedSeq[Loc
   def mapScores(f: Double => Double): LocalHits =
     LocalHits(idType, rows.map(h => h.copy(score = f(h.score))))
 
-  /** (qid, id, score) rows with external values. */
-  def toRows: Iterator[Row] = {
-    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
-    rows.iterator.map(h => Row(h.qid, toScala(h.id), h.score))
-  }
-
   /** (qid, `idName`, score) as a local relation. */
   def toDF(spark: SparkSession, idName: String = "id"): DataFrame = {
     val schema = StructType(Seq(
       StructField("qid", LongType, nullable = false), StructField(idName, idType),
       StructField("score", DoubleType, nullable = false)))
+    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
     val out = new java.util.ArrayList[Row](rows.size)
-    toRows.foreach(out.add)
+    rows.foreach(h => out.add(Row(h.qid, toScala(h.id), h.score)))
     spark.createDataFrame(out, schema)
   }
 }

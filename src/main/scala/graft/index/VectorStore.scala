@@ -40,10 +40,8 @@ private[graft] final class VectorStore(docs: DataFrame, cache: Boolean = true) {
   }
 
   /** Whether the rows of `docs` can be stored and looked up. */
-  val serves: Boolean = AllowedKeys.KeyTypes(keyType) && (docs.schema(1).dataType match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _                                    => false
-  })
+  val serves: Boolean =
+    AllowedKeys.KeyTypes(keyType) && VectorStore.isVectorType(docs.schema(1).dataType)
 
   // both guarded by `this`; no job runs under the lock
   private var built: RDD[Block] = _
@@ -88,6 +86,12 @@ private[graft] final class VectorStore(docs: DataFrame, cache: Boolean = true) {
 }
 
 private[graft] object VectorStore {
+
+  /** The vector column types a store holds: float or double arrays. */
+  def isVectorType(dt: DataType): Boolean = dt match {
+    case ArrayType(FloatType | DoubleType, _) => true
+    case _                                    => false
+  }
 
   private val keyOrder: java.util.Comparator[AnyRef] =
     (a: AnyRef, b: AnyRef) => a.asInstanceOf[Comparable[AnyRef]].compareTo(b)

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Per-group exact top-k — the Spark re-expression of the reference's
@@ -12,11 +11,8 @@ import org.apache.spark.sql.functions._
   * Scale design: a bare `Window.partitionBy(group).orderBy(score)` +
   * `row_number <= k` shuffles EVERY candidate row to the reducers. At 100 TB
   * (N docs x Q queries candidates) that shuffle is the bottleneck, so
-  * [[perGroup]] first reduces each map-side partition to at most k rows per
-  * group (sort within partition + streaming scan — the per-partition heap),
-  * then runs the exact window on the surviving `<= partitions * groups * k`
-  * rows. Semantics are identical to the naive window because per-group
-  * global top-k is a subset of the union of per-partition top-k.
+  * [[perGroup]] aggregates a k-bounded `topk_rows` heap per group, whose
+  * map-side partials bound the shuffle to `partitions * groups * k` rows.
   */
 object TopK {
 
@@ -132,58 +128,10 @@ object TopK {
     else perGroup(df, groupCol, scoreCol, ascending, k, tieBreak)
   }
 
-  /** Window-based reference implementation of [[perGroup]] (kept for
-    * equivalence testing; the heap aggregate shuffles k-bounded buffers
-    * instead of every candidate row).
-    */
-  def perGroupWindow(
-      df: DataFrame,
-      groupCol: String,
-      scoreCol: String,
-      ascending: Boolean,
-      k: Int,
-      tieBreak: Seq[String]): DataFrame = {
-    val reduced = partialPerPartition(df, groupCol, scoreCol, ascending, k, tieBreak)
-    val order = orderCols(scoreCol, ascending, tieBreak)
-    val w = Window.partitionBy(col(groupCol)).orderBy(order: _*)
-    reduced
-      .withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .drop("__rank")
-  }
-
   private def orderCols(
       scoreCol: String, ascending: Boolean, tieBreak: Seq[String]): Seq[Column] =
     (if (ascending) col(scoreCol).asc else col(scoreCol).desc) +:
       tieBreak.map(col(_).asc)
-
-  /** Map-side combine: at most k rows per (partition, group), no shuffle.
-    * Relies on `sortWithinPartitions` + a single streaming pass counting
-    * consecutive rows per group.
-    */
-  private def partialPerPartition(
-      df: DataFrame,
-      groupCol: String,
-      scoreCol: String,
-      ascending: Boolean,
-      k: Int,
-      tieBreak: Seq[String]): DataFrame = {
-    val order = col(groupCol).asc +: orderCols(scoreCol, ascending, tieBreak)
-    val sorted = df.sortWithinPartitions(order: _*)
-    val schema = df.schema
-    val gIdx = schema.fieldIndex(groupCol)
-    sorted.mapPartitions { iter =>
-      var current: Any = null
-      var started = false
-      var n = 0
-      iter.filter { row =>
-        val g = row.get(gIdx)
-        if (!started || g != current) { started = true; current = g; n = 0 }
-        n += 1
-        n <= k
-      }
-    }(Encoders.row(schema))
-  }
 
   /** Global top-k (single group): `ORDER BY ... LIMIT k` — Spark plans this
     * as TakeOrderedAndProject (per-partition heap + driver merge), which is

@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions.{broadcast, col}
 import graft.core.Metric
 import graft.functions.{CosineSimilarity, InnerProduct, L2SqDistance}
 import graft.index.AnnIndex
+import graft.streaming.IncrementalIndexer
 
 /** Catalyst rewrite of exact-KNN plans into the ANN index path — the
   * optimizer half of the reference's planner behavior where an available
@@ -22,7 +23,8 @@ import graft.index.AnnIndex
   * `ORDER BY l2_sq(vec, <literal qvec>) LIMIT k` (or `inner_product`/
   * `cosine_sim` with DESC) over a parquet relation registered in
   * [[IndexCatalog]] is rewritten into the registered index's probe-pruned
-  * search plan. Opt-in by `SET spark.graft.ann.rewrite=true` because the
+  * search (IVFPQ's runs while the rule applies; its hits replace the plan
+  * as a local relation). Opt-in by `SET spark.graft.ann.rewrite=true` as the
   * rewrite trades exactness for probe-pruned latency when nprobe <
   * ncentroids — exactly the trade the reference makes the moment an index
   * reaches INDEXED state.
@@ -283,25 +285,19 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       val flt = ri.docs.filter(c).select(col(ri.idCol)).localCheckpoint(true)
       (flt, ri.docs.count(), flt.count())
     }
-    // same cost-based bound as IncrementalIndexer.search: an explicit conf
-    // is absolute; otherwise a probe cheaper to answer exactly (using the
-    // index's own per-list stats when attached) declines the rewrite
-    val exactThreshold = conf.getConfString("spark.graft.filter.exactFallbackRows", "")
-      match {
-        case "" =>
-          val probeCost = stats.map { case (_, total, aCnt) =>
-            val sizes = ri.index match {
-              case f: graft.index.IvfFlatIndex   => f.listSizes
-              case p: graft.index.IvfPqIndex     => p.listSizes
-              case b: graft.index.BinaryIvfIndex => b.listSizes
-              case _                             => None
-            }
-            graft.streaming.IncrementalIndexer.probeCostRows(
-              ri.index, math.max(total, 1L), aCnt, None, sizes)
-          }.getOrElse(0L)
-          math.max(math.max(16L * k, 65536L), probeCost)
-        case s => s.toLong
-      }
+    // the filtered-ANN policy of IncrementalIndexer.search: a probe cheaper
+    // to answer exactly (using the index's own per-list stats when
+    // attached) declines the rewrite
+    val exactThreshold = IncrementalIndexer.exactFallbackRows(spark, k,
+      stats.map { case (_, total, aCnt) =>
+        val sizes = ri.index match {
+          case f: graft.index.IvfFlatIndex   => f.listSizes
+          case p: graft.index.IvfPqIndex     => p.listSizes
+          case b: graft.index.BinaryIvfIndex => b.listSizes
+          case _                             => None
+        }
+        IncrementalIndexer.probeCostRows(ri.index, math.max(total, 1L), aCnt, None, sizes)
+      }.getOrElse(0L))
     val broadcastMax = graft.index.AllowedKeys.broadcastMax(spark)
     if (stats.exists(_._3 <= exactThreshold)) return None
     val hnswHuge = ri.index.retrievalType == "HNSW" && stats.exists(_._3 > broadcastMax)
@@ -309,12 +305,8 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case Some((_, total, aCnt)) if aCnt > 0 =>
         val base = if (ri.index.retrievalType == "HNSW") ri.index.params.efSearch
                    else ri.index.params.nprobe
-        val factor = math.max(1L, (total + aCnt - 1L) / aCnt)
-        val f =
-          if (hnswHuge)
-            math.min(k.toLong * factor * 2L, math.max(k.toLong, 1L << 16)).toInt
-          else k
-        (Some(math.min(base.toLong * factor, 1L << 20).toInt), f)
+        (Some(IncrementalIndexer.widenedProbe(base, total, aCnt)),
+          if (hnswHuge) IncrementalIndexer.hnswHugeFetchK(k, total, aCnt) else k)
       case _ => (None, k)
     }
     val allowed = stats.map { case (flt, _, aCnt) =>
@@ -355,18 +347,35 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         else col(o.name)
       }
       val asc = Metric.ascending(metric)
-      val ordered = base
-        .orderBy((if (asc) col("score").asc else col("score").desc), col("id").asc)
-        .limit(k)
-        .select(cols: _*)
-      val newPlan = ordered.queryExecution.optimizedPlan
+      val ordered = hits.queryExecution.optimizedPlan match {
+        // an index that answered on the driver (IVFPQ) hands back a local
+        // relation: its top k is cut here, in Spark's sort order, so the
+        // replacement runs no job
+        case lr @ LocalRelation(Seq(id, score), data, _, _) if !needsJoin =>
+          val ord = new InterpretedOrdering(
+            Seq(SortOrder(score, if (asc) Ascending else Descending), SortOrder(id, Ascending)),
+            lr.output)
+          org.apache.spark.sql.graft.Bridge.ofRows(spark, lr.copy(data = data.sorted(ord).take(k)))
+            .select(cols: _*)
+        case _ =>
+          base.orderBy((if (asc) col("score").asc else col("score").desc), col("id").asc)
+            .limit(k)
+            .select(cols: _*)
+      }
       // graft the original attribute ids onto the replacement's output so
       // parent operators keep resolving
-      Project(
-        origOutput.zip(newPlan.output).map { case (o, n) =>
-          Alias(n, o.name)(exprId = o.exprId)
-        },
-        newPlan)
+      ordered.queryExecution.optimizedPlan match {
+        case lr: LocalRelation =>
+          lr.copy(output = origOutput.zip(lr.output).map { case (o, n) =>
+            n.withName(o.name).withExprId(o.exprId)
+          })
+        case newPlan =>
+          Project(
+            origOutput.zip(newPlan.output).map { case (o, n) =>
+              Alias(n, o.name)(exprId = o.exprId)
+            },
+            newPlan)
+      }
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Metric
@@ -664,11 +664,12 @@ class IncrementalIndexer(
     *    near-table-size set through the driver.
     *
     * Spark jobs per request on a persisted IVFPQ index with no bucket
-    * changed since the build (L2 or InnerProduct, Long/Int/String keys,
-    * candidates within [[IvfPqIndex.MaxBroadcastCandidates]]), when the
-    * caller ([[graft.table.GammaTable.search]]) hands over the allowed keys
-    * its keys job collected; the cached per-list stats cost one more job
-    * once per lists version:
+    * changed since the build, when the caller
+    * ([[graft.table.GammaTable.search]]) hands over the allowed keys its
+    * keys job collected; the cached per-list stats cost one more job once
+    * per lists version, and a batch above
+    * [[IvfPqIndex.MaxBroadcastCandidates]] candidates repeats the index
+    * jobs once per whole-qid chunk:
     *  - unfiltered: 2, the probed-list scan with per-task candidate heaps
     *    and the exact re-rank, which looks the candidates up in the
     *    table's resident vector store (no Parquet row is read), each
@@ -686,9 +687,9 @@ class IncrementalIndexer(
     * that tests them ([[allowedKeyBound]]: IVFPQ as above, HNSW in its
     * walk); for IVFFLAT and BINARYIVF it only counts, and their scans and
     * exact fallback semi-join the allowed frame. Without collected keys
-    * (those models, or a set above `broadcastMaxKeys`) the IVFPQ scan
-    * semi-joins the frame too, and the exact fallback runs the lazy
-    * `Knn.flatSearch` plan.
+    * (those models, or a set above `broadcastMaxKeys`) the IVFPQ job 1
+    * semi-joins the frame instead of testing keys, still merging on the
+    * driver, and the exact fallback runs the lazy `Knn.flatSearch` plan.
     */
   def search(
       queries: Seq[(Long, Array[Float])],
@@ -708,22 +709,20 @@ class IncrementalIndexer(
 
   /** The key bound for the keys job of a filtered request to this index
     * ([[AllowedKeys.collect]]): `broadcastMaxKeys` for the models whose
-    * request paths test collected keys (IVFPQ, L2 or InnerProduct; HNSW),
+    * request paths test collected keys (IVFPQ, HNSW),
     * -1 (count only) for the others, which semi-join the allowed frame.
     */
   private[graft] def allowedKeyBound: Long =
     retrievalType.toUpperCase(java.util.Locale.ROOT) match {
-      case "IVFPQ" if params.metric == Metric.L2 || params.metric == Metric.InnerProduct =>
-        AllowedKeys.broadcastMax(spark)
-      case "HNSW" => AllowedKeys.broadcastMax(spark)
-      case _      => -1L
+      case "IVFPQ" | "HNSW" => AllowedKeys.broadcastMax(spark)
+      case _                => -1L
     }
 
   /** [[search]], with the hits held on the driver (Right) when a driver
-    * path served them — the IVFPQ tier's ([[IvfPqIndex.searchLocal]]) or
-    * the exact fallback over collected keys ([[ExactRerank.allowedOnly]]) —
-    * so the caller's per-request cuts need no further Spark job; any other
-    * tier returns its lazy frame (Left).
+    * path served them — every IVFPQ tier search ([[IvfPqIndex.searchHits]])
+    * and the exact fallback over collected keys
+    * ([[ExactRerank.allowedOnly]]) — so the caller's per-request cuts need
+    * no further Spark job; any other tier returns its lazy frame (Left).
     */
   private[graft] def searchHits(
       queries: Seq[(Long, Array[Float])],
@@ -789,20 +788,17 @@ class IncrementalIndexer(
     // lazy: only the filtered branch (aCount >= 0) consults it — an
     // unfiltered search must not pay the probe-cost model (or the cached
     // list-sizes job it can trigger) for a value it never reads
-    lazy val exactThreshold = spark.conf.getOption("spark.graft.filter.exactFallbackRows")
-      .map(_.toLong).getOrElse {
-        // cost from ACTUAL per-list row counts when the probe is partial
-        // (cached stat, one job per lists version — the same stats the
-        // adaptive widening reads); uniform-volume model otherwise
-        val probeCost = index.map { ix =>
-          val sizes =
-            if (partialListProbe(ix)) cachedListSizes(listsOf(ix), ncentOf(ix)) else None
-          IncrementalIndexer.probeCostRows(
-            ix, math.max(table.meta.maxDocid, 1L), aCount, nprobe, sizes,
-            rowCalibration)
-        }.getOrElse(0L)
-        math.max(math.max(16L * k, 65536L), probeCost)
-      }
+    lazy val exactThreshold = IncrementalIndexer.exactFallbackRows(spark, k,
+      // cost from ACTUAL per-list row counts when the probe is partial
+      // (cached stat, one job per lists version — the same stats the
+      // adaptive widening reads); uniform-volume model otherwise
+      index.map { ix =>
+        val sizes =
+          if (partialListProbe(ix)) cachedListSizes(listsOf(ix), ncentOf(ix)) else None
+        IncrementalIndexer.probeCostRows(
+          ix, math.max(table.meta.maxDocid, 1L), aCount, nprobe, sizes,
+          rowCalibration)
+      }.getOrElse(0L))
     val broadcastMax = AllowedKeys.broadcastMax(spark)
     val allowedHinted = allowed.map { a =>
       val ids = a.frame.toDF(key)
@@ -883,17 +879,12 @@ class IncrementalIndexer(
             hasRank = hasRank.getOrElse(statsIdx.params.hasRank)))
         lastProbeBase = tunedIdx.params.nprobe
         val cleanIdx = invalid.fold(tunedIdx)(tunedIdx.excluding)
-        // inverse-selectivity widening: with an allowed fraction of s, a
-        // probed list holds ~s of its usual share of allowed docs, so the
-        // probe budget grows by ~1/s to keep ~k allowed candidates in
-        // range (the reference's recall_num over-fetch). maxDocid is a
-        // free upper bound on table size (deletes only make it
-        // conservative); each model clamps to its own limit (ncentroids /
-        // graph size).
+        // inverse-selectivity widening (the reference's recall_num
+        // over-fetch); maxDocid is a free upper bound on table size
+        // (deletes only make it conservative)
         val total = math.max(table.meta.maxDocid, 1L)
-        val factor = math.max(1L, (total + aCount - 1L) / aCount)
         val effNprobe =
-          if (aCount > 0L) Some(math.min(baseNp.toLong * factor, 1L << 20).toInt)
+          if (aCount > 0L) Some(IncrementalIndexer.widenedProbe(baseNp, total, aCount))
           else nprobe
         // HNSW is the one model whose allowed-set pushdown materializes the
         // set on the DRIVER (sorted primitive array broadcast) — for a
@@ -910,15 +901,8 @@ class IncrementalIndexer(
             effNprobe.getOrElse(baseNp)}"
           else "indexed-unfiltered")
         val (pushIds, fetchK) =
-          if (hnswHuge)
-            (None, math.min(k.toLong * factor * 2L, math.max(k.toLong, 1L << 16)).toInt)
+          if (hnswHuge) (None, IncrementalIndexer.hnswHugeFetchK(k, total, aCount))
           else (allowedHinted, k)
-        // the two-job IVFPQ request path (collected keys tested inside
-        // job 1); None above its candidate bound
-        val local = cleanIdx match {
-          case pq: IvfPqIndex => pq.searchLocal(queries, fetchK, effNprobe, pushIds, minScore, maxScore)
-          case _              => None
-        }
         cleanIdx match {
           case pq: IvfPqIndex if pushIds.isEmpty && queries.size == 1 =>
             // single-query probes only: the accumulator measures the UNION
@@ -944,11 +928,14 @@ class IncrementalIndexer(
             key, vecCol, qDf, "qid", "qvec", k, params.metric,
             minScore = minScore, maxScore = maxScore))
         val asc = Metric.ascending(params.metric)
-        local match {
-          case Some(hits) =>
-            // the merge with the tail (one more job) runs on the driver too
+        cleanIdx match {
+          case pq: IvfPqIndex =>
+            // the two-job IVFPQ search (collected keys tested inside job
+            // 1); the merge with the tail (one more job) runs on the
+            // driver too
+            val hits = pq.searchHits(queries, fetchK, effNprobe, pushIds, minScore, maxScore)
             Right(fromTail.fold(hits)(t => (hits ++ LocalHits.collect(t)).topK(k, asc)))
-          case None =>
+          case _ =>
             val fromIndex0 = (cleanIdx, pushIds) match {
               // the graph walk tests the keys the caller's keys job collected
               case (h: HnswIndex, Some(a)) =>
@@ -1013,8 +1000,7 @@ object IncrementalIndexer {
     }
     if (ncent <= 0) return 0L
     val base = math.max(1L, nprobe.getOrElse(idx.params.nprobe).toLong)
-    val factor = math.max(1L, (total + aCount - 1L) / aCount)
-    val eff = math.min(base * factor, ncent.toLong)
+    val eff = math.min(base * selectivityFactor(total, aCount), ncent.toLong)
     val rows = listSizes match {
       case Some(sz) if sz.nonEmpty =>
         val desc = sz.sorted(Ordering[Long].reverse)
@@ -1029,6 +1015,32 @@ object IncrementalIndexer {
     }
     if (compressed) rows / 4 else rows
   }
+
+  /** The filtered-ANN policy's formulas, shared with the SQL rewrite.
+    * Exact-fallback threshold: allowed sets of at most this many rows are
+    * scored exactly. An explicit `spark.graft.filter.exactFallbackRows` is
+    * absolute; otherwise max(16·k, 65536, `probeCost`).
+    */
+  private[graft] def exactFallbackRows(spark: SparkSession, k: Int, probeCost: => Long): Long =
+    spark.conf.getOption("spark.graft.filter.exactFallbackRows").map(_.toLong)
+      .getOrElse(math.max(math.max(16L * k, 65536L), probeCost))
+
+  /** Inverse selectivity of `aCount` allowed rows among `total`, rounded
+    * up (1 unfiltered or empty): with an allowed fraction s a probed list
+    * holds ~s of its usual allowed docs, so the probe budget grows ~1/s.
+    */
+  private[graft] def selectivityFactor(total: Long, aCount: Long): Long =
+    if (aCount <= 0L) 1L else math.max(1L, (total + aCount - 1L) / aCount)
+
+  /** A filtered request's probe budget (nprobe, or efSearch for HNSW),
+    * capped at 2^20; each model clamps it to its own limit.
+    */
+  private[graft] def widenedProbe(base: Int, total: Long, aCount: Long): Int =
+    math.min(base.toLong * selectivityFactor(total, aCount), 1L << 20).toInt
+
+  /** The HNSW huge tier's fetch for its post-walk semi-join. */
+  private[graft] def hnswHugeFetchK(k: Int, total: Long, aCount: Long): Int =
+    math.min(k.toLong * selectivityFactor(total, aCount) * 2L, math.max(k.toLong, 1L << 16)).toInt
 
   /** Persisted index manifest (the reference dumps per-model meta next to
     * its lists, gamma_engine.cc:1101-1146).

@@ -3,6 +3,7 @@ package graft.table
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Metric, SearchRequest}
 import graft.operators.{Filters, Knn, TopK}
@@ -110,8 +111,19 @@ class GammaTable private (
     */
   private val allowedRetired = new java.util.ArrayDeque[DataFrame]()
 
-  private def retireAllowed(df: DataFrame): Unit = allowedRetired.synchronized {
-    allowedRetired.addLast(df)
+  /** Persists a request's filtered key frame and queues it for release.
+    * A plan a queued frame already cached is not cached twice (the older
+    * handle's release would drop the entry this request reads): it moves
+    * to the back of the queue. A frame someone else cached is not queued.
+    */
+  private def holdAllowed(df: DataFrame): Unit = allowedRetired.synchronized {
+    if (df.storageLevel == StorageLevel.NONE) {
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      allowedRetired.addLast(df)
+    } else {
+      val plan = df.queryExecution.analyzed
+      if (allowedRetired.removeIf(_.queryExecution.analyzed.sameResult(plan))) allowedRetired.addLast(df)
+    }
     while (allowedRetired.size > 8) allowedRetired.removeFirst().unpersist(false)
   }
 
@@ -1021,11 +1033,9 @@ class GammaTable private (
       if (!hasFilters) None
       else {
         val df = base.filter(pred).select(key)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val keys = graft.index.AllowedKeys.collect(df,
-          indexed.map(_.allowedKeyBound).foldLeft(-1L)(math.max))
-        retireAllowed(df)
-        Some(keys)
+        holdAllowed(df)
+        Some(graft.index.AllowedKeys.collect(df,
+          indexed.map(_.allowedKeyBound).foldLeft(-1L)(math.max)))
       }
     val kCand = math.max(req.topn * CandidateFactor, req.topn)
     // req_num batching (request.fbs:28): every field must carry the same

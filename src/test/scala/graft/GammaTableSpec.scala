@@ -838,4 +838,48 @@ class GammaTableSpec extends GraftSuite {
     assert(sql.columns.contains("lang"))
     assert(sql.filter($"lang".isNull).count() === got.values.count(_._2.isEmpty))
   }
+
+  test("a repeated filter shares its cached key frame and keeps it through the release queue") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val t = GammaTable.create(spark, tmp(), "kf", "_id", docTable(),
+      Seq(VectorFieldDef("vec", 64)), nBuckets = 4)
+    t.buildIndex("vec", graft.index.IndexParams(ncentroids = 4, nprobe = 2))
+    val qvec = t.docs.select("vec").as[Array[Float]].head()
+    // nine term filters over p_name words; the release queue holds eight
+    val words = t.docs.select(explode($"tokens")).distinct().as[String].collect().sorted.take(9)
+    assert(words.length === 9)
+    val filters = words.map(w => TermFilter("tokens", Seq(w)))
+    def search(f: TermFilter): Unit = t.search(SearchRequest(topn = 5,
+      vecQueries = Seq(VecQuery("vec", qvec)), termFilters = Seq(f))).collect()
+    def cached(f: TermFilter): Boolean = t.docs
+      .filter(graft.operators.Filters.predicate(t.docs, Seq(f), Nil)).select("_id")
+      .storageLevel != org.apache.spark.storage.StorageLevel.NONE
+
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val logger = LogManager.getLogger("org.apache.spark.sql.execution.CacheManager")
+      .asInstanceOf[Logger]
+    val appender = new AbstractAppender("graft-cache-warnings", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit = warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    try {
+      // f, seven other filters, f again, one more: f's frame was the
+      // oldest, but its repeat moved it to the back of the queue
+      (filters.take(8) :+ filters(0) :+ filters(8)).foreach(search)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    assert(!warnings.asScala.exists(_.contains("already cached")), warnings)
+    assert(cached(filters(0)))
+    assert(!cached(filters(1)), "the oldest other frame is released")
+    assert(filters.drop(2).forall(cached))
+    (filters(0) +: filters.drop(2)).foreach(f => t.docs
+      .filter(graft.operators.Filters.predicate(t.docs, Seq(f), Nil)).select("_id").unpersist())
+  }
 }

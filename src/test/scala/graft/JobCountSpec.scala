@@ -214,6 +214,41 @@ class JobCountSpec extends GraftSuite {
     }
   }
 
+  test("a standalone IVFPQ search and its SQL rewrite run two jobs and no shuffle") {
+    // the one IVFPQ search: probed-list scan and re-rank, each merged on
+    // the driver; the SQL rewrite runs the same search and its hits come
+    // back as a local relation
+    val path = s"$sf0/embeddings.parquet"
+    val emb = spark.read.parquet(path)
+    val idx = graft.index.IndexRegistry.build("IVFPQ", spark, emb, "vec_id", "embedding",
+      IndexParams(ncentroids = 8, nprobe = 2, nsubvector = 8))
+    val qvec = emb.filter($"vec_id" === 0).select("embedding").as[Array[Float]].head()
+    val (rows, n) = jobsDuring(idx.search(Seq((0L, qvec)), 10).select("id", "score").collect())
+    assert(rows.length === 10)
+    assert(n === 2, s"search ran $n jobs: " + lastJobSites.toArray.mkString("; "))
+    assert(lastShuffleBytes.get === 0L)
+
+    graft.plans.AnnRewrite.install(spark)
+    graft.plans.IndexCatalog.register(path,
+      graft.plans.RegisteredIndex(idx, emb, "vec_id", "embedding"))
+    emb.createOrReplaceTempView("jc_ivfpq")
+    val qLit = s"array(${qvec.map(v => s"CAST($v AS FLOAT)").mkString(",")})"
+    try {
+      spark.conf.set("spark.graft.ann.rewrite", "true")
+      val df = spark.sql(s"SELECT vec_id, l2_sq(embedding, $qLit) AS score " +
+        "FROM jc_ivfpq ORDER BY score LIMIT 10")
+      val (sqlRows, m) = jobsDuring(df.collect())
+      assert(m === 2, s"SQL ran $m jobs: " + lastJobSites.toArray.mkString("; ") +
+        "\n" + df.queryExecution.executedPlan)
+      assert(lastShuffleBytes.get === 0L)
+      assert(sqlRows.map(r => (r.getLong(0), r.getDouble(1))).toSeq ===
+        rows.map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+    } finally {
+      spark.conf.unset("spark.graft.ann.rewrite")
+      graft.plans.IndexCatalog.unregister(path)
+    }
+  }
+
   test("persisted IVFFLAT filtered requests: the keys job only counts") {
     // IVFFLAT semi-joins the allowed frame, so its keys job brings no keys
     // to the driver: one job (a count() was a shuffle stage plus a result

@@ -11,9 +11,10 @@ import graft.functions.pq_adc
 import graft.operators.{Knn, TopK}
 import graft.table.{GammaTable, VectorFieldDef}
 
-/** The IVFPQ request path (two Spark jobs: per-task heaps merged on the
-  * driver, see `IvfPqIndex.searchLocal`) must return exactly the rows of
-  * the plans it replaces: same ids, bit-equal scores, same order per query.
+/** The IVFPQ search (two Spark jobs: per-task heaps merged on the driver,
+  * see `IvfPqIndex.searchHits`) must return exactly the rows of Spark SQL
+  * plans computing the same answer: same ids, bit-equal scores, same order
+  * per query.
   */
 class IvfPqSearchSpec extends GraftSuite {
   import spark.implicits._
@@ -122,39 +123,123 @@ class IvfPqSearchSpec extends GraftSuite {
     }
   }
 
-  test("at partial probe the two-job path equals the retained shuffle plan") {
-    for (metric <- Seq(Metric.L2, Metric.InnerProduct)) {
-      val built = IvfPqIndex.build(spark, docsLong, "id", "vec",
-        IndexParams(metric = metric, ncentroids = 8, nprobe = 2, nsubvector = 8, recallNum = 30))
-      val qs = batch.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-      val frame = docsLong.filter($"tag" =!= 2).select("id")
-      val allowed = broadcast(frame)
-      // the allowed set semi-joined into the probe, or its keys tested on
-      // each code row inside the scan (the filtered request path)
-      val allowedCases = Seq(
-        None -> None,
-        Some(allowed) -> Some(AllowedKeys(allowed, frame.count(), None)),
-        Some(allowed) -> Some(AllowedKeys.collect(frame, Long.MaxValue)))
-      for (hasRank <- Seq(true, false); (ids, keys) <- allowedCases) {
-        val pq = built.withParams(built.params.copy(hasRank = hasRank)).asInstanceOf[IvfPqIndex]
-        // a lower score bound at query 0's fourth returned score
-        val fourth = ranked(pq.search(qs, 10, None, ids, None, None))(0L)
-          .map(r => java.lang.Double.longBitsToDouble(r._2)).sorted.apply(3)
-        for (range <- Seq((None, None), (Some(fourth), None))) {
-          val local = pq.searchLocal(qs, 10, None, keys, range._1, range._2)
-            .getOrElse(fail("request above the candidate bound"))
-          val localScanned = pq.lastScannedRows
-          val lazyForm = pq.search(qs, 10, None, ids, range._1, range._2)
-          val want = ranked(lazyForm)
-          assert(ranked(local.toDF(spark)) === want,
-            s"$metric hasRank=$hasRank keys=${keys.map(_.packed.isDefined)} range=$range")
-          assert(want.values.map(_.size).sum > 0)
-          // job 1 filled the scanned-rows accumulator once: the lazy plan,
-          // run once above, scans the same rows
-          assert(localScanned > 0 && localScanned === pq.lastScannedRows)
+  /** The IVFPQ search as Spark SQL: each query's ADC scores over its own
+    * probed lists (pq_adc against LUTs of those centroids only), k or
+    * max(recall_num, k) candidates per qid, then, with `hasRank`, the
+    * candidates joined back to the raw vectors, scored exactly, the score
+    * range applied and k kept per qid.
+    */
+  private def oracle(
+      pq: IvfPqIndex, qs: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
+      allowed: Option[DataFrame], range: (Option[Double], Option[Double])): DataFrame = {
+    val metric = pq.params.metric
+    val asc = Metric.ascending(metric)
+    val ksub = pq.codebooks.map(_.length).max
+    val luts = for ((qid, v) <- qs; c <- Ivf.rankedCentroids(pq.centers, v, metric).take(nprobe))
+      yield (qid, c, IvfPqIndex.lutFor(v, pq.centers(c), pq.codebooks, ksub,
+        metric == Metric.InnerProduct).toSeq)
+    val codes = allowed.fold(pq.codes)(a => pq.codes.join(a, Seq("id"), "left_semi"))
+    val adc = codes.join(luts.toDF("qid", "centroid_id", "lut"), Seq("centroid_id"))
+      .select($"qid", $"id", pq_adc($"pq_codes", $"lut").as("score"))
+    def inRange(df: DataFrame) =
+      df.filter(range._1.fold(lit(true))($"score" >= _) && range._2.fold(lit(true))($"score" <= _))
+    if (!pq.params.hasRank) TopK.perGroup(inRange(adc), "qid", "score", asc, k, Seq("id"))
+    else {
+      val cands = TopK.perGroup(adc, "qid", "score", asc, math.max(pq.params.recallNum, k),
+        Seq("id"))
+      val exact = cands.select("qid", "id")
+        .join(docsLong.select("id", "vec"), Seq("id"))
+        .join(qs.map { case (i, v) => (i, v.toSeq) }.toDF("qid", "qvec"), Seq("qid"))
+        .select($"qid", $"id", Knn.score(metric, $"vec", $"qvec").as("score"))
+      TopK.perGroup(inRange(exact), "qid", "score", asc, k, Seq("id"))
+    }
+  }
+
+  test("at partial probe the search equals a Spark SQL oracle") {
+    withConf("spark.graft.ivf.adaptiveProbe", "false") {
+      for (metric <- Seq(Metric.L2, Metric.InnerProduct)) {
+        val built = IvfPqIndex.build(spark, docsLong, "id", "vec",
+          IndexParams(metric = metric, ncentroids = 8, nprobe = 2, nsubvector = 8, recallNum = 30))
+        val qs = batch.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+        val frame = docsLong.filter($"tag" =!= 2).select("id")
+        // the allowed set semi-joined into the probe, or its keys tested on
+        // each code row inside the scan (the filtered request path)
+        val allowedCases = Seq(
+          None,
+          Some(AllowedKeys(broadcast(frame), frame.count(), None)),
+          Some(AllowedKeys.collect(frame, Long.MaxValue)))
+        for (hasRank <- Seq(true, false); allowed <- allowedCases) {
+          val pq = built.withParams(built.params.copy(hasRank = hasRank)).asInstanceOf[IvfPqIndex]
+          val probedRows = {
+            val probed = qs.flatMap(q => Ivf.rankedCentroids(pq.centers, q._2, metric).take(2))
+            val lists = pq.codes.filter($"centroid_id".isin(probed.distinct: _*))
+            allowed.fold(lists)(_ => lists.join(frame, Seq("id"), "left_semi")).count()
+          }
+          // a lower score bound at query 0's fourth score
+          val fourth = ranked(oracle(pq, qs, 10, 2, allowed.map(_ => frame), (None, None)))(0L)
+            .map(r => java.lang.Double.longBitsToDouble(r._2)).sorted.apply(3)
+          for (range <- Seq((None, None), (Some(fourth), None))) {
+            val got = pq.searchHits(qs, 10, None, allowed, range._1, range._2)
+            val want = ranked(oracle(pq, qs, 10, 2, allowed.map(_ => frame), range))
+            val what = s"$metric hasRank=$hasRank keys=${allowed.map(_.packed.isDefined)} " +
+              s"range=$range"
+            assert(ranked(got.toDF(spark)) === want, what)
+            assert(want.values.map(_.size).sum > 0, what)
+            // job 1 read each allowed code row of the probed lists once
+            assert(pq.lastScannedRows === probedRows, what)
+          }
         }
       }
     }
+  }
+
+  test("whole-qid chunks of a batch give the hits of one chunk") {
+    val pq = IvfPqIndex.build(spark, docsLong, "id", "vec",
+      IndexParams(ncentroids = 8, nprobe = 2, nsubvector = 8, recallNum = 30))
+    // qids out of order and repeated: a qid's positions share one heap
+    val qids = Seq(3L, 1L, 3L, 2L, 1L, 0L, 4L)
+    val qs = qids.zip(batch)
+    val chunks = IvfPqIndex.qidChunks(qs, 30, 60)
+    assert(chunks.map(_.map(_._1).distinct) === Seq(Seq(0L), Seq(1L), Seq(2L), Seq(3L), Seq(4L)))
+    assert(chunks.flatten.map(_._2).toSet === qs.map(_._2).toSet)
+    assert(chunks.flatten.size === qs.size)
+    assert(IvfPqIndex.qidChunks(qs, 30, 120).map(_.map(_._1).distinct) ===
+      Seq(Seq(0L, 1L, 2L), Seq(3L, 4L)))
+    assert(IvfPqIndex.qidChunks(qs, 30, 30 * qs.size) === Seq(qs))
+    for (bound <- Seq(60L, 120L)) {
+      val chunked = IvfPqIndex.qidChunks(qs, 30, bound)
+        .map(pq.searchHits(_, 10, None, None, None, None)).reduce(_ ++ _)
+      assert(chunked === pq.searchHits(qs, 10, None, None, None, None), s"bound $bound")
+    }
+    assert(pq.searchHits(qs, 10, None, None, None, None).rows.map(_.qid).distinct ===
+      Seq(0L, 1L, 2L, 3L, 4L))
+  }
+
+  test("a batch over the candidate bound runs in chunks and stays exact") {
+    // 7 queries x recall_num 10^6 candidates exceed the bound: two chunks;
+    // a full probe re-ranking every doc is exact
+    val t = table(Metric.L2, stringKeys = false)
+    val vq = VecQuery("vec", vectors = batch, nprobe = Some(Ncent), recallNum = Some(1000000))
+    assert(IvfPqIndex.qidChunks(vq.batch, 1000000, IvfPqIndex.MaxBroadcastCandidates).size === 2)
+    val got = t.search(SearchRequest(topn = 10, vecQueries = Seq(vq)))
+    val want = Knn.flatSearch(t.docs, "id", "vec", queryFrame(vq), "qid", "qvec", 10, Metric.L2)
+    assert(ranked(got) === ranked(want))
+    // the exact fallback over collected keys chunks nq x k the same way
+    val allowed = t.docs.filter($"tag" =!= 2).select("id")
+    val every = ExactRerank.allowedOnly(t.vectorStore("vec"), vq.batch, 1000000, Metric.L2,
+      AllowedKeys.collect(allowed, Long.MaxValue), (None, None))
+      .getOrElse(fail("the store did not serve the fallback"))
+    assert(ranked(every.toDF(spark)) === ranked(Knn.flatSearch(t.docs.filter($"tag" =!= 2), "id",
+      "vec", queryFrame(vq), "qid", "qvec", 1000000, Metric.L2)))
+  }
+
+  test("an IVFPQ build over an id type other than Long, Int or String fails by name") {
+    val e = intercept[IllegalArgumentException] {
+      IvfPqIndex.build(spark, docsLong.withColumn("id", $"id".cast("double")), "id", "vec",
+        IndexParams(ncentroids = 4, nsubvector = 8))
+    }
+    assert(e.getMessage.contains("IVFPQ needs Long, Int or String ids"), e.getMessage)
+    assert(e.getMessage.contains("double ids"), e.getMessage)
   }
 
   test("widened-probe tier: collected keys tested in the scan equal the semi-joined frame") {
