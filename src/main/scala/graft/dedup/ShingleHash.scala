@@ -60,19 +60,6 @@ object ShingleHash {
     }
   }
 
-  /** Jaccard of two SORTED distinct arrays via linear merge. */
-  def jaccardSorted(a: Seq[String], b: Seq[String]): Double = {
-    var i = 0; var j = 0; var inter = 0
-    while (i < a.length && j < b.length) {
-      val c = a(i).compareTo(b(j))
-      if (c == 0) { inter += 1; i += 1; j += 1 }
-      else if (c < 0) i += 1
-      else j += 1
-    }
-    val union = a.length + b.length - inter
-    if (union == 0) 0.0 else inter.toDouble / union
-  }
-
   /** Sorted distinct 32-bit hashes of the shingle set — the set-identity
     * payload for pair joins (8 bytes/shingle instead of a ~25-char string).
     */

@@ -13,8 +13,10 @@ import org.apache.spark.sql.types._
   * the struct's fields (put the sort key(s) first). Keeps the k SMALLEST.
   */
 final class TopKBuffer(val k: Int, ord: Ordering[InternalRow]) {
-  // max-heap: head = worst of the kept rows, evicted first
-  val heap = new java.util.PriorityQueue[InternalRow](math.max(1, k), ord.reverse)
+  // max-heap: head = worst of the kept rows, evicted first. Sized for at
+  // most 1,024 rows up front and grown on demand: a large k (recall_num
+  // 10^6) must not allocate k slots per query group before any row arrives
+  val heap = new java.util.PriorityQueue[InternalRow](math.max(1, math.min(k, 1024)), ord.reverse)
 
   /** Probe path (hot): `r` may be a transient row the caller reuses —
     * it is copied ONLY when it actually enters the heap, so the common

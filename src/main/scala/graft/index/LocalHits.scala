@@ -8,9 +8,11 @@ import graft.functions.QueryHeaps
 
 /** Search hits held on the driver: (qid, id, score) rows, `id` as its
   * Catalyst value, each query's hits best first and queries in ascending
-  * qid order. The two-job IVFPQ request path returns these, so the
-  * per-request top-k cuts after it run on the driver instead of planning
-  * another Spark job; [[toDF]] hands them back as a local relation, which
+  * qid order. Every indexed search returns these (the IVFPQ path and the
+  * exact fallback over collected keys merge task heaps into them, the
+  * other tiers [[LocalHits.collect]] their plans), so the per-request
+  * top-k cuts after it run on the driver instead of planning another
+  * Spark job; [[toDF]] hands them back as a local relation, which
   * collects without a job.
   */
 private[graft] final case class LocalHits(idType: DataType, rows: IndexedSeq[LocalHits.Hit]) {

@@ -17,9 +17,8 @@ import org.apache.spark.sql.types._
   * header-only (MediaHeaders) — DCT/entropy decoders are the one piece
   * this container genuinely cannot check against a reference.
   * Everything around the stubs is real and is what matters at 100 TB:
-  * the schema contract, partition-batched execution (`mapPartitions`,
-  * the Scala analog of `mapInPandas` batches), and payload-size-aware
-  * repartitioning so a skewed blob column cannot produce straggler tasks.
+  * the schema contract and partition-batched execution (`mapPartitions`,
+  * the Scala analog of `mapInPandas` batches).
   */
 object MediaOps {
 
@@ -43,15 +42,6 @@ object MediaOps {
         lit(16000).as("sample_rate"),
         (length(col("bytes")) * 10L).as("duration_ms")))
 
-  /** Payload-size-aware repartition: large blobs are the skew hazard; cap
-    * bytes-per-partition so decode tasks stay uniform.
-    */
-  def repartitionByPayload(df: DataFrame, targetBytesPerPartition: Long): DataFrame = {
-    val total = df.agg(sum(length(col("bytes")))).head().getLong(0)
-    val parts = math.max(1, (total / math.max(1L, targetBytesPerPartition)).toInt)
-    df.repartition(parts)
-  }
-
   /** STUB image decode + feature extraction (the real thing would wrap a
     * codec inside this exact mapPartitions shape). Produces a
     * deterministic `dim`-float feature from the payload bytes, batching
@@ -72,15 +62,6 @@ object MediaOps {
       }
     }(Encoders.row(schema))
   }
-
-  /** STUB resize: rewrites metadata, passes payload through (a real
-    * implementation transforms bytes in the same batched shape).
-    */
-  def resizeStub(df: DataFrame, w: Int, h: Int): DataFrame =
-    df.withColumn("media_meta", struct(
-      col("media_meta.kind"),
-      lit(w).as("width"), lit(h).as("height"),
-      col("media_meta.sample_rate"), col("media_meta.duration_ms")))
 
   /** STUB frame sampling for video payloads: emits `n` frame rows per doc
     * with a frame index — the explode shape of a real frame sampler.

@@ -42,78 +42,4 @@ object Quantiles {
       .groupBy(col(groupCol), col("permille"))
       .agg(min(when(col("__cum") >= col("__r"), col("__v"))).as("q_value"))
   }
-
-  // ------------------------------------------------- HDR log histogram
-
-  /** Mergeable relative-error quantiles for UNBOUNDED positive-integer
-    * value domains (prices in cents, byte sizes, latencies in micros) —
-    * the scale path [[exactPermille]]'s exact histogram can't take when
-    * the value domain itself grows with the corpus.
-    *
-    * HDR-histogram-style bucketing (the log-linear layout of Tene's
-    * HdrHistogram / DDSketch's guarantee class): a value keeps its top
-    * `subBits`+1 significant bits — bucket lower bound
-    * `lo = (v >> sh) << sh` with `sh = max(bitlength(v) − 1 − subBits,
-    * 0)`. That yields at most (64 − subBits)·2^subBits + 2^subBits
-    * buckets EVER (subBits=5 → ~1.9k), values below 2^subBits are exact,
-    * and the quantile answer is a bucket [lo, lo + 2^sh) with
-    * `(hi − lo)/lo ≤ 2^-subBits` — a ~3.1 % relative-error guarantee at
-    * subBits=5. Histograms MERGE by adding counts (spec-pinned), so a
-    * 1000-executor rollup combines ~2k-row states instead of re-reading
-    * data. Everything is integer arithmetic (bitlength via bin(),
-    * shifts, cumulative ranks) — the DuckDB oracle replays it
-    * bit-for-bit.
-    *
-    * Values must be ≥ 0 (v = 0 sits in its own exact bucket); negatives
-    * are the caller's transform (offset or split by sign).
-    */
-  def hdrHistogram(df: DataFrame, groupCol: String, value: org.apache.spark.sql.Column,
-      subBits: Int): DataFrame = {
-    df.select(col(groupCol), value.cast("long").as("__v"))
-      .withColumn("__sh",
-        greatest(length(bin(col("__v"))) - lit(1 + subBits), lit(0)).cast("int"))
-      .withColumn("__lo", expr("shiftleft(shiftright(__v, __sh), __sh)"))
-      .groupBy(col(groupCol), col("__lo"))
-      // __sh is constant within a bucket (same bitlength, same top bits)
-      .agg(max(col("__sh")).as("__sh"), count(lit(1)).as("__c"))
-  }
-
-  /** Permille buckets from an HDR histogram: the same integer
-    * cumulative-rank selection as [[exactPermille]], answered as the
-    * containing bucket [q_lo, q_hi) — the exact q-th value is guaranteed
-    * inside it.
-    */
-  def hdrFromHistogram(hist: DataFrame, groupCol: String,
-      permilles: Seq[Int]): DataFrame = {
-    val w = Window.partitionBy(col(groupCol)).orderBy(col("__lo"))
-    val wAll = Window.partitionBy(col(groupCol))
-    hist
-      .withColumn("__cum",
-        sum(col("__c")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("__n", sum(col("__c")).over(wAll))
-      .select(col(groupCol), col("__lo"), col("__sh"), col("__cum"), col("__n"),
-        explode(array(permilles.map(lit): _*)).as("permille"))
-      .withColumn("__r", expr("(__n * permille + 999) div 1000"))
-      .groupBy(col(groupCol), col("permille"))
-      .agg(
-        min(when(col("__cum") >= col("__r"), col("__lo"))).as("q_lo"),
-        min(when(col("__cum") >= col("__r"),
-          col("__lo") + expr("shiftleft(cast(1 as bigint), __sh)"))).as("q_hi"))
-  }
-
-  /** HDR permille buckets next to the exact value (gate shape): one
-    * histogram pass for the sketch answer, one for the exact — the gate
-    * makes the containment q_lo ≤ q_exact < q_hi visible per row.
-    */
-  def hdrPermille(df: DataFrame, groupCol: String,
-      value: org.apache.spark.sql.Column, subBits: Int,
-      permilles: Seq[Int]): DataFrame = {
-    val hdr = hdrFromHistogram(hdrHistogram(df, groupCol, value, subBits),
-      groupCol, permilles)
-    val exact = exactPermille(df.select(col(groupCol), value.cast("long").as("__xv")),
-        groupCol, "__xv", permilles)
-      .withColumnRenamed("q_value", "q_exact")
-    hdr.join(exact, Seq(groupCol, "permille"))
-      .select(col(groupCol), col("permille"), col("q_lo"), col("q_hi"), col("q_exact"))
-  }
 }

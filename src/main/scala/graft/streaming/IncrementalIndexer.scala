@@ -180,34 +180,54 @@ class IncrementalIndexer(
   // per-segment beam from the cached scalar
   @volatile private var hnswAvgCache: (Long, Long, Option[Double]) = (-2L, -2L, None)
 
-  /** Probe-cost feedback: (predicted scanned rows, the searched IVFPQ
-    * instance whose accumulator fills when the caller runs an action).
-    * Folded into [[rowCalibration]] at the NEXT search. Only unfiltered
-    * probes register — an allowed-set semi-join shrinks the measured scan
-    * by the filter's selectivity, which would mis-teach the volume model.
-    */
-  @volatile private var pendingFeedback: Option[(Long, IvfPqIndex)] = None
-
-  /** Guards the [[pendingFeedback]] -> [[rowCalibration]] read-modify-
-    * write: concurrent searches doing the unsynchronized fold could lose
-    * an EWMA update or fold one measurement twice. Reads of the volatile
-    * scalar stay lock-free.
+  /** Guards the [[rowCalibration]] read-modify-write: concurrent
+    * searches doing the unsynchronized fold could lose an EWMA update.
+    * Reads of the volatile scalar stay lock-free.
     */
   private val calibLock = new Object
 
   /** EWMA of measured/predicted scanned rows (clamped to [0.01, 100]) —
-    * corrects the uniform-volume probe-cost model under list skew.
-    * Accumulator counts include any re-executed tasks (Spark only
-    * de-duplicates accumulators inside actions), which at worst nudges the
-    * bound conservative — the safe direction.
+    * corrects the uniform-volume probe-cost model under list skew. Each
+    * unfiltered single-query IVFPQ search folds its own scan in right
+    * after the scan runs ([[foldScanFeedback]]). Accumulator counts
+    * include any re-executed tasks (Spark only de-duplicates accumulators
+    * inside actions), which at worst nudges the bound conservative — the
+    * safe direction.
     */
   @volatile private[graft] var rowCalibration: Double = 1.0
 
-  /** Scanned-row count measured for the last feedback-registered probe
-    * (-1 until the caller has materialized that search's result).
+  /** Scanned-row count measured by the last unfiltered single-query IVFPQ
+    * search (-1 until one has run).
     */
-  def lastMeasuredScanRows: Long =
-    pendingFeedback.map(_._2.lastScannedRows).getOrElse(-1L)
+  @volatile private var measuredScanRows: Long = -1L
+  def lastMeasuredScanRows: Long = measuredScanRows
+
+  /** Folds the scan `pq` just ran into [[rowCalibration]] against the
+    * uniform-volume prediction for its `effNprobe` lists. Only unfiltered
+    * single-query probes feed back: an allowed set shrinks the measured
+    * scan by the filter's selectivity, and a batch's accumulator measures
+    * the UNION of its probed lists, up to the batch size times a
+    * per-query prediction; either would mis-teach the volume model (the
+    * serving point query is the case the calibration targets anyway).
+    */
+  private def foldScanFeedback(pq: IvfPqIndex, effNprobe: Option[Int]): Unit = {
+    val total = math.max(table.meta.maxDocid, 1L)
+    val pred = IncrementalIndexer.uniformProbeRows(pq.centers.length, total,
+      math.min(effNprobe.getOrElse(params.nprobe).toLong, pq.centers.length.toLong))
+    val scanned = pq.lastScannedRows
+    measuredScanRows = scanned
+    // clamp to the index's total rows: task retries and speculative
+    // duplicates re-run the scan into the SAME accumulator (accumulators
+    // in transformations are best-effort), and a probe can never truly
+    // read more than the whole code table — the clamp bounds that
+    // inflation at "full scan", the conservative direction, and the EWMA
+    // washes residual skew out over subsequent clean searches
+    val m = math.min(scanned, total)
+    if (m > 0 && pred > 0) calibLock.synchronized {
+      rowCalibration = math.max(0.01, math.min(100.0,
+        0.5 * rowCalibration + 0.5 * (m.toDouble / pred)))
+    }
+  }
 
   private def cachedSegmentAvg(graphs: DataFrame): Option[Double] = {
     if (!HnswIndex.adaptiveEfEnabled(spark)) return None
@@ -547,11 +567,11 @@ class IncrementalIndexer(
     * deleted docs would resurface in index search results.
     */
   /** Superseded on-disk version dirs are retired with a one-compaction
-    * grace period instead of deleted inline: search() hands out LAZY
-    * frames planned over the then-current version, and an inline delete
-    * would FileNotFound any caller that materializes after a concurrent
-    * compaction. Each compaction first sweeps the dirs the PREVIOUS one
-    * retired; [[vacuumIndex]] forces the sweep.
+    * grace period instead of deleted inline: a search in flight reads
+    * lists planned over the then-current version, and an inline delete
+    * would FileNotFound it when a compaction runs concurrently. Each
+    * compaction first sweeps the dirs the PREVIOUS one retired;
+    * [[vacuumIndex]] forces the sweep.
     */
   private val retiredDirs = scala.collection.mutable.ArrayBuffer.empty[String]
 
@@ -689,7 +709,10 @@ class IncrementalIndexer(
     * exact fallback semi-join the allowed frame. Without collected keys
     * (those models, or a set above `broadcastMaxKeys`) the IVFPQ job 1
     * semi-joins the frame instead of testing keys, still merging on the
-    * driver, and the exact fallback runs the lazy `Knn.flatSearch` plan.
+    * driver, and the exact fallback runs the `Knn.flatSearch` plan.
+    *
+    * Every tier runs its search here and returns its hits as a local
+    * relation ([[searchHits]]), so collecting the result runs no job.
     */
   def search(
       queries: Seq[(Long, Array[Float])],
@@ -705,7 +728,7 @@ class IncrementalIndexer(
       allowedIds.map(ids =>
         if (allowedCount >= 0L) AllowedKeys(ids, allowedCount, None)
         else AllowedKeys.collect(ids, allowedKeyBound)),
-      minScore, maxScore, recallNum, hasRank).fold(identity, _.toDF(spark))
+      minScore, maxScore, recallNum, hasRank).toDF(spark)
 
   /** The key bound for the keys job of a filtered request to this index
     * ([[AllowedKeys.collect]]): `broadcastMaxKeys` for the models whose
@@ -718,11 +741,11 @@ class IncrementalIndexer(
       case _                => -1L
     }
 
-  /** [[search]], with the hits held on the driver (Right) when a driver
-    * path served them — every IVFPQ tier search ([[IvfPqIndex.searchHits]])
-    * and the exact fallback over collected keys
-    * ([[ExactRerank.allowedOnly]]) — so the caller's per-request cuts need
-    * no further Spark job; any other tier returns its lazy frame (Left).
+  /** [[search]], with the hits held on the driver, so the caller's
+    * per-request cuts need no further Spark job. The IVFPQ tiers
+    * ([[IvfPqIndex.searchHits]]) and the exact fallback over collected
+    * keys ([[ExactRerank.allowedOnly]]) merge their task heaps on the
+    * driver; every other tier collects its plan ([[LocalHits.collect]]).
     */
   private[graft] def searchHits(
       queries: Seq[(Long, Array[Float])],
@@ -732,30 +755,8 @@ class IncrementalIndexer(
       minScore: Option[Double] = None,
       maxScore: Option[Double] = None,
       recallNum: Option[Int] = None,
-      hasRank: Option[Boolean] = None): Either[DataFrame, LocalHits] = {
+      hasRank: Option[Boolean] = None): LocalHits = {
     import spark.implicits._
-    // fold in the PREVIOUS search's measured scan (its accumulator filled
-    // when the caller ran an action on the returned frame): EWMA of
-    // measured/predicted scanned rows corrects the uniform-volume model
-    // under list skew the cached stats have not caught up with
-    calibLock.synchronized {
-      pendingFeedback.foreach { case (pred, pq) =>
-        // clamp to the index's total rows: a caller that materialized the
-        // frame more than once re-ran the scan into the SAME accumulator
-        // (Spark only de-duplicates inside one action; task retries and
-        // speculative duplicates inflate it the same way — accumulators in
-        // transformations are best-effort), and a probe can never truly
-        // read more than the whole code table — the clamp bounds that
-        // inflation at "full scan", the conservative direction, and the
-        // EWMA washes residual skew out over subsequent clean searches
-        val m = math.min(pq.lastScannedRows, math.max(table.meta.maxDocid, 1L))
-        if (m > 0 && pred > 0) {
-          rowCalibration = math.max(0.01, math.min(100.0,
-            0.5 * rowCalibration + 0.5 * (m.toDouble / pred)))
-          pendingFeedback = None
-        }
-      }
-    }
     // binary fields store packed bytes; their queries ride the float
     // surface as byte values (BinaryIvfIndex adapter) — the exact-scan
     // paths need a BinaryType query column for the hamming kernel
@@ -819,19 +820,19 @@ class IncrementalIndexer(
       case None =>
         // V9: brute force while UNINDEXED
         logTier("unindexed-brute")
-        Left(Knn.flatSearch(restrict(table.docs), key, vecCol, qDf, "qid", "qvec", k, params.metric,
-          minScore = minScore, maxScore = maxScore))
+        LocalHits.collect(Knn.flatSearch(restrict(table.docs), key, vecCol, qDf, "qid", "qvec", k,
+          params.metric, minScore = minScore, maxScore = maxScore))
       case Some(_) if aCount >= 0L && aCount <= exactThreshold =>
         // exact-over-filtered fallback: few enough survivors that probing
         // cannot guarantee k of them — and scoring all of them exactly is
         // cheaper than a probe anyway. With the keys on the driver, one
         // job looks the allowed rows up in the table's vector store and
-        // the task heaps merge on the driver; otherwise the lazy plan.
+        // the task heaps merge on the driver; otherwise the exact plan.
         logTier("exact-fallback")
         ExactRerank.allowedOnly(table.vectorStore(vecCol), queries, k, params.metric, allowed.get,
-          (minScore, maxScore)).toRight(
+          (minScore, maxScore)).getOrElse(LocalHits.collect(
           Knn.flatSearch(restrict(table.docs), key, vecCol, qDf, "qid", "qvec", k, params.metric,
-            minScore = minScore, maxScore = maxScore))
+            minScore = minScore, maxScore = maxScore)))
       case Some(idx) =>
         // ids whose index entry is stale (updated after build) or dead —
         // such rows only live in buckets rewritten since the horizon, so
@@ -903,23 +904,6 @@ class IncrementalIndexer(
         val (pushIds, fetchK) =
           if (hnswHuge) (None, IncrementalIndexer.hnswHugeFetchK(k, total, aCount))
           else (allowedHinted, k)
-        cleanIdx match {
-          case pq: IvfPqIndex if pushIds.isEmpty && queries.size == 1 =>
-            // single-query probes only: the accumulator measures the UNION
-            // of the batch's probed lists, so a req_num>1 measurement
-            // against a per-query prediction would inflate the ratio by up
-            // to the batch size (the serving point-query is the case the
-            // calibration targets anyway)
-            val effNp = math.min(
-              effNprobe.getOrElse(params.nprobe).toLong, pq.centers.length.toLong)
-            calibLock.synchronized {
-              pendingFeedback = Some((
-                IncrementalIndexer.uniformProbeRows(
-                  pq.centers.length, math.max(table.meta.maxDocid, 1L), effNp),
-                pq))
-            }
-          case _ =>
-        }
         val fromTail =
           if (!changedSince(builtVersion)) None
           else Some(Knn.flatSearch(
@@ -934,7 +918,8 @@ class IncrementalIndexer(
             // 1); the merge with the tail (one more job) runs on the
             // driver too
             val hits = pq.searchHits(queries, fetchK, effNprobe, pushIds, minScore, maxScore)
-            Right(fromTail.fold(hits)(t => (hits ++ LocalHits.collect(t)).topK(k, asc)))
+            if (pushIds.isEmpty && queries.size == 1) foldScanFeedback(pq, effNprobe)
+            fromTail.fold(hits)(t => (hits ++ LocalHits.collect(t)).topK(k, asc))
           case _ =>
             val fromIndex0 = (cleanIdx, pushIds) match {
               // the graph walk tests the keys the caller's keys job collected
@@ -949,8 +934,8 @@ class IncrementalIndexer(
                 fromIndex0.join(
                   ids.select(col(ids.columns.head).cast("long").as("id")), Seq("id"), "left_semi")
               } else fromIndex0
-            Left(TopK.perGroup(fromTail.fold(fromIndex)(fromIndex.unionByName(_)), "qid", "score",
-              asc, k, Seq("id")))
+            LocalHits.collect(TopK.perGroup(fromTail.fold(fromIndex)(fromIndex.unionByName(_)),
+              "qid", "score", asc, k, Seq("id")))
         }
     }
   }
@@ -963,6 +948,15 @@ object IncrementalIndexer {
     * `_version` of the doc state it encodes.
     */
   val IxvCol = "_ixv"
+
+  /** Uniform-volume scanned-row prediction for an eff-list probe — the
+    * quantity the accumulator feedback calibrates (scanned rows are
+    * measurable; the compressed-row cost DISCOUNT is a relative CPU cost
+    * and is not).
+    */
+  private[graft] def uniformProbeRows(ncent: Int, total: Long, eff: Long): Long =
+    if (ncent <= 0) 0L
+    else total / ncent * eff + (total % ncent) * eff / ncent // overflow-safe total*eff/ncent
 
   /** Estimated cost of a FILTERED probe through `idx`, in exact-scan row
     * equivalents — the cost-based side of the exact-fallback decision. A
@@ -978,15 +972,6 @@ object IncrementalIndexer {
     * probes are size-biased toward heavy lists, so this upper bound sends
     * borderline requests to the exact path, which is always correct.
     */
-  /** Uniform-volume scanned-row prediction for an eff-list probe — the
-    * quantity the accumulator feedback calibrates (scanned rows are
-    * measurable; the compressed-row cost DISCOUNT is a relative CPU cost
-    * and is not).
-    */
-  private[graft] def uniformProbeRows(ncent: Int, total: Long, eff: Long): Long =
-    if (ncent <= 0) 0L
-    else total / ncent * eff + (total % ncent) * eff / ncent // overflow-safe total*eff/ncent
-
   private[graft] def probeCostRows(
       idx: AnnIndex, total: Long, aCount: Long, nprobe: Option[Int],
       listSizes: Option[Array[Long]] = None,

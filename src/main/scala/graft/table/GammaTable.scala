@@ -1023,7 +1023,7 @@ class GammaTable private (
     // broadcast pushdown + widened probes vs shuffle semi-join); the keys
     // are what the driver paths test inside their scans (IVFPQ probe,
     // exact fallback, HNSW walk), so no later job re-reads the set. The
-    // lazy plans (other models, the huge tier) semi-join the same
+    // plans of the other models and of the huge tier semi-join the same
     // persisted blocks. Lazy: the brute/filter-only paths never pay the
     // job. persist (lineage kept), NOT localCheckpoint (lineage cut): the
     // bounded release queue below can then unpersist older requests'
@@ -1043,10 +1043,9 @@ class GammaTable private (
     val reqNum = req.vecQueries.head.batch.size
     require(req.vecQueries.forall(_.batch.size == reqNum),
       "all vector fields in one request must carry the same req_num")
-    // per field: (qid, id, score) hits, lazy or (IVFPQ request path,
-    // exact fallback over collected keys) on the driver
+    // per field: its (qid, id, score) hits, held on the driver
     val perField = routes.map { case (vq, routed) =>
-      val hits: Either[DataFrame, graft.index.LocalHits] = routed match {
+      val hits = routed match {
         case Some(ix) if serves(ix) =>
           // the score range is pushed INTO the index scan (filter before
           // the top-k heap, like flatSearch and the reference's
@@ -1068,8 +1067,7 @@ class GammaTable private (
             if (ix.retrievalType.equalsIgnoreCase("HNSW")) vq.efSearch else vq.nprobe
           val h0 = ix.searchHits(vq.batch, kCand, probeOverride, allowed, pushLo, pushHi,
             recallNum = vq.recallNum, hasRank = vq.hasRank)
-          if (!wantSqrt) h0
-          else h0.left.map(_.withColumn("score", sqrt(col("score")))).map(_.mapScores(math.sqrt))
+          if (wantSqrt) h0.mapScores(math.sqrt) else h0
         case _ =>
           // Hamming requests target a BinaryType field: queries ride the
           // float surface as byte values (BinaryIvfIndex adapter) and must
@@ -1080,35 +1078,33 @@ class GammaTable private (
                 (qid, graft.index.BinaryIvfIndex.floatsToBytes(v))
               }.toDF("qid", "qvec")
             else vq.batch.map { case (qid, v) => (qid, v.toSeq) }.toDF("qid", "qvec")
-          Left(Knn.flatSearch(
+          graft.index.LocalHits.collect(Knn.flatSearch(
             base.filter(pred), key, vq.field, q, "qid", "qvec",
             k = kCand,
             metric = metric, l2Sqrt = req.l2Sqrt && req.vecQueries.size == 1,
             minScore = vq.minScore, maxScore = vq.maxScore))
       }
-      vq.boost match {
-        case Some(b) => hits.left.map(_.withColumn("score", col("score") * b)).map(_.mapScores(_ * b))
-        case None    => hits
-      }
+      vq.boost.fold(hits)(b => hits.mapScores(_ * b))
     }
 
     val ranked = perField match {
-      case Seq(Right(local)) =>
-        // one field served on the driver: the request's top-k cut runs on
-        // its rows, and the result is a local relation (collects with no
-        // job); same columns as the fused frame below
+      case Seq(local) =>
+        // one field: the request's top-k cut runs on the driver, and the
+        // result is a local relation (collects with no job); same columns
+        // as the fused frame below
         local.topK(req.topn, Metric.ascending(metric)).toDF(spark, key)
           .select(col("qid"), col(key), col("score").as("score_0"), col("score"))
       case _ =>
+        // several fields: the docid intersection and score fusion join the
+        // fields' local relations
         val fieldHits = perField.zipWithIndex.map { case (h, i) =>
-          h.fold(identity, _.toDF(spark))
-            .select(col("qid"), col("id").as(key), col("score").as(s"score_$i"))
+          h.toDF(spark).select(col("qid"), col("id").as(key), col("score").as(s"score_$i"))
         }
         // multi-field docid intersection is per batch position (qid, key)
         val joined = fieldHits.reduce((a, b) => a.join(b, Seq("qid", key)))
         val fused = joined.withColumn(
           "score", fieldHits.indices.map(i => col(s"score_$i")).reduce(_ + _))
-        if (req.multiVectorRank || req.vecQueries.size == 1)
+        if (req.multiVectorRank)
           TopK.perGroup(fused, "qid", "score", Metric.ascending(metric), req.topn, Seq(key))
         else {
           // rank fusion off: the reference still returns the DOCID-ordered

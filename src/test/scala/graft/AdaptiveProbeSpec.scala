@@ -248,9 +248,8 @@ class AdaptiveProbeSpec extends GraftSuite {
       retrievalType = "IVFPQ")
     assert(ix.rowCalibration === 1.0)
     val q = Seq((0L, Array(0f, 0f)))
-    // unfiltered partial probe registers feedback; the accumulator fills
-    // on the collect
-    ix.search(q, 5, Some(2)).collect()
+    // an unfiltered partial probe folds its own scan into the EWMA
+    ix.search(q, 5, Some(2))
     val measured = ix.lastMeasuredScanRows
     assert(measured > 0, "accumulator did not record the scan")
     val total = tbl.meta.maxDocid
@@ -259,11 +258,14 @@ class AdaptiveProbeSpec extends GraftSuite {
     // skew: the query-side probes read far fewer rows than the uniform model
     assert(measured < predicted,
       s"expected skewed scan ($measured) below uniform prediction ($predicted)")
-    // the NEXT search folds the measurement into the EWMA
-    ix.search(q, 5, Some(2)).collect()
-    val expected = 0.5 * 1.0 + 0.5 * (measured.toDouble / predicted)
-    assert(math.abs(ix.rowCalibration - expected) < 1e-9,
-      s"rowCalibration ${ix.rowCalibration} != expected $expected")
+    val r = measured.toDouble / predicted
+    assert(math.abs(ix.rowCalibration - (0.5 + 0.5 * r)) < 1e-9,
+      s"rowCalibration ${ix.rowCalibration} after one search, expected ${0.5 + 0.5 * r}")
+    // the same probe again: the EWMA moves halfway toward r once more
+    ix.search(q, 5, Some(2))
+    assert(ix.lastMeasuredScanRows === measured)
+    assert(math.abs(ix.rowCalibration - (0.25 + 0.75 * r)) < 1e-9,
+      s"rowCalibration ${ix.rowCalibration} after two searches, expected ${0.25 + 0.75 * r}")
     assert(ix.rowCalibration < 1.0)
   }
 }

@@ -288,10 +288,10 @@ class GammaTableSpec extends GraftSuite {
     spark.conf.set("spark.graft.filter.exactFallbackRows", "0")
     spark.conf.set("spark.graft.filter.broadcastMaxKeys", "0")
     try {
-      val res = t.search(req)
+      val (res, plans) = withExecutedPlans(t.search(req))
       // the allowed set reaches the index HITS as a (shuffling) semi-join
       // after the graph walk — never a driver-collected key array
-      val p = res.queryExecution.executedPlan.toString
+      val p = plans.mkString("\n")
       assert("""LeftSemi""".r.findFirstIn(p).isDefined, p)
       val got = res.select("_id").as[String].collect().toSet
       val exact = t.search(req.copy(bruteForce = true))

@@ -81,12 +81,12 @@ class JobCountSpec extends GraftSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  private def docTable() = {
+  private def docTable(keyType: String = "string") = {
     val emb = spark.read.parquet(s"$sf0/embeddings.parquet")
     spark.read.parquet(s"$sf0/part.parquet")
       .filter($"p_partkey" < 400)
       .join(emb, $"p_partkey" === $"vec_id")
-      .select($"p_partkey".cast("string").as("_id"), $"p_size",
+      .select($"p_partkey".cast(keyType).as("_id"), $"p_size",
         $"embedding".as("vec"))
   }
 
@@ -187,30 +187,43 @@ class JobCountSpec extends GraftSuite {
     // the keys job counts the filtered key scan and brings the keys to the
     // driver; the widened-probe tier then tests them inside the probed-list
     // scan (+ the re-rank scan), and the exact fallback scores the allowed
-    // rows in one scan of the live table
-    val root = tmp()
-    GammaTable.create(spark, root, "jpqf", "_id", docTable(),
-      Seq(VectorFieldDef("vec", 64, "L2", "IVFPQ")), nBuckets = 4)
-      .buildIndex("vec", IndexParams(ncentroids = 4, nprobe = 2, nsubvector = 8),
-        persist = true, retrievalType = "IVFPQ")
-    val t = GammaTable.load(spark, root)
-    val vecs = docTable().select("vec").as[Array[Float]].take(64).toSeq
-    val filter = Seq(RangeFilter("p_size", Some(1), Some(40)))
-    // (exact-fallback rows conf, job bound): 0 disables the fallback
-    for ((fallbackRows, bound) <- Seq(Some("0") -> 3, None -> 2);
-         vq <- Seq(VecQuery("vec", vecs.head), VecQuery("vec", vectors = vecs))) {
-      fallbackRows.foreach(spark.conf.set("spark.graft.filter.exactFallbackRows", _))
-      try {
-        def run() = t.search(SearchRequest(topn = 10, vecQueries = Seq(vq), rangeFilters = filter))
-          .select("qid", "_id", "score").collect()
-        run() // the per-list stats job runs once per lists version
-        val (rows, n) = jobsDuring(run())
-        val what = s"${vq.batch.size}-vector request (exactFallbackRows=$fallbackRows)"
-        assert(rows.length === 10 * vq.batch.size, what)
-        if (fallbackRows.isEmpty) assert(n === bound, s"$what ran $n jobs: " + lastJobSites.toArray.mkString("; "))
-        else assert(n <= bound, s"$what ran $n jobs: " + lastJobSites.toArray.mkString("; "))
-        assert(lastShuffleBytes.get === 0L, what)
-      } finally spark.conf.unset("spark.graft.filter.exactFallbackRows")
+    // rows in one scan of the live table. Both key types: the keys ride
+    // the scans as their own type.
+    for (keyType <- Seq("string", "long")) {
+      val root = tmp()
+      GammaTable.create(spark, root, "jpqf", "_id", docTable(keyType),
+        Seq(VectorFieldDef("vec", 64, "L2", "IVFPQ")), nBuckets = 4)
+        .buildIndex("vec", IndexParams(ncentroids = 4, nprobe = 2, nsubvector = 8),
+          persist = true, retrievalType = "IVFPQ")
+      val t = GammaTable.load(spark, root)
+      val vecs = docTable().select("vec").as[Array[Float]].take(64).toSeq
+      val filter = Seq(RangeFilter("p_size", Some(1), Some(40)))
+      // (exact-fallback rows conf, job bound): 0 disables the fallback
+      for ((fallbackRows, bound) <- Seq(Some("0") -> 3, None -> 2);
+           vq <- Seq(VecQuery("vec", vecs.head), VecQuery("vec", vectors = vecs))) {
+        fallbackRows.foreach(spark.conf.set("spark.graft.filter.exactFallbackRows", _))
+        try {
+          def run() = t.search(SearchRequest(topn = 10, vecQueries = Seq(vq), rangeFilters = filter))
+            .select("qid", "_id", "score").collect()
+          run() // the per-list stats job runs once per lists version
+          val (rows, n) = jobsDuring(run())
+          val what = s"$keyType keys, ${vq.batch.size}-vector request (exactFallbackRows=$fallbackRows)"
+          assert(rows.length === 10 * vq.batch.size, what)
+          if (fallbackRows.isEmpty) assert(n === bound, s"$what ran $n jobs: " + lastJobSites.toArray.mkString("; "))
+          else assert(n <= bound, s"$what ran $n jobs: " + lastJobSites.toArray.mkString("; "))
+          assert(lastShuffleBytes.get === 0L, what)
+        } finally spark.conf.unset("spark.graft.filter.exactFallbackRows")
+      }
+      // the exact fallback straight through the indexer, keys collected as
+      // the table's keys job collects them: one lookup job, no shuffle (the
+      // exact plan it replaces shuffles its per-query cut)
+      val keys = graft.index.AllowedKeys.collect(
+        t.docs.filter($"p_size".between(1, 40)).select("_id"), Long.MaxValue)
+      val qs = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      val (hits, n) = jobsDuring(t.attachedIndex("vec").get.searchHits(qs, 10, None, Some(keys)))
+      assert(hits.rows.size === 10 * qs.size, keyType)
+      assert(n === 1, s"$keyType keys: exact fallback ran $n jobs: " + lastJobSites.toArray.mkString("; "))
+      assert(lastShuffleBytes.get === 0L, keyType)
     }
   }
 
@@ -246,6 +259,55 @@ class JobCountSpec extends GraftSuite {
     } finally {
       spark.conf.unset("spark.graft.ann.rewrite")
       graft.plans.IndexCatalog.unregister(path)
+    }
+  }
+
+  test("IVFFLAT, HNSW, BINARYIVF and unindexed searches collect inside search") {
+    // every tier finishes inside IncrementalIndexer.search: the frame it
+    // returns is a local relation that collects with no job, and search
+    // plus collect run no more jobs than the lazy frames they replace did
+    // (those counts are the pins below)
+    val t = GammaTable.create(spark, tmp(), "jlz", "_id", docTable(),
+      Seq(VectorFieldDef("vec", 64)), nBuckets = 4)
+    val flat = t.buildIndex("vec", IndexParams(ncentroids = 4, nprobe = 2), persist = true)
+    val ht = GammaTable.create(spark, tmp(), "jlzh", "_id", docTable(),
+      Seq(VectorFieldDef("vec", 64, "L2", "HNSW")), nBuckets = 4)
+    val hnsw = ht.buildIndex("vec", IndexParams(), persist = true, retrievalType = "HNSW")
+    // one upsert after the build: the graphs keep serving, the new row
+    // joins through the exact tail
+    ht.addOrUpdate(ht.docs.filter(col("_id") === "1").select("_id", "p_size", "vec"))
+    val bin = GammaTable.create(spark, tmp(), "jlzb", "_id",
+      docTable().select($"_id", $"p_size", unhex(md5($"_id")).as("code")),
+      Seq(VectorFieldDef("code", 128, metric = "Hamming", retrievalType = "BINARYIVF")),
+      nBuckets = 4)
+    val binIx = bin.buildIndex("code", IndexParams(metric = Metric.Hamming, ncentroids = 4),
+      persist = true, retrievalType = "BINARYIVF")
+    val unindexed = new graft.streaming.IncrementalIndexer(t, "vec", IndexParams(ncentroids = 4))
+    val q = Seq((0L, docTable().select("vec").as[Array[Float]].head()))
+    val qb = Seq((0L, graft.index.BinaryIvfIndex.bytesToFloats(
+      bin.docs.select("code").as[Array[Byte]].head())))
+    def allowed(g: GammaTable) = Some(g.docs.filter($"p_size".between(1, 40)).select("_id"))
+    // (case, search, confs, jobs of search + collect when search was lazy)
+    val cases = Seq[(String, () => org.apache.spark.sql.DataFrame, Map[String, String], Int)](
+      ("unindexed brute scan", () => unindexed.search(q, 10), Map.empty, 3),
+      ("IVFFLAT", () => flat.search(q, 10), Map.empty, 3),
+      ("IVFFLAT exact fallback", () => flat.search(q, 10, allowedIds = allowed(t)), Map.empty, 5),
+      ("HNSW with a tail", () => hnsw.search(q, 10), Map.empty, 5),
+      ("HNSW huge-tier semi-join", () => hnsw.search(q, 10, allowedIds = allowed(ht)),
+        Map("spark.graft.filter.exactFallbackRows" -> "0",
+          "spark.graft.filter.broadcastMaxKeys" -> "10"), 8),
+      ("BINARYIVF", () => binIx.search(qb, 10), Map.empty, 3))
+    for ((what, search, confs, parentJobs) <- cases) {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        search().collect() // the per-list stats job runs once per lists version
+        val (df, searchJobs) = jobsDuring(search())
+        val (rows, collectJobs) = jobsDuring(df.collect())
+        assert(rows.length === 10, what)
+        assert(collectJobs === 0, s"$what: collect ran $collectJobs jobs: " +
+          lastJobSites.toArray.mkString("; "))
+        assert(searchJobs <= parentJobs, s"$what: search ran $searchJobs jobs")
+      } finally confs.keys.foreach(spark.conf.unset)
     }
   }
 

@@ -154,9 +154,11 @@ class PlanSpec extends GraftSuite {
       rangeFilters = Seq(graft.core.RangeFilter("label", Some(1), Some(8))))
     spark.conf.set("spark.graft.filter.exactFallbackRows", "0") // index path
     try {
+      // the plans the search ran (its result is a local relation)
+      def searchPlans(): String = withExecutedPlans(t.search(req))._2.mkString("\n")
       // small allowed set -> the policy hints broadcast; the semi-join
       // must build on the (hinted) id side
-      val p1 = plan(t.search(req))
+      val p1 = searchPlans()
       assert("""BroadcastHashJoin [^\n]*LeftSemi""".r.findFirstIn(p1).isDefined, p1)
       // "huge" allowed set (threshold forced to 0) with auto-broadcast off:
       // the engine must NOT force the set through the driver — the
@@ -164,7 +166,7 @@ class PlanSpec extends GraftSuite {
       spark.conf.set("spark.graft.filter.broadcastMaxKeys", "0")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      val p2 = plan(t.search(req))
+      val p2 = searchPlans()
       assert("""(SortMergeJoin|ShuffledHashJoin) [^\n]*LeftSemi""".r.findFirstIn(p2).isDefined, p2)
       assert("""BroadcastHashJoin [^\n]*LeftSemi""".r.findFirstIn(p2).isEmpty, p2)
     } finally {

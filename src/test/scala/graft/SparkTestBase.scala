@@ -1,6 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session). */
@@ -11,4 +15,28 @@ object SparkTestBase {
 abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
   val sf0: String = "/root/testdata/sf0.001"
+
+  /** Runs `f` and returns its value with the executed plan of every
+    * Dataset action it ran, for code that runs its plans itself (a search
+    * returns collected hits, so its result frame shows no plan). The
+    * listener bus is async: settle by polling until the count is stable.
+    */
+  def withExecutedPlans[T](f: => T): (T, Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val r = f
+      var prev = -1
+      var spins = 0
+      while (plans.size != prev && spins < 50) {
+        prev = plans.size; Thread.sleep(100); spins += 1
+      }
+      (r, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(l)
+  }
 }

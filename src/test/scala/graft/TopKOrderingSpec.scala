@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.SpecializedRowOrdering
+import graft.functions.{QueryHeaps, SpecializedRowOrdering}
 
 /** The specialized TopKRows comparator must be sign-equal to Spark's
   * InterpretedOrdering on every field shape it claims, including the
@@ -72,5 +72,25 @@ class TopKOrderingSpec extends AnyFunSuite {
       Array(StructField("x", ArrayType(LongType)))) == null)
     assert(SpecializedRowOrdering.forFields(
       Array(StructField("x", DecimalType(10, 2)))) == null)
+  }
+
+  test("a heap for a large k allocates no k-slot array up front") {
+    // four query groups at recall_num 2^20: k slots each would be ~16 MB
+    val bytes = org.apache.spark.util.SizeEstimator.estimate(
+      new QueryHeaps(4, 1 << 20, LongType, true))
+    assert(bytes < (1L << 20), s"$bytes bytes")
+  }
+
+  test("a heap that grows past its initial size keeps exactly the k best") {
+    // 5,000 hits, scores with ties (broken by id), offered in random order
+    val hits = (0L until 5000L).map(id => (id, (id * 7919 % 1000).toDouble))
+    val rnd = new scala.util.Random(7)
+    for (k <- Seq(10, 2000); ascending <- Seq(true, false)) {
+      val heaps = new QueryHeaps(1, k, LongType, ascending)
+      rnd.shuffle(hits).foreach { case (id, s) => heaps.offer(0, s, id) }
+      val want = hits.sortBy { case (id, s) => (if (ascending) s else -s, id) }.take(k)
+      val got = heaps.sorted(0).toSeq.map(r => (r.getLong(1), r.getDouble(2)))
+      assert(got === want, s"k=$k ascending=$ascending")
+    }
   }
 }

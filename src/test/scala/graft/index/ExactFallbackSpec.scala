@@ -57,13 +57,14 @@ class ExactFallbackSpec extends GraftSuite {
 
   private val passes01 = $"tag".between(0, 1)
 
-  /** The fallback through the indexer, which must answer on the driver. */
+  /** The fallback through the indexer, with the allowed keys collected
+    * (`JobCountSpec` pins that this tier runs one job and no shuffle).
+    */
   private def driver(
       t: GammaTable, qs: Seq[(Long, Array[Float])], k: Int, filter: org.apache.spark.sql.Column,
       range: (Option[Double], Option[Double]) = (None, None)): DataFrame = {
     val keys = AllowedKeys.collect(t.docs.filter(filter).select("id"), Long.MaxValue)
-    t.attachedIndex("vec").get.searchHits(qs, k, None, Some(keys), range._1, range._2)
-      .getOrElse(fail("the lazy plan answered")).toDF(spark)
+    t.attachedIndex("vec").get.searchHits(qs, k, None, Some(keys), range._1, range._2).toDF(spark)
   }
 
   /** The plan the fallback replaces: exact scan of the semi-joined rows,

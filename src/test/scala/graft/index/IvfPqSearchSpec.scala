@@ -250,8 +250,7 @@ class IvfPqSearchSpec extends GraftSuite {
       val qs = batch.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       // nprobe 1, widened by the inverse selectivity to 2 of 4 lists
       withConf("spark.graft.filter.exactFallbackRows", "0") {
-        def hits(a: AllowedKeys) = ix.searchHits(qs, 10, Some(1), Some(a))
-          .getOrElse(fail("the lazy plan answered")).toDF(spark)
+        def hits(a: AllowedKeys) = ix.searchHits(qs, 10, Some(1), Some(a)).toDF(spark)
         val viaKeys = hits(AllowedKeys.collect(frame, Long.MaxValue))
         val viaFrame = hits(AllowedKeys(broadcast(frame), frame.count(), None))
         assert(ranked(viaKeys) === ranked(viaFrame), s"$metric stringKeys=$stringKeys")
