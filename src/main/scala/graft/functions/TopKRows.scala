@@ -27,11 +27,13 @@ final class TopKBuffer(val k: Int, ord: Ordering[InternalRow]) {
     else if (ord.lt(r, heap.peek())) { heap.poll(); heap.add(r.copy()) }
 
   /** Owned path: `r` is already private to this buffer (deserialized or
-    * handed over from another buffer) — inserted without copying.
+    * handed over from another buffer) — inserted without copying. Whether
+    * it was kept.
     */
-  def addOwned(r: InternalRow): Unit =
+  def addOwned(r: InternalRow): Boolean =
     if (heap.size < k) heap.add(r)
     else if (ord.lt(r, heap.peek())) { heap.poll(); heap.add(r) }
+    else false
 
   def mergeFrom(other: TopKBuffer): Unit = {
     val it = other.heap.iterator()
@@ -103,14 +105,20 @@ private[graft] final class QueryHeaps(
     }
   }
 
+  /** Every kept (sort key, id, score, group) row, in [[packed]] order. */
+  def rows: Array[UnsafeRow] =
+    heaps.flatMap(_.heap.toArray(new Array[InternalRow](0))).map(_.asInstanceOf[UnsafeRow])
+
   /** Every kept row, as one byte array (see [[TopKBuffer.pack]]). */
-  def packed: Array[Byte] =
-    TopKBuffer.pack(heaps.flatMap(_.heap.toArray(new Array[InternalRow](0)))
-      .map(_.asInstanceOf[UnsafeRow]))
+  def packed: Array[Byte] = TopKBuffer.pack(rows)
+
+  /** Merges one row another instance kept, owned by this one from now on;
+    * whether it was kept.
+    */
+  def addOwned(r: UnsafeRow): Boolean = heaps(r.getInt(3)).addOwned(r)
 
   /** Merges rows another instance [[packed]]. */
-  def addPacked(bytes: Array[Byte]): Unit =
-    TopKBuffer.unpack(bytes, NumFields).foreach(r => heaps(r.getInt(3)).addOwned(r))
+  def addPacked(bytes: Array[Byte]): Unit = TopKBuffer.unpack(bytes, NumFields).foreach(addOwned)
 
   /** Group `g`'s kept rows, best first. */
   def sorted(g: Int): Array[InternalRow] = heaps(g).sorted(ord)

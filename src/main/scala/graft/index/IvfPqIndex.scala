@@ -1,14 +1,16 @@
 package graft.index
 
+import scala.collection.mutable
+
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
-import org.apache.spark.util.LongAccumulator
 
 import graft.core.Metric
-import graft.functions.{QueryHeaps, SpecializedRowOrdering}
+import graft.functions.{QueryHeaps, SpecializedRowOrdering, TopKBuffer}
 
 /** IVFPQ (reference V2, index/impl/gamma_index_ivfpq.cc): coarse quantize,
   * product-quantize the residuals, scan probed lists with the ADC LUT, then
@@ -19,22 +21,29 @@ import graft.functions.{QueryHeaps, SpecializedRowOrdering}
   * (x - coarse_centroid), per-subspace k-means codebooks of 2^nbits entries,
   * asymmetric distance = Σ_j ||r_j - cb_j[code_j]||².
   *
-  * Scale design: codes are ~dim·4/nsubvector× smaller than raw vectors, so
-  * the probed-list scan reads a fraction of the raw data; the LUT
-  * (nprobe x m x ksub doubles per query) is built scan-side from the
-  * quantizers, broadcast once for every copy of the index; the re-rank
-  * fetches only the nq x recall_num candidates' vectors by key from the
+  * Serving design: like gamma, which keeps each doc's codes and raw vector
+  * in memory and ranks in two stages inside one pass, a request reads the
   * resident [[VectorStore]] over `rawDocs` (the table's own store when the
-  * index serves a table) instead of reading the table.
+  * index serves a table), whose blocks hold each row's raw vector, coarse
+  * centroid and PQ codes, grouped by centroid. One Spark job scans the
+  * probed lists of every block with the ADC LUT (nprobe x m x ksub doubles
+  * per query, built scan-side from the quantizers broadcast once for every
+  * copy of the index) and re-ranks each block's candidates exactly from the
+  * same block. `codes` (the lists as built or persisted) feed the per-list
+  * stats and the one request the store cannot serve: an allowed set held
+  * only as a frame.
   *
   * One search ([[searchHits]]) serves the table API, the SQL rewrite and
   * direct callers. Ids are Long, Int or String (the reference's
   * `id_type_`, table/table.cc:123-126) and vectors float or double arrays.
+  * A store row is an index row iff its version is at most
+  * `indexedThrough` (the owning indexer's build version; a standalone
+  * index's store has no versions, so every row is one).
   */
 class IvfPqIndex(
     val spark: SparkSession,
     val codes: DataFrame, // idCol, centroid_id, pq_codes array<int>
-    val rawDocs: DataFrame, // idCol, vecCol — re-rank source (UNrotated)
+    val rawDocs: DataFrame, // idCol, vecCol, ... — the store's rows (UNrotated)
     val idCol: String,
     val vecCol: String,
     val centers: Array[Array[Double]], // in rotated space when OPQ is on
@@ -45,43 +54,52 @@ class IvfPqIndex(
     // upper bound feeding adaptive probe widening; None = fixed nprobe
     val listSizes: Option[Array[Long]] = None,
     // shared with the index this one copies: the quantizer broadcast and
-    // the re-rank store (None: made here, over `rawDocs`)
-    quantizers: Option[Broadcast[(Array[Array[Double]], Array[Array[Array[Double]]])]] = None,
-    store: Option[VectorStore] = None) extends AnnIndex {
+    // the store (None: made here, the store over `rawDocs`)
+    sharedCodec: Option[PqCodec] = None,
+    store: Option[VectorStore] = None,
+    val indexedThrough: Long = Long.MaxValue) extends AnnIndex {
 
   override def retrievalType: String = "IVFPQ"
 
-  /** (centers, codebooks) as the scan tasks read them: broadcast once,
+  /** The quantizers as scan and encode tasks read them: broadcast once,
     * then handed to every copy (the request path copies the index per
-    * search).
+    * search) and to the store that encodes with them.
     */
-  private[graft] lazy val quantBroadcast = quantizers.getOrElse(
-    spark.sparkContext.broadcast((centers, codebooks)))
+  private[graft] lazy val codec: PqCodec = sharedCodec.getOrElse(
+    PqCodec(spark, centers, codebooks, rotation, params.metric))
 
-  /** The exact re-rank source: `rawDocs`' (key, vector) rows, looked up by
-    * candidate key; not cached unless the owning table handed its store in.
+  /** The store every search reads: `rawDocs`' (key, vector) rows with
+    * their codes, cached for this index's lifetime unless the owning table
+    * handed its own store in.
     */
   private[graft] lazy val vectors: VectorStore = store.getOrElse(
-    new VectorStore(rawDocs.select(col(idCol), col(vecCol)), cache = false))
+    new VectorStore(rawDocs.select(col(idCol), col(vecCol)), Some(codec)))
 
   private def copy(
       codes: DataFrame = codes,
       params: IndexParams = params,
-      listSizes: Option[Array[Long]] = listSizes): IvfPqIndex =
+      listSizes: Option[Array[Long]] = listSizes,
+      indexedThrough: Long = indexedThrough): IvfPqIndex =
     new IvfPqIndex(spark, codes, rawDocs, idCol, vecCol, centers, codebooks, params, rotation,
-      listSizes, Some(quantBroadcast), Some(vectors))
+      listSizes, Some(codec), Some(vectors), indexedThrough)
 
-  /** Rows actually read by the LAST search's ADC scan, over all its
-    * chunks (-1 before any search). Feedback surface for the indexer's probe-cost
+  /** Index rows the LAST search's ADC scan read, over all its chunks (-1
+    * before any search), summed from the counts its scan tasks returned
+    * with their heaps. Feedback surface for the indexer's probe-cost
     * bound: the uniform-volume row prediction is calibrated against this
     * (IncrementalIndexer.rowCalibration).
     */
-  @transient @volatile private[graft] var lastScanAcc
-      : Option[org.apache.spark.util.LongAccumulator] = None
-  def lastScannedRows: Long = lastScanAcc.map(_.value.longValue).getOrElse(-1L)
+  @volatile private var scannedRows = -1L
+  def lastScannedRows: Long = scannedRows
 
   /** Same index, fresher per-list stats. */
   def withListSizes(s: Option[Array[Long]]): IvfPqIndex = copy(listSizes = s)
+
+  /** Same index, serving the store rows of version ≤ `v`. */
+  private[graft] def through(v: Long): IvfPqIndex = copy(indexedThrough = v)
+
+  /** Same index and store, the frame path reading `lists` as its codes. */
+  private[graft] def withCodes(lists: DataFrame): IvfPqIndex = copy(codes = lists)
 
   // The ADC LUT is exact for L2 and InnerProduct; the reference's kernels
   // implement exactly those two (index/retrieval_model.h:20 declares Cosine
@@ -97,13 +115,6 @@ class IvfPqIndex(
     s"IVFPQ re-rank source ids are ${rawDocs.schema(idCol).dataType.simpleString}, " +
       s"code ids ${keyType.simpleString}")
 
-  private val m = codebooks.length
-  // k-means may return fewer than 2^nbits distinct centers per subspace;
-  // the LUT layout pads every subspace to the max so the scan kernel's
-  // uniform j*ksub stride (and the pq_adc SQL function's lut.length/m
-  // stride) stays valid — padded slots are never referenced
-  private val ksub = codebooks.map(_.length).max
-
   /** [[searchHits]], run now, its hits as a local relation. */
   override def search(
       queries: Seq[(Long, Array[Float])],
@@ -115,22 +126,43 @@ class IvfPqIndex(
     searchHits(queries, k, nprobe, allowedIds.map(AllowedKeys(_, -1L, None)), minScore, maxScore)
       .toDF(spark)
 
-  /** The IVFPQ search in two Spark jobs and no shuffle, the shape of
+  /** Whether [[searchHits]] serves `allowed` from the store: no allowed
+    * set, or its keys on the driver with this index's key type. Otherwise
+    * the allowed set is only a frame, and the search scans `codes`.
+    */
+  private[graft] def scansStore(allowed: Option[AllowedKeys]): Boolean =
+    allowed.forall(a => a.keyType == keyType && a.packed.isDefined)
+
+  /** The IVFPQ search, merged on the driver with no shuffle, the shape of
     * Spark's `TakeOrderedAndProject` (the reference's per-thread heaps
     * merged once, gamma_index_ivfpq.cc:570-593, then the `recall_num`
-    * re-rank, :642-697):
-    *  1. scan the probed lists; each task keeps a heap of
-    *     max(recall_num, k) candidates per query, merged on the driver;
-    *  2. look the candidates up in the resident [[VectorStore]] (the
-    *     candidate map broadcast once), score them exactly with the
-    *     `l2_sq` / `inner_product` double arithmetic, apply the score
-    *     range; each task keeps k per query, merged on the driver.
-    * Without `hasRank`, job 1 applies the range to the ADC value and keeps
-    * k, and there is no job 2. A batch over
-    * [[IvfPqIndex.MaxBroadcastCandidates]] candidates runs the jobs once
-    * per [[IvfPqIndex.qidChunks]] chunk. Allowed keys on the driver are
-    * broadcast and tested on each code row in job 1; without keys, the
-    * allowed frame is semi-joined into the probed lists.
+    * re-rank, :642-697). Served from the store ([[scansStore]]), one Spark
+    * job over its blocks, in which each task
+    *  - scans the probed lists' index rows with ADC, testing allowed keys
+    *    on the driver (broadcast) on each row, into a heap of
+    *    max(recall_num, k) candidates per query;
+    *  - scores each distinct (qid, key) it kept exactly, the key's rows in
+    *    the block with the `l2_sq` / `inner_product` double arithmetic,
+    *    against every query position of the qid;
+    *  - returns its heaps, those exact scores and its scanned-row count.
+    * The driver merges each task's result as it arrives into the global
+    * top max(recall_num, k) by ADC, the two-job path's candidate set,
+    * keeping the exact scores of the (qid, key) pairs it admits and
+    * dropping evicted pairs' scores as it goes. Each copy
+    * of a pair in that set then offers the pair's exact scores, in range,
+    * to a top k per qid, as the two-job path's candidate list does.
+    * Without `hasRank`, the tasks apply the range to the ADC value and
+    * keep k, and there is no exact score. A key's rows are scored in the
+    * blocks whose task kept it: keys are unique among a table's live rows,
+    * so there that is every row of the key, but a standalone index whose
+    * `rawDocs` repeat a key in several blocks can re-rank fewer of its
+    * rows than the two-job path.
+    *
+    * An allowed set held only as a frame is semi-joined into the probed
+    * lists of `codes` instead, in two jobs: the list scan (heaps merged on
+    * the driver) and the candidates' exact scores looked up in the store.
+    * A batch over [[IvfPqIndex.MaxBroadcastCandidates]] candidates runs
+    * once per [[IvfPqIndex.qidChunks]] chunk.
     */
   private[graft] def searchHits(
       queries: Seq[(Long, Array[Float])],
@@ -140,30 +172,30 @@ class IvfPqIndex(
       minScore: Option[Double],
       maxScore: Option[Double]): LocalHits = {
     val nCand = if (params.hasRank) math.max(params.recallNum, k) else k
-    val keySet = allowed.filter(_.keyType == keyType).flatMap(_.keySet)
-      .map(spark.sparkContext.broadcast(_))
-    val frame = if (keySet.isDefined) None else allowed.map(_.frame)
-    val scanAcc = spark.sparkContext.longAccumulator("graft.ivfpq.scannedRows")
-    lastScanAcc = Some(scanAcc)
-    try IvfPqIndex.qidChunks(queries, nCand, IvfPqIndex.MaxBroadcastCandidates)
-      .map(searchChunk(_, k, nprobe, keySet, frame, nCand, (minScore, maxScore), scanAcc))
-      .reduce(_ ++ _)
-    finally keySet.foreach(_.destroy())
+    val fromStore = scansStore(allowed)
+    val keySet =
+      if (fromStore) allowed.flatMap(_.keySet).map(spark.sparkContext.broadcast(_)) else None
+    val range = (minScore, maxScore)
+    try {
+      val chunks = IvfPqIndex.qidChunks(queries, nCand, IvfPqIndex.MaxBroadcastCandidates).map { qs =>
+        if (fromStore) storeChunk(qs, k, nprobe, nCand, keySet, range)
+        else frameChunk(qs, k, nprobe, nCand, allowed.get.frame, range)
+      }
+      scannedRows = chunks.map(_._2).sum
+      chunks.map(_._1).reduce(_ ++ _)
+    } finally keySet.foreach(_.destroy())
   }
 
-  /** One chunk's jobs: the probe plan (probed lists, allowed-set
-    * semi-join, codes sorted by centroid within each partition), job 1
-    * and, with `hasRank`, job 2.
+  /** One chunk's probe plan: the ADC scan of its queries (their probed
+    * centroids in the code space, heaps per distinct qid) and the probed
+    * centroids.
     */
-  private def searchChunk(
+  private def probePlan(
       queries: Seq[(Long, Array[Float])],
       k: Int,
       nprobe: Option[Int],
-      keySet: Option[Broadcast[KeySet]],
-      allowedIds: Option[DataFrame],
       heapSize: Int,
-      range: (Option[Double], Option[Double]),
-      scanAcc: LongAccumulator): LocalHits = {
+      range: (Option[Double], Option[Double])): (AdcScan, Array[Long], Seq[Int]) = {
     val np = math.min(nprobe.getOrElse(params.nprobe), centers.length)
     val sizes = if (Ivf.adaptiveEnabled(spark)) listSizes else None
     val target = Ivf.probeTarget(k, params.recallNum, np, params.nprobe)
@@ -176,51 +208,127 @@ class IvfPqIndex(
         Ivf.extendByTarget(
           Ivf.rankedCentroids(centers, qv, params.metric), sizes, np, target).toArray)
     }
-    val probed = qProbes.flatMap(_._3).distinct.sorted
-
-    val lists = codes.filter(col("centroid_id").isin(probed.toIndexedSeq: _*))
-    // broadcast decision is the caller's (selectivity-aware) hint, not ours
-    val filtered = allowedIds match {
-      case Some(ids) => lists.join(ids.toDF(idCol), Seq(idCol), "left_semi")
-      case None      => lists
-    }
-    // scan-side ADC: broadcast only (queries-by-centroid + quantizers) and
-    // build each (query, centroid) LUT lazily WHERE THE CODES LIVE — the
+    // scan-side ADC: broadcast only the queries by centroid (the
+    // quantizers are the codec's) and build each (query, centroid) LUT
+    // lazily WHERE THE CODES LIVE, one centroid at a time — the
     // reference's per-query sim_table precompute inside the scan
-    // (gamma_index_ivfpq.h:561-601). Materializing LUT ROWS driver-side and
-    // broadcasting them into a join (the previous shape) is ~m*ksub*8 B per
-    // (query, probe) — ~180 MB for a 50-query batch at nprobe=56 — so the
-    // DRIVER became the bottleneck as req_num grew. The within-partition
-    // sort by centroid bounds the LUT cache to ONE centroid's queries
-    // (persisted lists arrive centroid-partitioned already, so the sort is
-    // ~free there).
+    // (gamma_index_ivfpq.h:561-601)
     val byCentroid: Map[Int, Array[(Int, Array[Float])]] = qProbes
       .flatMap { case (pos, qv, ps) => ps.map(c => (c, (pos, qv))) }
       .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).toArray }
     // one heap per distinct qid, as the per-qid top-k the heaps stand for
     val qids = queries.map(_._1).distinct.sorted.toArray
     val group = qids.zipWithIndex.toMap
-    val in = filtered.select(col("centroid_id"), col(idCol), col("pq_codes"))
-      .sortWithinPartitions(col("centroid_id"))
     val scan = new AdcScan(
-      spark.sparkContext.broadcast(byCentroid), quantBroadcast,
+      spark.sparkContext.broadcast(byCentroid), codec,
       queries.map(q => group(q._1)).toArray, qids.length, heapSize, keyType,
-      Metric.ascending(params.metric), params.metric == Metric.InnerProduct, m, ksub,
+      Metric.ascending(params.metric), params.metric == Metric.InnerProduct,
       // the ADC value is the returned score only without the re-rank
-      if (params.hasRank) (None, None) else range, scanAcc)
+      if (params.hasRank) (None, None) else range)
+    (scan, qids, qProbes.flatMap(_._3).distinct.sorted)
+  }
+
+  /** One chunk from the store, in one job; (hits, rows scanned). */
+  private def storeChunk(
+      queries: Seq[(Long, Array[Float])],
+      k: Int,
+      nprobe: Option[Int],
+      heapSize: Int,
+      keySet: Option[Broadcast[KeySet]],
+      range: (Option[Double], Option[Double])): (LocalHits, Long) = {
+    val store = vectors
+    require(store.codec.exists(_ eq codec), "the IVFPQ store must hold this index's codes")
+    val (scan, qids, _) = probePlan(queries, k, nprobe, heapSize, range)
+    val rank = params.hasRank
+    // each qid's query positions, and the raw (unrotated) query vectors
+    // the exact scores read
+    val positions = Array.fill(qids.length)(Array.newBuilder[Int])
+    queries.indices.foreach(p => positions(scan.groupOf(p)) += p)
+    val byGroup = positions.map(_.result())
+    val qvecs = if (rank) Some(spark.sparkContext.broadcast(queries.map(_._2).toArray)) else None
+    val (keys, through) = (keySet, indexedThrough) // the task closure must not capture the index
+    // task results merge as they arrive. A task ships each group's rows
+    // best first, so once the global heap rejects one, the group's later
+    // rows are rejected too and are skipped; the exact scores of a pair
+    // are kept when the task's first (best) row of it is kept. Pairs
+    // evicted since are dropped whenever the map outgrows twice what the
+    // heaps can hold, so the driver never keeps every task's scores.
     val stage1 = scan.heaps()
+    // per group: key -> its exact scores (several blocks' concatenated)
+    val exact = Array.fill(qids.length)(new java.util.HashMap[Any, Array[Double]]())
+    val pruneAt = 2L * qids.length * heapSize
+    var held = 0L
+    var scanned = 0L
+    def merge(t: StoreHits): Unit = {
+      scanned += t.scanned
+      var full = -1 // the group whose heap rejected this task's last row
+      TopKBuffer.unpack(t.heaps, QueryHeaps.NumFields).zipWithIndex.foreach { case (r, i) =>
+        val g = r.getInt(3)
+        if (g != full) {
+          if (!stage1.addOwned(r)) full = g
+          else if (rank && t.from(i) < t.from(i + 1)) {
+            val s = java.util.Arrays.copyOfRange(t.exact, t.from(i), t.from(i + 1))
+            exact(g).merge(r.get(1, keyType), s, (a, b) => a ++ b)
+            held += 1
+          }
+        }
+      }
+      if (held > pruneAt) {
+        val kept = Array.fill(qids.length)(new java.util.HashSet[Any]())
+        stage1.rows.foreach(r => kept(r.getInt(3)).add(r.get(1, keyType)))
+        exact.indices.foreach(g => exact(g).keySet.retainAll(kept(g)))
+        held = exact.map(_.size.toLong).sum
+      }
+    }
+    try store.foreach(b => scan.scanBlock(b, keys.map(_.value).orNull, through,
+        qvecs.map(_.value).orNull, byGroup))(merge)
+    finally { scan.destroyRequest(); qvecs.foreach(_.destroy()) }
+
+    if (!rank) return (LocalHits.fromHeaps(stage1, qids, keyType), scanned)
+    // each copy of a (group, key) in the global heaps offers its exact
+    // scores once, as the candidate list of the two-job path does
+    val out = new QueryHeaps(qids.length, k, keyType, Metric.ascending(params.metric))
+    qids.indices.foreach { g =>
+      stage1.sorted(g).foreach { r =>
+        val id = r.get(1, keyType)
+        exact(g).get(id).foreach { s =>
+          if (IvfPqIndex.inRange(s, range)) out.offer(g, s, id)
+        }
+      }
+    }
+    (LocalHits.fromHeaps(out, qids, keyType), scanned)
+  }
+
+  /** One chunk whose allowed set is only a frame, in two jobs: the probed
+    * lists of `codes` semi-joined with `allowedIds` and scanned with
+    * per-task heaps, then, with `hasRank`, the exact re-rank of the merged
+    * candidates looked up in the store; (hits, rows scanned).
+    */
+  private def frameChunk(
+      queries: Seq[(Long, Array[Float])],
+      k: Int,
+      nprobe: Option[Int],
+      heapSize: Int,
+      allowedIds: DataFrame,
+      range: (Option[Double], Option[Double])): (LocalHits, Long) = {
+    val (scan, qids, probed) = probePlan(queries, k, nprobe, heapSize, range)
+    // broadcast decision is the caller's (selectivity-aware) hint, not ours;
+    // the sort by centroid bounds each task's LUT cache to one centroid's
+    // queries (persisted lists arrive centroid-partitioned already)
+    val in = codes.filter(col("centroid_id").isin(probed: _*))
+      .join(allowedIds.toDF(idCol), Seq(idCol), "left_semi")
+      .select(col("centroid_id"), col(idCol), col("pq_codes"))
+      .sortWithinPartitions(col("centroid_id"))
+    val stage1 = scan.heaps()
+    var scanned = 0L
     val idType = keyType // the task closure must not capture the index
     try in.queryExecution.toRdd.mapPartitions { rows =>
         val task = scan.task()
-        val keys = keySet.map(_.value).orNull
-        rows.foreach { r =>
-          val id = r.get(1, idType)
-          if (keys == null || keys.contains(id)) task.add(r.getInt(0), id, r.getArray(2))
-        }
-        Iterator(task.heaps.packed)
-      }.collect().foreach(stage1.addPacked)
+        rows.foreach(r => task.add(r.getInt(0), r.get(1, idType), r.getArray(2)))
+        Iterator((task.heaps.packed, task.scanned))
+      }.collect().foreach { case (h, n) => stage1.addPacked(h); scanned += n }
     finally scan.destroyRequest()
-    if (!params.hasRank) return LocalHits.fromHeaps(stage1, qids, keyType)
+    if (!params.hasRank) return (LocalHits.fromHeaps(stage1, qids, keyType), scanned)
 
     // candidate -> the query positions that score it: every position
     // sharing the candidate's qid
@@ -234,7 +342,7 @@ class IvfPqIndex(
       }
     }
     import scala.jdk.CollectionConverters._
-    ExactRerank.hits(vectors, cand.asScala.toSeq, queries, k, params.metric, range)
+    (ExactRerank.hits(vectors, cand.asScala.toSeq, queries, k, params.metric, range), scanned)
   }
 
   /** Encode a delta batch with the ALREADY-TRAINED quantizers — the
@@ -245,11 +353,17 @@ class IvfPqIndex(
     * (e.g. a version stamp).
     */
   def encodeDelta(delta: DataFrame, keepCols: Seq[String] = Nil): DataFrame =
-    IvfPqIndex.encodeAll(delta, idCol, vecCol, centers, codebooks, rotation, keepCols,
-      params.metric)
+    IvfPqIndex.encodeAll(delta, idCol, vecCol, codec, keepCols)
 
-  override def excluding(ids: DataFrame): AnnIndex =
-    copy(codes = codes.join(ids.toDF(idCol), Seq(idCol), "left_anti"))
+  /** Same quantizers over the rows of `ids` removed: from `codes` and from
+    * `rawDocs`, so the copy reads its own store over the remaining rows.
+    */
+  override def excluding(ids: DataFrame): AnnIndex = {
+    val gone = ids.toDF(idCol)
+    new IvfPqIndex(spark, codes.join(gone, Seq(idCol), "left_anti"),
+      rawDocs.join(gone, Seq(idCol), "left_anti"), idCol, vecCol, centers, codebooks, params,
+      rotation, listSizes, Some(codec), None, indexedThrough)
+  }
 
   override def withParams(p: IndexParams): AnnIndex = copy(params = p)
 
@@ -434,10 +548,10 @@ object IvfPqIndex {
     }.map(Await.result(_, Duration.Inf)).toArray
 
     // single distributed pass: rotate + assign + residual-encode per row
-    val codesDf = encodeAll(docs, idCol, vecCol, centers, codebooks, rotation,
-      Nil, params.metric).localCheckpoint(true)
+    val codec = PqCodec(spark, centers, codebooks, rotation, params.metric)
+    val codesDf = encodeAll(docs, idCol, vecCol, codec, Nil).localCheckpoint(true)
     new IvfPqIndex(spark, codesDf, docs.select(col(idCol), col(vecCol)),
-      idCol, vecCol, centers, codebooks, params, rotation)
+      idCol, vecCol, centers, codebooks, params, rotation, sharedCodec = Some(codec))
   }
 
   /** Query LUT for one probed centroid, flattened m x ksub
@@ -487,20 +601,15 @@ object IvfPqIndex {
   }
 
   /** Single-pass encode of (id, vec, keep...) rows into
-    * (id, centroid_id, pq_codes, keep...) with broadcast quantizers:
-    * optional OPQ rotation, best-centroid assignment under the index's
-    * quantizer metric (strict-< tie break, same as MLlib predict),
-    * residual PQ codes.
+    * (id, centroid_id, pq_codes, keep...) with the codec's broadcast
+    * quantizers ([[encodeRow]] per row).
     */
   private[index] def encodeAll(
       docs: DataFrame,
       idCol: String,
       vecCol: String,
-      centers: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]],
-      rotation: Option[Array[Array[Double]]],
-      keepCols: Seq[String],
-      metric: Metric.Value = Metric.L2): DataFrame = {
+      codec: PqCodec,
+      keepCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._
     val in = docs.select((col(idCol) +: col(vecCol) +: keepCols.map(col)): _*)
@@ -509,55 +618,102 @@ object IvfPqIndex {
         StructField("centroid_id", IntegerType, nullable = false) +:
         StructField("pq_codes", ArrayType(IntegerType, containsNull = false)) +:
         keepCols.map(in.schema(_)))
-    val bc = in.sparkSession.sparkContext.broadcast((centers, codebooks, rotation))
-    val m = codebooks.length
     in.mapPartitions { rows =>
-      val (cs, cbs, rot) = bc.value
-      val dsub = cs.head.length / m
       rows.map { r =>
-        val raw = r.getSeq[Float](1).toArray
-        val v = rot.map(Opq.rotate(_, raw)).getOrElse(raw)
-        val best = Ivf.bestCenter(metric, cs, v)
-        val cen = cs(best)
-        val codes = Array.tabulate(m) { j =>
-          val cb = cbs(j); val base = j * dsub
-          var bc2 = 0; var bd = Double.MaxValue; var cc = 0
-          while (cc < cb.length) {
-            var s = 0.0; var i = 0
-            while (i < dsub) {
-              val t = (v(base + i) - cen(base + i)) - cb(cc)(i)
-              s += t * t; i += 1
-            }
-            if (s < bd) { bd = s; bc2 = cc }
-            cc += 1
-          }
-          bc2
-        }
+        val (best, codes) = codec.encode(r.getSeq[Float](1).toArray)
         Row.fromSeq(r.get(0) +: best +: codes.toSeq +: (2 until r.length).map(r.get))
       }
     }(Encoders.row(schema))
   }
 
+  /** One vector's (centroid, PQ codes): optional OPQ rotation,
+    * best-centroid assignment under the index's quantizer metric
+    * (strict-< tie break, same as MLlib predict), then per subspace the
+    * codebook entry nearest the residual (first of equals).
+    */
+  private[index] def encodeRow(
+      raw: Array[Float],
+      cs: Array[Array[Double]],
+      cbs: Array[Array[Array[Double]]],
+      rot: Option[Array[Array[Double]]],
+      metric: Metric.Value): (Int, Array[Int]) = {
+    val m = cbs.length
+    val dsub = cs.head.length / m
+    val v = rot.map(Opq.rotate(_, raw)).getOrElse(raw)
+    val best = Ivf.bestCenter(metric, cs, v)
+    val cen = cs(best)
+    val res = Array.tabulate(cen.length)(i => v(i) - cen(i))
+    val codes = Array.tabulate(m) { j =>
+      val cb = cbs(j); val base = j * dsub
+      var bc = 0; var bd = Double.MaxValue; var cc = 0
+      while (cc < cb.length) {
+        val e = cb(cc)
+        var s = 0.0; var i = 0
+        while (i < dsub) {
+          val t = res(base + i) - e(i)
+          s += t * t; i += 1
+        }
+        if (s < bd) { bd = s; bc = cc }
+        cc += 1
+      }
+      bc
+    }
+    (best, codes)
+  }
 }
 
-/** ADC scan kernel of one request. Each task scores its code rows against
-  * every query probing their centroid through LUTs built where the codes
-  * live, cached for one centroid at a time (rows arrive sorted by
-  * centroid), and keeps `heapSize` candidates per query group.
+/** An IVFPQ index's trained quantizers (coarse centers and PQ codebooks in
+  * the code space, the OPQ rotation) and quantizer metric, broadcast once:
+  * what its scan tasks build LUTs from and what encodes a row, in the
+  * encode pass ([[IvfPqIndex.encodeAll]]) and in the [[VectorStore]] that
+  * holds the index's codes. `ksub` is the largest codebook (the LUT
+  * stride; k-means may return fewer than 2^nbits entries).
+  */
+private[graft] final class PqCodec private (
+    val quantizers: Broadcast[
+      (Array[Array[Double]], Array[Array[Array[Double]]], Option[Array[Array[Double]]])],
+    metric: Metric.Value,
+    val ncent: Int,
+    val m: Int,
+    val ksub: Int) extends Serializable {
+
+  /** `v`'s (centroid, PQ codes), see [[IvfPqIndex.encodeRow]]. */
+  def encode(v: Array[Float]): (Int, Array[Int]) = {
+    val (cs, cbs, rot) = quantizers.value
+    IvfPqIndex.encodeRow(v, cs, cbs, rot, metric)
+  }
+}
+
+private[graft] object PqCodec {
+  def apply(
+      spark: SparkSession,
+      centers: Array[Array[Double]],
+      codebooks: Array[Array[Array[Double]]],
+      rotation: Option[Array[Array[Double]]],
+      metric: Metric.Value): PqCodec = {
+    val ksub = codebooks.map(_.length).max
+    // the store holds each code in 16 bits
+    require(ksub <= (1 << 16), s"IVFPQ codebooks hold at most 2^16 entries (nbits <= 16), got $ksub")
+    new PqCodec(spark.sparkContext.broadcast((centers, codebooks, rotation)), metric,
+      centers.length, codebooks.length, ksub)
+  }
+}
+
+/** ADC scan kernel of one request. A task scores index rows against every
+  * query probing their centroid through LUTs built where the codes live,
+  * cached for one centroid at a time, keeps `heapSize` candidates per
+  * query group and counts the rows it scanned.
   */
 private[index] final class AdcScan(
     byCentroid: Broadcast[Map[Int, Array[(Int, Array[Float])]]], // centroid -> (query position, code-space vector)
-    quant: Broadcast[(Array[Array[Double]], Array[Array[Array[Double]]])],
+    codec: PqCodec,
     val groupOf: Array[Int], // query position -> heap group
     groups: Int,
     heapSize: Int,
     idType: DataType,
     ascending: Boolean,
     ip: Boolean,
-    m: Int,
-    ksub: Int,
-    range: (Option[Double], Option[Double]),
-    scanned: LongAccumulator) extends Serializable {
+    range: (Option[Double], Option[Double])) extends Serializable {
 
   def heaps(): QueryHeaps = new QueryHeaps(groups, heapSize, idType, ascending)
 
@@ -568,30 +724,99 @@ private[index] final class AdcScan(
 
   final class Task {
     val heaps: QueryHeaps = AdcScan.this.heaps()
+    /** Index rows read (once per row, not per query). */
+    var scanned = 0L
     private val probes = byCentroid.value
-    private val (cs, cbs) = quant.value
-    private val luts = scala.collection.mutable.HashMap.empty[Int, Array[Double]]
+    private val (cs, cbs, _) = codec.quantizers.value
+    private val ksub = codec.ksub
+    private val luts = mutable.HashMap.empty[Int, Array[Double]]
     private var curCid = Integer.MIN_VALUE
 
-    /** One code row: `id` is its key's Catalyst value, `codes` its PQ codes. */
-    def add(cid: Int, id: Any, codes: ArrayData): Unit = {
-      scanned.add(1L) // code rows read (once per row, not per query)
+    private def lut(cid: Int, pos: Int, qv: Array[Float]): Array[Double] = {
       if (cid != curCid) { luts.clear(); curCid = cid }
+      luts.getOrElseUpdate(pos, IvfPqIndex.lutFor(qv, cs(cid), cbs, ksub, ip))
+    }
+
+    /** One code row of a probed list: `id` is its key's Catalyst value,
+      * `codes` its PQ codes (rows arrive sorted by centroid).
+      */
+    def add(cid: Int, id: Any, codes: ArrayData): Unit = {
+      scanned += 1
       val qs = probes.getOrElse(cid, null)
       if (qs != null) {
         var i = 0
         while (i < qs.length) {
           val (pos, qv) = qs(i)
-          val lut = luts.getOrElseUpdate(pos, IvfPqIndex.lutFor(qv, cs(cid), cbs, ksub, ip))
+          val t = lut(cid, pos, qv)
           var j = 0; var s = 0.0
-          while (j < m) { s += lut(j * ksub + codes.getInt(j)); j += 1 }
+          while (j < codec.m) { s += t(j * ksub + codes.getInt(j)); j += 1 }
           if (IvfPqIndex.inRange(s, range)) heaps.offer(groupOf(pos), s, id)
           i += 1
         }
       }
     }
+
+    /** Every index row of `block` in a probed list: version ≤ `through`
+      * and, with `keys`, an allowed key.
+      */
+    def scan(block: VectorStore.Block, keys: KeySet, through: Long): Unit =
+      probes.foreach { case (cid, qs) =>
+        block.list(cid).foreach { p =>
+          val row = block.listRow(p)
+          val id = block.key(row)
+          if (block.indexed(row, through) && (keys == null || keys.contains(id))) {
+            scanned += 1
+            var i = 0
+            while (i < qs.length) {
+              val (pos, qv) = qs(i)
+              val s = block.adc(p, lut(cid, pos, qv), ksub)
+              if (IvfPqIndex.inRange(s, range)) heaps.offer(groupOf(pos), s, id)
+              i += 1
+            }
+          }
+        }
+      }
+  }
+
+  /** One store block's share of a request: [[Task.scan]], its rows per
+    * group best first, then, with `queries` (raw vectors by position),
+    * each distinct (group, key) scored exactly at its first row: the key's
+    * rows in the block against every position of the group (`positions`),
+    * rows outer, positions inner.
+    */
+  def scanBlock(
+      block: VectorStore.Block,
+      keys: KeySet,
+      through: Long,
+      queries: Array[Array[Float]],
+      positions: Array[Array[Int]]): StoreHits = {
+    val t = task()
+    t.scan(block, keys, through)
+    val rows = (0 until groups).flatMap(t.heaps.sorted).map(_.asInstanceOf[UnsafeRow]).toArray
+    if (queries == null) return StoreHits(TopKBuffer.pack(rows), null, null, t.scanned)
+    val from = new Array[Int](rows.length + 1)
+    val exact = Array.newBuilder[Double]
+    val seen = mutable.HashSet.empty[(Int, Any)]
+    var n = 0
+    rows.indices.foreach { i =>
+      val (g, id) = (rows(i).getInt(3), rows(i).get(1, idType))
+      if (seen.add((g, id))) block.rowsOf(id).foreach { row =>
+        positions(g).foreach { p => exact += block.score(row, queries(p), ip); n += 1 }
+      }
+      from(i + 1) = n
+    }
+    StoreHits(TopKBuffer.pack(rows), from, exact.result(), t.scanned)
   }
 }
+
+/** A store task's result: its candidate rows ([[TopKBuffer.pack]]ed, each
+  * group's best first), row `i`'s exact scores at `from(i) until
+  * from(i + 1)` of `exact` (the scores of its (group, key) at the first
+  * row holding it, none at the others; both null without the re-rank),
+  * and the index rows it scanned.
+  */
+private[index] final case class StoreHits(
+    heaps: Array[Byte], from: Array[Int], exact: Array[Double], scanned: Long)
 
 /** Exact scoring kernel of the driver request paths: scores a stored row
   * of a [[VectorStore.Block]] against the query positions its key maps to

@@ -1,33 +1,48 @@
 package graft.index
 
-import scala.collection.mutable
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import scala.collection.mutable
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import scala.reflect.ClassTag
+
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
-/** A resident raw-vector store over the (key, vector) rows of `docs`: the
-  * reference's `MemoryRawVector` / `MmapRawVector`
-  * (vector/memory_raw_vector.h, vector/mmap_raw_vector.h), from which the
-  * IVFPQ re-rank fetches only its candidates' vectors by docid
-  * (gamma_index_ivfpq.cc:642-697) instead of reading the table.
+/** A resident store over the (key, vector) rows of `docs`: the reference's
+  * `MemoryRawVector` / `MmapRawVector` (vector/memory_raw_vector.h,
+  * vector/mmap_raw_vector.h), from which the IVFPQ re-rank and the exact
+  * fallback read their rows by docid (gamma_index_ivfpq.cc:642-697) instead
+  * of reading the table.
+  *
+  * With a [[PqCodec]], the store also holds the IVFPQ index over the same
+  * rows, as gamma keeps each doc's codes next to its raw vector: every
+  * row's coarse centroid and PQ codes, encoded with the index's quantizers
+  * while the block is built, and the rows grouped by centroid. An IVFPQ
+  * request then scans its probed lists with ADC and re-ranks its
+  * candidates exactly inside one task per block ([[foreach]]).
   *
   * Blocks are the partitions of `docs`'s scan, one [[VectorStore.Block]]
   * each (keys sorted, vectors packed), cached in Spark's block manager
-  * (`persist(MEMORY_AND_DISK)`, lineage kept: a lost block is recomputed
-  * from the scan on its next read). The first [[lookup]] builds them inside
-  * its own job, with no shuffle; every lookup probes every block with one
-  * broadcast of its keys.
+  * (`persist(MEMORY_AND_DISK)`, lineage kept: a lost block is recomputed,
+  * codes included, from the scan on its next read). The first job over
+  * the store builds them inside that job, with no shuffle; every job runs
+  * one task per block.
   *
-  * `docs` holds (key, vector) columns. Keys must be of a
+  * `docs` holds (key, vector) columns and, optionally, a third Long column:
+  * the row's version (the table's `_version`), which a scan compares with
+  * the version its index is built through. Keys must be of a
   * [[AllowedKeys.KeyTypes]] type and vectors float or double arrays
   * ([[serves]]); rows with a null key or vector are not stored. A store
-  * made with `cache = false` (one with no owner to [[release]] it) packs
-  * the blocks again on every lookup.
+  * nothing [[release]]s is unpersisted by Spark's ContextCleaner once it
+  * is unreachable.
   */
-private[graft] final class VectorStore(docs: DataFrame, cache: Boolean = true) {
+private[graft] final class VectorStore(docs: DataFrame, val codec: Option[PqCodec] = None) {
   import VectorStore.Block
 
   val keyType: DataType = docs.schema.head.dataType
@@ -45,43 +60,71 @@ private[graft] final class VectorStore(docs: DataFrame, cache: Boolean = true) {
 
   // both guarded by `this`; no job runs under the lock
   private var built: RDD[Block] = _
-  private var released = !cache
+  private var released = false
 
   private def blocks: RDD[Block] = synchronized {
     if (built == null) {
-      val (kt, float) = (keyType, vecIsFloat)
+      val (kt, float, versioned, pq) = (keyType, vecIsFloat, docs.schema.length > 2, codec.orNull)
       built = docs.queryExecution.toRdd
-        .mapPartitions(rows => Iterator(Block(rows, kt, float)))
+        .mapPartitions(rows => Iterator(Block(rows, kt, float, versioned, pq)))
         .setName(s"graft.VectorStore(${docs.columns.take(2).mkString(", ")})")
-      // a store released before its first lookup still answers, uncached
+      // a store released before its first job still answers, uncached
       if (!released) built.persist(StorageLevel.MEMORY_AND_DISK)
     }
     built
   }
 
-  /** Drops the cached blocks without waiting for a lookup in flight; a
-    * later lookup recomputes what it reads, uncached.
+  /** Drops the cached blocks without waiting for a job in flight; a later
+    * job recomputes what it reads, uncached.
     */
   def release(): Unit = {
     val rdd = synchronized { released = true; built }
     if (rdd != null) rdd.unpersist(blocking = false)
   }
 
-  /** One Spark job over every block: each task gets its block and all of
-    * `keys` (Catalyst values with a payload each, in `keys` order, one
-    * broadcast) and returns `f`'s result. Empty `keys` run no job.
+  /** One Spark job, one task per block: each task computes `f` of its
+    * block (never null), and the calling thread hands each result to
+    * `each` as its task ends (in no fixed order), so the driver holds the
+    * results `each` keeps plus those not yet handed over, not every
+    * task's at once.
     */
-  def lookup[P, R: scala.reflect.ClassTag](keys: Iterable[(Any, P)])(
+  def foreach[R: ClassTag](f: Block => R)(each: R => Unit): Unit = {
+    val rdd = blocks
+    val done = new LinkedBlockingQueue[R]()
+    try {
+      val job = sparkContext.submitJob(rdd, (it: Iterator[Block]) => f(it.next()),
+        rdd.partitions.indices, (_: Int, r: R) => done.put(r), ())
+      try {
+        var left = rdd.partitions.length
+        while (left > 0) {
+          val r = done.poll(50, TimeUnit.MILLISECONDS)
+          if (r != null) { each(r); left -= 1 }
+          // a failed job rethrows here; a finished one has queued every result
+          else if (job.isCompleted) Await.result(job, Duration.Inf)
+        }
+      } catch { case e: Throwable => job.cancel(); throw e }
+    }
+    // blocks a task cached after a release() that ran during this job
+    finally if (synchronized(released)) rdd.unpersist(blocking = false)
+  }
+
+  /** [[foreach]]'s results, in block order. */
+  def run[R: ClassTag](f: Block => R): Seq[R] = {
+    val out = mutable.ArrayBuffer.empty[(Int, R)]
+    foreach((b: Block) => (TaskContext.getPartitionId(), f(b)))(out += _)
+    out.sortBy(_._1).map(_._2).toSeq
+  }
+
+  /** [[run]] with `keys` (Catalyst values with a payload each, in `keys`
+    * order) in one broadcast: each task gets its block and all of `keys`.
+    * Empty `keys` run no job.
+    */
+  def lookup[P, R: ClassTag](keys: Iterable[(Any, P)])(
       f: (Block, Array[(Any, P)]) => R): Seq[R] = {
     if (keys.isEmpty) return Nil
-    val rdd = blocks
     val all = sparkContext.broadcast(keys.toArray)
-    try sparkContext.runJob(rdd, (it: Iterator[Block]) => f(it.next(), all.value)).toSeq
-    finally {
-      all.destroy()
-      // blocks a task cached after a release() that ran during this job
-      if (cache && synchronized(released)) rdd.unpersist(blocking = false)
-    }
+    try run(block => f(block, all.value))
+    finally all.destroy()
   }
 }
 
@@ -99,13 +142,30 @@ private[graft] object VectorStore {
   /** One partition's rows: keys sorted (so a key's rows are adjacent and
     * found by binary search), row `i`'s vector at
     * `offsets(i) until offsets(i + 1)` of `floats` (float vectors) or
-    * `doubles` (double vectors).
+    * `doubles` (double vectors), its version at `versions(i)` (null: no
+    * versions, every row is an index row).
+    *
+    * With a codec, the index part: list `c`'s entries are positions
+    * `lists(c) until lists(c + 1)`, entry `p` is row `listRows(p)` (rows in
+    * key order within a list) and its PQ codes are `m` values from
+    * `p * m` of `codes`, read as unsigned 16-bit (ksub ≤ 2^16, see
+    * [[PqCodec]]).
     */
   final class Block(
       keys: Array[AnyRef],
       offsets: Array[Int],
       floats: Array[Float],
-      doubles: Array[Double]) extends Serializable {
+      doubles: Array[Double],
+      versions: Array[Long],
+      lists: Array[Int],
+      listRows: Array[Int],
+      codes: Array[Short],
+      m: Int) extends Serializable {
+
+    def key(row: Int): AnyRef = keys(row)
+
+    /** Whether row `row` belongs to an index built through version `through`. */
+    def indexed(row: Int, through: Long): Boolean = versions == null || versions(row) <= through
 
     /** The rows whose key equals `key`. */
     def rowsOf(key: Any): Range = {
@@ -134,15 +194,37 @@ private[graft] object VectorStore {
     }
 
     @inline private def elem(j: Int): Double = if (floats != null) floats(j).toDouble else doubles(j)
+
+    /** The entry positions of list `c` (empty without a codec). */
+    def list(c: Int): Range =
+      if (lists == null || c < 0 || c + 1 >= lists.length) Range(0, 0)
+      else Range(lists(c), lists(c + 1))
+
+    /** The row of entry `p`. */
+    def listRow(p: Int): Int = listRows(p)
+
+    /** Entry `p`'s code in subspace `j`. */
+    def code(p: Int, j: Int): Int = codes(p * m + j) & 0xffff
+
+    /** Σ_j lut(j * ksub + code_j) of entry `p`, summed in subspace order. */
+    def adc(p: Int, lut: Array[Double], ksub: Int): Double = {
+      val base = p * m
+      var s = 0.0; var j = 0
+      while (j < m) { s += lut(j * ksub + (codes(base + j) & 0xffff)); j += 1 }
+      s
+    }
   }
 
   private[index] object Block {
-    /** Packs one partition of (key, vector) rows. */
+    /** Packs one partition of (key, vector[, version]) rows and, with a
+      * codec, encodes each row into its list.
+      */
     def apply(
         rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-        keyType: DataType, float: Boolean): Block = {
+        keyType: DataType, float: Boolean, versioned: Boolean, codec: PqCodec): Block = {
       val keys = mutable.ArrayBuffer.empty[AnyRef]
       val vecs = mutable.ArrayBuffer.empty[AnyRef]
+      val vers = mutable.ArrayBuilder.make[Long]
       rows.foreach { r =>
         if (!r.isNullAt(0) && !r.isNullAt(1)) {
           keys += (r.get(0, keyType) match {
@@ -150,6 +232,7 @@ private[graft] object VectorStore {
             case k             => k.asInstanceOf[AnyRef]
           })
           vecs += (if (float) r.getArray(1).toFloatArray() else r.getArray(1).toDoubleArray())
+          if (versioned) vers += r.getLong(2)
         }
       }
       val order = Array.range(0, keys.length).sortWith((a, b) => keyOrder.compare(keys(a), keys(b)) < 0)
@@ -158,7 +241,32 @@ private[graft] object VectorStore {
       val (floats, doubles) =
         if (float) (Array.concat(sorted.map(_.asInstanceOf[Array[Float]]): _*), null)
         else (null, Array.concat(sorted.map(_.asInstanceOf[Array[Double]]): _*))
-      new Block(order.map(keys), offsets, floats, doubles)
+      val versions = if (versioned) { val v = vers.result(); order.map(v) } else null
+      if (codec == null)
+        new Block(order.map(keys), offsets, floats, doubles, versions, null, null, null, 0)
+      else {
+        val encoded = sorted.map {
+          case v: Array[Float]  => codec.encode(v)
+          case v: Array[Double] => codec.encode(v.map(_.toFloat))
+        }
+        // counting sort of the rows by centroid, key order kept per list
+        val lists = new Array[Int](codec.ncent + 1)
+        encoded.foreach { case (c, _) => lists(c + 1) += 1 }
+        var c = 0
+        while (c < codec.ncent) { lists(c + 1) += lists(c); c += 1 }
+        val next = lists.clone()
+        val listRows = new Array[Int](encoded.length)
+        val m = codec.m
+        val codes = new Array[Short](encoded.length * m)
+        encoded.indices.foreach { row =>
+          val (cid, cs) = encoded(row)
+          val p = next(cid); next(cid) += 1
+          listRows(p) = row
+          var j = 0
+          while (j < m) { codes(p * m + j) = cs(j).toShort; j += 1 }
+        }
+        new Block(order.map(keys), offsets, floats, doubles, versions, lists, listRows, codes, m)
+      }
     }
   }
 }

@@ -88,7 +88,9 @@ object IndexCatalog {
     * persisted version (one small driver-side manifest read) and reloads
     * when a commit moved it — SQL INSERT/DELETE/UPDATE on the served
     * table is picked up on the next query instead of serving stale rows.
-    * A cached MISS is re-probed on a short interval (persisting an index
+    * An IVFPQ index serves the live rows written through its last build or
+    * refresh (`IncrementalIndexer.currentIndex`): a row written since is
+    * left out, not served stale, until the index is refreshed. A cached MISS is re-probed on a short interval (persisting an index
     * leaves the version untouched). Non-gamma relations stay cheap: two
     * fs.exists on first sight, then a map hit until the recheck interval.
     */

@@ -22,7 +22,8 @@ import graft.table.GammaTable
   *    vectors (R6 — the updated-vid queue, vector_manager.cc:355-380);
   *  - at query time, stale/deleted entries are anti-joined out of the
   *    index scan (the reference's bitmap `IsValid` check inside the scan,
-  *    T11/X2) and the not-yet-indexed tail is searched exactly and
+  *    T11/X2; IVFPQ tests each store row's `_version` against the build
+  *    version instead) and the not-yet-indexed tail is searched exactly and
   *    union-merged (the reference searches index + raw memory tail; V9
   *    brute-force fallback when no index exists).
   *
@@ -114,20 +115,28 @@ class IncrementalIndexer(
   private def invalidHorizon: Long = math.min(builtVersion, cleanedVersion)
 
   def status: String = table.meta.indexStatus
-  def currentIndex: Option[AnnIndex] = index
+
+  /** The index as a search binds it: an IVFPQ index reads the current
+    * table's store and serves its rows through the build version (the
+    * request path's index part, without the unindexed tail).
+    */
+  def currentIndex: Option[AnnIndex] = index.map {
+    case pq: IvfPqIndex => rebuilt(pq, pq.codes).asInstanceOf[IvfPqIndex].through(builtVersion)
+    case other          => other
+  }
 
   /** Same quantizers, different code lists — used by the stale-filter,
-    * refresh, compaction, and load paths. The IVFPQ re-rank source is the
-    * CURRENT doc table and its resident vector store, so re-ranked scores
-    * always reflect live vectors; the quantizer broadcast carries over.
+    * refresh, compaction, and load paths. An IVFPQ index reads the CURRENT
+    * doc table's resident store, which holds its codes, so it always scans
+    * and re-ranks live rows; the quantizer broadcast carries over.
     */
   private def rebuilt(proto: AnnIndex, data: DataFrame): AnnIndex = proto match {
     case f: IvfFlatIndex =>
       new IvfFlatIndex(spark, data, key, vecCol, f.centers, params)
     case p: IvfPqIndex =>
-      new IvfPqIndex(spark, data, table.docs.select(col(key), col(vecCol)),
-        key, vecCol, p.centers, p.codebooks, p.params, p.rotation,
-        quantizers = Some(p.quantBroadcast), store = Some(table.vectorStore(vecCol)))
+      new IvfPqIndex(spark, data, table.docs, key, vecCol, p.centers, p.codebooks, p.params,
+        p.rotation, sharedCodec = Some(p.codec),
+        store = Some(table.vectorStore(vecCol, Some(p.codec))))
     case h: HnswIndex =>
       new HnswIndex(spark, data, key, vecCol, params, h.excluded)
     case b: BinaryIvfIndex =>
@@ -189,10 +198,8 @@ class IncrementalIndexer(
   /** EWMA of measured/predicted scanned rows (clamped to [0.01, 100]) —
     * corrects the uniform-volume probe-cost model under list skew. Each
     * unfiltered single-query IVFPQ search folds its own scan in right
-    * after the scan runs ([[foldScanFeedback]]). Accumulator counts
-    * include any re-executed tasks (Spark only de-duplicates accumulators
-    * inside actions), which at worst nudges the bound conservative — the
-    * safe direction.
+    * after the scan runs ([[foldScanFeedback]]). The count travels in the
+    * scan tasks' results, so each successful task counts once.
     */
   @volatile private[graft] var rowCalibration: Double = 1.0
 
@@ -205,8 +212,8 @@ class IncrementalIndexer(
   /** Folds the scan `pq` just ran into [[rowCalibration]] against the
     * uniform-volume prediction for its `effNprobe` lists. Only unfiltered
     * single-query probes feed back: an allowed set shrinks the measured
-    * scan by the filter's selectivity, and a batch's accumulator measures
-    * the UNION of its probed lists, up to the batch size times a
+    * scan by the filter's selectivity, and a batch's count measures the
+    * UNION of its probed lists, up to the batch size times a
     * per-query prediction; either would mis-teach the volume model (the
     * serving point query is the case the calibration targets anyway).
     */
@@ -216,16 +223,9 @@ class IncrementalIndexer(
       math.min(effNprobe.getOrElse(params.nprobe).toLong, pq.centers.length.toLong))
     val scanned = pq.lastScannedRows
     measuredScanRows = scanned
-    // clamp to the index's total rows: task retries and speculative
-    // duplicates re-run the scan into the SAME accumulator (accumulators
-    // in transformations are best-effort), and a probe can never truly
-    // read more than the whole code table — the clamp bounds that
-    // inflation at "full scan", the conservative direction, and the EWMA
-    // washes residual skew out over subsequent clean searches
-    val m = math.min(scanned, total)
-    if (m > 0 && pred > 0) calibLock.synchronized {
+    if (scanned > 0 && pred > 0) calibLock.synchronized {
       rowCalibration = math.max(0.01, math.min(100.0,
-        0.5 * rowCalibration + 0.5 * (m.toDouble / pred)))
+        0.5 * rowCalibration + 0.5 * (scanned.toDouble / pred)))
     }
   }
 
@@ -258,6 +258,14 @@ class IncrementalIndexer(
     case b: BinaryIvfIndex => b.withListSizes(cachedListSizes(b.data, b.centroids.length))
     case h: HnswIndex      => h.withSegmentAvg(cachedSegmentAvg(h.graphs))
     case other => other
+  }
+
+  /** The table's resident store of this field; an IVFPQ index's holds its
+    * codes, so its exact fallback and its scans share one store.
+    */
+  private def vectorStore: graft.index.VectorStore = index match {
+    case Some(p: IvfPqIndex) => table.vectorStore(vecCol, Some(p.codec))
+    case _                   => table.vectorStore(vecCol)
   }
 
   private def fs = new Path(indexRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -683,33 +691,38 @@ class IncrementalIndexer(
     *    the semi-join shuffles (or AQE re-plans it), instead of forcing a
     *    near-table-size set through the driver.
     *
-    * Spark jobs per request on a persisted IVFPQ index with no bucket
-    * changed since the build, when the caller
+    * Spark jobs per IVFPQ request when the caller
     * ([[graft.table.GammaTable.search]]) hands over the allowed keys its
     * keys job collected; the cached per-list stats cost one more job once
-    * per lists version, and a batch above
+    * per lists version, an unindexed tail (a bucket changed since the
+    * build) one more, and a batch above
     * [[IvfPqIndex.MaxBroadcastCandidates]] candidates repeats the index
-    * jobs once per whole-qid chunk:
-    *  - unfiltered: 2, the probed-list scan with per-task candidate heaps
-    *    and the exact re-rank, which looks the candidates up in the
-    *    table's resident vector store (no Parquet row is read), each
-    *    merged on the driver (1 without `has_rank`);
-    *  - moderate: the keys job plus the same 2 — the keys ride a
-    *    `SparkContext.broadcast` and each code row is tested against them
-    *    inside the scan, so no job reads the allowed frame again;
+    * job once per whole-qid chunk:
+    *  - unfiltered: 1, over the table's resident store, whose blocks hold
+    *    each live row's vector, `_version`, centroid and PQ codes; each
+    *    task scans its block's probed lists with ADC over the rows with
+    *    `_version` ≤ the build version (the clean lists minus the
+    *    updated-after-build and tombstoned keys, so nothing is
+    *    anti-joined) and re-ranks its candidates from the same block; the
+    *    driver merges (no Parquet row is read);
+    *  - moderate: the keys job plus the same 1 — the keys ride a
+    *    `SparkContext.broadcast` and each index row is tested against them
+    *    inside the scan;
     *  - few survivors: the keys job plus 1, which looks the allowed keys up
     *    in the same store and scores them, with k per query per task merged
     *    on the driver; no shuffle.
     * The first request that needs the store after a commit, or on a
-    * freshly loaded table, builds it inside its own lookup job: no extra
-    * job, no shuffle (see [[graft.table.GammaTable.vectorStore]]).
+    * freshly loaded table, builds it inside its own job, encoding every
+    * live row: no extra job, no shuffle (see
+    * [[graft.table.GammaTable.vectorStore]]).
     * The keys job (here, or the caller's) collects keys only for a model
     * that tests them ([[allowedKeyBound]]: IVFPQ as above, HNSW in its
     * walk); for IVFFLAT and BINARYIVF it only counts, and their scans and
     * exact fallback semi-join the allowed frame. Without collected keys
-    * (those models, or a set above `broadcastMaxKeys`) the IVFPQ job 1
-    * semi-joins the frame instead of testing keys, still merging on the
-    * driver, and the exact fallback runs the `Knn.flatSearch` plan.
+    * (those models, or a set above `broadcastMaxKeys`) IVFPQ scans its
+    * lists minus the stale keys, semi-joined with the allowed frame, and
+    * re-ranks in a second job over the store, and the exact fallback runs
+    * the `Knn.flatSearch` plan.
     *
     * Every tier runs its search here and returns its hits as a local
     * relation ([[searchHits]]), so collecting the result runs no job.
@@ -760,7 +773,7 @@ class IncrementalIndexer(
     // binary fields store packed bytes; their queries ride the float
     // surface as byte values (BinaryIvfIndex adapter) — the exact-scan
     // paths need a BinaryType query column for the hamming kernel
-    val qDf =
+    lazy val qDf =
       if (retrievalType.equalsIgnoreCase("BINARYIVF"))
         queries.map { case (i, v) => (i, BinaryIvfIndex.floatsToBytes(v)) }
           .toDF("qid", "qvec")
@@ -801,7 +814,7 @@ class IncrementalIndexer(
           rowCalibration)
       }.getOrElse(0L))
     val broadcastMax = AllowedKeys.broadcastMax(spark)
-    val allowedHinted = allowed.map { a =>
+    lazy val allowedHinted = allowed.map { a =>
       val ids = a.frame.toDF(key)
       a.copy(frame = if (aCount <= broadcastMax) org.apache.spark.sql.functions.broadcast(ids) else ids)
     }
@@ -829,11 +842,13 @@ class IncrementalIndexer(
         // job looks the allowed rows up in the table's vector store and
         // the task heaps merge on the driver; otherwise the exact plan.
         logTier("exact-fallback")
-        ExactRerank.allowedOnly(table.vectorStore(vecCol), queries, k, params.metric, allowed.get,
+        ExactRerank.allowedOnly(vectorStore, queries, k, params.metric, allowed.get,
           (minScore, maxScore)).getOrElse(LocalHits.collect(
           Knn.flatSearch(restrict(table.docs), key, vecCol, qDf, "qid", "qvec", k, params.metric,
             minScore = minScore, maxScore = maxScore)))
       case Some(idx) =>
+        // one build version for the index scan and the tail
+        val built = builtVersion
         // ids whose index entry is stale (updated after build) or dead —
         // such rows only live in buckets rewritten since the horizon, so
         // the scan is O(churned buckets), not O(table). (Keys whose
@@ -841,10 +856,10 @@ class IncrementalIndexer(
         // manifest tells when no bucket changed: then there is nothing to
         // exclude and no unindexed tail, and neither plan is built.
         def changedSince(v: Long) = table.meta.bucketVersions.values.exists(_ > v)
-        val invalid =
+        lazy val invalid =
           if (!changedSince(invalidHorizon)) None
           else Some(table.docsChangedSince(invalidHorizon)
-            .filter(col(VersionCol) > builtVersion || col(DeletedCol))
+            .filter(col(VersionCol) > built || col(DeletedCol))
             .select(col(key)))
         // per-list stats only matter when the probe is PARTIAL — a full
         // probe reads every list regardless, so skip the (cached) stats
@@ -856,8 +871,8 @@ class IncrementalIndexer(
         // ONE shared exclusion surface (AnnIndex.excluding, X2/T11): list
         // models anti-join their lists, HNSW folds into its standing
         // excluded set (graph segments are opaque — exclusion happens at
-        // result admission). rebuilt() first so the IVFPQ re-rank source
-        // re-binds the CURRENT doc table.
+        // result admission). rebuilt() first so the IVFPQ index reads the
+        // CURRENT doc table's store.
         val freshIdx = rebuilt(idx, listsOf(idx))
         val statsIdx = if (partialProbe) withListStats(freshIdx) else freshIdx
         // the request's PRE-widening probe base (override or configured
@@ -879,7 +894,16 @@ class IncrementalIndexer(
             recallNum = recallNum.getOrElse(statsIdx.params.recallNum),
             hasRank = hasRank.getOrElse(statsIdx.params.hasRank)))
         lastProbeBase = tunedIdx.params.nprobe
-        val cleanIdx = invalid.fold(tunedIdx)(tunedIdx.excluding)
+        // an IVFPQ store scan serves the rows of _version <= built: every
+        // later or tombstoned row is exactly an `invalid` one, so it
+        // anti-joins nothing. An IVFPQ allowed frame scans the lists
+        // minus `invalid`, on the same store.
+        val cleanIdx = tunedIdx match {
+          case pq: IvfPqIndex if pq.scansStore(allowed) => pq.through(built)
+          case pq: IvfPqIndex =>
+            invalid.fold(pq)(ids => pq.withCodes(pq.codes.join(ids, Seq(key), "left_anti")))
+          case other => invalid.fold(other)(other.excluding)
+        }
         // inverse-selectivity widening (the reference's recall_num
         // over-fetch); maxDocid is a free upper bound on table size
         // (deletes only make it conservative)
@@ -905,19 +929,20 @@ class IncrementalIndexer(
           if (hnswHuge) (None, IncrementalIndexer.hnswHugeFetchK(k, total, aCount))
           else (allowedHinted, k)
         val fromTail =
-          if (!changedSince(builtVersion)) None
+          if (!changedSince(built)) None
           else Some(Knn.flatSearch(
-            restrict(table.docsChangedSince(builtVersion)
-              .filter(!col(DeletedCol) && col(VersionCol) > builtVersion)),
+            restrict(table.docsChangedSince(built)
+              .filter(!col(DeletedCol) && col(VersionCol) > built)),
             key, vecCol, qDf, "qid", "qvec", k, params.metric,
             minScore = minScore, maxScore = maxScore))
         val asc = Metric.ascending(params.metric)
         cleanIdx match {
           case pq: IvfPqIndex =>
-            // the two-job IVFPQ search (collected keys tested inside job
-            // 1); the merge with the tail (one more job) runs on the
-            // driver too
-            val hits = pq.searchHits(queries, fetchK, effNprobe, pushIds, minScore, maxScore)
+            // one job over the store (collected keys tested in its scan),
+            // or two over the lists for an allowed frame; the merge with
+            // the tail (one more job) runs on the driver too
+            val hits = pq.searchHits(queries, fetchK, effNprobe,
+              if (pq.scansStore(allowed)) allowed else pushIds, minScore, maxScore)
             if (pushIds.isEmpty && queries.size == 1) foldScanFeedback(pq, effNprobe)
             fromTail.fold(hits)(t => (hits ++ LocalHits.collect(t)).topK(k, asc))
           case _ =>
@@ -1149,11 +1174,10 @@ object IncrementalIndexer {
     ix.index = Some(rt.toUpperCase(java.util.Locale.ROOT) match {
       case "IVFPQ" =>
         val (centers, codebooks, rotation) = IvfPqIndex.loadQuantizers(spark, root)
-        new IvfPqIndex(spark, ix.persistedData(),
-          table.docs.select(org.apache.spark.sql.functions.col(key),
-            org.apache.spark.sql.functions.col(vecCol)),
-          key, vecCol, centers, codebooks, params, rotation,
-          store = Some(table.vectorStore(vecCol)))
+        val codec = graft.index.PqCodec(spark, centers, codebooks, rotation, params.metric)
+        new IvfPqIndex(spark, ix.persistedData(), table.docs, key, vecCol, centers, codebooks,
+          params, rotation, sharedCodec = Some(codec),
+          store = Some(table.vectorStore(vecCol, Some(codec))))
       case "HNSW" =>
         // restore the standing exclusion set: entries of keys purged from
         // the table live on in the immutable graph segments, and after the

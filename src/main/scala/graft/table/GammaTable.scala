@@ -84,12 +84,16 @@ case class TableMeta(
   * [[vectorStore]]): the live (key, vector) rows on the decoded float
   * surface (INT8-stored fields decoded once), cached in Spark's block
   * manager and looked up by key, so a request reads its candidates'
-  * blocks instead of the table's files. The first request after a commit
-  * (or on a freshly loaded handle) builds it inside its own lookup job,
-  * with no shuffle; the commit unpersists the previous manifest's blocks. Memory: per live
-  * row, the vector (4 B a component for float, 8 B for double) plus its
-  * key (about 24 B for a long key, more for a string) and a 4 B offset,
-  * spilling to executor disk under memory pressure (`MEMORY_AND_DISK`).
+  * blocks instead of the table's files. An IVFPQ field's store also holds
+  * the index: each row's version, coarse centroid and PQ codes, so an
+  * IVFPQ request scans and re-ranks in one job over it. The first request
+  * after a commit (or on a freshly loaded handle) builds it inside its own
+  * job, with no shuffle; the commit unpersists the previous manifest's
+  * blocks. Memory: per live row, the vector (4 B a component for float,
+  * 8 B for double) plus its key (about 24 B for a long key, more for a
+  * string) and a 4 B offset; for IVFPQ, 8 B of version, 4 B of list entry
+  * and 2 B per subspace code. It spills to
+  * executor disk under memory pressure (`MEMORY_AND_DISK`).
   */
 class GammaTable private (
     val spark: SparkSession,
@@ -242,19 +246,26 @@ class GammaTable private (
   private val storesLock = new Object
 
   /** The resident vector store of `field` over the current manifest's live
-    * docs; built by its first lookup. A store made for an older manifest
-    * is released (its blocks unpersisted) when the manifest changes: by
-    * [[writeMeta]] on every commit, or here.
+    * docs; built by its first job. With `codec` (an IVFPQ index's
+    * quantizers) the store also holds each row's `_version`, centroid and
+    * PQ codes, encoded with that codec; without, any store of the field
+    * serves. A store made for an older manifest, or with another codec, is
+    * released (its blocks unpersisted) when replaced: by [[writeMeta]] on
+    * every commit, or here.
     */
-  private[graft] def vectorStore(field: String): graft.index.VectorStore = {
+  private[graft] def vectorStore(
+      field: String, codec: Option[graft.index.PqCodec] = None): graft.index.VectorStore = {
     val m = meta0
     val (store, stale) = storesLock.synchronized {
       val stale = if (stores != null && (stores._1 ne m)) takeStores() else Nil
       if (stores == null) stores = (m, Map.empty)
-      val s = stores._2.getOrElse(field,
-        new graft.index.VectorStore(docs.select(col(m.keyField), col(field))))
+      val held = stores._2.get(field)
+      val s = held.filter(h => codec.forall(c => h.codec.exists(_ eq c))).getOrElse {
+        val cols = Seq(col(m.keyField), col(field)) ++ codec.map(_ => col(VersionCol))
+        new graft.index.VectorStore(docs.select(cols: _*), codec)
+      }
       stores = (m, stores._2 + (field -> s))
-      (s, stale)
+      (s, stale ++ held.filter(_ ne s))
     }
     stale.foreach(_.release())
     store

@@ -127,10 +127,10 @@ class JobCountSpec extends GraftSuite {
     assert(hits.count() === 5)
   }
 
-  test("persisted IVFPQ point and batch requests run two jobs and no shuffle") {
-    // job 1: probed-list scan with per-task candidate heaps merged on the
-    // driver; job 2: exact re-rank of the candidates looked up in the
-    // table's resident vector store, same shape
+  test("persisted IVFPQ point and batch requests run one job and no shuffle") {
+    // one job over the table's resident store: each task scans its block's
+    // probed lists with ADC and re-ranks its candidates from the same
+    // block; the driver merges the task results
     val root = tmp()
     GammaTable.create(spark, root, "jpq", "_id", docTable(),
       Seq(VectorFieldDef("vec", 64, "L2", "IVFPQ")), nBuckets = 4)
@@ -144,18 +144,24 @@ class JobCountSpec extends GraftSuite {
       run() // the per-list stats job runs once per lists version
       val (rows, n) = jobsDuring(run())
       assert(rows.length === 10 * vq.batch.size)
-      assert(n === 2, s"${vq.batch.size}-vector request ran $n jobs: " +
+      assert(n === 1, s"${vq.batch.size}-vector request ran $n jobs: " +
         lastJobSites.toArray.mkString("; "))
       assert(lastShuffleBytes.get === 0L)
-      // the re-rank reads one cached store block per task and no Parquet
-      // row (a cached block counts as one input record)
-      val rerank = lastJobs.filter(_.site.contains("VectorStore"))
-      assert(rerank.size === 1, lastJobs)
-      assert(rerank.head.tasks > 0 && rerank.head.recordsRead === rerank.head.tasks, lastJobs)
+      // the job reads one cached store block per task and no Parquet row
+      // (a cached block counts as one input record), one task per block at
+      // most
+      val Seq(job) = lastJobs
+      assert(job.site.contains("VectorStore"), lastJobs)
+      assert(job.tasks > 0 && job.recordsRead === job.tasks, lastJobs)
+      val blocks = spark.sparkContext.getPersistentRDDs.values
+        .filter(_.name == "graft.VectorStore(_id, vec)").maxBy(_.id).getNumPartitions
+      assert(job.tasks <= blocks, lastJobs)
     }
   }
 
   test("the first IVFPQ search after a commit builds the vector store inside its re-rank job") {
+    // the build encodes every live row into its list inside the request's
+    // one store job: no extra job and no shuffle
     val root = tmp()
     val t = GammaTable.create(spark, root, "jvs", "_id", docTable(),
       Seq(VectorFieldDef("vec", 64, "L2", "IVFPQ")), nBuckets = 4)
@@ -185,10 +191,10 @@ class JobCountSpec extends GraftSuite {
 
   test("persisted IVFPQ filtered requests: one keys job plus the scan jobs, no shuffle") {
     // the keys job counts the filtered key scan and brings the keys to the
-    // driver; the widened-probe tier then tests them inside the probed-list
-    // scan (+ the re-rank scan), and the exact fallback scores the allowed
-    // rows in one scan of the live table. Both key types: the keys ride
-    // the scans as their own type.
+    // driver; the widened-probe tier then tests them inside the one store
+    // job (ADC scan and re-rank), and the exact fallback looks the allowed
+    // rows up in the same store. Both key types: the keys ride the scans
+    // as their own type.
     for (keyType <- Seq("string", "long")) {
       val root = tmp()
       GammaTable.create(spark, root, "jpqf", "_id", docTable(keyType),
@@ -199,7 +205,7 @@ class JobCountSpec extends GraftSuite {
       val vecs = docTable().select("vec").as[Array[Float]].take(64).toSeq
       val filter = Seq(RangeFilter("p_size", Some(1), Some(40)))
       // (exact-fallback rows conf, job bound): 0 disables the fallback
-      for ((fallbackRows, bound) <- Seq(Some("0") -> 3, None -> 2);
+      for ((fallbackRows, bound) <- Seq(Some("0") -> 2, None -> 2);
            vq <- Seq(VecQuery("vec", vecs.head), VecQuery("vec", vectors = vecs))) {
         fallbackRows.foreach(spark.conf.set("spark.graft.filter.exactFallbackRows", _))
         try {
@@ -227,10 +233,11 @@ class JobCountSpec extends GraftSuite {
     }
   }
 
-  test("a standalone IVFPQ search and its SQL rewrite run two jobs and no shuffle") {
-    // the one IVFPQ search: probed-list scan and re-rank, each merged on
-    // the driver; the SQL rewrite runs the same search and its hits come
-    // back as a local relation
+  test("a standalone IVFPQ search and its SQL rewrite run one job and no shuffle") {
+    // the one IVFPQ search: one job over the index's own store (built by
+    // the first search, cached for the index's lifetime), merged on the
+    // driver; the SQL rewrite runs the same search and its hits come back
+    // as a local relation
     val path = s"$sf0/embeddings.parquet"
     val emb = spark.read.parquet(path)
     val idx = graft.index.IndexRegistry.build("IVFPQ", spark, emb, "vec_id", "embedding",
@@ -238,7 +245,7 @@ class JobCountSpec extends GraftSuite {
     val qvec = emb.filter($"vec_id" === 0).select("embedding").as[Array[Float]].head()
     val (rows, n) = jobsDuring(idx.search(Seq((0L, qvec)), 10).select("id", "score").collect())
     assert(rows.length === 10)
-    assert(n === 2, s"search ran $n jobs: " + lastJobSites.toArray.mkString("; "))
+    assert(n === 1, s"search ran $n jobs: " + lastJobSites.toArray.mkString("; "))
     assert(lastShuffleBytes.get === 0L)
 
     graft.plans.AnnRewrite.install(spark)
@@ -251,7 +258,7 @@ class JobCountSpec extends GraftSuite {
       val df = spark.sql(s"SELECT vec_id, l2_sq(embedding, $qLit) AS score " +
         "FROM jc_ivfpq ORDER BY score LIMIT 10")
       val (sqlRows, m) = jobsDuring(df.collect())
-      assert(m === 2, s"SQL ran $m jobs: " + lastJobSites.toArray.mkString("; ") +
+      assert(m === 1, s"SQL ran $m jobs: " + lastJobSites.toArray.mkString("; ") +
         "\n" + df.queryExecution.executedPlan)
       assert(lastShuffleBytes.get === 0L)
       assert(sqlRows.map(r => (r.getLong(0), r.getDouble(1))).toSeq ===

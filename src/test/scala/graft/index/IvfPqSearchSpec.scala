@@ -11,10 +11,11 @@ import graft.functions.pq_adc
 import graft.operators.{Knn, TopK}
 import graft.table.{GammaTable, VectorFieldDef}
 
-/** The IVFPQ search (two Spark jobs: per-task heaps merged on the driver,
-  * see `IvfPqIndex.searchHits`) must return exactly the rows of Spark SQL
-  * plans computing the same answer: same ids, bit-equal scores, same order
-  * per query.
+/** The IVFPQ search (one Spark job over the resident store, per-task
+  * heaps and exact scores merged on the driver, see
+  * `IvfPqIndex.searchHits`) must return exactly the rows of Spark SQL plans
+  * computing the same answer: same ids, bit-equal scores, same order per
+  * query; and the store's index rows must be the indexer's clean lists.
   */
 class IvfPqSearchSpec extends GraftSuite {
   import spark.implicits._
@@ -131,14 +132,16 @@ class IvfPqSearchSpec extends GraftSuite {
     */
   private def oracle(
       pq: IvfPqIndex, qs: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
-      allowed: Option[DataFrame], range: (Option[Double], Option[Double])): DataFrame = {
+      allowed: Option[DataFrame], range: (Option[Double], Option[Double]),
+      lists: Option[DataFrame] = None, vectors: DataFrame = docsLong): DataFrame = {
     val metric = pq.params.metric
     val asc = Metric.ascending(metric)
     val ksub = pq.codebooks.map(_.length).max
     val luts = for ((qid, v) <- qs; c <- Ivf.rankedCentroids(pq.centers, v, metric).take(nprobe))
       yield (qid, c, IvfPqIndex.lutFor(v, pq.centers(c), pq.codebooks, ksub,
         metric == Metric.InnerProduct).toSeq)
-    val codes = allowed.fold(pq.codes)(a => pq.codes.join(a, Seq("id"), "left_semi"))
+    val all = lists.getOrElse(pq.codes)
+    val codes = allowed.fold(all)(a => all.join(a, Seq("id"), "left_semi"))
     val adc = codes.join(luts.toDF("qid", "centroid_id", "lut"), Seq("centroid_id"))
       .select($"qid", $"id", pq_adc($"pq_codes", $"lut").as("score"))
     def inRange(df: DataFrame) =
@@ -148,7 +151,7 @@ class IvfPqSearchSpec extends GraftSuite {
       val cands = TopK.perGroup(adc, "qid", "score", asc, math.max(pq.params.recallNum, k),
         Seq("id"))
       val exact = cands.select("qid", "id")
-        .join(docsLong.select("id", "vec"), Seq("id"))
+        .join(vectors.select("id", "vec"), Seq("id"))
         .join(qs.map { case (i, v) => (i, v.toSeq) }.toDF("qid", "qvec"), Seq("qid"))
         .select($"qid", $"id", Knn.score(metric, $"vec", $"qvec").as("score"))
       TopK.perGroup(inRange(exact), "qid", "score", asc, k, Seq("id"))
@@ -160,7 +163,11 @@ class IvfPqSearchSpec extends GraftSuite {
       for (metric <- Seq(Metric.L2, Metric.InnerProduct)) {
         val built = IvfPqIndex.build(spark, docsLong, "id", "vec",
           IndexParams(metric = metric, ncentroids = 8, nprobe = 2, nsubvector = 8, recallNum = 30))
-        val qs = batch.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+        // qids in batch order, and out of order and repeated: a qid's
+        // positions share one heap, so a task can keep a key once per
+        // position and each copy must count as the oracle counts it
+        val batches = Seq(batch.indices.map(_.toLong), Seq(3L, 1L, 3L, 2L, 1L, 0L, 4L))
+          .map(_.zip(batch))
         val frame = docsLong.filter($"tag" =!= 2).select("id")
         // the allowed set semi-joined into the probe, or its keys tested on
         // each code row inside the scan (the filtered request path)
@@ -168,7 +175,7 @@ class IvfPqSearchSpec extends GraftSuite {
           None,
           Some(AllowedKeys(broadcast(frame), frame.count(), None)),
           Some(AllowedKeys.collect(frame, Long.MaxValue)))
-        for (hasRank <- Seq(true, false); allowed <- allowedCases) {
+        for (qs <- batches; hasRank <- Seq(true, false); allowed <- allowedCases) {
           val pq = built.withParams(built.params.copy(hasRank = hasRank)).asInstanceOf[IvfPqIndex]
           val probedRows = {
             val probed = qs.flatMap(q => Ivf.rankedCentroids(pq.centers, q._2, metric).take(2))
@@ -181,8 +188,8 @@ class IvfPqSearchSpec extends GraftSuite {
           for (range <- Seq((None, None), (Some(fourth), None))) {
             val got = pq.searchHits(qs, 10, None, allowed, range._1, range._2)
             val want = ranked(oracle(pq, qs, 10, 2, allowed.map(_ => frame), range))
-            val what = s"$metric hasRank=$hasRank keys=${allowed.map(_.packed.isDefined)} " +
-              s"range=$range"
+            val what = s"$metric qids=${qs.map(_._1)} hasRank=$hasRank " +
+              s"keys=${allowed.map(_.packed.isDefined)} range=$range"
             assert(ranked(got.toDF(spark)) === want, what)
             assert(want.values.map(_.size).sum > 0, what)
             // job 1 read each allowed code row of the probed lists once
@@ -190,6 +197,80 @@ class IvfPqSearchSpec extends GraftSuite {
           }
         }
       }
+    }
+  }
+
+  test("codebooks over 256 entries: the store's int codes give the oracle's hits") {
+    withConf("spark.graft.ivf.adaptiveProbe", "false") {
+      // nbits 9 over 520 rows: 512-entry codebooks, past a byte per code
+      val built = IvfPqIndex.build(spark, docsLong, "id", "vec",
+        IndexParams(ncentroids = 8, nprobe = 2, nsubvector = 8, nbits = 9, recallNum = 30))
+      assert(built.codec.ksub > 256)
+      val qs = batch.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      for (hasRank <- Seq(true, false)) {
+        val pq = built.withParams(built.params.copy(hasRank = hasRank)).asInstanceOf[IvfPqIndex]
+        val got = pq.searchHits(qs, 10, None, None, None, None)
+        assert(ranked(got.toDF(spark)) === ranked(oracle(pq, qs, 10, 2, None, (None, None))),
+          s"hasRank=$hasRank")
+      }
+    }
+  }
+
+  test("the store's index rows are the clean lists through writes, refresh, compaction and load") {
+    // a row takes part in the store's ADC scan iff its _version is at most
+    // the indexer's build version; the lists it replaces are the persisted
+    // lists minus every key updated after the build or tombstoned
+    withConf("spark.graft.ivf.adaptiveProbe", "false") {
+      val root = tmp()
+      var t = GammaTable.create(spark, root, "pqv", "id", docsLong,
+        Seq(VectorFieldDef("vec", 64, "L2", "IVFPQ")), nBuckets = 4)
+      t.buildIndex("vec", IndexParams(ncentroids = Ncent, nprobe = 2, nsubvector = 8,
+        recallNum = 30), persist = true, retrievalType = "IVFPQ")
+      val qs = batch.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      def check(step: String): Unit = {
+        val ix = t.attachedIndex("vec").get
+        val built = ix.indexedThroughVersion
+        // bound as the request path binds it: the current table's store,
+        // rows through the build version
+        val pq = ix.currentIndex.get.asInstanceOf[IvfPqIndex]
+        assert(pq.indexedThrough === built, step)
+        val store = t.vectorStore("vec", Some(pq.codec))
+        assert(pq.vectors eq store, step)
+        val (m, ncent) = (pq.codebooks.length, pq.centers.length)
+        val stored = store.run { b =>
+          (0 until ncent).flatMap { c =>
+            b.list(c).map(p => (b.listRow(p), p)).collect { case (row, p) if b.indexed(row, built) =>
+              (b.key(row).asInstanceOf[java.lang.Long].longValue, c, (0 until m).map(b.code(p, _)))
+            }
+          }.toArray
+        }.flatten
+        val invalid = t.allDocs.filter($"_version" > built || $"_deleted").select("id")
+        val clean = pq.codes.join(invalid, Seq("id"), "left_anti")
+        val want = clean.select($"id", $"centroid_id".cast("int"), $"pq_codes").collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2))).toSeq
+        assert(stored.sortBy(_._1) === want.sortBy(_._1), step)
+        val allowed = t.docs.filter($"tag" =!= 2).select("id")
+        for (a <- Seq(None, Some(AllowedKeys.collect(allowed, Long.MaxValue)))) {
+          val got = pq.searchHits(qs, 10, None, a, None, None)
+          val oracleRows = ranked(oracle(pq, qs, 10, 2, a.map(_ => allowed), (None, None),
+            Some(clean), t.docs))
+          assert(ranked(got.toDF(spark)) === oracleRows, s"$step, allowed keys ${a.isDefined}")
+          assert(oracleRows.values.map(_.size).sum === 10 * oracleRows.size, step)
+        }
+      }
+      check("build")
+      t.addOrUpdate(docsLong.filter($"id".between(100, 109)).withColumn("vec", typedLit(batch(1).toSeq)))
+      check("an upsert that changes vectors")
+      t.addOrUpdate(docsLong.filter($"id".between(200, 209)).select($"id", ($"tag" + 1).as("tag")))
+      check("an upsert that changes only a scalar")
+      t.delete(docsLong.filter($"id" % 2 === 0 && $"id" < 400).select("id"))
+      check("delete")
+      t.attachedIndex("vec").get.refresh()
+      check("refresh")
+      assert(t.compactIfNeeded(0.3).nonEmpty)
+      check("compactIfNeeded")
+      t = GammaTable.load(spark, root)
+      check("load")
     }
   }
 

@@ -18,8 +18,8 @@ import graft.table.{GammaTable, VectorFieldDef}
 /** The resident vector store (see `VectorStore`): the re-rank and the exact
   * fallback it serves must return exactly the rows of `Knn.flatSearch` +
   * `TopK.perGroup` over the live table (same ids, bit-equal scores, same
-  * order per query), a commit must replace it, and lost blocks must come
-  * back from lineage.
+  * order per query), a commit must replace it, and lost blocks, IVFPQ
+  * codes included, must come back from lineage.
   */
 class VectorStoreSpec extends GraftSuite {
   import spark.implicits._
@@ -150,10 +150,30 @@ class VectorStoreSpec extends GraftSuite {
     assert(rerankTop.head === "3" && !rerankTop.contains("4"), rerankTop)
   }
 
+  /** The index rows of `t`'s IVFPQ store: (key, centroid, codes), sorted. */
+  private def storeCodes(t: GammaTable): Seq[(String, Int, Seq[Int])] = {
+    val pq = t.attachedIndex("vec").get.currentIndex.get.asInstanceOf[IvfPqIndex]
+    val (m, ncent) = (pq.codebooks.length, pq.centers.length)
+    val store = t.vectorStore("vec", Some(pq.codec))
+    assert(store eq t.vectorStore("vec"))
+    store.run { b =>
+      (0 until ncent).flatMap(c => b.list(c).map { p =>
+        (b.key(b.listRow(p)).toString, c, (0 until m).map(b.code(p, _)))
+      }).toArray
+    }.flatten.sortBy(_._1)
+  }
+
   test("blocks lost from the block manager come back from lineage with identical rows") {
     val t = ivfpq()
     val q = queries(2)._2
-    val before = Seq(false, true).map(f => ranked(t.search(request(q, f))))
+    // a partial-probe batch: the ADC scan reads the blocks' codes
+    val partial = SearchRequest(topn = 10, vecQueries = Seq(VecQuery("vec",
+      vectors = queries.map(_._2), nprobe = Some(2), recallNum = Some(20))))
+    def hits() = Seq(false, true).map(f => ranked(t.search(request(q, f)))) :+
+      ranked(t.search(partial))
+    val before = hits()
+    val codes = storeCodes(t)
+    assert(codes.size === t.docs.count())
     val sc = spark.sparkContext
     val store = sc.getPersistentRDDs.values.filter(_.name == "graft.VectorStore(id, vec)")
       .maxBy(_.id)
@@ -161,37 +181,49 @@ class VectorStoreSpec extends GraftSuite {
     assert(cached === store.getNumPartitions)
     org.apache.spark.BlockLoss.dropCachedBlocks(store.id)
     assert(cached === 0)
-    assert(Seq(false, true).map(f => ranked(t.search(request(q, f)))) === before)
+    // the first search rebuilds the blocks, codes re-encoded, with
+    // identical hits
+    assert(hits() === before)
     assert(cached > 0)
+    assert(storeCodes(t) === codes)
   }
 
   test("a commit while a lookup builds the store neither waits for it nor leaves its blocks cached") {
-    val t = GammaTable.create(spark, tmp(), "vsc", "id", base, Seq(VectorFieldDef("vec", 64)),
-      nBuckets = 4)
-    val store = t.vectorStore("vec")
-    StoreGate.reset()
-    // partition 0's task holds the lookup job open once its block is built
-    val lookup = Future(store.lookup(Seq[(Any, Int)](4L -> 0)) { (block, keys) =>
-      if (org.apache.spark.TaskContext.getPartitionId() == 0) StoreGate.hold()
-      block.rowsOf(keys.head._1).size
-    })
-    val sc = spark.sparkContext
-    val rdd = try {
-      assert(StoreGate.entered.await(120, TimeUnit.SECONDS), "the lookup job never started")
-      val rdd = sc.getPersistentRDDs.values.filter(_.name == "graft.VectorStore(id, vec)").maxBy(_.id)
-      // the held task outlasts this wait: a commit that waited for the job
-      // would time out here
-      Await.result(Future(t.delete(Seq(4L).toDF("id"))), 60.seconds)
-      assert(t.vectorStore("vec") ne store)
-      rdd
-    } finally StoreGate.open.countDown()
-    assert(Await.result(lookup, 120.seconds).sum === 1)
-    assert(!sc.getPersistentRDDs.contains(rdd.id))
-    // the blocks the in-flight job cached are removed asynchronously
-    def cached = org.apache.spark.BlockLoss.cachedPartitions(rdd.id, rdd.getNumPartitions)
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    while (cached > 0 && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(cached === 0)
+    // a plain store, and one that carries an IVFPQ index's codes
+    for (codes <- Seq(false, true)) {
+      val t = GammaTable.create(spark, tmp(), "vsc", "id", base,
+        Seq(if (codes) VectorFieldDef("vec", 64, "L2", "IVFPQ") else VectorFieldDef("vec", 64)),
+        nBuckets = 4)
+      val codec =
+        if (!codes) None
+        else Some(t.buildIndex("vec", IndexParams(ncentroids = 4, nsubvector = 8),
+          retrievalType = "IVFPQ").currentIndex.get.asInstanceOf[IvfPqIndex].codec)
+      val store = t.vectorStore("vec", codec)
+      assert(store.codec === codec)
+      StoreGate.reset()
+      // partition 0's task holds the lookup job open once its block is built
+      val lookup = Future(store.lookup(Seq[(Any, Int)](4L -> 0)) { (block, keys) =>
+        if (org.apache.spark.TaskContext.getPartitionId() == 0) StoreGate.hold()
+        block.rowsOf(keys.head._1).size
+      })
+      val sc = spark.sparkContext
+      val rdd = try {
+        assert(StoreGate.entered.await(120, TimeUnit.SECONDS), "the lookup job never started")
+        val rdd = sc.getPersistentRDDs.values.filter(_.name == "graft.VectorStore(id, vec)").maxBy(_.id)
+        // the held task outlasts this wait: a commit that waited for the job
+        // would time out here
+        Await.result(Future(t.delete(Seq(4L).toDF("id"))), 60.seconds)
+        assert(t.vectorStore("vec", codec) ne store)
+        rdd
+      } finally StoreGate.open.countDown()
+      assert(Await.result(lookup, 120.seconds).sum === 1, s"codes=$codes")
+      assert(!sc.getPersistentRDDs.contains(rdd.id), s"codes=$codes")
+      // the blocks the in-flight job cached are removed asynchronously
+      def cached = org.apache.spark.BlockLoss.cachedPartitions(rdd.id, rdd.getNumPartitions)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (cached > 0 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(cached === 0, s"codes=$codes")
+    }
   }
 }
 
