@@ -148,13 +148,13 @@ object Prof {
       val pq = time("IvfPqIndex.build") {
         graft.index.IvfPqIndex.build(spark, docs, "vec_id", "embedding", params)
       }
-      time("pq codes count") { pq.codes.count() }
+      time("pq codes count") { pq.lists.count() }
       val q = emb.filter(org.apache.spark.sql.functions.col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0).toArray
       time("pq search k=10") { pq.search(Seq((0L, q)), 10).collect() }
       time("IvfFlatIndex.build") {
         graft.index.IvfFlatIndex.build(spark, docs, "vec_id", "embedding", params)
-          .data.count()
+          .lists.count()
       }
     }
 

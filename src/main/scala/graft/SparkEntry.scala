@@ -634,7 +634,9 @@ object SparkEntry {
         val df = s.sql(
           s"SELECT vec_id, l2_sq(embedding, $qLit) AS score FROM embeddings_sql " +
             "WHERE label IN (1, 3, 5, 7) ORDER BY score LIMIT 10")
-        require(df.queryExecution.executedPlan.toString.contains("centroid_id"),
+        // engaged: the plan is the local relation of the index's hits, reading no table
+        val plan = df.queryExecution.executedPlan.toString
+        require(plan.contains("LocalTableScan") && "(Batch|File)Scan".r.findFirstIn(plan).isEmpty,
           "ANN rewrite did not engage")
         // EXECUTE through the rewritten plan here, while the rule is still
         // on — the gate runner's later action would re-optimize a fresh

@@ -81,7 +81,7 @@ class BinaryIvfIndex(
     val np = math.min(nprobe.getOrElse(params.nprobe), centroids.length)
     // (qid, qcode, centroid_id) probe tuples — driver-computed (centroids
     // are local), so the probed-list set is too: no Spark job here (the
-    // float IVF family does the same, IvfFlatIndex.search)
+    // float IVF family does the same, IvfIndex.probePlan)
     val probeRows = queries.flatMap { case (qid, q) =>
       probes(q, np, k).map(c => (qid, q, c))
     }

@@ -3,8 +3,7 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Metric
-import graft.operators.{Knn, TopK}
+import graft.operators.Knn
 
 /** FLAT = exact brute force (reference index/impl/gamma_index_flat.cc) —
   * the trivial AnnIndex so the registry covers the brute-force override
@@ -90,7 +89,7 @@ object Ivf {
   /** Quantizer distance (smaller = better) of one vector to one center
     * under the index metric — the ONE coarse metric shared by add-time
     * list assignment ([[assign]]/[[assignWithCenters]]/PQ encode) and
-    * query-time probe ranking ([[probes]]), the way faiss gives an IVF
+    * query-time probe ranking ([[rankedCentroids]]), the way faiss gives an IVF
     * index a single quantizer with a single metric. Mixing L2 assignment
     * with IP probe ranking can systematically rank the list that actually
     * holds the best doc low at partial nprobe.
@@ -175,21 +174,9 @@ object Ivf {
       .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
   }
 
-  /** Driver-side probe selection: top-nprobe centroids per query, under
-    * the SAME quantizer metric as list assignment (the reference's coarse
-    * quantizer search runs under the index's own metric,
-    * gamma_index_ivfpq.cc:547-561 — probing by L2 for an inner-product
-    * index would rank the WRONG lists first).
-    */
-  def probes(
-      centers: Array[Array[Double]],
-      q: Array[Float],
-      nprobe: Int,
-      metric: graft.core.Metric.Value = graft.core.Metric.L2): Seq[Int] =
-    rankedCentroids(centers, q, metric).take(nprobe).toSeq
-
-  /** ALL centroids ranked nearest-first under the quantizer metric
-    * (strict-(dist, id) tie break, same as [[probes]]).
+  /** ALL centroids ranked nearest-first under the quantizer metric (the
+    * reference's coarse quantizer search runs under the index's own
+    * metric, gamma_index_ivfpq.cc:547-561), strict-(dist, id) tie break.
     */
   def rankedCentroids(
       centers: Array[Array[Double]],
@@ -252,75 +239,40 @@ object Ivf {
 }
 
 /** IVFFLAT (reference V3, index/impl/gamma_index_ivfflat.cc): coarse
-  * quantize, then exact distances within the probed lists.
+  * quantize, then exact distances within the probed lists. Served like
+  * IVFPQ ([[IvfIndex]]): the table's store blocks hold each row's
+  * centroid next to its raw vector, and one Spark job scans the probed
+  * lists, scoring each row exactly (the `l2_sq` / `inner_product` /
+  * `cosine_sim` arithmetic, [[VectorStore.score]]) into k per query.
   */
 class IvfFlatIndex(
-    val spark: SparkSession,
-    val data: DataFrame, // idCol, vecCol, centroid_id
-    val idCol: String,
-    val vecCol: String,
-    val centers: Array[Array[Double]],
-    val params: IndexParams,
-    // per-list row counts (index position = centroid_id), a build-time
-    // upper bound feeding adaptive probe widening; None = fixed nprobe
-    val listSizes: Option[Array[Long]] = None) extends AnnIndex {
+    spark: SparkSession,
+    data: DataFrame, // idCol, vecCol, centroid_id
+    rawDocs: DataFrame, // idCol, vecCol, ... — the store's rows
+    idCol: String,
+    vecCol: String,
+    centers: Array[Array[Double]],
+    params: IndexParams,
+    listSizes: Option[Array[Long]] = None,
+    sharedCodec: Option[IvfCodec] = None,
+    store: Option[VectorStore] = None,
+    indexedThrough: Long = Long.MaxValue)
+    extends IvfIndex(spark, data, rawDocs, idCol, vecCol, centers, Array.empty, None, params,
+      listSizes, sharedCodec, store, indexedThrough) {
 
   override def retrievalType: String = "IVFFLAT"
 
-  /** Same index, fresher per-list stats (the incremental indexer caches
-    * them per lists version).
-    */
-  def withListSizes(s: Option[Array[Long]]): IvfFlatIndex =
-    new IvfFlatIndex(spark, data, idCol, vecCol, centers, params, s)
-
-  override def search(
-      queries: Seq[(Long, Array[Float])],
-      k: Int,
-      nprobe: Option[Int],
-      allowedIds: Option[DataFrame],
-      minScore: Option[Double],
-      maxScore: Option[Double]): DataFrame = {
-    import spark.implicits._
-    val np = math.min(nprobe.getOrElse(params.nprobe), centers.length)
-    val sizes = if (Ivf.adaptiveEnabled(spark)) listSizes else None
-    val target = Ivf.probeTarget(k, params.recallNum, np, params.nprobe)
-    // (qid, qvec, centroid_id) probe tuples — small, broadcast
-    val probeRows = queries.flatMap { case (qid, qv) =>
-      Ivf.extendByTarget(Ivf.rankedCentroids(centers, qv, params.metric), sizes, np, target)
-        .map(c => (qid, qv.toSeq, c))
-    }
-    val probeDf = probeRows.toDF("qid", "qvec", "centroid_id")
-    val probedCentroids = probeRows.map(_._3).distinct
-    // partition-pruned list scan (T4), then per-(qid,centroid) candidates
-    val lists = data.filter(col("centroid_id").isin(probedCentroids: _*))
-    // broadcast decision is the caller's (selectivity-aware) hint, not ours
-    val filtered = allowedIds match {
-      case Some(ids) => lists.join(ids.toDF(idCol), Seq(idCol), "left_semi")
-      case None      => lists
-    }
-    val scored = filtered
-      .join(broadcast(probeDf), Seq("centroid_id"))
-      .select(col("qid"), col(idCol).as("id"),
-        Knn.score(params.metric, col(vecCol), col("qvec")).as("score"))
-    val ranged = AnnIndex.scoreRange(scored, "score", minScore, maxScore)
-    TopK.perGroup(ranged, "qid", "score", Metric.ascending(params.metric), k, Seq("id"))
-  }
-
-  // listSizes survives as an upper bound: exclusion only shrinks lists,
-  // and adaptive widening treats sizes as conservative (doc on extendByTarget)
-  override def excluding(ids: DataFrame): AnnIndex =
-    new IvfFlatIndex(spark,
-      data.join(ids.toDF(idCol), Seq(idCol), "left_anti"),
-      idCol, vecCol, centers, params, listSizes)
-
-  override def withParams(p: IndexParams): AnnIndex =
-    new IvfFlatIndex(spark, data, idCol, vecCol, centers, p, listSizes)
+  protected def make(
+      lists: DataFrame, rawDocs: DataFrame, params: IndexParams, listSizes: Option[Array[Long]],
+      store: Option[VectorStore], indexedThrough: Long): IvfIndex =
+    new IvfFlatIndex(spark, lists, rawDocs, idCol, vecCol, centers, params, listSizes, Some(codec),
+      store, indexedThrough)
 
   /** Persist inverted lists partitioned by centroid_id so probe filters
     * prune files (T4).
     */
   def save(path: String): Unit = {
-    data.write.mode("overwrite").partitionBy("centroid_id").parquet(s"$path/lists")
+    lists.write.mode("overwrite").partitionBy("centroid_id").parquet(s"$path/lists")
     Ivf.saveCenters(spark, s"$path/centroids", centers)
   }
 }
@@ -345,13 +297,15 @@ object IvfFlatIndex {
     val data = Ivf.assignWithCenters(
       docs.select(col(idCol), col(vecCol)), vecCol, centers, params.metric)
       .localCheckpoint(true)
-    new IvfFlatIndex(spark, data, idCol, vecCol, centers, params)
+    // a standalone index's store holds its lists' own (key, vector) rows
+    new IvfFlatIndex(spark, data, data.select(col(idCol), col(vecCol)), idCol, vecCol, centers,
+      params)
   }
 
   def load(spark: SparkSession, path: String, idCol: String, vecCol: String,
       params: IndexParams): IvfFlatIndex = {
     val data = spark.read.parquet(s"$path/lists")
-    new IvfFlatIndex(spark, data, idCol, vecCol,
+    new IvfFlatIndex(spark, data, data.select(col(idCol), col(vecCol)), idCol, vecCol,
       Ivf.loadCenters(spark, s"$path/centroids"), params)
   }
 }

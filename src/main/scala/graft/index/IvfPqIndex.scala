@@ -1,16 +1,9 @@
 package graft.index
 
-import scala.collection.mutable
-
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
 
 import graft.core.Metric
-import graft.functions.{QueryHeaps, SpecializedRowOrdering, TopKBuffer}
 
 /** IVFPQ (reference V2, index/impl/gamma_index_ivfpq.cc): coarse quantize,
   * product-quantize the residuals, scan probed lists with the ADC LUT, then
@@ -21,85 +14,32 @@ import graft.functions.{QueryHeaps, SpecializedRowOrdering, TopKBuffer}
   * (x - coarse_centroid), per-subspace k-means codebooks of 2^nbits entries,
   * asymmetric distance = Σ_j ||r_j - cb_j[code_j]||².
   *
-  * Serving design: like gamma, which keeps each doc's codes and raw vector
-  * in memory and ranks in two stages inside one pass, a request reads the
-  * resident [[VectorStore]] over `rawDocs` (the table's own store when the
-  * index serves a table), whose blocks hold each row's raw vector, coarse
-  * centroid and PQ codes, grouped by centroid. One Spark job scans the
-  * probed lists of every block with the ADC LUT (nprobe x m x ksub doubles
-  * per query, built scan-side from the quantizers broadcast once for every
-  * copy of the index) and re-ranks each block's candidates exactly from the
-  * same block. `codes` (the lists as built or persisted) feed the per-list
-  * stats and the one request the store cannot serve: an allowed set held
-  * only as a frame.
-  *
-  * One search ([[searchHits]]) serves the table API, the SQL rewrite and
-  * direct callers. Ids are Long, Int or String (the reference's
-  * `id_type_`, table/table.cc:123-126) and vectors float or double arrays.
-  * A store row is an index row iff its version is at most
-  * `indexedThrough` (the owning indexer's build version; a standalone
-  * index's store has no versions, so every row is one).
+  * Serving ([[IvfIndex]]): like gamma, which keeps each doc's codes and
+  * raw vector in memory and ranks in two stages inside one pass, the
+  * table's store blocks hold each row's PQ codes next to its vector, and
+  * one Spark job scans the probed lists with the ADC LUT (nprobe x m x
+  * ksub doubles per query, built scan-side from the quantizers broadcast
+  * once for every copy of the index) and re-ranks each block's candidates
+  * exactly from the same block.
   */
 class IvfPqIndex(
-    val spark: SparkSession,
-    val codes: DataFrame, // idCol, centroid_id, pq_codes array<int>
-    val rawDocs: DataFrame, // idCol, vecCol, ... — the store's rows (UNrotated)
-    val idCol: String,
-    val vecCol: String,
-    val centers: Array[Array[Double]], // in rotated space when OPQ is on
-    val codebooks: Array[Array[Array[Double]]], // [m][ksub][dsub]
-    val params: IndexParams,
-    val rotation: Option[Array[Array[Double]]] = None,
-    // per-list code counts (index position = centroid_id), a build-time
-    // upper bound feeding adaptive probe widening; None = fixed nprobe
-    val listSizes: Option[Array[Long]] = None,
-    // shared with the index this one copies: the quantizer broadcast and
-    // the store (None: made here, the store over `rawDocs`)
-    sharedCodec: Option[PqCodec] = None,
+    spark: SparkSession,
+    codes: DataFrame, // idCol, centroid_id, pq_codes array<int>
+    rawDocs: DataFrame, // idCol, vecCol, ... — the store's rows (UNrotated)
+    idCol: String,
+    vecCol: String,
+    centers: Array[Array[Double]], // in rotated space when OPQ is on
+    codebooks: Array[Array[Array[Double]]], // [m][ksub][dsub]
+    params: IndexParams,
+    rotation: Option[Array[Array[Double]]] = None,
+    listSizes: Option[Array[Long]] = None,
+    sharedCodec: Option[IvfCodec] = None,
     store: Option[VectorStore] = None,
-    val indexedThrough: Long = Long.MaxValue) extends AnnIndex {
+    indexedThrough: Long = Long.MaxValue)
+    extends IvfIndex(spark, codes, rawDocs, idCol, vecCol, centers, codebooks, rotation, params,
+      listSizes, sharedCodec, store, indexedThrough) {
 
   override def retrievalType: String = "IVFPQ"
-
-  /** The quantizers as scan and encode tasks read them: broadcast once,
-    * then handed to every copy (the request path copies the index per
-    * search) and to the store that encodes with them.
-    */
-  private[graft] lazy val codec: PqCodec = sharedCodec.getOrElse(
-    PqCodec(spark, centers, codebooks, rotation, params.metric))
-
-  /** The store every search reads: `rawDocs`' (key, vector) rows with
-    * their codes, cached for this index's lifetime unless the owning table
-    * handed its own store in.
-    */
-  private[graft] lazy val vectors: VectorStore = store.getOrElse(
-    new VectorStore(rawDocs.select(col(idCol), col(vecCol)), Some(codec)))
-
-  private def copy(
-      codes: DataFrame = codes,
-      params: IndexParams = params,
-      listSizes: Option[Array[Long]] = listSizes,
-      indexedThrough: Long = indexedThrough): IvfPqIndex =
-    new IvfPqIndex(spark, codes, rawDocs, idCol, vecCol, centers, codebooks, params, rotation,
-      listSizes, Some(codec), Some(vectors), indexedThrough)
-
-  /** Index rows the LAST search's ADC scan read, over all its chunks (-1
-    * before any search), summed from the counts its scan tasks returned
-    * with their heaps. Feedback surface for the indexer's probe-cost
-    * bound: the uniform-volume row prediction is calibrated against this
-    * (IncrementalIndexer.rowCalibration).
-    */
-  @volatile private var scannedRows = -1L
-  def lastScannedRows: Long = scannedRows
-
-  /** Same index, fresher per-list stats. */
-  def withListSizes(s: Option[Array[Long]]): IvfPqIndex = copy(listSizes = s)
-
-  /** Same index, serving the store rows of version ≤ `v`. */
-  private[graft] def through(v: Long): IvfPqIndex = copy(indexedThrough = v)
-
-  /** Same index and store, the frame path reading `lists` as its codes. */
-  private[graft] def withCodes(lists: DataFrame): IvfPqIndex = copy(codes = lists)
 
   // The ADC LUT is exact for L2 and InnerProduct; the reference's kernels
   // implement exactly those two (index/retrieval_model.h:20 declares Cosine
@@ -109,241 +49,11 @@ class IvfPqIndex(
     s"IVFPQ supports L2 and InnerProduct (got ${params.metric}); " +
       "normalize vectors and use InnerProduct for cosine")
 
-  private val keyType = codes.schema(idCol).dataType
-  IvfPqIndex.requireTypes(keyType, rawDocs.schema(vecCol).dataType)
-  require(rawDocs.schema(idCol).dataType == keyType,
-    s"IVFPQ re-rank source ids are ${rawDocs.schema(idCol).dataType.simpleString}, " +
-      s"code ids ${keyType.simpleString}")
-
-  /** [[searchHits]], run now, its hits as a local relation. */
-  override def search(
-      queries: Seq[(Long, Array[Float])],
-      k: Int,
-      nprobe: Option[Int],
-      allowedIds: Option[DataFrame],
-      minScore: Option[Double],
-      maxScore: Option[Double]): DataFrame =
-    searchHits(queries, k, nprobe, allowedIds.map(AllowedKeys(_, -1L, None)), minScore, maxScore)
-      .toDF(spark)
-
-  /** Whether [[searchHits]] serves `allowed` from the store: no allowed
-    * set, or its keys on the driver with this index's key type. Otherwise
-    * the allowed set is only a frame, and the search scans `codes`.
-    */
-  private[graft] def scansStore(allowed: Option[AllowedKeys]): Boolean =
-    allowed.forall(a => a.keyType == keyType && a.packed.isDefined)
-
-  /** The IVFPQ search, merged on the driver with no shuffle, the shape of
-    * Spark's `TakeOrderedAndProject` (the reference's per-thread heaps
-    * merged once, gamma_index_ivfpq.cc:570-593, then the `recall_num`
-    * re-rank, :642-697). Served from the store ([[scansStore]]), one Spark
-    * job over its blocks, in which each task
-    *  - scans the probed lists' index rows with ADC, testing allowed keys
-    *    on the driver (broadcast) on each row, into a heap of
-    *    max(recall_num, k) candidates per query;
-    *  - scores each distinct (qid, key) it kept exactly, the key's rows in
-    *    the block with the `l2_sq` / `inner_product` double arithmetic,
-    *    against every query position of the qid;
-    *  - returns its heaps, those exact scores and its scanned-row count.
-    * The driver merges each task's result as it arrives into the global
-    * top max(recall_num, k) by ADC, the two-job path's candidate set,
-    * keeping the exact scores of the (qid, key) pairs it admits and
-    * dropping evicted pairs' scores as it goes. Each copy
-    * of a pair in that set then offers the pair's exact scores, in range,
-    * to a top k per qid, as the two-job path's candidate list does.
-    * Without `hasRank`, the tasks apply the range to the ADC value and
-    * keep k, and there is no exact score. A key's rows are scored in the
-    * blocks whose task kept it: keys are unique among a table's live rows,
-    * so there that is every row of the key, but a standalone index whose
-    * `rawDocs` repeat a key in several blocks can re-rank fewer of its
-    * rows than the two-job path.
-    *
-    * An allowed set held only as a frame is semi-joined into the probed
-    * lists of `codes` instead, in two jobs: the list scan (heaps merged on
-    * the driver) and the candidates' exact scores looked up in the store.
-    * A batch over [[IvfPqIndex.MaxBroadcastCandidates]] candidates runs
-    * once per [[IvfPqIndex.qidChunks]] chunk.
-    */
-  private[graft] def searchHits(
-      queries: Seq[(Long, Array[Float])],
-      k: Int,
-      nprobe: Option[Int],
-      allowed: Option[AllowedKeys],
-      minScore: Option[Double],
-      maxScore: Option[Double]): LocalHits = {
-    val nCand = if (params.hasRank) math.max(params.recallNum, k) else k
-    val fromStore = scansStore(allowed)
-    val keySet =
-      if (fromStore) allowed.flatMap(_.keySet).map(spark.sparkContext.broadcast(_)) else None
-    val range = (minScore, maxScore)
-    try {
-      val chunks = IvfPqIndex.qidChunks(queries, nCand, IvfPqIndex.MaxBroadcastCandidates).map { qs =>
-        if (fromStore) storeChunk(qs, k, nprobe, nCand, keySet, range)
-        else frameChunk(qs, k, nprobe, nCand, allowed.get.frame, range)
-      }
-      scannedRows = chunks.map(_._2).sum
-      chunks.map(_._1).reduce(_ ++ _)
-    } finally keySet.foreach(_.destroy())
-  }
-
-  /** One chunk's probe plan: the ADC scan of its queries (their probed
-    * centroids in the code space, heaps per distinct qid) and the probed
-    * centroids.
-    */
-  private def probePlan(
-      queries: Seq[(Long, Array[Float])],
-      k: Int,
-      nprobe: Option[Int],
-      heapSize: Int,
-      range: (Option[Double], Option[Double])): (AdcScan, Array[Long], Seq[Int]) = {
-    val np = math.min(nprobe.getOrElse(params.nprobe), centers.length)
-    val sizes = if (Ivf.adaptiveEnabled(spark)) listSizes else None
-    val target = Ivf.probeTarget(k, params.recallNum, np, params.nprobe)
-    // probes + ADC happen in the (possibly OPQ-rotated) code space; the
-    // exact re-rank stays in the original space, so rotation never
-    // touches final scores
-    val qProbes = queries.zipWithIndex.map { case ((_, qv0), pos) =>
-      val qv = rotation.map(Opq.rotate(_, qv0)).getOrElse(qv0)
-      (pos, qv,
-        Ivf.extendByTarget(
-          Ivf.rankedCentroids(centers, qv, params.metric), sizes, np, target).toArray)
-    }
-    // scan-side ADC: broadcast only the queries by centroid (the
-    // quantizers are the codec's) and build each (query, centroid) LUT
-    // lazily WHERE THE CODES LIVE, one centroid at a time — the
-    // reference's per-query sim_table precompute inside the scan
-    // (gamma_index_ivfpq.h:561-601)
-    val byCentroid: Map[Int, Array[(Int, Array[Float])]] = qProbes
-      .flatMap { case (pos, qv, ps) => ps.map(c => (c, (pos, qv))) }
-      .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).toArray }
-    // one heap per distinct qid, as the per-qid top-k the heaps stand for
-    val qids = queries.map(_._1).distinct.sorted.toArray
-    val group = qids.zipWithIndex.toMap
-    val scan = new AdcScan(
-      spark.sparkContext.broadcast(byCentroid), codec,
-      queries.map(q => group(q._1)).toArray, qids.length, heapSize, keyType,
-      Metric.ascending(params.metric), params.metric == Metric.InnerProduct,
-      // the ADC value is the returned score only without the re-rank
-      if (params.hasRank) (None, None) else range)
-    (scan, qids, qProbes.flatMap(_._3).distinct.sorted)
-  }
-
-  /** One chunk from the store, in one job; (hits, rows scanned). */
-  private def storeChunk(
-      queries: Seq[(Long, Array[Float])],
-      k: Int,
-      nprobe: Option[Int],
-      heapSize: Int,
-      keySet: Option[Broadcast[KeySet]],
-      range: (Option[Double], Option[Double])): (LocalHits, Long) = {
-    val store = vectors
-    require(store.codec.exists(_ eq codec), "the IVFPQ store must hold this index's codes")
-    val (scan, qids, _) = probePlan(queries, k, nprobe, heapSize, range)
-    val rank = params.hasRank
-    // each qid's query positions, and the raw (unrotated) query vectors
-    // the exact scores read
-    val positions = Array.fill(qids.length)(Array.newBuilder[Int])
-    queries.indices.foreach(p => positions(scan.groupOf(p)) += p)
-    val byGroup = positions.map(_.result())
-    val qvecs = if (rank) Some(spark.sparkContext.broadcast(queries.map(_._2).toArray)) else None
-    val (keys, through) = (keySet, indexedThrough) // the task closure must not capture the index
-    // task results merge as they arrive. A task ships each group's rows
-    // best first, so once the global heap rejects one, the group's later
-    // rows are rejected too and are skipped; the exact scores of a pair
-    // are kept when the task's first (best) row of it is kept. Pairs
-    // evicted since are dropped whenever the map outgrows twice what the
-    // heaps can hold, so the driver never keeps every task's scores.
-    val stage1 = scan.heaps()
-    // per group: key -> its exact scores (several blocks' concatenated)
-    val exact = Array.fill(qids.length)(new java.util.HashMap[Any, Array[Double]]())
-    val pruneAt = 2L * qids.length * heapSize
-    var held = 0L
-    var scanned = 0L
-    def merge(t: StoreHits): Unit = {
-      scanned += t.scanned
-      var full = -1 // the group whose heap rejected this task's last row
-      TopKBuffer.unpack(t.heaps, QueryHeaps.NumFields).zipWithIndex.foreach { case (r, i) =>
-        val g = r.getInt(3)
-        if (g != full) {
-          if (!stage1.addOwned(r)) full = g
-          else if (rank && t.from(i) < t.from(i + 1)) {
-            val s = java.util.Arrays.copyOfRange(t.exact, t.from(i), t.from(i + 1))
-            exact(g).merge(r.get(1, keyType), s, (a, b) => a ++ b)
-            held += 1
-          }
-        }
-      }
-      if (held > pruneAt) {
-        val kept = Array.fill(qids.length)(new java.util.HashSet[Any]())
-        stage1.rows.foreach(r => kept(r.getInt(3)).add(r.get(1, keyType)))
-        exact.indices.foreach(g => exact(g).keySet.retainAll(kept(g)))
-        held = exact.map(_.size.toLong).sum
-      }
-    }
-    try store.foreach(b => scan.scanBlock(b, keys.map(_.value).orNull, through,
-        qvecs.map(_.value).orNull, byGroup))(merge)
-    finally { scan.destroyRequest(); qvecs.foreach(_.destroy()) }
-
-    if (!rank) return (LocalHits.fromHeaps(stage1, qids, keyType), scanned)
-    // each copy of a (group, key) in the global heaps offers its exact
-    // scores once, as the candidate list of the two-job path does
-    val out = new QueryHeaps(qids.length, k, keyType, Metric.ascending(params.metric))
-    qids.indices.foreach { g =>
-      stage1.sorted(g).foreach { r =>
-        val id = r.get(1, keyType)
-        exact(g).get(id).foreach { s =>
-          if (IvfPqIndex.inRange(s, range)) out.offer(g, s, id)
-        }
-      }
-    }
-    (LocalHits.fromHeaps(out, qids, keyType), scanned)
-  }
-
-  /** One chunk whose allowed set is only a frame, in two jobs: the probed
-    * lists of `codes` semi-joined with `allowedIds` and scanned with
-    * per-task heaps, then, with `hasRank`, the exact re-rank of the merged
-    * candidates looked up in the store; (hits, rows scanned).
-    */
-  private def frameChunk(
-      queries: Seq[(Long, Array[Float])],
-      k: Int,
-      nprobe: Option[Int],
-      heapSize: Int,
-      allowedIds: DataFrame,
-      range: (Option[Double], Option[Double])): (LocalHits, Long) = {
-    val (scan, qids, probed) = probePlan(queries, k, nprobe, heapSize, range)
-    // broadcast decision is the caller's (selectivity-aware) hint, not ours;
-    // the sort by centroid bounds each task's LUT cache to one centroid's
-    // queries (persisted lists arrive centroid-partitioned already)
-    val in = codes.filter(col("centroid_id").isin(probed: _*))
-      .join(allowedIds.toDF(idCol), Seq(idCol), "left_semi")
-      .select(col("centroid_id"), col(idCol), col("pq_codes"))
-      .sortWithinPartitions(col("centroid_id"))
-    val stage1 = scan.heaps()
-    var scanned = 0L
-    val idType = keyType // the task closure must not capture the index
-    try in.queryExecution.toRdd.mapPartitions { rows =>
-        val task = scan.task()
-        rows.foreach(r => task.add(r.getInt(0), r.get(1, idType), r.getArray(2)))
-        Iterator((task.heaps.packed, task.scanned))
-      }.collect().foreach { case (h, n) => stage1.addPacked(h); scanned += n }
-    finally scan.destroyRequest()
-    if (!params.hasRank) return (LocalHits.fromHeaps(stage1, qids, keyType), scanned)
-
-    // candidate -> the query positions that score it: every position
-    // sharing the candidate's qid
-    val positions = queries.indices.groupBy(scan.groupOf(_))
-    val cand = new java.util.HashMap[Any, Array[Int]]()
-    qids.indices.foreach { g =>
-      stage1.sorted(g).foreach { r =>
-        val id = r.get(1, keyType)
-        val prev = cand.get(id)
-        cand.put(id, if (prev == null) positions(g).toArray else prev ++ positions(g))
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    (ExactRerank.hits(vectors, cand.asScala.toSeq, queries, k, params.metric, range), scanned)
-  }
+  protected def make(
+      lists: DataFrame, rawDocs: DataFrame, params: IndexParams, listSizes: Option[Array[Long]],
+      store: Option[VectorStore], indexedThrough: Long): IvfIndex =
+    new IvfPqIndex(spark, lists, rawDocs, idCol, vecCol, centers, codebooks, params, rotation,
+      listSizes, Some(codec), store, indexedThrough)
 
   /** Encode a delta batch with the ALREADY-TRAINED quantizers — the
     * reference's incremental re-encode of new/updated vectors through the
@@ -355,20 +65,8 @@ class IvfPqIndex(
   def encodeDelta(delta: DataFrame, keepCols: Seq[String] = Nil): DataFrame =
     IvfPqIndex.encodeAll(delta, idCol, vecCol, codec, keepCols)
 
-  /** Same quantizers over the rows of `ids` removed: from `codes` and from
-    * `rawDocs`, so the copy reads its own store over the remaining rows.
-    */
-  override def excluding(ids: DataFrame): AnnIndex = {
-    val gone = ids.toDF(idCol)
-    new IvfPqIndex(spark, codes.join(gone, Seq(idCol), "left_anti"),
-      rawDocs.join(gone, Seq(idCol), "left_anti"), idCol, vecCol, centers, codebooks, params,
-      rotation, listSizes, Some(codec), None, indexedThrough)
-  }
-
-  override def withParams(p: IndexParams): AnnIndex = copy(params = p)
-
   def save(path: String): Unit = {
-    codes.write.mode("overwrite").partitionBy("centroid_id").parquet(s"$path/codes")
+    lists.write.mode("overwrite").partitionBy("centroid_id").parquet(s"$path/codes")
     saveQuantizers(path)
   }
 
@@ -391,42 +89,6 @@ class IvfPqIndex(
 }
 
 object IvfPqIndex {
-
-  /** The most candidate rows (queries x per-query candidates) one search
-    * chunk brings to the driver ([[qidChunks]]).
-    */
-  val MaxBroadcastCandidates = 4000000L
-
-  /** `queries` in chunks of consecutive whole qids (ascending, a qid's
-    * positions together and in batch order) whose positions x `perQuery`
-    * stay within `bound` (a qid over it alone is one chunk); a batch within
-    * it is one chunk, `queries` itself. A qid's hits depend on its own
-    * positions only, so the chunks' hits, concatenated, are the batch's.
-    */
-  private[index] def qidChunks(queries: Seq[(Long, Array[Float])], perQuery: Int, bound: Long)
-      : Seq[Seq[(Long, Array[Float])]] =
-    if (queries.size.toLong * perQuery <= bound) Seq(queries)
-    else queries.groupBy(_._1).toSeq.sortBy(_._1).map(_._2)
-      .foldLeft(Vector.empty[Seq[(Long, Array[Float])]]) { (chunks, qs) =>
-        if (chunks.nonEmpty && (chunks.last.size + qs.size).toLong * perQuery <= bound)
-          chunks.init :+ (chunks.last ++ qs)
-        else chunks :+ qs
-      }
-
-  /** Ids Long, Int or String and vectors float or double arrays: the types
-    * the driver merge holds by value and the [[VectorStore]] serves.
-    */
-  private def requireTypes(idType: DataType, vecType: DataType): Unit =
-    require(AllowedKeys.KeyTypes(idType) && VectorStore.isVectorType(vecType),
-      s"IVFPQ needs Long, Int or String ids over float or double vectors " +
-        s"(got ${idType.simpleString} ids over ${vecType.simpleString})")
-
-  /** Spark SQL's `score >= minScore AND score <= maxScore` (-0.0 equals
-    * 0.0, NaN is the largest value).
-    */
-  private[index] def inRange(s: Double, range: (Option[Double], Option[Double])): Boolean =
-    range._1.forall(lo => SpecializedRowOrdering.cmpD(s, lo) >= 0) &&
-      range._2.forall(hi => SpecializedRowOrdering.cmpD(s, hi) <= 0)
 
   /** Restore a saved index. `rawDocs` re-supplies the exact re-rank source
     * (the reference reloads raw vectors alongside dumped codes,
@@ -478,7 +140,7 @@ object IvfPqIndex {
       idCol: String,
       vecCol: String,
       params: IndexParams): IvfPqIndex = {
-    requireTypes(docs.schema(idCol).dataType, docs.schema(vecCol).dataType)
+    IvfIndex.requireTypes("IVFPQ", docs.schema(idCol).dataType, docs.schema(vecCol).dataType)
     // auto centroid sizing needs the FULL count; with explicit ncentroids
     // a BOUNDED count (first 2^nbits+1 rows) answers the remaining use —
     // the tiny-table ksub guard — without scanning the table. ONE count
@@ -548,7 +210,7 @@ object IvfPqIndex {
     }.map(Await.result(_, Duration.Inf)).toArray
 
     // single distributed pass: rotate + assign + residual-encode per row
-    val codec = PqCodec(spark, centers, codebooks, rotation, params.metric)
+    val codec = IvfCodec(spark, centers, codebooks, rotation, params.metric)
     val codesDf = encodeAll(docs, idCol, vecCol, codec, Nil).localCheckpoint(true)
     new IvfPqIndex(spark, codesDf, docs.select(col(idCol), col(vecCol)),
       idCol, vecCol, centers, codebooks, params, rotation, sharedCodec = Some(codec))
@@ -608,7 +270,7 @@ object IvfPqIndex {
       docs: DataFrame,
       idCol: String,
       vecCol: String,
-      codec: PqCodec,
+      codec: IvfCodec,
       keepCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._
@@ -659,254 +321,5 @@ object IvfPqIndex {
       bc
     }
     (best, codes)
-  }
-}
-
-/** An IVFPQ index's trained quantizers (coarse centers and PQ codebooks in
-  * the code space, the OPQ rotation) and quantizer metric, broadcast once:
-  * what its scan tasks build LUTs from and what encodes a row, in the
-  * encode pass ([[IvfPqIndex.encodeAll]]) and in the [[VectorStore]] that
-  * holds the index's codes. `ksub` is the largest codebook (the LUT
-  * stride; k-means may return fewer than 2^nbits entries).
-  */
-private[graft] final class PqCodec private (
-    val quantizers: Broadcast[
-      (Array[Array[Double]], Array[Array[Array[Double]]], Option[Array[Array[Double]]])],
-    metric: Metric.Value,
-    val ncent: Int,
-    val m: Int,
-    val ksub: Int) extends Serializable {
-
-  /** `v`'s (centroid, PQ codes), see [[IvfPqIndex.encodeRow]]. */
-  def encode(v: Array[Float]): (Int, Array[Int]) = {
-    val (cs, cbs, rot) = quantizers.value
-    IvfPqIndex.encodeRow(v, cs, cbs, rot, metric)
-  }
-}
-
-private[graft] object PqCodec {
-  def apply(
-      spark: SparkSession,
-      centers: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]],
-      rotation: Option[Array[Array[Double]]],
-      metric: Metric.Value): PqCodec = {
-    val ksub = codebooks.map(_.length).max
-    // the store holds each code in 16 bits
-    require(ksub <= (1 << 16), s"IVFPQ codebooks hold at most 2^16 entries (nbits <= 16), got $ksub")
-    new PqCodec(spark.sparkContext.broadcast((centers, codebooks, rotation)), metric,
-      centers.length, codebooks.length, ksub)
-  }
-}
-
-/** ADC scan kernel of one request. A task scores index rows against every
-  * query probing their centroid through LUTs built where the codes live,
-  * cached for one centroid at a time, keeps `heapSize` candidates per
-  * query group and counts the rows it scanned.
-  */
-private[index] final class AdcScan(
-    byCentroid: Broadcast[Map[Int, Array[(Int, Array[Float])]]], // centroid -> (query position, code-space vector)
-    codec: PqCodec,
-    val groupOf: Array[Int], // query position -> heap group
-    groups: Int,
-    heapSize: Int,
-    idType: DataType,
-    ascending: Boolean,
-    ip: Boolean,
-    range: (Option[Double], Option[Double])) extends Serializable {
-
-  def heaps(): QueryHeaps = new QueryHeaps(groups, heapSize, idType, ascending)
-
-  def task(): Task = new Task
-
-  /** Frees the request's own broadcast (the quantizers are the index's). */
-  def destroyRequest(): Unit = byCentroid.destroy()
-
-  final class Task {
-    val heaps: QueryHeaps = AdcScan.this.heaps()
-    /** Index rows read (once per row, not per query). */
-    var scanned = 0L
-    private val probes = byCentroid.value
-    private val (cs, cbs, _) = codec.quantizers.value
-    private val ksub = codec.ksub
-    private val luts = mutable.HashMap.empty[Int, Array[Double]]
-    private var curCid = Integer.MIN_VALUE
-
-    private def lut(cid: Int, pos: Int, qv: Array[Float]): Array[Double] = {
-      if (cid != curCid) { luts.clear(); curCid = cid }
-      luts.getOrElseUpdate(pos, IvfPqIndex.lutFor(qv, cs(cid), cbs, ksub, ip))
-    }
-
-    /** One code row of a probed list: `id` is its key's Catalyst value,
-      * `codes` its PQ codes (rows arrive sorted by centroid).
-      */
-    def add(cid: Int, id: Any, codes: ArrayData): Unit = {
-      scanned += 1
-      val qs = probes.getOrElse(cid, null)
-      if (qs != null) {
-        var i = 0
-        while (i < qs.length) {
-          val (pos, qv) = qs(i)
-          val t = lut(cid, pos, qv)
-          var j = 0; var s = 0.0
-          while (j < codec.m) { s += t(j * ksub + codes.getInt(j)); j += 1 }
-          if (IvfPqIndex.inRange(s, range)) heaps.offer(groupOf(pos), s, id)
-          i += 1
-        }
-      }
-    }
-
-    /** Every index row of `block` in a probed list: version ≤ `through`
-      * and, with `keys`, an allowed key.
-      */
-    def scan(block: VectorStore.Block, keys: KeySet, through: Long): Unit =
-      probes.foreach { case (cid, qs) =>
-        block.list(cid).foreach { p =>
-          val row = block.listRow(p)
-          val id = block.key(row)
-          if (block.indexed(row, through) && (keys == null || keys.contains(id))) {
-            scanned += 1
-            var i = 0
-            while (i < qs.length) {
-              val (pos, qv) = qs(i)
-              val s = block.adc(p, lut(cid, pos, qv), ksub)
-              if (IvfPqIndex.inRange(s, range)) heaps.offer(groupOf(pos), s, id)
-              i += 1
-            }
-          }
-        }
-      }
-  }
-
-  /** One store block's share of a request: [[Task.scan]], its rows per
-    * group best first, then, with `queries` (raw vectors by position),
-    * each distinct (group, key) scored exactly at its first row: the key's
-    * rows in the block against every position of the group (`positions`),
-    * rows outer, positions inner.
-    */
-  def scanBlock(
-      block: VectorStore.Block,
-      keys: KeySet,
-      through: Long,
-      queries: Array[Array[Float]],
-      positions: Array[Array[Int]]): StoreHits = {
-    val t = task()
-    t.scan(block, keys, through)
-    val rows = (0 until groups).flatMap(t.heaps.sorted).map(_.asInstanceOf[UnsafeRow]).toArray
-    if (queries == null) return StoreHits(TopKBuffer.pack(rows), null, null, t.scanned)
-    val from = new Array[Int](rows.length + 1)
-    val exact = Array.newBuilder[Double]
-    val seen = mutable.HashSet.empty[(Int, Any)]
-    var n = 0
-    rows.indices.foreach { i =>
-      val (g, id) = (rows(i).getInt(3), rows(i).get(1, idType))
-      if (seen.add((g, id))) block.rowsOf(id).foreach { row =>
-        positions(g).foreach { p => exact += block.score(row, queries(p), ip); n += 1 }
-      }
-      from(i + 1) = n
-    }
-    StoreHits(TopKBuffer.pack(rows), from, exact.result(), t.scanned)
-  }
-}
-
-/** A store task's result: its candidate rows ([[TopKBuffer.pack]]ed, each
-  * group's best first), row `i`'s exact scores at `from(i) until
-  * from(i + 1)` of `exact` (the scores of its (group, key) at the first
-  * row holding it, none at the others; both null without the re-rank),
-  * and the index rows it scanned.
-  */
-private[index] final case class StoreHits(
-    heaps: Array[Byte], from: Array[Int], exact: Array[Double], scanned: Long)
-
-/** Exact scoring kernel of the driver request paths: scores a stored row
-  * of a [[VectorStore.Block]] against the query positions its key maps to
-  * (see [[VectorStore.Block.score]] for the arithmetic) and keeps the `k`
-  * best in-range scores per query group.
-  */
-private[index] final class ExactRerank(
-    queries: Broadcast[Array[Array[Float]]],
-    groupOf: Array[Int],
-    groups: Int,
-    k: Int,
-    idType: DataType,
-    ascending: Boolean,
-    ip: Boolean,
-    range: (Option[Double], Option[Double])) extends Serializable {
-
-  def heaps(): QueryHeaps = new QueryHeaps(groups, k, idType, ascending)
-
-  /** Every stored row of key `id`, against query positions `ps`. */
-  def add(heaps: QueryHeaps, block: VectorStore.Block, id: Any, ps: Array[Int]): Unit = {
-    val qs = queries.value
-    block.rowsOf(id).foreach { row =>
-      var i = 0
-      while (i < ps.length) {
-        val p = ps(i)
-        val s = block.score(row, qs(p), ip)
-        if (IvfPqIndex.inRange(s, range)) heaps.offer(groupOf(p), s, id)
-        i += 1
-      }
-    }
-  }
-}
-
-private[graft] object ExactRerank {
-
-  /** One job over the store's blocks: scores each candidate key's stored
-    * rows against the query positions it maps to, keeps k per qid in each
-    * task, and merges the task heaps on the driver. Rows come back per
-    * qid in the (score, id) order of the `topk_rows` heap.
-    */
-  private[index] def hits(
-      store: VectorStore,
-      cand: Iterable[(Any, Array[Int])],
-      queries: Seq[(Long, Array[Float])],
-      k: Int,
-      metric: Metric.Value,
-      range: (Option[Double], Option[Double])): LocalHits = {
-    val qids = queries.map(_._1).distinct.sorted.toArray
-    val group = qids.zipWithIndex.toMap
-    val qvecs = store.sparkContext.broadcast(queries.map(_._2).toArray)
-    val exact = new ExactRerank(qvecs, queries.map(q => group(q._1)).toArray, qids.length, k,
-      store.keyType, Metric.ascending(metric), metric == Metric.InnerProduct, range)
-    val merged = exact.heaps()
-    try store.lookup(cand) { (block, keys) =>
-        val heaps = exact.heaps()
-        keys.foreach { case (id, ps) => exact.add(heaps, block, id, ps) }
-        heaps.packed
-      }.foreach(merged.addPacked)
-    finally qvecs.destroy()
-    LocalHits.fromHeaps(merged, qids, store.keyType)
-  }
-
-  /** The exact fallback over a small allowed set, in one Spark job per
-    * chunk ([[IvfPqIndex.qidChunks]] of nq x k rows) and no shuffle: every
-    * allowed key maps to every query position and is looked up in `store`
-    * (the live table's). Equals `Knn.flatSearch` over the semi-joined rows
-    * cut to k per qid (same heaps, same arithmetic, score range applied
-    * before the heap).
-    *
-    * None unless the allowed keys are on the driver and match the store's
-    * key type (Long, Int or String), the metric is L2 or InnerProduct and
-    * the vectors are float or double arrays; the caller then runs the lazy
-    * plan.
-    */
-  private[graft] def allowedOnly(
-      store: VectorStore,
-      queries: Seq[(Long, Array[Float])],
-      k: Int,
-      metric: Metric.Value,
-      allowed: AllowedKeys,
-      range: (Option[Double], Option[Double])): Option[LocalHits] = {
-    val applies = (metric == Metric.L2 || metric == Metric.InnerProduct) && store.serves &&
-      allowed.keyType == store.keyType
-    if (!applies) None
-    else allowed.keys.map { keys =>
-      val distinct = keys.distinct
-      IvfPqIndex.qidChunks(queries, k, IvfPqIndex.MaxBroadcastCandidates).map { qs =>
-        val all = qs.indices.toArray
-        hits(store, distinct.map(_ -> all), qs, k, metric, range)
-      }.reduce(_ ++ _)
-    }
   }
 }

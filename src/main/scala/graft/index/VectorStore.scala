@@ -14,18 +14,21 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.core.Metric
+
 /** A resident store over the (key, vector) rows of `docs`: the reference's
   * `MemoryRawVector` / `MmapRawVector` (vector/memory_raw_vector.h,
-  * vector/mmap_raw_vector.h), from which the IVFPQ re-rank and the exact
-  * fallback read their rows by docid (gamma_index_ivfpq.cc:642-697) instead
+  * vector/mmap_raw_vector.h), from which the IVF scans, the IVFPQ re-rank
+  * and the exact fallback read their rows by docid
+  * (gamma_index_ivfflat.cc:380-470, gamma_index_ivfpq.cc:642-697) instead
   * of reading the table.
   *
-  * With a [[PqCodec]], the store also holds the IVFPQ index over the same
-  * rows, as gamma keeps each doc's codes next to its raw vector: every
-  * row's coarse centroid and PQ codes, encoded with the index's quantizers
-  * while the block is built, and the rows grouped by centroid. An IVFPQ
-  * request then scans its probed lists with ADC and re-ranks its
-  * candidates exactly inside one task per block ([[foreach]]).
+  * With an [[IvfCodec]], the store also holds the float IVF index over the
+  * same rows, as gamma keeps each doc's list entry next to its raw vector:
+  * every row's coarse centroid, assigned with the index's quantizers while
+  * the block is built, the rows grouped by centroid, and for IVFPQ each
+  * row's PQ codes. An IVF request then scans its probed lists (and IVFPQ
+  * re-ranks its candidates) inside one task per block ([[foreach]]).
   *
   * Blocks are the partitions of `docs`'s scan, one [[VectorStore.Block]]
   * each (keys sorted, vectors packed), cached in Spark's block manager
@@ -42,7 +45,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * nothing [[release]]s is unpersisted by Spark's ContextCleaner once it
   * is unreachable.
   */
-private[graft] final class VectorStore(docs: DataFrame, val codec: Option[PqCodec] = None) {
+private[graft] final class VectorStore(docs: DataFrame, val codec: Option[IvfCodec] = None) {
   import VectorStore.Block
 
   val keyType: DataType = docs.schema.head.dataType
@@ -136,6 +139,37 @@ private[graft] object VectorStore {
     case _                                    => false
   }
 
+  /** The `len` elements from `from` of `floats` (or, null, `doubles`)
+    * scored against `q` with the arithmetic of `l2_sq`, `inner_product` or
+    * `cosine_sim`: doc element first, widened to double, summed in index
+    * order over the shorter length.
+    */
+  def score(
+      floats: Array[Float], doubles: Array[Double], from: Int, len: Int, q: Array[Float],
+      metric: Metric.Value): Double = {
+    @inline def elem(j: Int): Double =
+      if (floats != null) floats(from + j).toDouble else doubles(from + j)
+    val n = math.min(len, q.length)
+    var j = 0
+    metric match {
+      case Metric.L2 =>
+        var s = 0.0
+        while (j < n) { val d = elem(j) - q(j).toDouble; s += d * d; j += 1 }
+        s
+      case Metric.InnerProduct =>
+        var s = 0.0
+        while (j < n) { s += elem(j) * q(j).toDouble; j += 1 }
+        s
+      case Metric.Cosine =>
+        var dot = 0.0; var na = 0.0; var nb = 0.0
+        while (j < n) {
+          val x = elem(j); val y = q(j).toDouble
+          dot += x * y; na += x * x; nb += y * y; j += 1
+        }
+        if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+  }
+
   private val keyOrder: java.util.Comparator[AnyRef] =
     (a: AnyRef, b: AnyRef) => a.asInstanceOf[Comparable[AnyRef]].compareTo(b)
 
@@ -147,9 +181,9 @@ private[graft] object VectorStore {
     *
     * With a codec, the index part: list `c`'s entries are positions
     * `lists(c) until lists(c + 1)`, entry `p` is row `listRows(p)` (rows in
-    * key order within a list) and its PQ codes are `m` values from
-    * `p * m` of `codes`, read as unsigned 16-bit (ksub ≤ 2^16, see
-    * [[PqCodec]]).
+    * key order within a list) and its PQ codes (IVFPQ; `m` = 0 otherwise)
+    * are `m` values from `p * m` of `codes`, read as unsigned 16-bit
+    * (ksub ≤ 2^16, see [[IvfCodec]]).
     */
   final class Block(
       keys: Array[AnyRef],
@@ -180,20 +214,9 @@ private[graft] object VectorStore {
       }
     }
 
-    /** Row `i` scored against `q` with the double arithmetic of `l2_sq` /
-      * `inner_product`: doc element first, each element widened to double,
-      * summed in index order over the shorter length.
-      */
-    def score(i: Int, q: Array[Float], ip: Boolean): Double = {
-      val from = offsets(i)
-      val n = math.min(offsets(i + 1) - from, q.length)
-      var s = 0.0; var j = 0
-      if (ip) while (j < n) { s += elem(from + j) * q(j).toDouble; j += 1 }
-      else while (j < n) { val d = elem(from + j) - q(j).toDouble; s += d * d; j += 1 }
-      s
-    }
-
-    @inline private def elem(j: Int): Double = if (floats != null) floats(j).toDouble else doubles(j)
+    /** Row `i` scored against `q` under `metric` ([[VectorStore.score]]). */
+    def score(i: Int, q: Array[Float], metric: Metric.Value): Double =
+      VectorStore.score(floats, doubles, offsets(i), offsets(i + 1) - offsets(i), q, metric)
 
     /** The entry positions of list `c` (empty without a codec). */
     def list(c: Int): Range =
@@ -221,7 +244,7 @@ private[graft] object VectorStore {
       */
     def apply(
         rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-        keyType: DataType, float: Boolean, versioned: Boolean, codec: PqCodec): Block = {
+        keyType: DataType, float: Boolean, versioned: Boolean, codec: IvfCodec): Block = {
       val keys = mutable.ArrayBuffer.empty[AnyRef]
       val vecs = mutable.ArrayBuffer.empty[AnyRef]
       val vers = mutable.ArrayBuilder.make[Long]

@@ -88,9 +88,9 @@ object IndexCatalog {
     * persisted version (one small driver-side manifest read) and reloads
     * when a commit moved it — SQL INSERT/DELETE/UPDATE on the served
     * table is picked up on the next query instead of serving stale rows.
-    * An IVFPQ index serves the live rows written through its last build or
-    * refresh (`IncrementalIndexer.currentIndex`): a row written since is
-    * left out, not served stale, until the index is refreshed. A cached MISS is re-probed on a short interval (persisting an index
+    * An IVF index serves every live row of the table's store, rows written
+    * since its last build or refresh included, each in the list the
+    * index's quantizers assign. A cached MISS is re-probed on a short interval (persisting an index
     * leaves the version untouched). Non-gamma relations stay cheap: two
     * fs.exists on first sight, then a map hit until the recheck interval.
     */
@@ -131,7 +131,10 @@ object IndexCatalog {
       val t = graft.table.GammaTable.load(spark, root)
       t.meta.vectorFields.iterator
         .flatMap(f => t.attachedIndex(f.name).flatMap(ix =>
-          ix.currentIndex.map(i => RegisteredIndex(i, t.docs, t.meta.keyField, f.name))))
+          ix.currentIndex.map {
+            case ivf: graft.index.IvfIndex => ivf.through(Long.MaxValue)
+            case i                         => i
+          }.map(i => RegisteredIndex(i, t.docs, t.meta.keyField, f.name))))
         .nextOption()
     }.toOption.flatten
   }
@@ -293,8 +296,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     val exactThreshold = IncrementalIndexer.exactFallbackRows(spark, k,
       stats.map { case (_, total, aCnt) =>
         val sizes = ri.index match {
-          case f: graft.index.IvfFlatIndex   => f.listSizes
-          case p: graft.index.IvfPqIndex     => p.listSizes
+          case ivf: graft.index.IvfIndex     => ivf.listSizes
           case b: graft.index.BinaryIvfIndex => b.listSizes
           case _                             => None
         }
@@ -350,7 +352,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       }
       val asc = Metric.ascending(metric)
       val ordered = hits.queryExecution.optimizedPlan match {
-        // an index that answered on the driver (IVFPQ) hands back a local
+        // an index that answered on the driver (IVFFLAT, IVFPQ) hands back a local
         // relation: its top k is cut here, in Spark's sort order, so the
         // replacement runs no job
         case lr @ LocalRelation(Seq(id, score), data, _, _) if !needsJoin =>

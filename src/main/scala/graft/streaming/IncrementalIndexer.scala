@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Metric
-import graft.index.{AllowedKeys, AnnIndex, BinaryIvfIndex, ExactRerank, HnswIndex, IndexParams, Ivf, IvfFlatIndex, IvfPqIndex, LocalHits}
+import graft.index.{AllowedKeys, AnnIndex, BinaryIvfIndex, ExactRerank, HnswIndex, IndexParams, Ivf, IvfFlatIndex, IvfIndex, IvfPqIndex, LocalHits}
 import graft.operators.{Knn, TopK}
 import graft.table.GammaTable
 
@@ -20,10 +20,10 @@ import graft.table.GammaTable
   *    retraining (R5 — the reference feeds raw vectors into the trained
   *    index in chunks, gamma_engine.cc:996-1043) and supersede re-written
   *    vectors (R6 — the updated-vid queue, vector_manager.cc:355-380);
-  *  - at query time, stale/deleted entries are anti-joined out of the
-  *    index scan (the reference's bitmap `IsValid` check inside the scan,
-  *    T11/X2; IVFPQ tests each store row's `_version` against the build
-  *    version instead) and the not-yet-indexed tail is searched exactly and
+  *  - at query time, stale/deleted entries are left out of the index scan
+  *    (the reference's bitmap `IsValid` check inside the scan, T11/X2: an
+  *    IVF store row's `_version` against the build version, an anti-join
+  *    for HNSW and BINARYIVF) and the not-yet-indexed tail is searched exactly and
   *    union-merged (the reference searches index + raw memory tail; V9
   *    brute-force fallback when no index exists).
   *
@@ -116,27 +116,23 @@ class IncrementalIndexer(
 
   def status: String = table.meta.indexStatus
 
-  /** The index as a search binds it: an IVFPQ index reads the current
+  /** The index as a search binds it: an IVF index reads the current
     * table's store and serves its rows through the build version (the
     * request path's index part, without the unindexed tail).
     */
   def currentIndex: Option[AnnIndex] = index.map {
-    case pq: IvfPqIndex => rebuilt(pq, pq.codes).asInstanceOf[IvfPqIndex].through(builtVersion)
-    case other          => other
+    case ivf: IvfIndex => rebuilt(ivf, ivf.lists).asInstanceOf[IvfIndex].through(builtVersion)
+    case other         => other
   }
 
-  /** Same quantizers, different code lists — used by the stale-filter,
-    * refresh, compaction, and load paths. An IVFPQ index reads the CURRENT
-    * doc table's resident store, which holds its codes, so it always scans
-    * and re-ranks live rows; the quantizer broadcast carries over.
+  /** Same quantizers, different lists — used by the stale-filter,
+    * refresh, compaction, and load paths. An IVF index reads the CURRENT
+    * doc table's resident store, which holds its lists, so it always scans
+    * live rows; the quantizer broadcast carries over.
     */
   private def rebuilt(proto: AnnIndex, data: DataFrame): AnnIndex = proto match {
-    case f: IvfFlatIndex =>
-      new IvfFlatIndex(spark, data, key, vecCol, f.centers, params)
-    case p: IvfPqIndex =>
-      new IvfPqIndex(spark, data, table.docs, key, vecCol, p.centers, p.codebooks, p.params,
-        p.rotation, sharedCodec = Some(p.codec),
-        store = Some(table.vectorStore(vecCol, Some(p.codec))))
+    case ivf: IvfIndex =>
+      ivf.onTable(data, table.docs, table.vectorStore(vecCol, Some(ivf.codec)))
     case h: HnswIndex =>
       new HnswIndex(spark, data, key, vecCol, params, h.excluded)
     case b: BinaryIvfIndex =>
@@ -145,8 +141,7 @@ class IncrementalIndexer(
   }
 
   private def listsOf(idx: AnnIndex): DataFrame = idx match {
-    case f: IvfFlatIndex   => f.data
-    case p: IvfPqIndex     => p.codes
+    case ivf: IvfIndex     => ivf.lists
     case h: HnswIndex      => h.graphs
     case b: BinaryIvfIndex => b.data
     case other => throw new IllegalStateException(s"unsupported ${other.retrievalType}")
@@ -217,7 +212,7 @@ class IncrementalIndexer(
     * per-query prediction; either would mis-teach the volume model (the
     * serving point query is the case the calibration targets anyway).
     */
-  private def foldScanFeedback(pq: IvfPqIndex, effNprobe: Option[Int]): Unit = {
+  private def foldScanFeedback(pq: IvfIndex, effNprobe: Option[Int]): Unit = {
     val total = math.max(table.meta.maxDocid, 1L)
     val pred = IncrementalIndexer.uniformProbeRows(pq.centers.length, total,
       math.min(effNprobe.getOrElse(params.nprobe).toLong, pq.centers.length.toLong))
@@ -253,18 +248,17 @@ class IncrementalIndexer(
     * models size their per-segment beam instead; FLAT probes nothing).
     */
   private def withListStats(idx: AnnIndex): AnnIndex = idx match {
-    case f: IvfFlatIndex   => f.withListSizes(cachedListSizes(f.data, f.centers.length))
-    case p: IvfPqIndex     => p.withListSizes(cachedListSizes(p.codes, p.centers.length))
+    case ivf: IvfIndex     => ivf.withListSizes(cachedListSizes(ivf.lists, ivf.centers.length))
     case b: BinaryIvfIndex => b.withListSizes(cachedListSizes(b.data, b.centroids.length))
     case h: HnswIndex      => h.withSegmentAvg(cachedSegmentAvg(h.graphs))
     case other => other
   }
 
-  /** The table's resident store of this field; an IVFPQ index's holds its
-    * codes, so its exact fallback and its scans share one store.
+  /** The table's resident store of this field; an IVF index's holds its
+    * lists, so its exact fallback and its scans share one store.
     */
   private def vectorStore: graft.index.VectorStore = index match {
-    case Some(p: IvfPqIndex) => table.vectorStore(vecCol, Some(p.codec))
+    case Some(ivf: IvfIndex) => table.vectorStore(vecCol, Some(ivf.codec))
     case _                   => table.vectorStore(vecCol)
   }
 
@@ -377,17 +371,14 @@ class IncrementalIndexer(
               val centers = Ivf.trainCoarse(docs, vecCol, k, params.trainSampleRows, params.seed)
               new IvfFlatIndex(spark,
                 Ivf.assignWithCenters(docs, vecCol, centers, params.metric),
-                key, vecCol, centers, params)
+                table.docs, key, vecCol, centers, params)
           }
           val assigned = proto match {
             case p: IvfPqIndex =>
               // build already encoded every doc — just stamp row versions
               // instead of paying a second full-table encode pass
-              p.codes.join(docs.select(col(key), col(IxvCol)), Seq(key))
-            case f: IvfFlatIndex   => f.data
-            case h: HnswIndex      => h.graphs
-            case b: BinaryIvfIndex => b.data
-            case other => throw new IllegalStateException(other.retrievalType)
+              p.lists.join(docs.select(col(key), col(IxvCol)), Seq(key))
+            case other => listsOf(other)
           }
           val data =
             if (persist) {
@@ -691,20 +682,21 @@ class IncrementalIndexer(
     *    the semi-join shuffles (or AQE re-plans it), instead of forcing a
     *    near-table-size set through the driver.
     *
-    * Spark jobs per IVFPQ request when the caller
+    * Spark jobs per IVFFLAT or IVFPQ request when the caller
     * ([[graft.table.GammaTable.search]]) hands over the allowed keys its
     * keys job collected; the cached per-list stats cost one more job once
     * per lists version, an unindexed tail (a bucket changed since the
     * build) one more, and a batch above
-    * [[IvfPqIndex.MaxBroadcastCandidates]] candidates repeats the index
-    * job once per whole-qid chunk:
+    * [[IvfIndex.MaxBroadcastCandidates]] candidates repeats the index job
+    * once per whole-qid chunk:
     *  - unfiltered: 1, over the table's resident store, whose blocks hold
-    *    each live row's vector, `_version`, centroid and PQ codes; each
-    *    task scans its block's probed lists with ADC over the rows with
-    *    `_version` ≤ the build version (the clean lists minus the
+    *    each live row's vector, `_version` and centroid (and PQ codes for
+    *    IVFPQ); each task scans its block's probed lists over the rows
+    *    with `_version` ≤ the build version (the clean lists minus the
     *    updated-after-build and tombstoned keys, so nothing is
-    *    anti-joined) and re-ranks its candidates from the same block; the
-    *    driver merges (no Parquet row is read);
+    *    anti-joined), IVFFLAT scoring each row exactly, IVFPQ by ADC with
+    *    its candidates re-ranked from the same block; the driver merges
+    *    (no Parquet row is read);
     *  - moderate: the keys job plus the same 1 — the keys ride a
     *    `SparkContext.broadcast` and each index row is tested against them
     *    inside the scan;
@@ -712,17 +704,15 @@ class IncrementalIndexer(
     *    in the same store and scores them, with k per query per task merged
     *    on the driver; no shuffle.
     * The first request that needs the store after a commit, or on a
-    * freshly loaded table, builds it inside its own job, encoding every
-    * live row: no extra job, no shuffle (see
+    * freshly loaded table, builds it inside its own job, assigning every
+    * live row to its list: no extra job, no shuffle (see
     * [[graft.table.GammaTable.vectorStore]]).
-    * The keys job (here, or the caller's) collects keys only for a model
-    * that tests them ([[allowedKeyBound]]: IVFPQ as above, HNSW in its
-    * walk); for IVFFLAT and BINARYIVF it only counts, and their scans and
-    * exact fallback semi-join the allowed frame. Without collected keys
-    * (those models, or a set above `broadcastMaxKeys`) IVFPQ scans its
-    * lists minus the stale keys, semi-joined with the allowed frame, and
-    * re-ranks in a second job over the store, and the exact fallback runs
-    * the `Knn.flatSearch` plan.
+    * The keys job (here, or the caller's) collects keys for every model
+    * but BINARYIVF ([[allowedKeyBound]]). Without collected keys (a set
+    * above `broadcastMaxKeys`) an IVF model scans its lists minus the stale
+    * keys, semi-joined with the allowed frame, in one job (IVFPQ re-ranks
+    * in a second, over the store), and the exact fallback runs the
+    * `Knn.flatSearch` plan.
     *
     * Every tier runs its search here and returns its hits as a local
     * relation ([[searchHits]]), so collecting the result runs no job.
@@ -745,18 +735,15 @@ class IncrementalIndexer(
 
   /** The key bound for the keys job of a filtered request to this index
     * ([[AllowedKeys.collect]]): `broadcastMaxKeys` for the models whose
-    * request paths test collected keys (IVFPQ, HNSW),
-    * -1 (count only) for the others, which semi-join the allowed frame.
+    * request paths test collected keys (IVFFLAT, IVFPQ, HNSW), -1 (count
+    * only) for BINARYIVF, which semi-joins the allowed frame.
     */
   private[graft] def allowedKeyBound: Long =
-    retrievalType.toUpperCase(java.util.Locale.ROOT) match {
-      case "IVFPQ" | "HNSW" => AllowedKeys.broadcastMax(spark)
-      case _                => -1L
-    }
+    if (retrievalType.equalsIgnoreCase("BINARYIVF")) -1L else AllowedKeys.broadcastMax(spark)
 
   /** [[search]], with the hits held on the driver, so the caller's
-    * per-request cuts need no further Spark job. The IVFPQ tiers
-    * ([[IvfPqIndex.searchHits]]) and the exact fallback over collected
+    * per-request cuts need no further Spark job. The IVFFLAT and IVFPQ
+    * tiers ([[IvfIndex.searchHits]]) and the exact fallback over collected
     * keys ([[ExactRerank.allowedOnly]]) merge their task heaps on the
     * driver; every other tier collects its plan ([[LocalHits.collect]]).
     */
@@ -790,8 +777,7 @@ class IncrementalIndexer(
     // one model-arity/partial-probe computation shared by the cost bound
     // below and the stats attachment in the index branch
     def ncentOf(ix: AnnIndex): Int = ix match {
-      case f: IvfFlatIndex   => f.centers.length
-      case p: IvfPqIndex     => p.centers.length
+      case ivf: IvfIndex     => ivf.centers.length
       case b: BinaryIvfIndex => b.centroids.length
       case _                 => 0
     }
@@ -868,11 +854,11 @@ class IncrementalIndexer(
         val partialProbe = partialListProbe(idx) ||
           // a graph walk is always "partial" — per-segment beam stats apply
           retrievalType.equalsIgnoreCase("HNSW")
-        // ONE shared exclusion surface (AnnIndex.excluding, X2/T11): list
-        // models anti-join their lists, HNSW folds into its standing
-        // excluded set (graph segments are opaque — exclusion happens at
-        // result admission). rebuilt() first so the IVFPQ index reads the
-        // CURRENT doc table's store.
+        // ONE shared exclusion surface (AnnIndex.excluding, X2/T11) for the
+        // models without a store: BINARYIVF anti-joins its lists, HNSW folds
+        // into its standing excluded set (graph segments are opaque —
+        // exclusion happens at result admission). rebuilt() first so an IVF
+        // index reads the CURRENT doc table's store.
         val freshIdx = rebuilt(idx, listsOf(idx))
         val statsIdx = if (partialProbe) withListStats(freshIdx) else freshIdx
         // the request's PRE-widening probe base (override or configured
@@ -894,14 +880,14 @@ class IncrementalIndexer(
             recallNum = recallNum.getOrElse(statsIdx.params.recallNum),
             hasRank = hasRank.getOrElse(statsIdx.params.hasRank)))
         lastProbeBase = tunedIdx.params.nprobe
-        // an IVFPQ store scan serves the rows of _version <= built: every
+        // an IVF store scan serves the rows of _version <= built: every
         // later or tombstoned row is exactly an `invalid` one, so it
-        // anti-joins nothing. An IVFPQ allowed frame scans the lists
-        // minus `invalid`, on the same store.
+        // anti-joins nothing. An IVF allowed frame scans the lists minus
+        // `invalid`, on the same store.
         val cleanIdx = tunedIdx match {
-          case pq: IvfPqIndex if pq.scansStore(allowed) => pq.through(built)
-          case pq: IvfPqIndex =>
-            invalid.fold(pq)(ids => pq.withCodes(pq.codes.join(ids, Seq(key), "left_anti")))
+          case ivf: IvfIndex if ivf.scansStore(allowed) => ivf.through(built)
+          case ivf: IvfIndex =>
+            invalid.fold(ivf)(ids => ivf.withLists(ivf.lists.join(ids, Seq(key), "left_anti")))
           case other => invalid.fold(other)(other.excluding)
         }
         // inverse-selectivity widening (the reference's recall_num
@@ -937,13 +923,15 @@ class IncrementalIndexer(
             minScore = minScore, maxScore = maxScore))
         val asc = Metric.ascending(params.metric)
         cleanIdx match {
-          case pq: IvfPqIndex =>
+          case ivf: IvfIndex =>
             // one job over the store (collected keys tested in its scan),
-            // or two over the lists for an allowed frame; the merge with
-            // the tail (one more job) runs on the driver too
-            val hits = pq.searchHits(queries, fetchK, effNprobe,
-              if (pq.scansStore(allowed)) allowed else pushIds, minScore, maxScore)
-            if (pushIds.isEmpty && queries.size == 1) foldScanFeedback(pq, effNprobe)
+            // or the list scan of an allowed frame (plus the IVFPQ re-rank
+            // job); the merge with the tail (one more job) runs on the
+            // driver too. The probe-cost feedback learns from IVFPQ scans.
+            val hits = ivf.searchHits(queries, fetchK, effNprobe,
+              if (ivf.scansStore(allowed)) allowed else pushIds, minScore, maxScore)
+            if (ivf.isInstanceOf[IvfPqIndex] && pushIds.isEmpty && queries.size == 1)
+              foldScanFeedback(ivf, effNprobe)
             fromTail.fold(hits)(t => (hits ++ LocalHits.collect(t)).topK(k, asc))
           case _ =>
             val fromIndex0 = (cleanIdx, pushIds) match {
@@ -1003,8 +991,7 @@ object IncrementalIndexer {
       calibration: Double = 1.0): Long = {
     if (aCount <= 0L) return 0L
     val (ncent, compressed) = idx match {
-      case f: IvfFlatIndex   => (f.centers.length, false)
-      case p: IvfPqIndex     => (p.centers.length, true)
+      case ivf: IvfIndex     => (ivf.centers.length, ivf.isInstanceOf[IvfPqIndex])
       case b: BinaryIvfIndex => (b.centroids.length, true)
       case _                 => (0, false)
     }
@@ -1174,10 +1161,8 @@ object IncrementalIndexer {
     ix.index = Some(rt.toUpperCase(java.util.Locale.ROOT) match {
       case "IVFPQ" =>
         val (centers, codebooks, rotation) = IvfPqIndex.loadQuantizers(spark, root)
-        val codec = graft.index.PqCodec(spark, centers, codebooks, rotation, params.metric)
         new IvfPqIndex(spark, ix.persistedData(), table.docs, key, vecCol, centers, codebooks,
-          params, rotation, sharedCodec = Some(codec),
-          store = Some(table.vectorStore(vecCol, Some(codec))))
+          params, rotation)
       case "HNSW" =>
         // restore the standing exclusion set: entries of keys purged from
         // the table live on in the immutable graph segments, and after the
@@ -1198,7 +1183,7 @@ object IncrementalIndexer {
         new BinaryIvfIndex(spark, ix.persistedData(), key, vecCol,
           BinaryIvfIndex.loadCenters(spark, s"$root/centroids_bin"), params)
       case _ =>
-        new IvfFlatIndex(spark, ix.persistedData(), key, vecCol,
+        new IvfFlatIndex(spark, ix.persistedData(), table.docs, key, vecCol,
           graft.index.Ivf.loadCenters(spark, s"$root/centroids"), params)
     })
     ix

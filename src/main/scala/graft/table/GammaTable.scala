@@ -84,15 +84,16 @@ case class TableMeta(
   * [[vectorStore]]): the live (key, vector) rows on the decoded float
   * surface (INT8-stored fields decoded once), cached in Spark's block
   * manager and looked up by key, so a request reads its candidates'
-  * blocks instead of the table's files. An IVFPQ field's store also holds
-  * the index: each row's version, coarse centroid and PQ codes, so an
-  * IVFPQ request scans and re-ranks in one job over it. The first request
+  * blocks instead of the table's files. An IVFFLAT or IVFPQ field's store
+  * also holds the index: each row's version and coarse centroid (and its
+  * PQ codes for IVFPQ), so an IVF request scans (and IVFPQ re-ranks) in
+  * one job over it. The first request
   * after a commit (or on a freshly loaded handle) builds it inside its own
   * job, with no shuffle; the commit unpersists the previous manifest's
   * blocks. Memory: per live row, the vector (4 B a component for float,
   * 8 B for double) plus its key (about 24 B for a long key, more for a
-  * string) and a 4 B offset; for IVFPQ, 8 B of version, 4 B of list entry
-  * and 2 B per subspace code. It spills to
+  * string) and a 4 B offset; for an IVF index, 8 B of version and 4 B of
+  * list entry, plus 2 B per subspace code for IVFPQ. It spills to
   * executor disk under memory pressure (`MEMORY_AND_DISK`).
   */
 class GammaTable private (
@@ -246,15 +247,15 @@ class GammaTable private (
   private val storesLock = new Object
 
   /** The resident vector store of `field` over the current manifest's live
-    * docs; built by its first job. With `codec` (an IVFPQ index's
+    * docs; built by its first job. With `codec` (an IVF index's
     * quantizers) the store also holds each row's `_version`, centroid and
-    * PQ codes, encoded with that codec; without, any store of the field
+    * (IVFPQ) PQ codes, encoded with that codec; without, any store of the field
     * serves. A store made for an older manifest, or with another codec, is
     * released (its blocks unpersisted) when replaced: by [[writeMeta]] on
     * every commit, or here.
     */
   private[graft] def vectorStore(
-      field: String, codec: Option[graft.index.PqCodec] = None): graft.index.VectorStore = {
+      field: String, codec: Option[graft.index.IvfCodec] = None): graft.index.VectorStore = {
     val m = meta0
     val (store, stale) = storesLock.synchronized {
       val stale = if (stores != null && (stores._1 ne m)) takeStores() else Nil
@@ -1029,12 +1030,12 @@ class GammaTable private (
     // route touches it, by the keys job: a single pass over the persisted
     // key scan in which each task returns its row count and, for a set
     // within `spark.graft.filter.broadcastMaxKeys` searched by a model
-    // that tests keys in its scan (IVFPQ, HNSW), its keys. The summed
-    // count drives the indexer's filtered-ANN policy (exact fallback vs
-    // broadcast pushdown + widened probes vs shuffle semi-join); the keys
-    // are what the driver paths test inside their scans (IVFPQ probe,
-    // exact fallback, HNSW walk), so no later job re-reads the set. The
-    // plans of the other models and of the huge tier semi-join the same
+    // that tests keys in its scan (IVFFLAT, IVFPQ, HNSW), its keys. The
+    // summed count drives the indexer's filtered-ANN policy (exact fallback
+    // vs broadcast pushdown + widened probes vs shuffle semi-join); the
+    // keys are what the driver paths test inside their scans (IVF list
+    // scan, exact fallback, HNSW walk), so no later job re-reads the set.
+    // The plans of BINARYIVF and of the huge tier semi-join the same
     // persisted blocks. Lazy: the brute/filter-only paths never pay the
     // job. persist (lineage kept), NOT localCheckpoint (lineage cut): the
     // bounded release queue below can then unpersist older requests'

@@ -103,7 +103,7 @@ class AdaptiveProbeSpec extends GraftSuite {
       IndexParams(ncentroids = 2, nprobe = 1, recallNum = 5, trainSampleRows = 1000))
     val sizes = {
       val arr = new Array[Long](2)
-      idx.data.groupBy("centroid_id").count().as[(Int, Long)].collect()
+      idx.lists.groupBy("centroid_id").count().as[(Int, Long)].collect()
         .foreach { case (c, n) => arr(c) = n }
       arr
     }

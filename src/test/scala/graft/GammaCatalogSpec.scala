@@ -226,7 +226,7 @@ class GammaCatalogSpec extends GraftSuite {
       spark.conf.set("spark.graft.ann.rewrite", "true")
       val df = spark.sql(
         s"SELECT _id, l2_sq(vec, $qLit) AS score FROM gcat.$tbl ORDER BY score LIMIT 5")
-      assert(df.queryExecution.executedPlan.toString.contains("centroid_id"),
+      assert(answeredByIndex(df),
         "ANN rewrite did not engage on the catalog-resolved gamma relation")
       val got = df.collect().map(_.getString(0)).toSeq
       spark.conf.set("spark.graft.ann.rewrite", "false")
@@ -262,7 +262,7 @@ class GammaCatalogSpec extends GraftSuite {
       spark.conf.set("spark.graft.ann.rewrite", "true")
       val df = spark.sql(
         s"SELECT _id, l2_sq(vec, $qLit) AS score FROM gcat.$tbl ORDER BY score LIMIT 5")
-      assert(df.queryExecution.executedPlan.toString.contains("centroid_id"),
+      assert(answeredByIndex(df),
         "rewrite did not auto-resolve the persisted index from disk")
       val got = df.collect().map(_.getString(0)).toSeq
       spark.conf.set("spark.graft.ann.rewrite", "false")
@@ -313,7 +313,7 @@ class GammaCatalogSpec extends GraftSuite {
       spark.sql(s"CREATE TABLE gcat.$tbl (_id STRING, p_size INT, vec ARRAY<FLOAT>) " +
         "TBLPROPERTIES ('key'='_id', 'buckets'='4', 'vector.vec'='dim=64')")
       val df = spark.sql(q)
-      assert(!df.queryExecution.executedPlan.toString.contains("centroid_id"))
+      assert(!answeredByIndex(df))
       assert(df.collect().isEmpty)
     } finally {
       spark.conf.set("spark.graft.ann.rewrite", "false")
@@ -385,7 +385,7 @@ class GammaCatalogSpec extends GraftSuite {
       spark.conf.set("spark.graft.ann.rewrite", "true")
       val df = spark.sql(
         s"SELECT _id, l2_sq(vec, $qLit) AS score FROM gcat.$tbl ORDER BY score LIMIT 5")
-      assert(df.queryExecution.executedPlan.toString.contains("centroid_id"),
+      assert(answeredByIndex(df),
         "top-k after CALL build_index did not route through the index")
       val got = df.collect().map(_.getString(0)).toSeq
       spark.conf.set("spark.graft.ann.rewrite", "false")

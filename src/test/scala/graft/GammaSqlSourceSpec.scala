@@ -185,7 +185,7 @@ class GammaSqlSourceSpec extends GraftSuite {
       spark.conf.set("spark.graft.ann.rewrite", "true")
       val df = spark.sql(
         s"SELECT _id, l2_sq(vec, $qLit) AS score FROM gann ORDER BY score LIMIT 5")
-      assert(df.queryExecution.executedPlan.toString.contains("centroid_id"),
+      assert(answeredByIndex(df),
         "ANN rewrite did not engage on the gamma DSv2 relation")
       // full probe at ncentroids=4 default nprobe=80 → exact: matches the
       // brute-force answer through the plain (non-rewritten) view

@@ -127,15 +127,16 @@ class JobCountSpec extends GraftSuite {
     assert(hits.count() === 5)
   }
 
-  test("persisted IVFPQ point and batch requests run one job and no shuffle") {
+  for (model <- Seq("IVFPQ", "IVFFLAT"))
+  test(s"persisted $model point and batch requests run one job and no shuffle") {
     // one job over the table's resident store: each task scans its block's
-    // probed lists with ADC and re-ranks its candidates from the same
-    // block; the driver merges the task results
+    // probed lists (IVFPQ with ADC, re-ranking its candidates from the same
+    // block; IVFFLAT exactly); the driver merges the task results
     val root = tmp()
     GammaTable.create(spark, root, "jpq", "_id", docTable(),
-      Seq(VectorFieldDef("vec", 64, "L2", "IVFPQ")), nBuckets = 4)
+      Seq(VectorFieldDef("vec", 64, "L2", model)), nBuckets = 4)
       .buildIndex("vec", IndexParams(ncentroids = 4, nprobe = 2, nsubvector = 8),
-        persist = true, retrievalType = "IVFPQ")
+        persist = true, retrievalType = model)
     val t = GammaTable.load(spark, root)
     val vecs = docTable().select("vec").as[Array[Float]].take(64).toSeq
     Seq(VecQuery("vec", vecs.head), VecQuery("vec", vectors = vecs)).foreach { vq =>
@@ -233,14 +234,15 @@ class JobCountSpec extends GraftSuite {
     }
   }
 
-  test("a standalone IVFPQ search and its SQL rewrite run one job and no shuffle") {
-    // the one IVFPQ search: one job over the index's own store (built by
-    // the first search, cached for the index's lifetime), merged on the
+  for (model <- Seq("IVFPQ", "IVFFLAT"))
+  test(s"a standalone $model search and its SQL rewrite run one job and no shuffle") {
+    // the one IVF search: one job over the index's own store (built by the
+    // first search, cached for the index's lifetime), merged on the
     // driver; the SQL rewrite runs the same search and its hits come back
     // as a local relation
     val path = s"$sf0/embeddings.parquet"
     val emb = spark.read.parquet(path)
-    val idx = graft.index.IndexRegistry.build("IVFPQ", spark, emb, "vec_id", "embedding",
+    val idx = graft.index.IndexRegistry.build(model, spark, emb, "vec_id", "embedding",
       IndexParams(ncentroids = 8, nprobe = 2, nsubvector = 8))
     val qvec = emb.filter($"vec_id" === 0).select("embedding").as[Array[Float]].head()
     val (rows, n) = jobsDuring(idx.search(Seq((0L, qvec)), 10).select("id", "score").collect())
@@ -251,16 +253,25 @@ class JobCountSpec extends GraftSuite {
     graft.plans.AnnRewrite.install(spark)
     graft.plans.IndexCatalog.register(path,
       graft.plans.RegisteredIndex(idx, emb, "vec_id", "embedding"))
-    emb.createOrReplaceTempView("jc_ivfpq")
+    val view = s"jc_${model.toLowerCase(java.util.Locale.ROOT)}"
+    emb.createOrReplaceTempView(view)
     val qLit = s"array(${qvec.map(v => s"CAST($v AS FLOAT)").mkString(",")})"
     try {
       spark.conf.set("spark.graft.ann.rewrite", "true")
       val df = spark.sql(s"SELECT vec_id, l2_sq(embedding, $qLit) AS score " +
-        "FROM jc_ivfpq ORDER BY score LIMIT 10")
+        s"FROM $view ORDER BY score LIMIT 10")
       val (sqlRows, m) = jobsDuring(df.collect())
       assert(m === 1, s"SQL ran $m jobs: " + lastJobSites.toArray.mkString("; ") +
         "\n" + df.queryExecution.executedPlan)
       assert(lastShuffleBytes.get === 0L)
+      // the store the first search built: one cached block read per task,
+      // no Parquet row, one task per block at most
+      val Seq(job) = lastJobs
+      assert(job.site.contains("VectorStore"), lastJobs)
+      assert(job.tasks > 0 && job.recordsRead === job.tasks, lastJobs)
+      val blocks = spark.sparkContext.getPersistentRDDs.values
+        .filter(_.name == "graft.VectorStore(vec_id, embedding)").maxBy(_.id).getNumPartitions
+      assert(job.tasks <= blocks, lastJobs)
       assert(sqlRows.map(r => (r.getLong(0), r.getDouble(1))).toSeq ===
         rows.map(r => (r.getLong(0), r.getDouble(1))).toSeq)
     } finally {
@@ -273,7 +284,8 @@ class JobCountSpec extends GraftSuite {
     // every tier finishes inside IncrementalIndexer.search: the frame it
     // returns is a local relation that collects with no job, and search
     // plus collect run no more jobs than the lazy frames they replace did
-    // (those counts are the pins below)
+    // (those counts are the pins below); IVFFLAT serves from the table's
+    // store: 1 job, and the keys job plus 1 for its exact fallback
     val t = GammaTable.create(spark, tmp(), "jlz", "_id", docTable(),
       Seq(VectorFieldDef("vec", 64)), nBuckets = 4)
     val flat = t.buildIndex("vec", IndexParams(ncentroids = 4, nprobe = 2), persist = true)
@@ -297,8 +309,8 @@ class JobCountSpec extends GraftSuite {
     // (case, search, confs, jobs of search + collect when search was lazy)
     val cases = Seq[(String, () => org.apache.spark.sql.DataFrame, Map[String, String], Int)](
       ("unindexed brute scan", () => unindexed.search(q, 10), Map.empty, 3),
-      ("IVFFLAT", () => flat.search(q, 10), Map.empty, 3),
-      ("IVFFLAT exact fallback", () => flat.search(q, 10, allowedIds = allowed(t)), Map.empty, 5),
+      ("IVFFLAT", () => flat.search(q, 10), Map.empty, 1),
+      ("IVFFLAT exact fallback", () => flat.search(q, 10, allowedIds = allowed(t)), Map.empty, 2),
       ("HNSW with a tail", () => hnsw.search(q, 10), Map.empty, 5),
       ("HNSW huge-tier semi-join", () => hnsw.search(q, 10, allowedIds = allowed(ht)),
         Map("spark.graft.filter.exactFallbackRows" -> "0",
@@ -318,10 +330,11 @@ class JobCountSpec extends GraftSuite {
     }
   }
 
-  test("persisted IVFFLAT filtered requests: the keys job only counts") {
-    // IVFFLAT semi-joins the allowed frame, so its keys job brings no keys
-    // to the driver: one job (a count() was a shuffle stage plus a result
-    // stage), then the semi-join plan, 5 jobs on either tier (was 6-7)
+  test("persisted IVFFLAT filtered requests: the keys job plus one store job, no shuffle") {
+    // the keys job brings the keys to the driver; the widened-probe tier
+    // tests them inside the one store job, and the exact fallback looks
+    // the allowed rows up in the same store: 2 jobs on either tier (the
+    // semi-join plans they replace ran 5)
     val root = tmp()
     GammaTable.create(spark, root, "jflf", "_id", docTable(),
       Seq(VectorFieldDef("vec", 64, "L2", "IVFFLAT")), nBuckets = 4)
@@ -339,7 +352,9 @@ class JobCountSpec extends GraftSuite {
         val (rows, n) = jobsDuring(run())
         val what = s"${vq.batch.size}-vector request (exactFallbackRows=$fallbackRows)"
         assert(rows.length === 10 * vq.batch.size, what)
-        assert(n <= 5, s"$what ran $n jobs: " + lastJobSites.toArray.mkString("; "))
+        assert(n === 2, s"$what ran $n jobs: " + lastJobSites.toArray.mkString("; "))
+        assert(lastShuffleBytes.get === 0L, what)
+        assert(lastJobs.count(_.site.contains("VectorStore")) === 1, lastJobs)
       } finally spark.conf.unset("spark.graft.filter.exactFallbackRows")
     }
   }

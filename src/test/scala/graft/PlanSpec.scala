@@ -65,7 +65,7 @@ class PlanSpec extends GraftSuite {
     idx.save(root)
     val re = graft.index.IvfFlatIndex.load(spark, root, "vec_id", "embedding",
       graft.index.IndexParams(ncentroids = 8))
-    val probed = re.data.filter(col("centroid_id").isin(0, 3))
+    val probed = re.lists.filter(col("centroid_id").isin(0, 3))
     val p = plan(probed)
     // probe filter must land in PartitionFilters (file pruning), not a
     // post-scan Filter over all lists
@@ -156,10 +156,13 @@ class PlanSpec extends GraftSuite {
     try {
       // the plans the search ran (its result is a local relation)
       def searchPlans(): String = withExecutedPlans(t.search(req))._2.mkString("\n")
-      // small allowed set -> the policy hints broadcast; the semi-join
-      // must build on the (hinted) id side
-      val p1 = searchPlans()
-      assert("""BroadcastHashJoin [^\n]*LeftSemi""".r.findFirstIn(p1).isDefined, p1)
+      // small allowed set -> the keys job brings the keys to the driver and
+      // the store job tests them inside its list scan: no join over the
+      // allowed set, no shuffle
+      val (p1, jobs1, shuffle1) = withJobs(searchPlans())
+      assert(!p1.contains("LeftSemi"), p1)
+      assert(jobs1.size === 2 && jobs1.count(_.contains("VectorStore")) === 1, jobs1)
+      assert(shuffle1 === 0L, jobs1)
       // "huge" allowed set (threshold forced to 0) with auto-broadcast off:
       // the engine must NOT force the set through the driver — the
       // semi-join shuffles instead
@@ -225,8 +228,12 @@ class PlanSpec extends GraftSuite {
       // take the policy's exact-fallback tier (rewrite declines)
       spark.conf.set("spark.graft.filter.exactFallbackRows", "0")
       val df = spark.sql(sql)
-      val p = plan(df)
-      assert(p.contains("centroid_id"), p) // index lists scanned, not raw docs
+      // the index answered on the driver, in one job over its store and no
+      // shuffle: the plan is the local relation of its hits (no table scan)
+      val (p, jobs, shuffle) = withJobs(plan(df))
+      assert(answeredByIndex(df), p)
+      assert(jobs.size === 1 && jobs.head.contains("VectorStore"), jobs)
+      assert(shuffle === 0L, jobs)
       // full probes (nprobe=80 > 8 lists) -> identical to the exact answer
       val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       val expect = idx.search(Seq((0L, qvec)), 10)
@@ -237,7 +244,7 @@ class PlanSpec extends GraftSuite {
       val sqlF = s"SELECT vec_id, l2_sq(embedding, $qLit) AS score FROM emb_ann " +
         "WHERE label IN (1, 3, 5, 7) ORDER BY score LIMIT 10"
       val dfF = spark.sql(sqlF)
-      assert(plan(dfF).contains("centroid_id"), plan(dfF))
+      assert(answeredByIndex(dfF), plan(dfF))
       val okIds = emb.filter($"label".isin(1, 3, 5, 7))
         .select($"vec_id").as[Long].collect().toSet
       val gotF = dfF.collect().map(r => (r.getLong(0), r.getDouble(1)))

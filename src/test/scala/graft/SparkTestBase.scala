@@ -2,7 +2,8 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,5 +39,39 @@ abstract class GraftSuite extends AnyFunSuite {
       }
       (r, plans.asScala.toSeq)
     } finally spark.listenerManager.unregister(l)
+  }
+
+  /** Runs `f` and returns its value with the Spark jobs it started, each
+    * as its stages' names, and the shuffle bytes their tasks wrote. The
+    * listener bus is async: settle by polling until the count is stable.
+    */
+  def withJobs[T](f: => T): (T, Seq[String], Long) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val shuffle = new java.util.concurrent.atomic.AtomicLong(0L)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.add(js.stageInfos.map(_.name).distinct.mkString(" | "))
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m => shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = f
+      var prev = -1
+      var spins = 0
+      while (jobs.size != prev && spins < 50) {
+        prev = jobs.size; Thread.sleep(100); spins += 1
+      }
+      (r, jobs.asScala.toSeq, shuffle.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Whether `df` runs as the ANN rewrite's answer from an index that
+    * searched on the driver: the local relation of its hits, reading no
+    * table.
+    */
+  def answeredByIndex(df: DataFrame): Boolean = {
+    val p = df.queryExecution.executedPlan.toString
+    p.contains("LocalTableScan") && """(Batch|File)Scan""".r.findFirstIn(p).isEmpty
   }
 }

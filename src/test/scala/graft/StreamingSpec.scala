@@ -220,10 +220,12 @@ class StreamingSpec extends GraftSuite {
     assert(ix2.search(queries, 5).select($"qid", $"id").as[(Long, String)]
       .collect().toSet === flatTruth(t2, 5))
 
-    // probe filters prune the partitioned parquet at rest (T4)
-    val plan = ix2.currentIndex.get
-      .search(queries.take(1), 5, nprobe = Some(2))
-      .queryExecution.executedPlan.toString
+    // probe filters prune the partitioned parquet at rest (T4) where a
+    // search reads the lists: an allowed set held only as a frame (an
+    // unfiltered search reads the table's store, not the lists)
+    val (_, plans) = withExecutedPlans(ix2.currentIndex.get.search(queries.take(1), 5,
+      nprobe = Some(2), allowedIds = Some(t2.docs.select("_id"))).collect())
+    val plan = plans.mkString("\n")
     assert(plan.contains("PartitionFilters: [centroid_id"), plan)
   }
 

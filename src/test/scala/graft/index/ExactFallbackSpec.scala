@@ -11,7 +11,8 @@ import graft.operators.{Knn, TopK}
 import graft.table.{GammaTable, VectorFieldDef}
 
 /** The exact fallback over a small allowed set, served on the driver from
-  * one scan of the live table (see `ExactRerank.allowedOnly`), must return
+  * one job over the table's vector store (see `ExactRerank.allowedOnly`),
+  * for every metric the store scores (L2, InnerProduct, Cosine), must return
   * exactly the rows of the plan it replaces, `Knn.flatSearch` over the
   * semi-joined rows plus `TopK.perGroup`: same ids, bit-equal scores, same
   * order per query.
@@ -40,12 +41,14 @@ class ExactFallbackSpec extends GraftSuite {
   private def table(metric: Metric.Value, stringKeys: Boolean): GammaTable =
     tables.getOrElseUpdate((metric, stringKeys), newTable(metric, stringKeys))
 
+  /** An IVFPQ table, or for Cosine (which IVFPQ does not serve) IVFFLAT. */
   private def newTable(metric: Metric.Value, stringKeys: Boolean): GammaTable = {
     val docs = if (stringKeys) docsLong.withColumn("id", $"id".cast("string")) else docsLong
+    val model = if (metric == Metric.Cosine) "IVFFLAT" else "IVFPQ"
     val t = GammaTable.create(spark, tmp(), "fb", "id", docs,
-      Seq(VectorFieldDef("vec", 64, metric.toString, "IVFPQ")), nBuckets = 4)
+      Seq(VectorFieldDef("vec", 64, metric.toString, model)), nBuckets = 4)
     t.buildIndex("vec", IndexParams(metric = metric, ncentroids = 4, nprobe = 2, nsubvector = 8),
-      persist = true, retrievalType = "IVFPQ")
+      persist = true, retrievalType = model)
     t
   }
 
@@ -80,7 +83,7 @@ class ExactFallbackSpec extends GraftSuite {
       minScore = range._1, maxScore = range._2), "qid", "score", Metric.ascending(metric), k, Seq("id"))
   }
 
-  for (metric <- Seq(Metric.L2, Metric.InnerProduct); stringKeys <- Seq(false, true)) {
+  for (metric <- Seq(Metric.L2, Metric.InnerProduct, Metric.Cosine); stringKeys <- Seq(false, true)) {
     val keys = if (stringKeys) "string" else "long"
     test(s"driver exact fallback equals Knn.flatSearch + TopK.perGroup ($metric, $keys keys)") {
       val t = table(metric, stringKeys)
@@ -90,6 +93,10 @@ class ExactFallbackSpec extends GraftSuite {
         Seq((6L, vecs.head), (1L, vecs(4)))
       val want = ranked(lazyPlan(t, qs, 10, metric, passes01))
       assert(ranked(driver(t, qs, 10, passes01)) === want)
+      // served by the store, not the plan it replaces
+      val keys = AllowedKeys.collect(t.docs.filter(passes01).select("id"), Long.MaxValue)
+      assert(ranked(ExactRerank.allowedOnly(t.vectorStore("vec"), qs, 10, metric, keys, (None, None))
+        .getOrElse(fail("the store did not serve the fallback")).toDF(spark)) === want)
       assert(want(0L).size === 10 && want(1L).size === 10)
       // the tie at distance 0 (L2) orders by id: original before its copy
       if (metric == Metric.L2) assert(want(0L).take(2).map(_._1.toString) === Seq("0", "1000"))

@@ -11,11 +11,12 @@ import graft.functions.pq_adc
 import graft.operators.{Knn, TopK}
 import graft.table.{GammaTable, VectorFieldDef}
 
-/** The IVFPQ search (one Spark job over the resident store, per-task
-  * heaps and exact scores merged on the driver, see
-  * `IvfPqIndex.searchHits`) must return exactly the rows of Spark SQL plans
+/** The IVF search (one Spark job over the resident store, per-task heaps
+  * and, for IVFPQ, exact scores merged on the driver, see
+  * `IvfIndex.searchHits`) must return exactly the rows of Spark SQL plans
   * computing the same answer: same ids, bit-equal scores, same order per
   * query; and the store's index rows must be the indexer's clean lists.
+  * IVFPQ and IVFFLAT run the same scan with a per-model row score.
   */
 class IvfPqSearchSpec extends GraftSuite {
   import spark.implicits._
@@ -97,6 +98,44 @@ class IvfPqSearchSpec extends GraftSuite {
     }
   }
 
+  for (metric <- Seq(Metric.L2, Metric.InnerProduct, Metric.Cosine);
+       keys <- Seq("long", "int", "string")) {
+    test(s"IVFFLAT at full probe equals Knn.flatSearch exactly ($metric, $keys keys)") {
+      val t = GammaTable.create(spark, tmp(), "flat", "id", docsLong.withColumn("id", $"id".cast(keys)),
+        Seq(VectorFieldDef("vec", 64, metric.toString, "IVFFLAT")), nBuckets = 4)
+      val ix = t.buildIndex("vec", IndexParams(metric = metric, ncentroids = Ncent, nprobe = 2),
+        persist = true)
+      val vq = VecQuery("vec", vectors = batch, nprobe = Some(Ncent))
+      def want(src: DataFrame, range: (Option[Double], Option[Double])) =
+        ranked(Knn.flatSearch(src, "id", "vec", queryFrame(vq), "qid", "qvec", 10, metric,
+          minScore = range._1, maxScore = range._2))
+      // through the table, unfiltered
+      assert(ranked(t.search(SearchRequest(topn = 10, vecQueries = Seq(vq), metric = metric))) ===
+        want(t.docs, (None, None)))
+      // through the indexer: no filter, the allowed keys tested in the
+      // scan, and an allowed set held only as a frame (semi-joined into
+      // the persisted lists); the exact fallback is off so each reaches
+      // the index tier
+      val frame = t.docs.filter($"tag" =!= 2).select("id")
+      val allowedCases = Seq("no filter" -> None,
+        "collected keys" -> Some(AllowedKeys.collect(frame, Long.MaxValue)),
+        "frame" -> Some(AllowedKeys(frame, frame.count(), None)))
+      withConf("spark.graft.filter.exactFallbackRows", "0") {
+        for ((what, allowed) <- allowedCases) {
+          val src = allowed.fold(t.docs)(_ => t.docs.filter($"tag" =!= 2))
+          // a score window cutting into query 0's top-10
+          val s0 = want(src, (None, None))(0L).map(r => java.lang.Double.longBitsToDouble(r._2)).sorted
+          for (range <- Seq((None, None), (Some(s0(2)), Some(s0(7))))) {
+            val got = ix.searchHits(vq.batch, 10, vq.nprobe, allowed, range._1, range._2)
+            val exact = want(src, range)
+            assert(ranked(got.toDF(spark)) === exact, s"$what range=$range")
+            assert(exact(0L).size >= (if (range._1.isDefined) 6 else 10), s"$what range=$range")
+          }
+        }
+      }
+    }
+  }
+
   for (metric <- Seq(Metric.L2, Metric.InnerProduct)) {
     test(s"without re-rank the request path equals pq_adc + TopK.perGroup ($metric)") {
       val t = table(metric, stringKeys = false)
@@ -106,7 +145,7 @@ class IvfPqSearchSpec extends GraftSuite {
       val luts = for ((qid, v) <- vq.batch; c <- pq.centers.indices) yield
         (qid, c, IvfPqIndex.lutFor(v, pq.centers(c), pq.codebooks, ksub,
           metric == Metric.InnerProduct).toSeq)
-      val adc = pq.codes.join(luts.toDF("qid", "centroid_id", "lut"), Seq("centroid_id"))
+      val adc = pq.lists.join(luts.toDF("qid", "centroid_id", "lut"), Seq("centroid_id"))
         .select($"qid", $"id", pq_adc($"pq_codes", $"lut").as("score"))
       val asc = Metric.ascending(metric)
       val top = TopK.perGroup(adc, "qid", "score", asc, 10, Seq("id"))
@@ -124,28 +163,38 @@ class IvfPqSearchSpec extends GraftSuite {
     }
   }
 
-  /** The IVFPQ search as Spark SQL: each query's ADC scores over its own
-    * probed lists (pq_adc against LUTs of those centroids only), k or
+  /** The IVF search as Spark SQL. IVFPQ: each query's ADC scores over its
+    * own probed lists (pq_adc against LUTs of those centroids only), k or
     * max(recall_num, k) candidates per qid, then, with `hasRank`, the
     * candidates joined back to the raw vectors, scored exactly, the score
-    * range applied and k kept per qid.
+    * range applied and k kept per qid. IVFFLAT: each query's probed lists
+    * scored with `Knn.score`, the score range, k per qid.
     */
   private def oracle(
-      pq: IvfPqIndex, qs: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
+      ix: IvfIndex, qs: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
       allowed: Option[DataFrame], range: (Option[Double], Option[Double]),
       lists: Option[DataFrame] = None, vectors: DataFrame = docsLong): DataFrame = {
-    val metric = pq.params.metric
+    val metric = ix.params.metric
     val asc = Metric.ascending(metric)
+    def inRange(df: DataFrame) =
+      df.filter(range._1.fold(lit(true))($"score" >= _) && range._2.fold(lit(true))($"score" <= _))
+    val all = lists.getOrElse(ix.lists)
+    val rows = allowed.fold(all)(a => all.join(a, Seq("id"), "left_semi"))
+    val pq = ix match {
+      case pq: IvfPqIndex => pq
+      case _ =>
+        val probes = for ((qid, v) <- qs; c <- Ivf.rankedCentroids(ix.centers, v, metric).take(nprobe))
+          yield (qid, v.toSeq, c)
+        val scored = rows.join(probes.toDF("qid", "qvec", "centroid_id"), Seq("centroid_id"))
+          .select($"qid", $"id", Knn.score(metric, $"vec", $"qvec").as("score"))
+        return TopK.perGroup(inRange(scored), "qid", "score", asc, k, Seq("id"))
+    }
     val ksub = pq.codebooks.map(_.length).max
     val luts = for ((qid, v) <- qs; c <- Ivf.rankedCentroids(pq.centers, v, metric).take(nprobe))
       yield (qid, c, IvfPqIndex.lutFor(v, pq.centers(c), pq.codebooks, ksub,
         metric == Metric.InnerProduct).toSeq)
-    val all = lists.getOrElse(pq.codes)
-    val codes = allowed.fold(all)(a => all.join(a, Seq("id"), "left_semi"))
-    val adc = codes.join(luts.toDF("qid", "centroid_id", "lut"), Seq("centroid_id"))
+    val adc = rows.join(luts.toDF("qid", "centroid_id", "lut"), Seq("centroid_id"))
       .select($"qid", $"id", pq_adc($"pq_codes", $"lut").as("score"))
-    def inRange(df: DataFrame) =
-      df.filter(range._1.fold(lit(true))($"score" >= _) && range._2.fold(lit(true))($"score" <= _))
     if (!pq.params.hasRank) TopK.perGroup(inRange(adc), "qid", "score", asc, k, Seq("id"))
     else {
       val cands = TopK.perGroup(adc, "qid", "score", asc, math.max(pq.params.recallNum, k),
@@ -160,9 +209,11 @@ class IvfPqSearchSpec extends GraftSuite {
 
   test("at partial probe the search equals a Spark SQL oracle") {
     withConf("spark.graft.ivf.adaptiveProbe", "false") {
-      for (metric <- Seq(Metric.L2, Metric.InnerProduct)) {
-        val built = IvfPqIndex.build(spark, docsLong, "id", "vec",
+      for ((model, metric) <- Seq("IVFPQ" -> Metric.L2, "IVFPQ" -> Metric.InnerProduct,
+             "IVFFLAT" -> Metric.L2, "IVFFLAT" -> Metric.InnerProduct, "IVFFLAT" -> Metric.Cosine)) {
+        val built = IndexRegistry.build(model, spark, docsLong, "id", "vec",
           IndexParams(metric = metric, ncentroids = 8, nprobe = 2, nsubvector = 8, recallNum = 30))
+          .asInstanceOf[IvfIndex]
         // qids in batch order, and out of order and repeated: a qid's
         // positions share one heap, so a task can keep a key once per
         // position and each copy must count as the oracle counts it
@@ -175,11 +226,13 @@ class IvfPqSearchSpec extends GraftSuite {
           None,
           Some(AllowedKeys(broadcast(frame), frame.count(), None)),
           Some(AllowedKeys.collect(frame, Long.MaxValue)))
-        for (qs <- batches; hasRank <- Seq(true, false); allowed <- allowedCases) {
-          val pq = built.withParams(built.params.copy(hasRank = hasRank)).asInstanceOf[IvfPqIndex]
+        // has_rank is IVFPQ's; IVFFLAT scores every row exactly
+        val hasRanks = if (model == "IVFPQ") Seq(true, false) else Seq(true)
+        for (qs <- batches; hasRank <- hasRanks; allowed <- allowedCases) {
+          val pq = built.withParams(built.params.copy(hasRank = hasRank)).asInstanceOf[IvfIndex]
           val probedRows = {
             val probed = qs.flatMap(q => Ivf.rankedCentroids(pq.centers, q._2, metric).take(2))
-            val lists = pq.codes.filter($"centroid_id".isin(probed.distinct: _*))
+            val lists = pq.lists.filter($"centroid_id".isin(probed.distinct: _*))
             allowed.fold(lists)(_ => lists.join(frame, Seq("id"), "left_semi")).count()
           }
           // a lower score bound at query 0's fourth score
@@ -188,7 +241,7 @@ class IvfPqSearchSpec extends GraftSuite {
           for (range <- Seq((None, None), (Some(fourth), None))) {
             val got = pq.searchHits(qs, 10, None, allowed, range._1, range._2)
             val want = ranked(oracle(pq, qs, 10, 2, allowed.map(_ => frame), range))
-            val what = s"$metric qids=${qs.map(_._1)} hasRank=$hasRank " +
+            val what = s"$model $metric qids=${qs.map(_._1)} hasRank=$hasRank " +
               s"keys=${allowed.map(_.packed.isDefined)} range=$range"
             assert(ranked(got.toDF(spark)) === want, what)
             assert(want.values.map(_.size).sum > 0, what)
@@ -217,26 +270,28 @@ class IvfPqSearchSpec extends GraftSuite {
   }
 
   test("the store's index rows are the clean lists through writes, refresh, compaction and load") {
-    // a row takes part in the store's ADC scan iff its _version is at most
+    // a row takes part in the store's list scan iff its _version is at most
     // the indexer's build version; the lists it replaces are the persisted
-    // lists minus every key updated after the build or tombstoned
-    withConf("spark.graft.ivf.adaptiveProbe", "false") {
+    // lists minus every key updated after the build or tombstoned. IVFPQ
+    // rows carry (key, centroid, codes), IVFFLAT rows (key, centroid).
+    for (model <- Seq("IVFPQ", "IVFFLAT")) withConf("spark.graft.ivf.adaptiveProbe", "false") {
       val root = tmp()
       var t = GammaTable.create(spark, root, "pqv", "id", docsLong,
-        Seq(VectorFieldDef("vec", 64, "L2", "IVFPQ")), nBuckets = 4)
+        Seq(VectorFieldDef("vec", 64, "L2", model)), nBuckets = 4)
       t.buildIndex("vec", IndexParams(ncentroids = Ncent, nprobe = 2, nsubvector = 8,
-        recallNum = 30), persist = true, retrievalType = "IVFPQ")
+        recallNum = 30), persist = true, retrievalType = model)
       val qs = batch.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-      def check(step: String): Unit = {
+      def check(step0: String): Unit = {
+        val step = s"$model: $step0"
         val ix = t.attachedIndex("vec").get
         val built = ix.indexedThroughVersion
         // bound as the request path binds it: the current table's store,
         // rows through the build version
-        val pq = ix.currentIndex.get.asInstanceOf[IvfPqIndex]
+        val pq = ix.currentIndex.get.asInstanceOf[IvfIndex]
         assert(pq.indexedThrough === built, step)
         val store = t.vectorStore("vec", Some(pq.codec))
         assert(pq.vectors eq store, step)
-        val (m, ncent) = (pq.codebooks.length, pq.centers.length)
+        val (m, ncent) = (pq.codec.m, pq.centers.length)
         val stored = store.run { b =>
           (0 until ncent).flatMap { c =>
             b.list(c).map(p => (b.listRow(p), p)).collect { case (row, p) if b.indexed(row, built) =>
@@ -245,8 +300,9 @@ class IvfPqSearchSpec extends GraftSuite {
           }.toArray
         }.flatten
         val invalid = t.allDocs.filter($"_version" > built || $"_deleted").select("id")
-        val clean = pq.codes.join(invalid, Seq("id"), "left_anti")
-        val want = clean.select($"id", $"centroid_id".cast("int"), $"pq_codes").collect()
+        val clean = pq.lists.join(invalid, Seq("id"), "left_anti")
+        val codes = if (m > 0) $"pq_codes" else typedLit(Seq.empty[Int])
+        val want = clean.select($"id", $"centroid_id".cast("int"), codes).collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2))).toSeq
         assert(stored.sortBy(_._1) === want.sortBy(_._1), step)
         val allowed = t.docs.filter($"tag" =!= 2).select("id")
@@ -280,15 +336,15 @@ class IvfPqSearchSpec extends GraftSuite {
     // qids out of order and repeated: a qid's positions share one heap
     val qids = Seq(3L, 1L, 3L, 2L, 1L, 0L, 4L)
     val qs = qids.zip(batch)
-    val chunks = IvfPqIndex.qidChunks(qs, 30, 60)
+    val chunks = IvfIndex.qidChunks(qs, 30, 60)
     assert(chunks.map(_.map(_._1).distinct) === Seq(Seq(0L), Seq(1L), Seq(2L), Seq(3L), Seq(4L)))
     assert(chunks.flatten.map(_._2).toSet === qs.map(_._2).toSet)
     assert(chunks.flatten.size === qs.size)
-    assert(IvfPqIndex.qidChunks(qs, 30, 120).map(_.map(_._1).distinct) ===
+    assert(IvfIndex.qidChunks(qs, 30, 120).map(_.map(_._1).distinct) ===
       Seq(Seq(0L, 1L, 2L), Seq(3L, 4L)))
-    assert(IvfPqIndex.qidChunks(qs, 30, 30 * qs.size) === Seq(qs))
+    assert(IvfIndex.qidChunks(qs, 30, 30 * qs.size) === Seq(qs))
     for (bound <- Seq(60L, 120L)) {
-      val chunked = IvfPqIndex.qidChunks(qs, 30, bound)
+      val chunked = IvfIndex.qidChunks(qs, 30, bound)
         .map(pq.searchHits(_, 10, None, None, None, None)).reduce(_ ++ _)
       assert(chunked === pq.searchHits(qs, 10, None, None, None, None), s"bound $bound")
     }
@@ -301,7 +357,7 @@ class IvfPqSearchSpec extends GraftSuite {
     // a full probe re-ranking every doc is exact
     val t = table(Metric.L2, stringKeys = false)
     val vq = VecQuery("vec", vectors = batch, nprobe = Some(Ncent), recallNum = Some(1000000))
-    assert(IvfPqIndex.qidChunks(vq.batch, 1000000, IvfPqIndex.MaxBroadcastCandidates).size === 2)
+    assert(IvfIndex.qidChunks(vq.batch, 1000000, IvfIndex.MaxBroadcastCandidates).size === 2)
     val got = t.search(SearchRequest(topn = 10, vecQueries = Seq(vq)))
     val want = Knn.flatSearch(t.docs, "id", "vec", queryFrame(vq), "qid", "qvec", 10, Metric.L2)
     assert(ranked(got) === ranked(want))

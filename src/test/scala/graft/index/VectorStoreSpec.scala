@@ -18,8 +18,8 @@ import graft.table.{GammaTable, VectorFieldDef}
 /** The resident vector store (see `VectorStore`): the re-rank and the exact
   * fallback it serves must return exactly the rows of `Knn.flatSearch` +
   * `TopK.perGroup` over the live table (same ids, bit-equal scores, same
-  * order per query), a commit must replace it, and lost blocks, IVFPQ
-  * codes included, must come back from lineage.
+  * order per query), a commit must replace it, and lost blocks, IVF lists
+  * (IVFPQ codes, IVFFLAT centroids) included, must come back from lineage.
   */
 class VectorStoreSpec extends GraftSuite {
   import spark.implicits._
@@ -110,14 +110,14 @@ class VectorStoreSpec extends GraftSuite {
       Metric.L2, (None, None)).toDF(spark)) === ranked(exact(t.docs, queries, 10, Metric.L2)))
   }
 
-  /** Persisted IVFPQ table whose full probe with recall_num >= rows
-    * re-ranks every doc exactly.
+  /** Persisted IVF table (IVFPQ or IVFFLAT) whose full probe is exact
+    * (IVFPQ: recall_num >= rows re-ranks every doc).
     */
-  private def ivfpq(): GammaTable = {
+  private def ivf(model: String = "IVFPQ"): GammaTable = {
     val t = GammaTable.create(spark, tmp(), "vsi", "id", base,
-      Seq(VectorFieldDef("vec", 64, "L2", "IVFPQ")), nBuckets = 4)
+      Seq(VectorFieldDef("vec", 64, "L2", model)), nBuckets = 4)
     t.buildIndex("vec", IndexParams(ncentroids = 4, nprobe = 4, nsubvector = 8, recallNum = 1000),
-      persist = true, retrievalType = "IVFPQ")
+      persist = true, retrievalType = model)
     t
   }
 
@@ -126,7 +126,7 @@ class VectorStoreSpec extends GraftSuite {
     rangeFilters = if (filter) Seq(RangeFilter("tag", Some(0.0), Some(1.0))) else Nil)
 
   test("after an upsert, a delete and compact(), a search scores the new manifest's rows") {
-    val t = ivfpq()
+    val t = ivf()
     val q = queries(4)._2 // doc 4's vector (tag 1)
     def check(filter: Boolean): Seq[String] = {
       val got = t.search(request(q, filter))
@@ -150,10 +150,12 @@ class VectorStoreSpec extends GraftSuite {
     assert(rerankTop.head === "3" && !rerankTop.contains("4"), rerankTop)
   }
 
-  /** The index rows of `t`'s IVFPQ store: (key, centroid, codes), sorted. */
+  /** The index rows of `t`'s IVF store: (key, centroid, codes), sorted
+    * (no codes for IVFFLAT).
+    */
   private def storeCodes(t: GammaTable): Seq[(String, Int, Seq[Int])] = {
-    val pq = t.attachedIndex("vec").get.currentIndex.get.asInstanceOf[IvfPqIndex]
-    val (m, ncent) = (pq.codebooks.length, pq.centers.length)
+    val pq = t.attachedIndex("vec").get.currentIndex.get.asInstanceOf[IvfIndex]
+    val (m, ncent) = (pq.codec.m, pq.centers.length)
     val store = t.vectorStore("vec", Some(pq.codec))
     assert(store eq t.vectorStore("vec"))
     store.run { b =>
@@ -164,40 +166,40 @@ class VectorStoreSpec extends GraftSuite {
   }
 
   test("blocks lost from the block manager come back from lineage with identical rows") {
-    val t = ivfpq()
-    val q = queries(2)._2
-    // a partial-probe batch: the ADC scan reads the blocks' codes
-    val partial = SearchRequest(topn = 10, vecQueries = Seq(VecQuery("vec",
-      vectors = queries.map(_._2), nprobe = Some(2), recallNum = Some(20))))
-    def hits() = Seq(false, true).map(f => ranked(t.search(request(q, f)))) :+
-      ranked(t.search(partial))
-    val before = hits()
-    val codes = storeCodes(t)
-    assert(codes.size === t.docs.count())
-    val sc = spark.sparkContext
-    val store = sc.getPersistentRDDs.values.filter(_.name == "graft.VectorStore(id, vec)")
-      .maxBy(_.id)
-    def cached = org.apache.spark.BlockLoss.cachedPartitions(store.id, store.getNumPartitions)
-    assert(cached === store.getNumPartitions)
-    org.apache.spark.BlockLoss.dropCachedBlocks(store.id)
-    assert(cached === 0)
-    // the first search rebuilds the blocks, codes re-encoded, with
-    // identical hits
-    assert(hits() === before)
-    assert(cached > 0)
-    assert(storeCodes(t) === codes)
+    for (model <- Seq("IVFPQ", "IVFFLAT")) {
+      val t = ivf(model)
+      val q = queries(2)._2
+      // a partial-probe batch: the list scan reads the blocks' lists
+      val partial = SearchRequest(topn = 10, vecQueries = Seq(VecQuery("vec",
+        vectors = queries.map(_._2), nprobe = Some(2), recallNum = Some(20))))
+      def hits() = Seq(false, true).map(f => ranked(t.search(request(q, f)))) :+
+        ranked(t.search(partial))
+      val before = hits()
+      val codes = storeCodes(t)
+      assert(codes.size === t.docs.count())
+      val sc = spark.sparkContext
+      val store = sc.getPersistentRDDs.values.filter(_.name == "graft.VectorStore(id, vec)")
+        .maxBy(_.id)
+      def cached = org.apache.spark.BlockLoss.cachedPartitions(store.id, store.getNumPartitions)
+      assert(cached === store.getNumPartitions)
+      org.apache.spark.BlockLoss.dropCachedBlocks(store.id)
+      assert(cached === 0)
+      // the first search rebuilds the blocks, lists recomputed, with
+      // identical hits
+      assert(hits() === before, model)
+      assert(cached > 0, model)
+      assert(storeCodes(t) === codes, model)
+    }
   }
 
   test("a commit while a lookup builds the store neither waits for it nor leaves its blocks cached") {
-    // a plain store, and one that carries an IVFPQ index's codes
-    for (codes <- Seq(false, true)) {
+    // a plain store, and ones that carry an IVFPQ or IVFFLAT index
+    for (codes <- Seq(None, Some("IVFPQ"), Some("IVFFLAT"))) {
       val t = GammaTable.create(spark, tmp(), "vsc", "id", base,
-        Seq(if (codes) VectorFieldDef("vec", 64, "L2", "IVFPQ") else VectorFieldDef("vec", 64)),
+        Seq(codes.fold(VectorFieldDef("vec", 64))(VectorFieldDef("vec", 64, "L2", _))),
         nBuckets = 4)
-      val codec =
-        if (!codes) None
-        else Some(t.buildIndex("vec", IndexParams(ncentroids = 4, nsubvector = 8),
-          retrievalType = "IVFPQ").currentIndex.get.asInstanceOf[IvfPqIndex].codec)
+      val codec = codes.map(model => t.buildIndex("vec", IndexParams(ncentroids = 4, nsubvector = 8),
+          retrievalType = model).currentIndex.get.asInstanceOf[IvfIndex].codec)
       val store = t.vectorStore("vec", codec)
       assert(store.codec === codec)
       StoreGate.reset()
