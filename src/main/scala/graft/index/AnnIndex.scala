@@ -54,22 +54,6 @@ trait AnnIndex {
   def withParams(p: IndexParams): AnnIndex
 }
 
-object AnnIndex {
-  import org.apache.spark.sql.functions.{col, lit}
-
-  /** Score-range filter on a scored candidate frame (before ranking). */
-  private[index] def scoreRange(
-      df: DataFrame, scoreCol: String,
-      minScore: Option[Double], maxScore: Option[Double]): DataFrame =
-    (minScore, maxScore) match {
-      case (None, None) => df
-      case (lo, hi) =>
-        val lower = lo.map(col(scoreCol) >= _).getOrElse(lit(true))
-        val upper = hi.map(col(scoreCol) <= _).getOrElse(lit(true))
-        df.filter(lower && upper)
-    }
-}
-
 /** Name -> builder registry (reference `REGISTER_MODEL` reflector,
   * index/reflector.h). Keys mirror the reference model names
   * (index/impl/gamma_index_flat.cc:28 etc.).

@@ -4,110 +4,59 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
-import graft.functions.hamming
-import graft.operators.TopK
+import graft.core.Metric
 
 /** BINARYIVF (reference V6, index/impl/gamma_index_binary_ivf.cc:57-487):
   * inverted lists over packed binary codes with Hamming distance — a PEER
-  * retrieval model in the same registry and incremental lifecycle as the
-  * float IVF family (the reference registers it through the same model
-  * reflector, gamma_index_binary_ivf.cc:57).
+  * of IVFFLAT and IVFPQ, registered and served like them (the reference
+  * registers it through the same model reflector,
+  * gamma_index_binary_ivf.cc:57).
   *
   * The coarse quantizer is a TRAINED binary k-means ([[BinaryIvfIndex
   * .trainCoarse]]): Lloyd iterations where assignment is by Hamming and
   * each centroid bit is the MAJORITY vote of its members' bits (the
   * classic k-majority scheme faiss uses for binary clustering — per-bit
   * majority minimizes the summed Hamming distance of a cluster). Docs go
-  * to their nearest-centroid list; queries probe the `nprobe` nearest
-  * lists and scan them with the codegen'd
-  * [[graft.functions.HammingDistance]] kernel. Same partition-pruning
-  * scale shape as the float IVF family.
+  * to their nearest-centroid list. Served like IVFFLAT ([[IvfIndex]]):
+  * the store blocks hold each row's packed code next to its centroid
+  * (assigned by [[Ivf.quantizerDist]]'s Hamming, the function the lists
+  * were built with), and one Spark job scans the probed lists, scoring
+  * each code in place with the `hamming` kernel's arithmetic
+  * ([[VectorStore.score]]) into k per query.
   *
   * Float-surface adapter: the engine's request surface carries
   * `Array[Float]` query vectors (core.VecQuery), while binary fields
   * store packed bytes. A binary query rides the float surface as ONE BYTE
-  * VALUE (0..255) PER FLOAT — [[AnnIndex.search]] converts via
-  * [[BinaryIvfIndex.floatsToBytes]] and delegates to [[searchBytes]].
+  * VALUE (0..255) PER FLOAT ([[BinaryIvfIndex.bytesToFloats]]), and so do
+  * the centroids the quantizer holds.
   */
 class BinaryIvfIndex(
-    val spark: SparkSession,
-    val data: DataFrame, // idCol, codeCol, centroid_id (+ passenger cols)
-    val idCol: String,
-    val codeCol: String,
+    spark: SparkSession,
+    data: DataFrame, // idCol, codeCol, centroid_id (+ passenger cols)
+    rawDocs: DataFrame, // idCol, codeCol, ... — the store's rows
+    idCol: String,
+    codeCol: String,
     val centroids: Array[Array[Byte]],
-    val params: IndexParams,
-    // per-list row counts (index position = centroid_id), a build-time
-    // upper bound feeding adaptive probe widening; None = fixed nprobe
-    val listSizes: Option[Array[Long]] = None) extends AnnIndex {
+    params: IndexParams,
+    listSizes: Option[Array[Long]] = None,
+    sharedCodec: Option[IvfCodec] = None,
+    store: Option[VectorStore] = None,
+    indexedThrough: Long = Long.MaxValue)
+    extends IvfIndex(spark, data, rawDocs, idCol, codeCol,
+      centroids.map(_.map(b => (b & 0xff).toDouble)), Array.empty, None,
+      params, listSizes, sharedCodec, store, indexedThrough) {
 
-  def retrievalType: String = "BINARYIVF"
+  override def retrievalType: String = "BINARYIVF"
 
-  /** Same index, fresher per-list stats. */
-  def withListSizes(s: Option[Array[Long]]): BinaryIvfIndex =
-    new BinaryIvfIndex(spark, data, idCol, codeCol, centroids, params, s)
+  protected def make(
+      lists: DataFrame, rawDocs: DataFrame, params: IndexParams, listSizes: Option[Array[Long]],
+      store: Option[VectorStore], indexedThrough: Long): IvfIndex =
+    new BinaryIvfIndex(spark, lists, rawDocs, idCol, vecCol, centroids, params, listSizes,
+      Some(codec), store, indexedThrough)
 
-  private def probes(q: Array[Byte], nprobe: Int, k: Int): Seq[Int] = {
-    val ranked = centroids.zipWithIndex
-      .map { case (c, i) => (BinaryIvfIndex.hammingOf(c, q), i) }
-      .sorted.map(_._2).toIndexedSeq
-    val sizes = if (Ivf.adaptiveEnabled(spark)) listSizes else None
-    Ivf.extendByTarget(ranked, sizes, nprobe,
-      Ivf.probeTarget(k, params.recallNum, nprobe, params.nprobe))
-  }
-
-  /** AnnIndex surface: float queries are byte values in disguise. */
-  def search(
-      queries: Seq[(Long, Array[Float])],
-      k: Int,
-      nprobe: Option[Int] = None,
-      allowedIds: Option[DataFrame] = None,
-      minScore: Option[Double] = None,
-      maxScore: Option[Double] = None): DataFrame =
-    searchBytes(
-      queries.map { case (qid, v) => (qid, BinaryIvfIndex.floatsToBytes(v)) },
-      k, nprobe, allowedIds, minScore, maxScore)
-
-  /** Probe-pruned Hamming top-k (`(qid, id, score)`, score = Hamming
-    * distance as double — the shared AnnIndex score column).
-    */
-  def searchBytes(
-      queries: Seq[(Long, Array[Byte])],
-      k: Int,
-      nprobe: Option[Int] = None,
-      allowedIds: Option[DataFrame] = None,
-      minScore: Option[Double] = None,
-      maxScore: Option[Double] = None): DataFrame = {
-    import spark.implicits._
-    val np = math.min(nprobe.getOrElse(params.nprobe), centroids.length)
-    // (qid, qcode, centroid_id) probe tuples — driver-computed (centroids
-    // are local), so the probed-list set is too: no Spark job here (the
-    // float IVF family does the same, IvfIndex.probePlan)
-    val probeRows = queries.flatMap { case (qid, q) =>
-      probes(q, np, k).map(c => (qid, q, c))
-    }
-    val probeDf = probeRows.toDF("qid", "qcode", "centroid_id")
-    val probed = probeRows.map(_._3).distinct
-    val lists = data.filter(col("centroid_id").isin(probed: _*))
-    // broadcast decision is the caller's (selectivity-aware) hint, not ours
-    val filtered = allowedIds match {
-      case Some(ids) => lists.join(ids.toDF(idCol), Seq(idCol), "left_semi")
-      case None      => lists
-    }
-    val scored = filtered
-      .join(broadcast(probeDf), Seq("centroid_id"))
-      .select(col("qid"), col(idCol).as("id"),
-        hamming(col(codeCol), col("qcode")).cast("double").as("score"))
-    val ranged = AnnIndex.scoreRange(scored, "score", minScore, maxScore)
-    TopK.perGroup(ranged, "qid", "score", ascending = true, k, Seq("id"))
-  }
-
-  override def excluding(ids: DataFrame): AnnIndex =
-    new BinaryIvfIndex(spark,
-      data.join(ids.toDF(idCol), Seq(idCol), "left_anti"),
-      idCol, codeCol, centroids, params, listSizes)
-
-  override def withParams(p: IndexParams): AnnIndex =
-    new BinaryIvfIndex(spark, data, idCol, codeCol, centroids, p, listSizes)
+  /** [[search]] over byte queries. */
+  def searchBytes(queries: Seq[(Long, Array[Byte])], k: Int, nprobe: Option[Int] = None): DataFrame =
+    search(queries.map { case (q, b) => (q, BinaryIvfIndex.bytesToFloats(b)) }, k, nprobe, None, None, None)
 }
 
 object BinaryIvfIndex {
@@ -290,7 +239,9 @@ object BinaryIvfIndex {
       trainCoarse(docs, codeCol, k, params.trainSampleRows, params.seed)
     val assigned =
       assignWithCenters(docs.select(col(idCol), col(codeCol)), codeCol, centroids)
-    new BinaryIvfIndex(spark, assigned.localCheckpoint(true), idCol, codeCol,
-      centroids, params.copy(metric = graft.core.Metric.Hamming))
+        .localCheckpoint(true)
+    // a standalone index's store holds its lists' own (key, code) rows
+    new BinaryIvfIndex(spark, assigned, assigned.select(col(idCol), col(codeCol)), idCol,
+      codeCol, centroids, params.copy(metric = Metric.Hamming))
   }
 }

@@ -92,7 +92,10 @@ object Ivf {
     * query-time probe ranking ([[rankedCentroids]]), the way faiss gives an IVF
     * index a single quantizer with a single metric. Mixing L2 assignment
     * with IP probe ranking can systematically rank the list that actually
-    * holds the best doc low at partial nprobe.
+    * holds the best doc low at partial nprobe. Hamming (BINARYIVF) reads
+    * both as byte values and counts the differing bits over the shorter
+    * length, as [[BinaryIvfIndex.trainCoarse]] and
+    * [[BinaryIvfIndex.assignWithCenters]] do.
     */
   def quantizerDist(
       metric: graft.core.Metric.Value, c: Array[Double], v: Array[Float]): Double = {
@@ -109,6 +112,10 @@ object Ivf {
           s += c(i) * v(i); nc += c(i) * c(i); nv += v(i).toDouble * v(i); i += 1
         }
         if (nc == 0 || nv == 0) 0.0 else -(s / (math.sqrt(nc) * math.sqrt(nv)))
+      case Metric.Hamming =>
+        var s = 0; var i = 0
+        while (i < n) { s += Integer.bitCount((c(i).toInt ^ v(i).toInt) & 0xff); i += 1 }
+        s
       case _ =>
         var s = 0.0; var i = 0
         while (i < n) { val t = c(i) - v(i); s += t * t; i += 1 }

@@ -4,20 +4,20 @@ import scala.collection.mutable
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{BinaryType, DataType}
 
 import graft.core.Metric
 import graft.functions.{QueryHeaps, SpecializedRowOrdering, TopKBuffer}
 
-/** The float IVF models, IVFFLAT and IVFPQ: inverted lists over one coarse
-  * quantizer, scanned by one list scan ([[ListScan]]) with a per-model row
-  * score — faiss's `InvertedLists` plus a per-codec `InvertedListScanner`,
-  * and gamma's shape (gamma_index_ivfflat.cc:380-470,
-  * gamma_index_ivfpq.cc:547-697).
+/** The IVF models, IVFFLAT, IVFPQ and BINARYIVF: inverted lists over one
+  * coarse quantizer, scanned by one list scan ([[ListScan]]) with a
+  * per-model row score — faiss's `InvertedLists` plus a per-codec
+  * `InvertedListScanner`, and gamma's shape (gamma_index_ivfflat.cc:380-470,
+  * gamma_index_ivfpq.cc:547-697, gamma_index_binary_ivf.cc:57-487).
   *
   * A request reads the resident [[VectorStore]] over `rawDocs` (the
   * table's own store when the index serves a table), whose blocks hold
@@ -27,18 +27,20 @@ import graft.functions.{QueryHeaps, SpecializedRowOrdering, TopKBuffer}
   * as a frame. One search ([[searchHits]]) serves the table API, the SQL
   * rewrite and direct callers. Ids are Long, Int or String (the
   * reference's `id_type_`, table/table.cc:123-126) and vectors float or
-  * double arrays. A store row is an index row iff its version is at most
+  * double arrays, or for BINARYIVF packed binary codes, which ride the
+  * float request surface as one byte value per float. A store row is an
+  * index row iff its version is at most
   * `indexedThrough` (the owning indexer's build version; a standalone
   * index's store has no versions, so every row is one).
   */
 abstract class IvfIndex(
     val spark: SparkSession,
-    val lists: DataFrame, // idCol, centroid_id, and pq_codes (IVFPQ) or vecCol (IVFFLAT)
+    val lists: DataFrame, // idCol, centroid_id, and pq_codes (IVFPQ) or vecCol
     val rawDocs: DataFrame, // idCol, vecCol, ... — the store's rows (UNrotated)
     val idCol: String,
     val vecCol: String,
-    val centers: Array[Array[Double]], // in rotated space when OPQ is on
-    val codebooks: Array[Array[Array[Double]]], // [m][ksub][dsub]; none for IVFFLAT
+    val centers: Array[Array[Double]], // in rotated space when OPQ is on; byte values for BINARYIVF
+    val codebooks: Array[Array[Array[Double]]], // [m][ksub][dsub]; none for IVFFLAT, BINARYIVF
     val rotation: Option[Array[Array[Double]]], // IVFPQ's OPQ rotation
     val params: IndexParams,
     // per-list row counts (index position = centroid_id), a build-time
@@ -142,7 +144,7 @@ abstract class IvfIndex(
     * job over its blocks, in which each task
     *  - scans the probed lists' index rows, testing the allowed keys
     *    (broadcast) on each row, into a heap per query: IVFPQ by ADC,
-    *    max(recall_num, k) candidates; IVFFLAT (and IVFPQ without
+    *    max(recall_num, k) candidates; IVFFLAT, BINARYIVF (and IVFPQ without
     *    `hasRank`) k, in range;
     *  - with the re-rank, scores each distinct (qid, key) it kept exactly
     *    from the key's rows in the block, against every position of the qid;
@@ -320,7 +322,7 @@ abstract class IvfIndex(
     try SQLExecution.withNewExecutionId(in.queryExecution, Some("collect")) {
         in.queryExecution.toRdd.mapPartitions { rows =>
           val task = scan.task()
-          rows.foreach(r => task.add(r.getInt(0), r.get(1, idType), r.getArray(2)))
+          rows.foreach(r => task.add(r.getInt(0), r.get(1, idType), r))
           Iterator((task.heaps.packed, task.scanned))
         }.collect()
       }.foreach { case (h, n) => stage1.addPacked(h); scanned += n }
@@ -366,13 +368,18 @@ object IvfIndex {
         else chunks :+ qs
       }
 
-  /** Ids Long, Int or String and vectors float or double arrays: the types
-    * the driver merge holds by value and the [[VectorStore]] serves.
+  /** Ids Long, Int or String and vectors float or double arrays, binary
+    * codes for BINARYIVF: the types the driver merge holds by value and the
+    * [[VectorStore]] serves.
     */
-  private[index] def requireTypes(model: String, idType: DataType, vecType: DataType): Unit =
-    require(AllowedKeys.KeyTypes(idType) && VectorStore.isVectorType(vecType),
-      s"$model needs Long, Int or String ids over float or double vectors " +
+  private[index] def requireTypes(model: String, idType: DataType, vecType: DataType): Unit = {
+    val binary = model == "BINARYIVF"
+    require(AllowedKeys.KeyTypes(idType) && VectorStore.isVectorType(vecType) &&
+        (vecType == BinaryType) == binary,
+      s"$model needs Long, Int or String ids over " +
+        (if (binary) "binary codes " else "float or double vectors ") +
         s"(got ${idType.simpleString} ids over ${vecType.simpleString})")
+  }
 
   /** Spark SQL's `score >= minScore AND score <= maxScore` (-0.0 equals
     * 0.0, NaN is the largest value).
@@ -384,9 +391,10 @@ object IvfIndex {
 
 /** An IVF index's trained quantizers, broadcast once: the coarse centers
   * (in the code space), for IVFPQ the PQ codebooks and OPQ rotation, and
-  * the quantizer metric. Scan tasks build LUTs from it, and it assigns rows
-  * to lists (the IVFPQ encode pass, the [[VectorStore]]). `m` is 0 without
-  * codebooks (IVFFLAT); `ksub` is the largest codebook (the LUT stride).
+  * the quantizer metric (Hamming for BINARYIVF). Scan tasks build LUTs
+  * from it, and it assigns rows to lists (the IVFPQ encode pass, the
+  * [[VectorStore]]). `m` is 0 without codebooks (IVFFLAT, BINARYIVF);
+  * `ksub` is the largest codebook (the LUT stride).
   */
 private[graft] final class IvfCodec private (
     val quantizers: Broadcast[
@@ -427,8 +435,8 @@ private[graft] object IvfCodec {
   * `heapSize` candidates per query group and counts the rows it scanned.
   * A row's score is the ADC sum of its PQ codes, through LUTs built where
   * the codes live and cached for one centroid at a time, when the codec
-  * has codebooks, and otherwise the exact score of its raw vector
-  * ([[VectorStore.score]]).
+  * has codebooks, and otherwise the exact score of its raw vector or
+  * binary code ([[VectorStore.score]]).
   */
 private[index] final class ListScan(
     byCentroid: Broadcast[Map[Int, Array[(Int, Array[Float])]]], // centroid -> (query position, code-space vector)
@@ -455,6 +463,7 @@ private[index] final class ListScan(
     private val (cs, cbs, _) = codec.quantizers.value
     private val (pq, m, ksub) = (codec.m > 0, codec.m, codec.ksub)
     private val ip = metric == Metric.InnerProduct
+    private val binary = metric == Metric.Hamming
     private val luts = mutable.HashMap.empty[Int, Array[Double]]
     private var curCid = Integer.MIN_VALUE
 
@@ -467,15 +476,19 @@ private[index] final class ListScan(
       if (IvfIndex.inRange(s, range)) heaps.offer(groupOf(pos), s, id)
 
     /** One row of a probed list as a lists frame holds it: `id` is its
-      * key's Catalyst value and `v` its PQ codes, or, without codebooks,
-      * its float vector (IVFFLAT lists are built from float vectors,
-      * [[Ivf.assignWithCenters]]); rows arrive sorted by centroid.
+      * key's Catalyst value and field 2 of `r` its PQ codes, or, without
+      * codebooks, its binary code (Hamming) or float vector (IVFFLAT lists
+      * are built from float vectors, [[Ivf.assignWithCenters]]); rows
+      * arrive sorted by centroid.
       */
-    def add(cid: Int, id: Any, v: ArrayData): Unit = {
+    def add(cid: Int, id: Any, r: InternalRow): Unit = {
       scanned += 1
       val qs = probes.getOrElse(cid, null)
       if (qs != null) {
-        val fs = if (pq) null else v.toFloatArray()
+        val v = if (pq) r.getArray(2) else null
+        val bs = if (binary) r.getBinary(2) else null
+        val fs = if (pq || binary) null else r.getArray(2).toFloatArray()
+        val len = if (binary) bs.length else if (pq) 0 else fs.length
         var i = 0
         while (i < qs.length) {
           val (pos, qv) = qs(i)
@@ -484,7 +497,7 @@ private[index] final class ListScan(
             var j = 0; var s = 0.0
             while (j < m) { s += t(j * ksub + v.getInt(j)); j += 1 }
             offer(pos, s, id)
-          } else offer(pos, VectorStore.score(fs, null, 0, fs.length, qv, metric), id)
+          } else offer(pos, VectorStore.score(fs, null, bs, 0, len, qv, metric), id)
           i += 1
         }
       }

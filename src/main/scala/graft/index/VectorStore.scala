@@ -23,7 +23,7 @@ import graft.core.Metric
   * (gamma_index_ivfflat.cc:380-470, gamma_index_ivfpq.cc:642-697) instead
   * of reading the table.
   *
-  * With an [[IvfCodec]], the store also holds the float IVF index over the
+  * With an [[IvfCodec]], the store also holds the IVF index over the
   * same rows, as gamma keeps each doc's list entry next to its raw vector:
   * every row's coarse centroid, assigned with the index's quantizers while
   * the block is built, the rows grouped by centroid, and for IVFPQ each
@@ -40,8 +40,9 @@ import graft.core.Metric
   * `docs` holds (key, vector) columns and, optionally, a third Long column:
   * the row's version (the table's `_version`), which a scan compares with
   * the version its index is built through. Keys must be of a
-  * [[AllowedKeys.KeyTypes]] type and vectors float or double arrays
-  * ([[serves]]); rows with a null key or vector are not stored. A store
+  * [[AllowedKeys.KeyTypes]] type and vectors float or double arrays or
+  * packed binary codes ([[serves]]); rows with a null key or vector are
+  * not stored. A store
   * nothing [[release]]s is unpersisted by Spark's ContextCleaner once it
   * is unreachable.
   */
@@ -51,11 +52,6 @@ private[graft] final class VectorStore(docs: DataFrame, val codec: Option[IvfCod
   val keyType: DataType = docs.schema.head.dataType
 
   def sparkContext: org.apache.spark.SparkContext = docs.sparkSession.sparkContext
-
-  private val vecIsFloat = docs.schema(1).dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
 
   /** Whether the rows of `docs` can be stored and looked up. */
   val serves: Boolean =
@@ -67,9 +63,9 @@ private[graft] final class VectorStore(docs: DataFrame, val codec: Option[IvfCod
 
   private def blocks: RDD[Block] = synchronized {
     if (built == null) {
-      val (kt, float, versioned, pq) = (keyType, vecIsFloat, docs.schema.length > 2, codec.orNull)
+      val (kt, vt, versioned, pq) = (keyType, docs.schema(1).dataType, docs.schema.length > 2, codec.orNull)
       built = docs.queryExecution.toRdd
-        .mapPartitions(rows => Iterator(Block(rows, kt, float, versioned, pq)))
+        .mapPartitions(rows => Iterator(Block(rows, kt, vt, versioned, pq)))
         .setName(s"graft.VectorStore(${docs.columns.take(2).mkString(", ")})")
       // a store released before its first job still answers, uncached
       if (!released) built.persist(StorageLevel.MEMORY_AND_DISK)
@@ -133,20 +129,34 @@ private[graft] final class VectorStore(docs: DataFrame, val codec: Option[IvfCod
 
 private[graft] object VectorStore {
 
-  /** The vector column types a store holds: float or double arrays. */
+  /** The vector column types a store holds: float or double arrays and
+    * packed binary codes.
+    */
   def isVectorType(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _                                    => false
+    case ArrayType(FloatType | DoubleType, _) | BinaryType => true
+    case _                                                 => false
   }
 
   /** The `len` elements from `from` of `floats` (or, null, `doubles`)
     * scored against `q` with the arithmetic of `l2_sq`, `inner_product` or
     * `cosine_sim`: doc element first, widened to double, summed in index
-    * order over the shorter length.
+    * order over the shorter length. With `bytes`, the `len` bytes from
+    * `from` of `bytes` against `q`'s byte values (one per float, the
+    * float request surface of binary codes) by the `hamming` kernel's
+    * arithmetic: the differing bits over the shorter length plus the set
+    * bits of the longer one's extra bytes.
     */
   def score(
-      floats: Array[Float], doubles: Array[Double], from: Int, len: Int, q: Array[Float],
-      metric: Metric.Value): Double = {
+      floats: Array[Float], doubles: Array[Double], bytes: Array[Byte], from: Int, len: Int,
+      q: Array[Float], metric: Metric.Value): Double = {
+    if (bytes != null) {
+      val n = math.min(len, q.length)
+      var s = 0; var j = 0
+      while (j < n) { s += Integer.bitCount((bytes(from + j) ^ q(j).toInt) & 0xff); j += 1 }
+      while (j < len) { s += Integer.bitCount(bytes(from + j) & 0xff); j += 1 }
+      while (j < q.length) { s += Integer.bitCount(q(j).toInt & 0xff); j += 1 }
+      return s.toDouble
+    }
     @inline def elem(j: Int): Double =
       if (floats != null) floats(from + j).toDouble else doubles(from + j)
     val n = math.min(len, q.length)
@@ -175,9 +185,9 @@ private[graft] object VectorStore {
 
   /** One partition's rows: keys sorted (so a key's rows are adjacent and
     * found by binary search), row `i`'s vector at
-    * `offsets(i) until offsets(i + 1)` of `floats` (float vectors) or
-    * `doubles` (double vectors), its version at `versions(i)` (null: no
-    * versions, every row is an index row).
+    * `offsets(i) until offsets(i + 1)` of `floats` (float vectors),
+    * `doubles` (double vectors) or `bytes` (binary codes), its version at
+    * `versions(i)` (null: no versions, every row is an index row).
     *
     * With a codec, the index part: list `c`'s entries are positions
     * `lists(c) until lists(c + 1)`, entry `p` is row `listRows(p)` (rows in
@@ -190,6 +200,7 @@ private[graft] object VectorStore {
       offsets: Array[Int],
       floats: Array[Float],
       doubles: Array[Double],
+      bytes: Array[Byte],
       versions: Array[Long],
       lists: Array[Int],
       listRows: Array[Int],
@@ -216,7 +227,7 @@ private[graft] object VectorStore {
 
     /** Row `i` scored against `q` under `metric` ([[VectorStore.score]]). */
     def score(i: Int, q: Array[Float], metric: Metric.Value): Double =
-      VectorStore.score(floats, doubles, offsets(i), offsets(i + 1) - offsets(i), q, metric)
+      VectorStore.score(floats, doubles, bytes, offsets(i), offsets(i + 1) - offsets(i), q, metric)
 
     /** The entry positions of list `c` (empty without a codec). */
     def list(c: Int): Range =
@@ -244,7 +255,7 @@ private[graft] object VectorStore {
       */
     def apply(
         rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-        keyType: DataType, float: Boolean, versioned: Boolean, codec: IvfCodec): Block = {
+        keyType: DataType, vecType: DataType, versioned: Boolean, codec: IvfCodec): Block = {
       val keys = mutable.ArrayBuffer.empty[AnyRef]
       val vecs = mutable.ArrayBuffer.empty[AnyRef]
       val vers = mutable.ArrayBuilder.make[Long]
@@ -254,23 +265,31 @@ private[graft] object VectorStore {
             case s: UTF8String => s.copy() // points into the reused scan row
             case k             => k.asInstanceOf[AnyRef]
           })
-          vecs += (if (float) r.getArray(1).toFloatArray() else r.getArray(1).toDoubleArray())
+          vecs += (vecType match {
+            case BinaryType              => r.getBinary(1)
+            case ArrayType(FloatType, _) => r.getArray(1).toFloatArray()
+            case _                       => r.getArray(1).toDoubleArray()
+          })
           if (versioned) vers += r.getLong(2)
         }
       }
       val order = Array.range(0, keys.length).sortWith((a, b) => keyOrder.compare(keys(a), keys(b)) < 0)
       val sorted = order.map(vecs).toIndexedSeq
       val offsets = sorted.map(java.lang.reflect.Array.getLength).scanLeft(0)(_ + _).toArray
-      val (floats, doubles) =
-        if (float) (Array.concat(sorted.map(_.asInstanceOf[Array[Float]]): _*), null)
-        else (null, Array.concat(sorted.map(_.asInstanceOf[Array[Double]]): _*))
+      def packed[T: ClassTag] = Array.concat(sorted.map(_.asInstanceOf[Array[T]]): _*)
+      val (floats, doubles, bytes) = vecType match {
+        case BinaryType              => (null, null, packed[Byte])
+        case ArrayType(FloatType, _) => (packed[Float], null, null)
+        case _                       => (null, packed[Double], null)
+      }
       val versions = if (versioned) { val v = vers.result(); order.map(v) } else null
       if (codec == null)
-        new Block(order.map(keys), offsets, floats, doubles, versions, null, null, null, 0)
+        new Block(order.map(keys), offsets, floats, doubles, bytes, versions, null, null, null, 0)
       else {
         val encoded = sorted.map {
           case v: Array[Float]  => codec.encode(v)
           case v: Array[Double] => codec.encode(v.map(_.toFloat))
+          case v: Array[Byte]   => codec.encode(BinaryIvfIndex.bytesToFloats(v))
         }
         // counting sort of the rows by centroid, key order kept per list
         val lists = new Array[Int](codec.ncent + 1)
@@ -288,7 +307,7 @@ private[graft] object VectorStore {
           var j = 0
           while (j < m) { codes(p * m + j) = cs(j).toShort; j += 1 }
         }
-        new Block(order.map(keys), offsets, floats, doubles, versions, lists, listRows, codes, m)
+        new Block(order.map(keys), offsets, floats, doubles, bytes, versions, lists, listRows, codes, m)
       }
     }
   }

@@ -296,9 +296,8 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     val exactThreshold = IncrementalIndexer.exactFallbackRows(spark, k,
       stats.map { case (_, total, aCnt) =>
         val sizes = ri.index match {
-          case ivf: graft.index.IvfIndex     => ivf.listSizes
-          case b: graft.index.BinaryIvfIndex => b.listSizes
-          case _                             => None
+          case ivf: graft.index.IvfIndex => ivf.listSizes
+          case _                         => None
         }
         IncrementalIndexer.probeCostRows(ri.index, math.max(total, 1L), aCnt, None, sizes)
       }.getOrElse(0L))

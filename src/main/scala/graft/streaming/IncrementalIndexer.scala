@@ -22,8 +22,8 @@ import graft.table.GammaTable
   *    vectors (R6 — the updated-vid queue, vector_manager.cc:355-380);
   *  - at query time, stale/deleted entries are left out of the index scan
   *    (the reference's bitmap `IsValid` check inside the scan, T11/X2: an
-  *    IVF store row's `_version` against the build version, an anti-join
-  *    for HNSW and BINARYIVF) and the not-yet-indexed tail is searched exactly and
+  *    IVF store row's `_version` against the build version, an exclusion
+  *    set for HNSW) and the not-yet-indexed tail is searched exactly and
   *    union-merged (the reference searches index + raw memory tail; V9
   *    brute-force fallback when no index exists).
   *
@@ -135,15 +135,12 @@ class IncrementalIndexer(
       ivf.onTable(data, table.docs, table.vectorStore(vecCol, Some(ivf.codec)))
     case h: HnswIndex =>
       new HnswIndex(spark, data, key, vecCol, params, h.excluded)
-    case b: BinaryIvfIndex =>
-      new BinaryIvfIndex(spark, data, key, vecCol, b.centroids, b.params)
     case other => other
   }
 
   private def listsOf(idx: AnnIndex): DataFrame = idx match {
-    case ivf: IvfIndex     => ivf.lists
-    case h: HnswIndex      => h.graphs
-    case b: BinaryIvfIndex => b.data
+    case ivf: IvfIndex => ivf.lists
+    case h: HnswIndex  => h.graphs
     case other => throw new IllegalStateException(s"unsupported ${other.retrievalType}")
   }
 
@@ -248,9 +245,8 @@ class IncrementalIndexer(
     * models size their per-segment beam instead; FLAT probes nothing).
     */
   private def withListStats(idx: AnnIndex): AnnIndex = idx match {
-    case ivf: IvfIndex     => ivf.withListSizes(cachedListSizes(ivf.lists, ivf.centers.length))
-    case b: BinaryIvfIndex => b.withListSizes(cachedListSizes(b.data, b.centroids.length))
-    case h: HnswIndex      => h.withSegmentAvg(cachedSegmentAvg(h.graphs))
+    case ivf: IvfIndex => ivf.withListSizes(cachedListSizes(ivf.lists, ivf.centers.length))
+    case h: HnswIndex  => h.withSegmentAvg(cachedSegmentAvg(h.graphs))
     case other => other
   }
 
@@ -361,9 +357,8 @@ class IncrementalIndexer(
                 else Ivf.autoNcentroids(docs.count(), -1)
               val centers = BinaryIvfIndex.trainCoarse(
                 docs, vecCol, k, params.trainSampleRows, params.seed)
-              new BinaryIvfIndex(spark,
-                BinaryIvfIndex.assignWithCenters(docs, vecCol, centers),
-                key, vecCol, centers, params)
+              new BinaryIvfIndex(spark, BinaryIvfIndex.assignWithCenters(docs, vecCol, centers),
+                table.docs, key, vecCol, centers, params)
             case _ =>
               val k =
                 if (params.ncentroids > 0) params.ncentroids
@@ -682,7 +677,7 @@ class IncrementalIndexer(
     *    the semi-join shuffles (or AQE re-plans it), instead of forcing a
     *    near-table-size set through the driver.
     *
-    * Spark jobs per IVFFLAT or IVFPQ request when the caller
+    * Spark jobs per IVFFLAT, IVFPQ or BINARYIVF request when the caller
     * ([[graft.table.GammaTable.search]]) hands over the allowed keys its
     * keys job collected; the cached per-list stats cost one more job once
     * per lists version, an unindexed tail (a bucket changed since the
@@ -703,16 +698,16 @@ class IncrementalIndexer(
     *  - few survivors: the keys job plus 1, which looks the allowed keys up
     *    in the same store and scores them, with k per query per task merged
     *    on the driver; no shuffle.
-    * The first request that needs the store after a commit, or on a
-    * freshly loaded table, builds it inside its own job, assigning every
-    * live row to its list: no extra job, no shuffle (see
+    * BINARYIVF takes the same jobs, each row scored by Hamming over its
+    * packed code. The first request that needs the store after a commit,
+    * or on a freshly loaded table, builds it inside its own job, assigning
+    * every live row to its list: no extra job, no shuffle (see
     * [[graft.table.GammaTable.vectorStore]]).
-    * The keys job (here, or the caller's) collects keys for every model
-    * but BINARYIVF ([[allowedKeyBound]]). Without collected keys (a set
-    * above `broadcastMaxKeys`) an IVF model scans its lists minus the stale
-    * keys, semi-joined with the allowed frame, in one job (IVFPQ re-ranks
-    * in a second, over the store), and the exact fallback runs the
-    * `Knn.flatSearch` plan.
+    * The keys job (here, or the caller's) collects the keys of a set
+    * within `broadcastMaxKeys`. Without collected keys (a set above it)
+    * an IVF model scans its lists minus the stale keys, semi-joined with
+    * the allowed frame, in one job (IVFPQ re-ranks in a second, over the
+    * store), and the exact fallback runs the `Knn.flatSearch` plan.
     *
     * Every tier runs its search here and returns its hits as a local
     * relation ([[searchHits]]), so collecting the result runs no job.
@@ -730,20 +725,12 @@ class IncrementalIndexer(
     searchHits(queries, k, nprobe,
       allowedIds.map(ids =>
         if (allowedCount >= 0L) AllowedKeys(ids, allowedCount, None)
-        else AllowedKeys.collect(ids, allowedKeyBound)),
+        else AllowedKeys.collect(ids, AllowedKeys.broadcastMax(spark))),
       minScore, maxScore, recallNum, hasRank).toDF(spark)
 
-  /** The key bound for the keys job of a filtered request to this index
-    * ([[AllowedKeys.collect]]): `broadcastMaxKeys` for the models whose
-    * request paths test collected keys (IVFFLAT, IVFPQ, HNSW), -1 (count
-    * only) for BINARYIVF, which semi-joins the allowed frame.
-    */
-  private[graft] def allowedKeyBound: Long =
-    if (retrievalType.equalsIgnoreCase("BINARYIVF")) -1L else AllowedKeys.broadcastMax(spark)
-
   /** [[search]], with the hits held on the driver, so the caller's
-    * per-request cuts need no further Spark job. The IVFFLAT and IVFPQ
-    * tiers ([[IvfIndex.searchHits]]) and the exact fallback over collected
+    * per-request cuts need no further Spark job. The IVF tiers
+    * ([[IvfIndex.searchHits]]) and the exact fallback over collected
     * keys ([[ExactRerank.allowedOnly]]) merge their task heaps on the
     * driver; every other tier collects its plan ([[LocalHits.collect]]).
     */
@@ -777,9 +764,8 @@ class IncrementalIndexer(
     // one model-arity/partial-probe computation shared by the cost bound
     // below and the stats attachment in the index branch
     def ncentOf(ix: AnnIndex): Int = ix match {
-      case ivf: IvfIndex     => ivf.centers.length
-      case b: BinaryIvfIndex => b.centroids.length
-      case _                 => 0
+      case ivf: IvfIndex => ivf.centers.length
+      case _             => 0
     }
     def partialListProbe(ix: AnnIndex): Boolean = {
       val nc = ncentOf(ix)
@@ -854,11 +840,10 @@ class IncrementalIndexer(
         val partialProbe = partialListProbe(idx) ||
           // a graph walk is always "partial" — per-segment beam stats apply
           retrievalType.equalsIgnoreCase("HNSW")
-        // ONE shared exclusion surface (AnnIndex.excluding, X2/T11) for the
-        // models without a store: BINARYIVF anti-joins its lists, HNSW folds
-        // into its standing excluded set (graph segments are opaque —
-        // exclusion happens at result admission). rebuilt() first so an IVF
-        // index reads the CURRENT doc table's store.
+        // HNSW, the model without a store, folds the stale keys into its
+        // standing excluded set (AnnIndex.excluding, X2/T11: graph segments
+        // are opaque — exclusion happens at result admission). rebuilt()
+        // first so an IVF index reads the CURRENT doc table's store.
         val freshIdx = rebuilt(idx, listsOf(idx))
         val statsIdx = if (partialProbe) withListStats(freshIdx) else freshIdx
         // the request's PRE-widening probe base (override or configured
@@ -991,9 +976,8 @@ object IncrementalIndexer {
       calibration: Double = 1.0): Long = {
     if (aCount <= 0L) return 0L
     val (ncent, compressed) = idx match {
-      case ivf: IvfIndex     => (ivf.centers.length, ivf.isInstanceOf[IvfPqIndex])
-      case b: BinaryIvfIndex => (b.centroids.length, true)
-      case _                 => (0, false)
+      case ivf: IvfIndex => (ivf.centers.length, !ivf.isInstanceOf[IvfFlatIndex])
+      case _             => (0, false)
     }
     if (ncent <= 0) return 0L
     val base = math.max(1L, nprobe.getOrElse(idx.params.nprobe).toLong)
@@ -1180,7 +1164,7 @@ object IncrementalIndexer {
           } else None
         new HnswIndex(spark, pd, key, vecCol, params, excl)
       case "BINARYIVF" =>
-        new BinaryIvfIndex(spark, ix.persistedData(), key, vecCol,
+        new BinaryIvfIndex(spark, ix.persistedData(), table.docs, key, vecCol,
           BinaryIvfIndex.loadCenters(spark, s"$root/centroids_bin"), params)
       case _ =>
         new IvfFlatIndex(spark, ix.persistedData(), table.docs, key, vecCol,

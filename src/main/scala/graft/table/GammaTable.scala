@@ -84,14 +84,14 @@ case class TableMeta(
   * [[vectorStore]]): the live (key, vector) rows on the decoded float
   * surface (INT8-stored fields decoded once), cached in Spark's block
   * manager and looked up by key, so a request reads its candidates'
-  * blocks instead of the table's files. An IVFFLAT or IVFPQ field's store
-  * also holds the index: each row's version and coarse centroid (and its
-  * PQ codes for IVFPQ), so an IVF request scans (and IVFPQ re-ranks) in
-  * one job over it. The first request
+  * blocks instead of the table's files. An IVFFLAT, IVFPQ or BINARYIVF
+  * field's store also holds the index: each row's version and coarse
+  * centroid (and its PQ codes for IVFPQ), so an IVF request scans (and
+  * IVFPQ re-ranks) in one job over it. The first request
   * after a commit (or on a freshly loaded handle) builds it inside its own
   * job, with no shuffle; the commit unpersists the previous manifest's
   * blocks. Memory: per live row, the vector (4 B a component for float,
-  * 8 B for double) plus its key (about 24 B for a long key, more for a
+  * 8 B for double, 1 B a byte for a binary code) plus its key (about 24 B for a long key, more for a
   * string) and a 4 B offset; for an IVF index, 8 B of version and 4 B of
   * list entry, plus 2 B per subspace code for IVFPQ. It spills to
   * executor disk under memory pressure (`MEMORY_AND_DISK`).
@@ -1025,18 +1025,16 @@ class GammaTable private (
     // force is forced (V9 override) or the index serves another metric
     def serves(ix: graft.streaming.IncrementalIndexer): Boolean =
       !req.bruteForce && ix.params.metric == metric
-    val indexed = routes.flatMap(_._2.filter(serves))
     // ONE narrow filtered scan, materialized ONCE the first time an index
     // route touches it, by the keys job: a single pass over the persisted
     // key scan in which each task returns its row count and, for a set
-    // within `spark.graft.filter.broadcastMaxKeys` searched by a model
-    // that tests keys in its scan (IVFFLAT, IVFPQ, HNSW), its keys. The
-    // summed count drives the indexer's filtered-ANN policy (exact fallback
-    // vs broadcast pushdown + widened probes vs shuffle semi-join); the
-    // keys are what the driver paths test inside their scans (IVF list
-    // scan, exact fallback, HNSW walk), so no later job re-reads the set.
-    // The plans of BINARYIVF and of the huge tier semi-join the same
-    // persisted blocks. Lazy: the brute/filter-only paths never pay the
+    // within `spark.graft.filter.broadcastMaxKeys`, its keys. The summed
+    // count drives the indexer's filtered-ANN policy (exact fallback vs
+    // broadcast pushdown + widened probes vs shuffle semi-join); the keys
+    // are what the driver paths test inside their scans (IVF list scan,
+    // exact fallback, HNSW walk), so no later job re-reads the set. The
+    // plans of a set above the bound semi-join the same persisted blocks.
+    // Lazy: the brute/filter-only paths never pay the
     // job. persist (lineage kept), NOT localCheckpoint (lineage cut): the
     // bounded release queue below can then unpersist older requests'
     // frames at any time — a late caller just recomputes — where freeing
@@ -1046,8 +1044,7 @@ class GammaTable private (
       else {
         val df = base.filter(pred).select(key)
         holdAllowed(df)
-        Some(graft.index.AllowedKeys.collect(df,
-          indexed.map(_.allowedKeyBound).foldLeft(-1L)(math.max)))
+        Some(graft.index.AllowedKeys.collect(df, graft.index.AllowedKeys.broadcastMax(spark)))
       }
     val kCand = math.max(req.topn * CandidateFactor, req.topn)
     // req_num batching (request.fbs:28): every field must carry the same

@@ -90,6 +90,24 @@ class JobCountSpec extends GraftSuite {
         $"embedding".as("vec"))
   }
 
+  /** [[docTable]] for an IVF `model`: for BINARYIVF "vec" is a 128-bit
+    * code of the key, queried on the float surface (one byte value per
+    * float), with its field, build params, request metric and 64 queries.
+    */
+  private final case class IvfModel(model: String) {
+    val binary: Boolean = model == "BINARYIVF"
+    val metric: Metric.Value = if (binary) Metric.Hamming else Metric.L2
+    def docs(keyType: String = "string") =
+      if (binary) docTable(keyType).withColumn("vec", unhex(md5($"_id".cast("string"))))
+      else docTable(keyType)
+    def field: VectorFieldDef = VectorFieldDef("vec", if (binary) 128 else 64, metric.toString, model)
+    def params: IndexParams = IndexParams(metric = metric, ncentroids = 4, nprobe = 2, nsubvector = 8)
+    def vecs: Seq[Array[Float]] =
+      if (binary) docs().select("vec").as[Array[Byte]].take(64).toSeq
+        .map(graft.index.BinaryIvfIndex.bytesToFloats)
+      else docTable().select("vec").as[Array[Float]].take(64).toSeq
+  }
+
   test("table load and schema derivation launch zero Spark jobs") {
     val root = tmp()
     val t = GammaTable.create(spark, root, "jc", "_id", docTable(),
@@ -127,20 +145,20 @@ class JobCountSpec extends GraftSuite {
     assert(hits.count() === 5)
   }
 
-  for (model <- Seq("IVFPQ", "IVFFLAT"))
+  for (model <- Seq("IVFPQ", "IVFFLAT", "BINARYIVF"))
   test(s"persisted $model point and batch requests run one job and no shuffle") {
     // one job over the table's resident store: each task scans its block's
     // probed lists (IVFPQ with ADC, re-ranking its candidates from the same
-    // block; IVFFLAT exactly); the driver merges the task results
+    // block; IVFFLAT exactly; BINARYIVF by Hamming over its codes); the
+    // driver merges the task results
+    val m = IvfModel(model)
     val root = tmp()
-    GammaTable.create(spark, root, "jpq", "_id", docTable(),
-      Seq(VectorFieldDef("vec", 64, "L2", model)), nBuckets = 4)
-      .buildIndex("vec", IndexParams(ncentroids = 4, nprobe = 2, nsubvector = 8),
-        persist = true, retrievalType = model)
+    GammaTable.create(spark, root, "jpq", "_id", m.docs(), Seq(m.field), nBuckets = 4)
+      .buildIndex("vec", m.params, persist = true, retrievalType = model)
     val t = GammaTable.load(spark, root)
-    val vecs = docTable().select("vec").as[Array[Float]].take(64).toSeq
+    val vecs = m.vecs
     Seq(VecQuery("vec", vecs.head), VecQuery("vec", vectors = vecs)).foreach { vq =>
-      def run() = t.search(SearchRequest(topn = 10, vecQueries = Seq(vq)))
+      def run() = t.search(SearchRequest(topn = 10, vecQueries = Seq(vq), metric = m.metric))
         .select("qid", "_id", "score").collect()
       run() // the per-list stats job runs once per lists version
       val (rows, n) = jobsDuring(run())
@@ -284,8 +302,9 @@ class JobCountSpec extends GraftSuite {
     // every tier finishes inside IncrementalIndexer.search: the frame it
     // returns is a local relation that collects with no job, and search
     // plus collect run no more jobs than the lazy frames they replace did
-    // (those counts are the pins below); IVFFLAT serves from the table's
-    // store: 1 job, and the keys job plus 1 for its exact fallback
+    // (those counts are the pins below); IVFFLAT and BINARYIVF serve from
+    // the table's store: 1 job, and the keys job plus 1 for an exact
+    // fallback
     val t = GammaTable.create(spark, tmp(), "jlz", "_id", docTable(),
       Seq(VectorFieldDef("vec", 64)), nBuckets = 4)
     val flat = t.buildIndex("vec", IndexParams(ncentroids = 4, nprobe = 2), persist = true)
@@ -315,7 +334,7 @@ class JobCountSpec extends GraftSuite {
       ("HNSW huge-tier semi-join", () => hnsw.search(q, 10, allowedIds = allowed(ht)),
         Map("spark.graft.filter.exactFallbackRows" -> "0",
           "spark.graft.filter.broadcastMaxKeys" -> "10"), 8),
-      ("BINARYIVF", () => binIx.search(qb, 10), Map.empty, 3))
+      ("BINARYIVF", () => binIx.search(qb, 10), Map.empty, 1))
     for ((what, search, confs, parentJobs) <- cases) {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
@@ -330,23 +349,26 @@ class JobCountSpec extends GraftSuite {
     }
   }
 
-  test("persisted IVFFLAT filtered requests: the keys job plus one store job, no shuffle") {
+  for (model <- Seq("IVFFLAT", "BINARYIVF"))
+  test(s"persisted $model filtered requests: the keys job plus one store job, no shuffle") {
     // the keys job brings the keys to the driver; the widened-probe tier
     // tests them inside the one store job, and the exact fallback looks
     // the allowed rows up in the same store: 2 jobs on either tier (the
-    // semi-join plans they replace ran 5)
+    // semi-join plans they replace ran 5 for IVFFLAT; BINARYIVF's keys job
+    // only counted, and its plan semi-joined the allowed frame)
+    val m = IvfModel(model)
     val root = tmp()
-    GammaTable.create(spark, root, "jflf", "_id", docTable(),
-      Seq(VectorFieldDef("vec", 64, "L2", "IVFFLAT")), nBuckets = 4)
-      .buildIndex("vec", IndexParams(ncentroids = 4, nprobe = 2), persist = true)
+    GammaTable.create(spark, root, "jflf", "_id", m.docs(), Seq(m.field), nBuckets = 4)
+      .buildIndex("vec", m.params, persist = true, retrievalType = model)
     val t = GammaTable.load(spark, root)
-    val vecs = docTable().select("vec").as[Array[Float]].take(64).toSeq
+    val vecs = m.vecs
     val filter = Seq(RangeFilter("p_size", Some(1), Some(40)))
     for (fallbackRows <- Seq(Some("0"), None);
          vq <- Seq(VecQuery("vec", vecs.head), VecQuery("vec", vectors = vecs))) {
       fallbackRows.foreach(spark.conf.set("spark.graft.filter.exactFallbackRows", _))
       try {
-        def run() = t.search(SearchRequest(topn = 10, vecQueries = Seq(vq), rangeFilters = filter))
+        def run() = t.search(SearchRequest(topn = 10, vecQueries = Seq(vq), rangeFilters = filter,
+          metric = m.metric))
           .select("qid", "_id", "score").collect()
         run() // the per-list stats job runs once per lists version
         val (rows, n) = jobsDuring(run())

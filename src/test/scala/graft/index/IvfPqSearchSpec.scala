@@ -16,7 +16,8 @@ import graft.table.{GammaTable, VectorFieldDef}
   * `IvfIndex.searchHits`) must return exactly the rows of Spark SQL plans
   * computing the same answer: same ids, bit-equal scores, same order per
   * query; and the store's index rows must be the indexer's clean lists.
-  * IVFPQ and IVFFLAT run the same scan with a per-model row score.
+  * IVFPQ, IVFFLAT and BINARYIVF run the same scan with a per-model row
+  * score.
   */
 class IvfPqSearchSpec extends GraftSuite {
   import spark.implicits._
@@ -44,6 +45,19 @@ class IvfPqSearchSpec extends GraftSuite {
     vs :+ vs.head
   }
 
+  // docsLong with each vector replaced by a 128-bit code of its id; a
+  // copy's code is its original's, so copies tie
+  private lazy val codesLong: DataFrame =
+    docsLong.withColumn("vec", unhex(md5(($"id" % 1000).cast("string")))).localCheckpoint(true)
+
+  // the binary batch on the float surface (a byte value per float): stored
+  // codes (copies tie), a code one byte short (whose distance counts the
+  // longer code's extra bits) and a repeat
+  private lazy val codeBatch: Seq[Array[Float]] = {
+    val cs = codesLong.filter($"id" < 6).orderBy("id").select("vec").as[Array[Byte]].collect().toSeq
+    (cs.init :+ cs.last.init :+ cs.head).map(BinaryIvfIndex.bytesToFloats)
+  }
+
   private val tables = scala.collection.mutable.Map.empty[(Metric.Value, Boolean), GammaTable]
 
   /** Persisted IVFPQ table whose full probe with recall_num >= rows
@@ -64,8 +78,24 @@ class IvfPqSearchSpec extends GraftSuite {
       q -> rs.map(r => (r.get(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
     }
 
-  private def queryFrame(vq: VecQuery): DataFrame =
-    vq.batch.map { case (i, v) => (i, v.toSeq) }.toDF("qid", "qvec")
+  private def queryFrame(vq: VecQuery): DataFrame = queryFrame(vq.batch, Metric.L2)
+
+  /** `qs` as (qid, qvec): packed bytes under Hamming, else float arrays. */
+  private def queryFrame(qs: Seq[(Long, Array[Float])], metric: Metric.Value): DataFrame =
+    if (metric == Metric.Hamming)
+      qs.map { case (i, v) => (i, BinaryIvfIndex.floatsToBytes(v)) }.toDF("qid", "qvec")
+    else qs.map { case (i, v) => (i, v.toSeq) }.toDF("qid", "qvec")
+
+  /** The `nprobe` lists `ix` probes for `v`: for BINARYIVF ranked as its
+    * lists were assigned (Hamming over the byte centroids, the lower
+    * centroid first on a tie), else by the quantizer metric.
+    */
+  private def probed(ix: IvfIndex, v: Array[Float], nprobe: Int): Seq[Int] = ix match {
+    case b: BinaryIvfIndex =>
+      val q = BinaryIvfIndex.floatsToBytes(v)
+      b.centroids.indices.sortBy(c => (BinaryIvfIndex.hammingOf(b.centroids(c), q), c)).take(nprobe)
+    case _ => Ivf.rankedCentroids(ix.centers, v, ix.params.metric).take(nprobe)
+  }
 
   private def withConf[T](k: String, v: String)(f: => T): T = {
     spark.conf.set(k, v)
@@ -98,20 +128,26 @@ class IvfPqSearchSpec extends GraftSuite {
     }
   }
 
-  for (metric <- Seq(Metric.L2, Metric.InnerProduct, Metric.Cosine);
+  for ((model, metric) <- Seq("IVFFLAT" -> Metric.L2, "IVFFLAT" -> Metric.InnerProduct,
+         "IVFFLAT" -> Metric.Cosine, "BINARYIVF" -> Metric.Hamming);
        keys <- Seq("long", "int", "string")) {
-    test(s"IVFFLAT at full probe equals Knn.flatSearch exactly ($metric, $keys keys)") {
-      val t = GammaTable.create(spark, tmp(), "flat", "id", docsLong.withColumn("id", $"id".cast(keys)),
-        Seq(VectorFieldDef("vec", 64, metric.toString, "IVFFLAT")), nBuckets = 4)
+    test(s"$model at full probe equals Knn.flatSearch exactly ($metric, $keys keys)") {
+      val binary = model == "BINARYIVF"
+      val t = GammaTable.create(spark, tmp(), "flat", "id",
+        (if (binary) codesLong else docsLong).withColumn("id", $"id".cast(keys)),
+        Seq(VectorFieldDef("vec", if (binary) 128 else 64, metric.toString, model)), nBuckets = 4)
       val ix = t.buildIndex("vec", IndexParams(metric = metric, ncentroids = Ncent, nprobe = 2),
-        persist = true)
-      val vq = VecQuery("vec", vectors = batch, nprobe = Some(Ncent))
-      def want(src: DataFrame, range: (Option[Double], Option[Double])) =
-        ranked(Knn.flatSearch(src, "id", "vec", queryFrame(vq), "qid", "qvec", 10, metric,
+        persist = true, retrievalType = model)
+      val vq = VecQuery("vec", vectors = if (binary) codeBatch else batch, nprobe = Some(Ncent))
+      // BINARYIVF also repeats a qid: its two codes share one heap
+      val qs = if (binary) Seq(0L, 1L, 2L, 3L, 1L, 5L, 6L).zip(codeBatch) else vq.batch
+      def want(src: DataFrame, range: (Option[Double], Option[Double]),
+          q: Seq[(Long, Array[Float])] = qs) =
+        ranked(Knn.flatSearch(src, "id", "vec", queryFrame(q, metric), "qid", "qvec", 10, metric,
           minScore = range._1, maxScore = range._2))
       // through the table, unfiltered
       assert(ranked(t.search(SearchRequest(topn = 10, vecQueries = Seq(vq), metric = metric))) ===
-        want(t.docs, (None, None)))
+        want(t.docs, (None, None), vq.batch))
       // through the indexer: no filter, the allowed keys tested in the
       // scan, and an allowed set held only as a frame (semi-joined into
       // the persisted lists); the exact fallback is off so each reaches
@@ -126,7 +162,7 @@ class IvfPqSearchSpec extends GraftSuite {
           // a score window cutting into query 0's top-10
           val s0 = want(src, (None, None))(0L).map(r => java.lang.Double.longBitsToDouble(r._2)).sorted
           for (range <- Seq((None, None), (Some(s0(2)), Some(s0(7))))) {
-            val got = ix.searchHits(vq.batch, 10, vq.nprobe, allowed, range._1, range._2)
+            val got = ix.searchHits(qs, 10, vq.nprobe, allowed, range._1, range._2)
             val exact = want(src, range)
             assert(ranked(got.toDF(spark)) === exact, s"$what range=$range")
             assert(exact(0L).size >= (if (range._1.isDefined) 6 else 10), s"$what range=$range")
@@ -167,8 +203,9 @@ class IvfPqSearchSpec extends GraftSuite {
     * own probed lists (pq_adc against LUTs of those centroids only), k or
     * max(recall_num, k) candidates per qid, then, with `hasRank`, the
     * candidates joined back to the raw vectors, scored exactly, the score
-    * range applied and k kept per qid. IVFFLAT: each query's probed lists
-    * scored with `Knn.score`, the score range, k per qid.
+    * range applied and k kept per qid. IVFFLAT and BINARYIVF: each query's
+    * probed lists ([[probed]]) scored with `Knn.score`, the score range, k
+    * per qid.
     */
   private def oracle(
       ix: IvfIndex, qs: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
@@ -183,14 +220,17 @@ class IvfPqSearchSpec extends GraftSuite {
     val pq = ix match {
       case pq: IvfPqIndex => pq
       case _ =>
-        val probes = for ((qid, v) <- qs; c <- Ivf.rankedCentroids(ix.centers, v, metric).take(nprobe))
-          yield (qid, v.toSeq, c)
-        val scored = rows.join(probes.toDF("qid", "qvec", "centroid_id"), Seq("centroid_id"))
+        // (query position, qid, probed centroid), each position with its vector
+        val probes = qs.indices.flatMap(p => probed(ix, qs(p)._2, nprobe).map(c => (p.toLong, qs(p)._1, c)))
+          .toDF("pos", "qid", "centroid_id")
+          .join(queryFrame(qs.indices.map(p => (p.toLong, qs(p)._2)), metric)
+            .withColumnRenamed("qid", "pos"), Seq("pos"))
+        val scored = rows.join(probes, Seq("centroid_id"))
           .select($"qid", $"id", Knn.score(metric, $"vec", $"qvec").as("score"))
         return TopK.perGroup(inRange(scored), "qid", "score", asc, k, Seq("id"))
     }
     val ksub = pq.codebooks.map(_.length).max
-    val luts = for ((qid, v) <- qs; c <- Ivf.rankedCentroids(pq.centers, v, metric).take(nprobe))
+    val luts = for ((qid, v) <- qs; c <- probed(pq, v, nprobe))
       yield (qid, c, IvfPqIndex.lutFor(v, pq.centers(c), pq.codebooks, ksub,
         metric == Metric.InnerProduct).toSeq)
     val adc = rows.join(luts.toDF("qid", "centroid_id", "lut"), Seq("centroid_id"))
@@ -210,15 +250,17 @@ class IvfPqSearchSpec extends GraftSuite {
   test("at partial probe the search equals a Spark SQL oracle") {
     withConf("spark.graft.ivf.adaptiveProbe", "false") {
       for ((model, metric) <- Seq("IVFPQ" -> Metric.L2, "IVFPQ" -> Metric.InnerProduct,
-             "IVFFLAT" -> Metric.L2, "IVFFLAT" -> Metric.InnerProduct, "IVFFLAT" -> Metric.Cosine)) {
-        val built = IndexRegistry.build(model, spark, docsLong, "id", "vec",
+             "IVFFLAT" -> Metric.L2, "IVFFLAT" -> Metric.InnerProduct, "IVFFLAT" -> Metric.Cosine,
+             "BINARYIVF" -> Metric.Hamming)) {
+        val binary = model == "BINARYIVF"
+        val built = IndexRegistry.build(model, spark, if (binary) codesLong else docsLong, "id", "vec",
           IndexParams(metric = metric, ncentroids = 8, nprobe = 2, nsubvector = 8, recallNum = 30))
           .asInstanceOf[IvfIndex]
         // qids in batch order, and out of order and repeated: a qid's
         // positions share one heap, so a task can keep a key once per
         // position and each copy must count as the oracle counts it
         val batches = Seq(batch.indices.map(_.toLong), Seq(3L, 1L, 3L, 2L, 1L, 0L, 4L))
-          .map(_.zip(batch))
+          .map(_.zip(if (binary) codeBatch else batch))
         val frame = docsLong.filter($"tag" =!= 2).select("id")
         // the allowed set semi-joined into the probe, or its keys tested on
         // each code row inside the scan (the filtered request path)
@@ -231,8 +273,7 @@ class IvfPqSearchSpec extends GraftSuite {
         for (qs <- batches; hasRank <- hasRanks; allowed <- allowedCases) {
           val pq = built.withParams(built.params.copy(hasRank = hasRank)).asInstanceOf[IvfIndex]
           val probedRows = {
-            val probed = qs.flatMap(q => Ivf.rankedCentroids(pq.centers, q._2, metric).take(2))
-            val lists = pq.lists.filter($"centroid_id".isin(probed.distinct: _*))
+            val lists = pq.lists.filter($"centroid_id".isin(qs.flatMap(q => probed(pq, q._2, 2)).distinct: _*))
             allowed.fold(lists)(_ => lists.join(frame, Seq("id"), "left_semi")).count()
           }
           // a lower score bound at query 0's fourth score
@@ -273,14 +314,18 @@ class IvfPqSearchSpec extends GraftSuite {
     // a row takes part in the store's list scan iff its _version is at most
     // the indexer's build version; the lists it replaces are the persisted
     // lists minus every key updated after the build or tombstoned. IVFPQ
-    // rows carry (key, centroid, codes), IVFFLAT rows (key, centroid).
-    for (model <- Seq("IVFPQ", "IVFFLAT")) withConf("spark.graft.ivf.adaptiveProbe", "false") {
+    // rows carry (key, centroid, codes), IVFFLAT and BINARYIVF rows (key,
+    // centroid).
+    for (model <- Seq("IVFPQ", "IVFFLAT", "BINARYIVF")) withConf("spark.graft.ivf.adaptiveProbe", "false") {
+      val binary = model == "BINARYIVF"
+      val (src, metric, qvecs) =
+        if (binary) (codesLong, Metric.Hamming, codeBatch) else (docsLong, Metric.L2, batch)
       val root = tmp()
-      var t = GammaTable.create(spark, root, "pqv", "id", docsLong,
-        Seq(VectorFieldDef("vec", 64, "L2", model)), nBuckets = 4)
-      t.buildIndex("vec", IndexParams(ncentroids = Ncent, nprobe = 2, nsubvector = 8,
+      var t = GammaTable.create(spark, root, "pqv", "id", src,
+        Seq(VectorFieldDef("vec", if (binary) 128 else 64, metric.toString, model)), nBuckets = 4)
+      t.buildIndex("vec", IndexParams(metric = metric, ncentroids = Ncent, nprobe = 2, nsubvector = 8,
         recallNum = 30), persist = true, retrievalType = model)
-      val qs = batch.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      val qs = qvecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       def check(step0: String): Unit = {
         val step = s"$model: $step0"
         val ix = t.attachedIndex("vec").get
@@ -315,11 +360,12 @@ class IvfPqSearchSpec extends GraftSuite {
         }
       }
       check("build")
-      t.addOrUpdate(docsLong.filter($"id".between(100, 109)).withColumn("vec", typedLit(batch(1).toSeq)))
+      val moved = if (binary) typedLit(BinaryIvfIndex.floatsToBytes(codeBatch(1))) else typedLit(batch(1).toSeq)
+      t.addOrUpdate(src.filter($"id".between(100, 109)).withColumn("vec", moved))
       check("an upsert that changes vectors")
-      t.addOrUpdate(docsLong.filter($"id".between(200, 209)).select($"id", ($"tag" + 1).as("tag")))
+      t.addOrUpdate(src.filter($"id".between(200, 209)).select($"id", ($"tag" + 1).as("tag")))
       check("an upsert that changes only a scalar")
-      t.delete(docsLong.filter($"id" % 2 === 0 && $"id" < 400).select("id"))
+      t.delete(src.filter($"id" % 2 === 0 && $"id" < 400).select("id"))
       check("delete")
       t.attachedIndex("vec").get.refresh()
       check("refresh")

@@ -19,7 +19,8 @@ import graft.table.{GammaTable, VectorFieldDef}
   * fallback it serves must return exactly the rows of `Knn.flatSearch` +
   * `TopK.perGroup` over the live table (same ids, bit-equal scores, same
   * order per query), a commit must replace it, and lost blocks, IVF lists
-  * (IVFPQ codes, IVFFLAT centroids) included, must come back from lineage.
+  * (IVFPQ codes, IVFFLAT and BINARYIVF centroids) included, must come back
+  * from lineage.
   */
 class VectorStoreSpec extends GraftSuite {
   import spark.implicits._
@@ -110,20 +111,28 @@ class VectorStoreSpec extends GraftSuite {
       Metric.L2, (None, None)).toDF(spark)) === ranked(exact(t.docs, queries, 10, Metric.L2)))
   }
 
-  /** Persisted IVF table (IVFPQ or IVFFLAT) whose full probe is exact
-    * (IVFPQ: recall_num >= rows re-ranks every doc).
+  // base with each vector replaced by a 128-bit code of its id (a copy's
+  // code is its original's)
+  private lazy val codeDocs: DataFrame =
+    base.withColumn("vec", unhex(md5(($"id" % 1000).cast("string")))).localCheckpoint(true)
+
+  /** Persisted IVF table (IVFPQ, IVFFLAT or BINARYIVF over [[codeDocs]])
+    * whose full probe is exact (IVFPQ: recall_num >= rows re-ranks every
+    * doc).
     */
   private def ivf(model: String = "IVFPQ"): GammaTable = {
-    val t = GammaTable.create(spark, tmp(), "vsi", "id", base,
-      Seq(VectorFieldDef("vec", 64, "L2", model)), nBuckets = 4)
-    t.buildIndex("vec", IndexParams(ncentroids = 4, nprobe = 4, nsubvector = 8, recallNum = 1000),
-      persist = true, retrievalType = model)
+    val binary = model == "BINARYIVF"
+    val metric = if (binary) Metric.Hamming else Metric.L2
+    val t = GammaTable.create(spark, tmp(), "vsi", "id", if (binary) codeDocs else base,
+      Seq(VectorFieldDef("vec", if (binary) 128 else 64, metric.toString, model)), nBuckets = 4)
+    t.buildIndex("vec", IndexParams(metric = metric, ncentroids = 4, nprobe = 4, nsubvector = 8,
+      recallNum = 1000), persist = true, retrievalType = model)
     t
   }
 
-  private def request(q: Array[Float], filter: Boolean) = SearchRequest(topn = 10,
-    vecQueries = Seq(VecQuery("vec", q)),
-    rangeFilters = if (filter) Seq(RangeFilter("tag", Some(0.0), Some(1.0))) else Nil)
+  private def request(q: Array[Float], filter: Boolean, metric: Metric.Value = Metric.L2) =
+    SearchRequest(topn = 10, vecQueries = Seq(VecQuery("vec", q)), metric = metric,
+      rangeFilters = if (filter) Seq(RangeFilter("tag", Some(0.0), Some(1.0))) else Nil)
 
   test("after an upsert, a delete and compact(), a search scores the new manifest's rows") {
     val t = ivf()
@@ -166,13 +175,17 @@ class VectorStoreSpec extends GraftSuite {
   }
 
   test("blocks lost from the block manager come back from lineage with identical rows") {
-    for (model <- Seq("IVFPQ", "IVFFLAT")) {
+    for (model <- Seq("IVFPQ", "IVFFLAT", "BINARYIVF")) {
       val t = ivf(model)
-      val q = queries(2)._2
+      val (metric, qs) =
+        if (model != "BINARYIVF") (Metric.L2, queries.map(_._2))
+        else (Metric.Hamming, codeDocs.filter($"id" < 6).orderBy("id").select("vec")
+          .as[Array[Byte]].collect().toSeq.map(BinaryIvfIndex.bytesToFloats(_)))
+      val q = qs(2)
       // a partial-probe batch: the list scan reads the blocks' lists
       val partial = SearchRequest(topn = 10, vecQueries = Seq(VecQuery("vec",
-        vectors = queries.map(_._2), nprobe = Some(2), recallNum = Some(20))))
-      def hits() = Seq(false, true).map(f => ranked(t.search(request(q, f)))) :+
+        vectors = qs, nprobe = Some(2), recallNum = Some(20))), metric = metric)
+      def hits() = Seq(false, true).map(f => ranked(t.search(request(q, f, metric)))) :+
         ranked(t.search(partial))
       val before = hits()
       val codes = storeCodes(t)
